@@ -540,7 +540,8 @@ def main() -> None:
         "queries_calibrated": calibrated,
         "calibration_samples": cal_samples,
         "quiet_cal_sec": QUIET_CAL_SEC,
-        "cpus": os.cpu_count(),
+        # effective cores (local[N] of SPARK_GRAFT_CPUS), not the host count
+        "cpus": spark.sparkContext.defaultParallelism,
         "repeats": repeats,
         # round-over-round comparability controls (VERDICT r3 #2):
         # a fixed in-memory workload isolates host-speed drift,

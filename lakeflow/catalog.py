@@ -10,14 +10,17 @@ collapse into one Spark session: ``run_sql_file`` splits a statement
 file and feeds ``spark.sql``; ``register_gold_views`` publishes the six
 gold views from lakeflow/sql/gold_views.sql over a silver temp view.
 
-The SQL views are expression-identical to the DataFrame builders in
-lakeflow.views — tests assert both surfaces return the same rows, so a
-user can pick either API.
+That file is the engine's only definition of the six views: the
+registered gold queries run the same SELECTs through :func:`gold_view`,
+and the DuckDB oracle SQL in lakeflow.registry is their independent twin.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,6 +101,39 @@ def run_sql_file(
 ) -> list[DataFrame]:
     with open(path) as f:
         return run_sql_text(spark, f.read(), params)
+
+
+@functools.cache
+def _gold_selects() -> dict[str, str]:
+    """View name -> SELECT body of each view in gold_views.sql."""
+    with open(GOLD_SQL_PATH) as f:
+        stmts = split_statements(f.read())
+    out = {}
+    for stmt in stmts:
+        m = re.fullmatch(r"CREATE OR REPLACE TEMPORARY VIEW (\w+) AS\s+(.*)", stmt, re.S)
+        out[m.group(1)] = m.group(2)
+    return out
+
+
+def gold_view(silver: DataFrame, view: str, now_spark: str) -> DataFrame:
+    """One gold view of gold_views.sql evaluated over ``silver``, with
+    ``${now}`` bound to ``now_spark``.
+
+    ``silver`` is bound to the query through a uniquely named temp view
+    that is dropped once spark.sql has analyzed the plan, so the
+    session's own ``silver_claims`` view, if any, is left alone. The
+    drop goes to the session catalog directly: ``spark.catalog.dropTempView``
+    (and spark.sql's DataFrame kwargs, which use it) also uncaches the
+    view's plan, which would un-persist the silver tier.
+    """
+    spark = silver.sparkSession
+    name = f"_silver_{uuid.uuid4().hex}"
+    body = _gold_selects()[view].replace("${now}", now_spark)
+    silver.createOrReplaceTempView(name)
+    try:
+        return spark.sql(re.sub(r"\bsilver_claims\b", name, body))
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)
 
 
 def register_gold_views(

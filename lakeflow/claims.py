@@ -5,11 +5,11 @@ The reference's domain table (health-insurance claims,
 in the driver test data, so we derive a claims_raw table from
 ``lineitem`` by pure arithmetic — every dirty-data case the reference's
 cleaning rules handle (FIXTURES.md §1) is injected deterministically by
-modular selectors on a unique bigint key. The identical derivation is
-expressed twice:
+modular selectors on a unique bigint key. The derivation and the silver
+transform are expressed twice, once per engine:
 
-- :func:`claims_raw` — Spark DataFrame builder (engine input)
-- :data:`ORACLE_CTE` — DuckDB SQL CTE prefix (oracle input)
+- :func:`claims_raw` and :func:`clean` — Spark SQL expressions (engine)
+- :data:`ORACLE_CTE` — DuckDB SQL CTE chain (oracle)
 
 so every silver/gold query is hash-checkable end-to-end, cleaning
 included.
@@ -41,9 +41,8 @@ Determinism rules (both dialects MUST stay in lock-step):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from lakeflow import io, transform
+from lakeflow import io
 
 NOW_SQL = "TIMESTAMP '2026-01-01 00:00:00'"
 NOW_SPARK = "timestamp_ntz'2026-01-01 00:00:00'"
@@ -64,15 +63,10 @@ def claims_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _claims_raw_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-constructed CASE ladders (r12, guide §7.3).
-
-    Semantics identical to :func:`_claims_raw_build_columns` (the
-    Column-API spec below, pinned row-for-row by
-    tests/test_plancache.py::test_fast_builders_match_column_spec): the
-    same expression text, but parsed JVM-side from TWO selectExpr
-    batches instead of built by hundreds of py4j Column calls — the
-    cold-path construction cost drops ~10× (the warm path was already
-    memoized in r11).
+    """The raw-claims CASE ladders, parsed JVM-side from two selectExpr
+    batches rather than built by hundreds of py4j Column calls (~10x
+    cheaper to construct). Pinned row-for-row against the oracle's
+    ``claims_raw`` CTE by tests/test_claims_fast.py.
     """
     li = io.read_table(spark, sf_dir, "lineitem")
     clm = "concat('CLM', lpad(CAST(key AS STRING), 20, '0'))"
@@ -118,129 +112,73 @@ def _claims_raw_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _claims_raw_build_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-API spec of the raw-claims derivation — the readable form
-    the docstring at the top of this module describes, kept as the
-    equivalence-test reference for the batched builder above."""
-    li = io.read_table(spark, sf_dir, "lineitem")
-    cents0 = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-    key0 = (F.col("l_orderkey") * 8 + F.col("l_linenumber")) * 1_000_000_000 + (
-        F.col("l_partkey") * 1009 + F.col("l_suppkey") * 9176 + cents0
-    ) % 1_000_000_000
-    df = li.select(
-        key0.alias("key"),
-        cents0.alias("cents"),
-        F.col("l_partkey"),
-        F.col("l_suppkey"),
-        F.expr("l_shipdate + INTERVAL 28 YEARS").alias("sd"),
-    )
-
-    key = F.col("key")
-    cents = F.col("cents")
-    base_provider = F.concat(F.lit("Clinic "), F.col("l_suppkey").cast("string"))
-    member = F.concat(F.lit("MBR"), (F.col("l_partkey") % 1000).cast("string"))
-    clm = F.concat(F.lit("CLM"), F.lpad(key.cast("string"), 20, "0"))
-    proc_ts = F.expr(
-        f"{NOW_SPARK} - make_interval(0, 0, 0, cast(key % 45 as int), 0, 0, 0)"
-    )
-
-    return df.select(
-        F.when(key % 101 == 0, F.lit(None).cast("string"))
-        .when(key % 97 == 0, F.concat(F.lit("  "), clm, F.lit(" ")))
-        .otherwise(clm)
-        .alias("claim_id"),
-        F.when(key % 37 == 0, F.lit(None).cast("string"))
-        .when(key % 41 == 0, F.concat(F.lit(" "), member, F.lit(" ")))
-        .otherwise(member)
-        .alias("member_id"),
-        F.when(key % 43 == 0, F.lit(None).cast("string"))
-        .when(key % 47 == 0, F.lit("   "))
-        .when(key % 3 == 0, F.lower(base_provider))
-        .when(key % 3 == 1, F.upper(base_provider))
-        .otherwise(base_provider)
-        .alias("provider_name"),
-        F.when(key % 29 == 0, F.lit(None).cast("double"))
-        .when(key % 31 == 0, -((cents % 5000 + 1).cast("double")))
-        .when(key % 5 == 0, F.lit(0.0))
-        .when(key % 5 == 1, (cents % 100 + 1).cast("double"))
-        .when(key % 5 == 2, (cents % 900 + 101).cast("double"))
-        .when(key % 5 == 3, (cents % 9000 + 1001).cast("double"))
-        .otherwise((cents % 90000 + 10001).cast("double"))
-        .alias("claim_amount"),
-        F.when(key % 53 == 0, F.lit("INVALID-DATE"))
-        .when(key % 3 == 0, F.date_format("sd", "yyyy-MM-dd"))
-        .when(key % 3 == 1, F.date_format("sd", "MM/dd/yyyy"))
-        .otherwise(F.date_format("sd", "dd/MM/yyyy"))
-        .alias("service_date"),
-        proc_ts.alias("processing_timestamp"),
-        F.expr(
-            f"{NOW_SPARK} - make_interval(0, 0, 0, cast(key % 45 as int), 1, 0, 0)"
-        ).alias("ingestion_timestamp"),
-        F.lit("csv").alias("source_file"),
-        F.date_format(proc_ts, "yyyyMMdd_HHmmss").alias("batch_id"),
-    )
+# Silver column expressions, as Spark SQL text. :func:`clean` composes
+# them; the single-operator registry queries (q_filter_notnull,
+# q_clean_provider, q_clamp_amount) select them on their own.
+HAS_CLAIM_ID = "claim_id IS NOT NULL"
+PROVIDER_NAME = (
+    "CASE WHEN provider_name IS NULL OR trim(provider_name) = ''"
+    " THEN 'UNKNOWN' ELSE upper(trim(provider_name)) END"
+)
+CLAIM_AMOUNT = (
+    "CASE WHEN claim_amount IS NULL OR claim_amount < 0"
+    " THEN 0.0D ELSE claim_amount END"
+)
 
 
-def silver_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cleaned/enriched silver claims — the engine's silver transform
-    (lakeflow.transform.clean_claims) applied to the derived raw table.
+def parse_date_sql(col: str) -> str:
+    """SQL text of the first-match multi-format date parse of ``col``:
+    yyyy-MM-dd, then MM/dd/yyyy, then dd/MM/yyyy
+    (claims_to_iceberg.py:60-63).
 
-    Column order matches the reference DDL
-    (/root/reference/jobs/silver/claims_to_iceberg.py:93-108).
-
-    Plan-memoized per (session, sf_dir): constructing this chain costs
-    ~3,100 py4j round trips (~0.9 s driver wall, measured r11 — see
-    lakeflow.plancache). The memo returns the identical persisted
-    DataFrame every gold view previously re-built; the data-level
-    dedupe (CacheManager via persist) is unchanged.
+    NULL on malformed input, like ``try_to_date``, but exception-free:
+    ``try_to_date`` throws and catches a JVM DateTimeException for every
+    format a row does not match. Each branch here gates on a regex, then
+    on field ranges, then on the month length, so ``make_date`` only
+    sees valid dates and the expression is safe under ANSI mode.
+    Strictness matches ``try_to_date``: exact width, no trimming.
     """
-    from lakeflow.plancache import tier
 
-    return tier(
-        spark, ("silver_claims", sf_dir), lambda: _silver_claims_build(spark, sf_dir)
+    def branch(regex: str, ypos: int, mpos: int, dpos: int) -> str:
+        y = f"CAST(substring({col}, {ypos}, 4) AS INT)"
+        m = f"CAST(substring({col}, {mpos}, 2) AS INT)"
+        d = f"CAST(substring({col}, {dpos}, 2) AS INT)"
+        dim = f"dayofmonth(last_day(make_date({y}, {m}, 1)))"
+        return (
+            f"CASE WHEN {col} RLIKE '{regex}' THEN"
+            f" (CASE WHEN ({m} BETWEEN 1 AND 12) AND ({d} BETWEEN 1 AND 31) THEN"
+            f" (CASE WHEN {d} <= {dim} THEN make_date({y}, {m}, {d}) END)"
+            f" END) END"
+        )
+
+    return "coalesce({}, {}, {})".format(
+        branch(r"^\\d{4}-\\d{2}-\\d{2}$", 1, 6, 9),
+        branch(r"^\\d{2}/\\d{2}/\\d{4}$", 7, 1, 4),
+        branch(r"^\\d{2}/\\d{2}/\\d{4}$", 7, 4, 1),
     )
 
 
-def _date_parse_branch(col: str, regex: str, ypos: int, mpos: int, dpos: int) -> str:
-    """SQL text of one compiled date-parse branch — the exact expression
-    :func:`lakeflow.transform._fast_date_parse` builds via the Column
-    API (regex gate → field-range guard → day-vs-month-length guard →
-    make_date), emitted as a string so the silver chain can be parsed in
-    one JVM batch."""
-    y = f"CAST(substring({col}, {ypos}, 4) AS INT)"
-    m = f"CAST(substring({col}, {mpos}, 2) AS INT)"
-    d = f"CAST(substring({col}, {dpos}, 2) AS INT)"
-    dim = f"dayofmonth(last_day(make_date({y}, {m}, 1)))"
+def clean(raw: DataFrame) -> DataFrame:
+    """The silver transform (claims_to_iceberg.py:45-88): not-null
+    filter, trim, default-fill, clamp, date parse, date parts, amount
+    band, quality score, quality gate.
+
+    ``raw`` is bronze-shaped: claim_id, member_id, provider_name,
+    claim_amount, service_date (string), processing_timestamp,
+    ingestion_timestamp, source_file, batch_id. The result has the
+    silver columns in the reference DDL order
+    (claims_to_iceberg.py:93-108). The chain is two selectExpr batches,
+    parsed JVM-side; built through the Column API it cost ~3,100 py4j
+    round trips.
+    """
     return (
-        f"CASE WHEN {col} RLIKE '{regex}' THEN"
-        f" (CASE WHEN ({m} BETWEEN 1 AND 12) AND ({d} BETWEEN 1 AND 31) THEN"
-        f" (CASE WHEN {d} <= {dim} THEN make_date({y}, {m}, {d}) END)"
-        f" END) END"
-    )
-
-
-def _silver_claims_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-constructed silver transform (r12, guide §7.3): the same
-    clean/parse/enrich/score chain as
-    :func:`transform.clean_claims`(:func:`claims_raw`) — pinned
-    row-for-row by tests/test_plancache.py — but parsed JVM-side from
-    two selectExpr batches instead of ~3,100 py4j round trips."""
-    parse = "coalesce({}, {}, {})".format(
-        _date_parse_branch("service_date", r"^\\d{4}-\\d{2}-\\d{2}$", 1, 6, 9),
-        _date_parse_branch("service_date", r"^\\d{2}/\\d{2}/\\d{4}$", 7, 1, 4),
-        _date_parse_branch("service_date", r"^\\d{2}/\\d{2}/\\d{4}$", 7, 4, 1),
-    )
-    df = (
-        claims_raw(spark, sf_dir)
-        .where("claim_id IS NOT NULL")
+        raw.where(HAS_CLAIM_ID)
         .selectExpr(
             "trim(claim_id) AS claim_id",
             "trim(member_id) AS member_id",
-            "CASE WHEN provider_name IS NULL OR trim(provider_name) = ''"
-            " THEN 'UNKNOWN' ELSE upper(trim(provider_name)) END AS provider_name",
-            "CASE WHEN claim_amount IS NULL OR claim_amount < 0"
-            " THEN 0.0D ELSE claim_amount END AS claim_amount",
-            f"{parse} AS service_date",
+            f"{PROVIDER_NAME} AS provider_name",
+            f"{CLAIM_AMOUNT} AS claim_amount",
+            f"{parse_date_sql('service_date')} AS service_date",
             "processing_timestamp",
             "ingestion_timestamp",
             "source_file",
@@ -270,44 +208,39 @@ def _silver_claims_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source_file",
             "batch_id",
         )
-        # same gate as transform.clean_claims: filter the raw column, not
-        # the score CASE (see that function's pushdown note)
+        # The reference gate is data_quality_score >= 0.5
+        # (claims_to_iceberg.py:85). Under this score ladder that is
+        # exactly member_id IS NOT NULL: the only scores below 0.5 are
+        # 0.0 (claim_id NULL, filtered above) and 0.3 (member_id NULL).
+        # Gating on the column, not the score, matters:
+        # PushDownPredicates would otherwise inline the whole score CASE,
+        # date parse included, into a Filter below the projections, and
+        # every row would evaluate the derivation twice (~2x the silver
+        # materialization cost). tests/test_transform.py checks that both
+        # gates keep the same rows.
         .where("member_id IS NOT NULL")
     )
-    # Silver is a MATERIALIZED tier in the medallion model — the
-    # reference stores it in Iceberg and every gold view reads the
-    # stored table (/root/reference/jobs/silver/claims_to_iceberg.py:131,
-    # sql/gold/create_views.sql:23). persist() is the in-session
-    # equivalent: the clean/parse chain runs once, all gold queries
-    # share it (CacheManager dedupes identical plans across calls).
+
+
+def silver_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Silver claims: :func:`clean` over :func:`claims_raw`, persisted
+    and plan-memoized per (session, sf_dir).
+
+    Silver is a materialized tier in the medallion model: the reference
+    stores it in Iceberg and every gold view reads the stored table
+    (claims_to_iceberg.py:131, create_views.sql:23). persist() is the
+    in-session equivalent: the clean/parse chain runs once and all gold
+    queries share it (CacheManager dedupes identical plans across calls).
+    """
     from pyspark import StorageLevel
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    from lakeflow.plancache import tier
 
-
-def _silver_claims_build_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operator-composition spec of the silver tier (the r1–r11 shipped
-    form), kept as the equivalence-test reference for the batched
-    builder above. NOTE: un-persisted and un-memoized — build through
-    :func:`silver_claims` for real use."""
-    df = transform.clean_claims(_claims_raw_build_columns(spark, sf_dir))
-    df = df.select(
-        "claim_id",
-        "member_id",
-        "provider_name",
-        "claim_amount",
-        "service_date",
-        "service_year",
-        "service_month",
-        "service_day",
-        "claim_amount_category",
-        "processing_timestamp",
-        "data_quality_score",
-        "ingestion_timestamp",
-        "source_file",
-        "batch_id",
+    return tier(
+        spark,
+        ("silver_claims", sf_dir),
+        lambda: clean(claims_raw(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK),
     )
-    return df
 
 
 # ---------------------------------------------------------------------------

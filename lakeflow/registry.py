@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeflow import claims, quality, relational, transform, views
+from lakeflow import catalog, claims, quality, relational, views
 from lakeflow import io as lio
 from lakeflow.claims import NOW_SPARK, oracle
 from lakeflow.ext import (
@@ -56,6 +56,11 @@ def _silver(fn: Callable[[DataFrame], DataFrame]) -> QueryFn:
     return run
 
 
+def _gold(view: str) -> QueryFn:
+    """A gold view of lakeflow/sql/gold_views.sql over silver claims."""
+    return _silver(lambda s: catalog.gold_view(s, view, NOW_SPARK))
+
+
 # --------------------------------------------------------------------------
 # Claims family — silver pipeline + the 6 gold views + checks corpus
 # --------------------------------------------------------------------------
@@ -66,7 +71,7 @@ CLAIMS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         oracle(f"SELECT {SILVER_COLS} FROM claims"),
     ),
     "q_claims_summary": (
-        _silver(views.claims_summary),
+        _gold("gold_claims_summary"),
         oracle("""
 SELECT service_year, service_month, provider_name, claim_amount_category,
        COUNT(*) AS total_claims,
@@ -84,7 +89,7 @@ GROUP BY service_year, service_month, provider_name, claim_amount_category
 """),
     ),
     "q_monthly_trend": (
-        _silver(views.monthly_trend),
+        _gold("gold_monthly_trend"),
         oracle("""
 SELECT service_year, service_month,
        make_date(service_year, service_month, 1) AS month_date,
@@ -102,7 +107,7 @@ ORDER BY service_year DESC, service_month DESC
 """),
     ),
     "q_provider_performance": (
-        _silver(views.provider_performance),
+        _gold("gold_provider_performance"),
         oracle("""
 SELECT provider_name,
        COUNT(*) AS total_claims,
@@ -124,7 +129,7 @@ ORDER BY total_billed DESC
 """),
     ),
     "q_quality_dashboard": (
-        _silver(views.quality_dashboard),
+        _gold("gold_quality_dashboard"),
         oracle("""
 SELECT service_year, service_month,
        COUNT(*) AS total_records,
@@ -145,7 +150,7 @@ ORDER BY service_year DESC, service_month DESC
 """),
     ),
     "q_member_activity": (
-        _silver(views.member_activity),
+        _gold("gold_member_activity"),
         oracle("""
 SELECT member_id,
        COUNT(*) AS total_claims,
@@ -166,7 +171,7 @@ ORDER BY total_amount DESC
 """),
     ),
     "q_recent_activity": (
-        _silver(lambda s: views.recent_activity(s, NOW_SPARK)),
+        _gold("gold_recent_activity"),
         oracle(f"""
 SELECT 'Last 30 Days' AS period, COUNT(*) AS claims_processed,
        COUNT(DISTINCT member_id) AS unique_members,
@@ -297,16 +302,14 @@ LIMIT 5
     ),
     # -- single-operator projection/filter queries (P-family) -------------
     "q_filter_notnull": (
-        lambda spark, sf: transform.not_null_filter(
-            claims.claims_raw(spark, sf), "claim_id"
-        ).select("claim_id", "member_id"),
+        lambda spark, sf: claims.claims_raw(spark, sf)
+        .where(claims.HAS_CLAIM_ID)
+        .select("claim_id", "member_id"),
         oracle("SELECT claim_id, member_id FROM claims_raw WHERE claim_id IS NOT NULL"),
     ),
     "q_clean_provider": (
-        lambda spark, sf: transform.null_or_blank_to_default(
-            claims.claims_raw(spark, sf), "provider_name", "UNKNOWN"
-        )
-        .select("provider_name")
+        lambda spark, sf: claims.claims_raw(spark, sf)
+        .selectExpr(f"{claims.PROVIDER_NAME} AS provider_name")
         .distinct(),
         oracle("""
 SELECT DISTINCT CASE WHEN provider_name IS NULL OR trim(provider_name) = '' THEN 'UNKNOWN'
@@ -315,9 +318,9 @@ FROM claims_raw
 """),
     ),
     "q_clamp_amount": (
-        lambda spark, sf: transform.clamp_non_negative(
-            claims.claims_raw(spark, sf), "claim_amount"
-        ).select("claim_id", "claim_amount"),
+        lambda spark, sf: claims.claims_raw(spark, sf).selectExpr(
+            "claim_id", f"{claims.CLAIM_AMOUNT} AS claim_amount"
+        ),
         oracle("""
 SELECT claim_id,
        CASE WHEN claim_amount IS NULL OR claim_amount < 0 THEN 0.0 ELSE claim_amount END AS claim_amount

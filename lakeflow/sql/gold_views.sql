@@ -1,8 +1,11 @@
 -- Gold-tier views, Spark SQL surface (S7).
--- Mirrors /root/reference/sql/gold/create_views.sql:8-159 re-targeted at
--- the silver_claims temp view; expression-for-expression identical to
--- the DataFrame builders in lakeflow.views (tests assert equality), with
--- the SURVEY §7.3 dialect traps resolved:
+-- Mirrors the reference's sql/gold/create_views.sql:8-159 re-targeted at
+-- the silver_claims table. This file is the engine's only definition of
+-- the six views: catalog.register_gold_views and
+-- catalog.publish_gold_views_persistent run it as is, and the registered
+-- gold queries run each SELECT through catalog.gold_view. The DuckDB
+-- oracle SQL in lakeflow/registry.py is the independent twin. The
+-- SURVEY §7.3 dialect traps are resolved:
 --   * PERCENTILE_DISC(0.5) WITHIN GROUP (exact discrete, not interpolated)
 --   * datediff(end, start) argument order (Trino DATE_DIFF('day', a, b))
 --   * 100.0 multipliers force double division

@@ -1,17 +1,15 @@
-"""Gold-tier analytic views — DataFrame builders over silver claims.
+"""Gold-tier check queries — DataFrame builders over silver claims.
 
-Each function reproduces one reference view or check query:
-- claims_summary        → /root/reference/sql/gold/create_views.sql:8-29
-- monthly_trend         → :32-51
-- provider_performance  → :54-72
-- quality_dashboard     → :75-97
-- member_activity       → :100-117
-- recent_activity       → :120-159 (wall-clock NOW pinned; see claims.py)
-- category_distribution → /root/reference/sql/trino_checks.sql:126-134
+The reference's six gold views (create_views.sql:8-159) are defined once,
+in lakeflow/sql/gold_views.sql, and run by :func:`lakeflow.catalog.gold_view`.
+The builders here reproduce the reference's check queries and the
+remaining silver analytics:
+- category_distribution → trino_checks.sql:126-134
 - quality_distribution  → :137-155
 - data_issues           → :157-166
 - table_stats           → :112-123
 - topk_newest           → :29-42
+- median_by_group, dq_aggregates, pivot_category_amounts
 
 Hash-stability deviations from the reference (documented per SURVEY.md
 §7.3): every AVG over the {0.3,0.5,0.7,1.0} quality score is rounded to
@@ -26,19 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-GOLD_CUTOFF = "2023-01-01"
-
-
-def _hv(col: str = "claim_amount_category") -> F.Column:
-    """COUNT(CASE WHEN category IN ('HIGH','VERY_HIGH') THEN 1 END)."""
-    return F.count(F.when(F.col(col).isin("HIGH", "VERY_HIGH"), 1))
-
-
-def _avg_exact(col: str, alias: str) -> F.Column:
-    """Order-independent AVG for integer-valued doubles: exact SUM then
-    one division — bit-identical across engines."""
-    return (F.sum(col) / F.count(col)).alias(alias)
-
 
 def _avg_score(alias: str = "avg_quality_score") -> F.Column:
     """ROUND(AVG(data_quality_score), 3), order-independent.
@@ -49,154 +34,6 @@ def _avg_score(alias: str = "avg_quality_score") -> F.Column:
     """
     c = F.col("data_quality_score")
     return F.round(F.sum(c * 10) / (F.count(c) * 10), 3).alias(alias)
-
-
-def claims_summary(silver: DataFrame) -> DataFrame:
-    return (
-        silver.filter(F.col("service_date") >= F.lit(GOLD_CUTOFF).cast("date"))
-        .groupBy("service_year", "service_month", "provider_name", "claim_amount_category")
-        .agg(
-            F.count("*").alias("total_claims"),
-            F.countDistinct("member_id").alias("unique_members"),
-            F.sum("claim_amount").alias("total_amount"),
-            _avg_exact("claim_amount", "avg_claim_amount"),
-            F.min("claim_amount").alias("min_claim_amount"),
-            F.max("claim_amount").alias("max_claim_amount"),
-            _avg_score(),
-            F.count(F.when(F.col("data_quality_score") >= 0.8, 1)).alias(
-                "high_quality_claims"
-            ),
-            F.max("processing_timestamp").alias("last_processed"),
-        )
-    )
-
-
-def monthly_trend(silver: DataFrame) -> DataFrame:
-    return (
-        silver.filter(F.col("service_date") >= F.lit(GOLD_CUTOFF).cast("date"))
-        .groupBy("service_year", "service_month")
-        .agg(
-            F.make_date("service_year", "service_month", F.lit(1)).alias("month_date"),
-            F.count("*").alias("claims_count"),
-            F.countDistinct("member_id").alias("unique_members"),
-            F.sum("claim_amount").alias("total_amount"),
-            _avg_exact("claim_amount", "avg_amount"),
-            F.count(F.when(F.col("claim_amount_category") == "HIGH", 1)).alias(
-                "high_value_claims"
-            ),
-            F.count(F.when(F.col("claim_amount_category") == "VERY_HIGH", 1)).alias(
-                "very_high_value_claims"
-            ),
-            _avg_score(),
-        )
-        .orderBy(F.desc("service_year"), F.desc("service_month"))
-    )
-
-
-def provider_performance(silver: DataFrame, min_claims: int = 10) -> DataFrame:
-    return (
-        silver.filter(F.col("provider_name") != "UNKNOWN")
-        .groupBy("provider_name")
-        .agg(
-            F.count("*").alias("total_claims"),
-            F.countDistinct("member_id").alias("unique_members"),
-            F.sum("claim_amount").alias("total_billed"),
-            _avg_exact("claim_amount", "avg_claim_amount"),
-            F.expr(
-                "percentile_disc(0.5) WITHIN GROUP (ORDER BY claim_amount)"
-            ).alias("median_claim_amount"),
-            _hv().alias("high_value_claims"),
-            F.round(_hv() * 100.0 / F.count("*"), 2).alias("high_value_percentage"),
-            _avg_score(),
-            F.min("service_date").alias("first_service_date"),
-            F.max("service_date").alias("last_service_date"),
-            F.countDistinct(
-                F.make_date("service_year", "service_month", F.lit(1))
-            ).alias("active_months"),
-        )
-        .filter(F.col("total_claims") >= min_claims)
-        .orderBy(F.desc("total_billed"))
-    )
-
-
-def quality_dashboard(silver: DataFrame) -> DataFrame:
-    s = F.col("data_quality_score")
-    return (
-        silver.groupBy("service_year", "service_month")
-        .agg(
-            F.count("*").alias("total_records"),
-            F.count(F.when(s >= 0.9, 1)).alias("excellent_quality"),
-            F.count(F.when((s >= 0.7) & (s < 0.9), 1)).alias("good_quality"),
-            F.count(F.when((s >= 0.5) & (s < 0.7), 1)).alias("fair_quality"),
-            F.count(F.when(s < 0.5, 1)).alias("poor_quality"),
-            _avg_score(),
-            F.round(F.count(F.when(s >= 0.8, 1)) * 100.0 / F.count("*"), 2).alias(
-                "high_quality_percentage"
-            ),
-            F.count(F.when(F.col("claim_id").isNull(), 1)).alias("missing_claim_id"),
-            F.count(F.when(F.col("member_id").isNull(), 1)).alias("missing_member_id"),
-            F.count(F.when(F.col("service_date").isNull(), 1)).alias(
-                "missing_service_date"
-            ),
-            F.count(
-                F.when(F.col("claim_amount").isNull() | (F.col("claim_amount") <= 0), 1)
-            ).alias("invalid_amount"),
-            F.max("processing_timestamp").alias("last_processed"),
-        )
-        .orderBy(F.desc("service_year"), F.desc("service_month"))
-    )
-
-
-def member_activity(silver: DataFrame, min_claims: int = 2) -> DataFrame:
-    return (
-        silver.filter(F.col("member_id").isNotNull())
-        .groupBy("member_id")
-        .agg(
-            F.count("*").alias("total_claims"),
-            F.sum("claim_amount").alias("total_amount"),
-            _avg_exact("claim_amount", "avg_claim_amount"),
-            F.countDistinct("provider_name").alias("providers_used"),
-            _hv().alias("high_value_claims"),
-            F.min("service_date").alias("first_service_date"),
-            F.max("service_date").alias("last_service_date"),
-            _avg_score(),
-            F.datediff(F.max("service_date"), F.min("service_date")).alias(
-                "activity_span_days"
-            ),
-            F.countDistinct(
-                F.make_date("service_year", "service_month", F.lit(1))
-            ).alias("active_months"),
-        )
-        .filter(F.col("total_claims") >= min_claims)
-        .orderBy(F.desc("total_amount"))
-    )
-
-
-def _recent_branch(silver: DataFrame, label: str, days: int, now_spark: str) -> DataFrame:
-    cutoff = F.expr(f"{now_spark} - make_interval(0, 0, 0, {days}, 0, 0, 0)")
-    return silver.filter(F.col("processing_timestamp") >= cutoff).agg(
-        F.lit(label).alias("period"),
-        F.count("*").alias("claims_processed"),
-        F.countDistinct("member_id").alias("unique_members"),
-        F.countDistinct("provider_name").alias("unique_providers"),
-        F.sum("claim_amount").alias("total_amount"),
-        _avg_exact("claim_amount", "avg_amount"),
-        _avg_score("avg_quality"),
-        F.max("processing_timestamp").alias("last_update"),
-    )
-
-
-def recent_activity(silver: DataFrame, now_spark: str) -> DataFrame:
-    """3-branch UNION ALL over recency windows (U1).
-
-    ``now`` is injectable (pinned for oracle determinism; pass
-    ``current_timestamp()`` for production wall-clock semantics).
-    """
-    return (
-        _recent_branch(silver, "Last 30 Days", 30, now_spark)
-        .unionAll(_recent_branch(silver, "Last 7 Days", 7, now_spark))
-        .unionAll(_recent_branch(silver, "Last 24 Hours", 1, now_spark))
-    )
 
 
 def category_distribution(silver: DataFrame) -> DataFrame:

@@ -1,22 +1,14 @@
-"""SQL surface ≡ DataFrame surface: every gold view published from
-lakeflow/sql/gold_views.sql must return exactly the rows of its
-DataFrame builder, plus DDL provisioning and catalog introspection."""
+"""Catalog surface: every gold view published by register_gold_views
+(the silver_claims temp view plus ``${now}`` substitution) must return
+exactly the rows catalog.gold_view (the registered gold queries) returns
+for it, plus DDL provisioning and catalog introspection."""
 
 from __future__ import annotations
 
 import pytest
 
-from lakeflow import catalog, claims, views
+from lakeflow import catalog, claims
 from lakeflow.claims import NOW_SPARK
-
-VIEW_TO_BUILDER = {
-    "gold_claims_summary": views.claims_summary,
-    "gold_monthly_trend": views.monthly_trend,
-    "gold_provider_performance": views.provider_performance,
-    "gold_quality_dashboard": views.quality_dashboard,
-    "gold_member_activity": views.member_activity,
-    "gold_recent_activity": lambda s: views.recent_activity(s, NOW_SPARK),
-}
 
 
 @pytest.fixture(scope="module")
@@ -26,10 +18,14 @@ def gold(spark, sf_dir):
     return silver
 
 
-@pytest.mark.parametrize("view", sorted(VIEW_TO_BUILDER))
+@pytest.mark.parametrize("view", sorted(catalog.GOLD_VIEWS))
 def test_sql_view_matches_builder(spark, gold, view):
     got = spark.table(view)
-    want = VIEW_TO_BUILDER[view](gold)
+    want = catalog.gold_view(gold, view, NOW_SPARK)
+    # binding silver into the query must not un-persist the silver tier
+    assert spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        gold._jdf
+    ).isDefined()
     assert got.columns == want.columns
     # key=repr: NULL group keys (score-0.5 rows have NULL service_date)
     # make plain tuple sorting fail on None < int

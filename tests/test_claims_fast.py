@@ -1,31 +1,22 @@
-"""r12 cold-path optimization (guide §7.3): the batched selectExpr
-builders for claims_raw / silver_claims must be row-for-row and
-schema-identical to the Column-API operator composition they replace.
-The composition stays in the tree as the spec; this pin means the fast
-path can never drift from it."""
+"""Raw claims as a whole against the DuckDB oracle: every row and column
+of claims.claims_raw (the batched selectExpr CASE ladders) must equal
+the oracle's claims_raw CTE. Silver is covered the same way by
+test_oracle_parity[q_silver_pipeline]."""
 
 from __future__ import annotations
 
 from lakeflow import claims
+from tests.oracle_harness import compare, duck_connection
 
 
-def _rows(df):
-    return sorted(map(tuple, df.collect()), key=repr)
-
-
-def test_claims_raw_fast_matches_column_spec(spark, sf_dir):
-    fast = claims._claims_raw_build(spark, sf_dir)
-    spec = claims._claims_raw_build_columns(spark, sf_dir)
-    assert [(f.name, f.dataType) for f in fast.schema.fields] == [
-        (f.name, f.dataType) for f in spec.schema.fields
-    ]
-    assert _rows(fast) == _rows(spec)
-
-
-def test_silver_fast_matches_operator_composition(spark, sf_dir):
-    fast = claims._silver_claims_build(spark, sf_dir)
-    spec = claims._silver_claims_build_columns(spark, sf_dir)
-    assert [(f.name, f.dataType) for f in fast.schema.fields] == [
-        (f.name, f.dataType) for f in spec.schema.fields
-    ]
-    assert _rows(fast) == _rows(spec)
+def test_claims_raw_matches_oracle(spark, sf_dir):
+    con = duck_connection(sf_dir)
+    try:
+        compare(
+            claims.claims_raw(spark, sf_dir),
+            con,
+            claims.oracle("SELECT * FROM claims_raw"),
+            "claims_raw",
+        )
+    finally:
+        con.close()

@@ -1,6 +1,6 @@
-"""Property-based check of the compiled date parser: for arbitrary
-input strings, the exception-free _fast_date_parse chain must return
-EXACTLY what the try_to_date chain returns (the rewrite it replaced).
+"""Property-based check of the shipped silver date parser: for arbitrary
+input strings, the exception-free claims.parse_date_sql expression must
+return EXACTLY what the try_to_date chain over the same formats returns.
 
 One batched Spark round-trip per example set (hypothesis drives the
 string generator; Spark evaluates both chains column-to-column).
@@ -8,13 +8,15 @@ string generator; Spark evaluates both chains column-to-column).
 
 from __future__ import annotations
 
-
-
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
-from lakeflow.transform import CLAIM_DATE_FORMATS, _fast_date_parse
+from lakeflow.claims import parse_date_sql
+
+# the formats parse_date_sql accepts, in first-match order
+# (claims_to_iceberg.py:60-63)
+CLAIM_DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "dd/MM/yyyy")
 
 # strings that look almost like dates: digits, separators, junk
 date_like = st.one_of(
@@ -24,6 +26,11 @@ date_like = st.one_of(
     ).map(lambda t: f"{t[0]:04d}-{t[1]:02d}-{t[2]:02d}"),
     st.tuples(
         st.integers(0, 99), st.integers(0, 99), st.integers(0, 9999)
+    ).map(lambda t: f"{t[0]:02d}/{t[1]:02d}/{t[2]:04d}"),
+    # in-range slashed fields: most parse, many under both MM/dd and
+    # dd/MM, so the first-match order is exercised
+    st.tuples(
+        st.integers(1, 31), st.integers(1, 31), st.integers(1900, 2100)
     ).map(lambda t: f"{t[0]:02d}/{t[1]:02d}/{t[2]:04d}"),
     # junk / near-misses
     st.text(
@@ -37,13 +44,12 @@ date_like = st.one_of(
 @settings(max_examples=12, deadline=None)
 def test_fast_parse_matches_try_to_date_chain(spark_global, strings):
     """Differential: both chains evaluated in ONE Spark query over the
-    same strings — the compiled path must equal the exception-driven
-    try_to_date path it replaced, byte for byte."""
+    same strings — the shipped SQL parse must equal the exception-driven
+    try_to_date chain, byte for byte."""
     spark = spark_global
     df = spark.createDataFrame([(s,) for s in strings], "s string")
-    c = F.col("s")
-    fast = F.coalesce(*[_fast_date_parse(c, f) for f in CLAIM_DATE_FORMATS])
-    slow = F.coalesce(*[F.try_to_date(c, f) for f in CLAIM_DATE_FORMATS])
+    fast = F.expr(parse_date_sql("s"))
+    slow = F.coalesce(*[F.try_to_date(F.col("s"), f) for f in CLAIM_DATE_FORMATS])
     # compare JVM-side (null-safe equality) and collect only the input
     # STRINGS of any mismatches: both chains parse proleptic year-0
     # dates ('0000-01-01') identically, but Python's datetime.date

@@ -74,7 +74,7 @@ def test_medallion_end_to_end(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from lakeflow import ingest, transform, views
+    from lakeflow import catalog, claims, ingest
     from lakeflow.io import write_dual_sink
 
     csv_dir = tmp_path / "incoming"
@@ -101,9 +101,10 @@ def test_medallion_end_to_end(spark, tmp_path):
     @p.stage("silver", depends_on=("bronze",))
     def silver(up):
         df = spark.read.parquet(bronze_path)
-        cleaned = transform.clean_claims(
+        cleaned = claims.clean(
             df.withColumn("claim_amount", F.col("claim_amount").cast("double"))
-        ).withColumn("processing_timestamp", F.lit(now).cast("timestamp_ntz"))
+            .withColumn("processing_timestamp", F.lit(now).cast("timestamp_ntz"))
+        )
         write_dual_sink(
             cleaned, silver_path, mirror_path,
             partition_by=("service_year", "service_month"),
@@ -112,7 +113,8 @@ def test_medallion_end_to_end(spark, tmp_path):
 
     @p.stage("gold", depends_on=("silver",))
     def gold(up):
-        return views.claims_summary(spark.read.parquet(up["silver"])).collect()
+        silver = spark.read.parquet(up["silver"])
+        return catalog.gold_view(silver, "gold_claims_summary", claims.NOW_SPARK).collect()
 
     runs = p.run()
     assert all(r.status == "ok" for r in runs.values()), runs

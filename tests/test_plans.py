@@ -123,9 +123,7 @@ def test_silver_filters_stay_cheap(spark, sf_dir):
     the whole score CASE (and the date parse it references) into the
     Filter, and every row evaluates the derivation twice (~2× measured
     silver materialization cost)."""
-    from lakeflow import transform
-
-    df = transform.clean_claims(claims.claims_raw(spark, sf_dir))
+    df = claims.clean(claims.claims_raw(spark, sf_dir))
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     for line in opt.splitlines():
         s = line.strip().lstrip("+- ")

@@ -1,18 +1,28 @@
-"""Unit tests for the silver cleaning operators — semantics pinned to
-/root/reference/jobs/silver/claims_to_iceberg.py:45-88."""
+"""Unit tests for the silver transform, claims.clean — semantics pinned to
+the reference's claims_to_iceberg.py:45-88."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from lakeflow import transform
+from lakeflow import claims
+from tests.oracle_harness import compare
+
+BRONZE_DDL = (
+    "claim_id string, member_id string, provider_name string, "
+    "claim_amount double, service_date string, "
+    "processing_timestamp timestamp_ntz, ingestion_timestamp timestamp_ntz, "
+    "source_file string, batch_id string"
+)
+PROCESSED = dt.datetime(2025, 12, 31)
+INGESTED = dt.datetime(2025, 12, 30, 23)
 
 
 def _raw(spark, rows):
+    """Bronze-shaped claims: the five CSV fields plus the lineage and
+    processing-time columns every bronze row carries."""
     return spark.createDataFrame(
-        rows,
-        "claim_id string, member_id string, provider_name string, "
-        "claim_amount double, service_date string",
+        [(*r, PROCESSED, INGESTED, "csv", "20251231_000000") for r in rows], BRONZE_DDL
     )
 
 
@@ -35,7 +45,13 @@ def test_clean_claims_full_semantics(spark):
         # very high amount band
         ("CLM7", "MBR7", "Clinic D", 123456.0, "2024-06-30"),
     ]
-    out = transform.clean_claims(_raw(spark, rows))
+    out = claims.clean(_raw(spark, rows))
+    assert out.columns == [
+        "claim_id", "member_id", "provider_name", "claim_amount", "service_date",
+        "service_year", "service_month", "service_day", "claim_amount_category",
+        "processing_timestamp", "data_quality_score", "ingestion_timestamp",
+        "source_file", "batch_id",
+    ]
     got = {r["claim_id"]: r.asDict() for r in out.collect()}
 
     assert set(got) == {"CLM1", "CLM2", "CLM3", "CLM4", "CLM5", "CLM7"}
@@ -60,13 +76,18 @@ def test_clean_claims_full_semantics(spark):
     assert got["CLM1"]["service_year"] == 2024
     assert got["CLM1"]["service_month"] == 3
     assert got["CLM1"]["service_day"] == 1
+    assert got["CLM1"]["processing_timestamp"] == PROCESSED
+    assert got["CLM1"]["batch_id"] == "20251231_000000"
 
 
 def test_quality_gate_equals_score_threshold(spark):
-    """clean_claims filters on raw member_id (pushdown-friendly); that
-    must select EXACTLY the rows the reference's score >= 0.5 gate
-    selects (claims_to_iceberg.py:85) — the 0.0/0.3 rungs are the only
-    sub-threshold scores and both are null-key rows."""
+    """clean() gates on raw member_id (pushdown-friendly); that must
+    keep EXACTLY the rows of the reference's score >= 0.5 gate
+    (claims_to_iceberg.py:85). The reference side is the DuckDB
+    oracle's own _clean/_enrich steps and score gate (the tail of
+    claims.ORACLE_CTE) run over the same raw rows."""
+    import duckdb
+
     rows = [
         ("C1", "M1", "P", 10.0, "2024-01-01"),   # 1.0
         ("C2", None, "P", 10.0, "2024-01-01"),   # 0.3 → dropped
@@ -74,22 +95,29 @@ def test_quality_gate_equals_score_threshold(spark):
         ("C4", "M4", "P", -1.0, "2024-01-01"),   # 0.7 (clamped) → kept
         (None, "M5", "P", 10.0, "2024-01-01"),   # dropped by P2
     ]
-    got = transform.clean_claims(_raw(spark, rows))
-    # reference formulation: the SAME shipped pre-gate chain, gated on
-    # the derived score (no duplicated ladder that could drift)
-    naive = transform.threshold_filter(
-        transform.clean_claims_scored(_raw(spark, rows)), "data_quality_score", 0.5
+    raw = _raw(spark, rows)
+    got = claims.clean(raw)
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE claims_raw (claim_id VARCHAR, member_id VARCHAR,"
+        " provider_name VARCHAR, claim_amount DOUBLE, service_date VARCHAR,"
+        " processing_timestamp TIMESTAMP, ingestion_timestamp TIMESTAMP,"
+        " source_file VARCHAR, batch_id VARCHAR)"
     )
-    assert sorted(r.claim_id for r in got.collect()) == sorted(
-        r.claim_id for r in naive.collect()
-    ) == ["C1", "C3", "C4"]
+    con.executemany(
+        "INSERT INTO claims_raw VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
+        [tuple(r) for r in raw.collect()],
+    )
+    cte = claims.ORACLE_CTE
+    gated = "WITH " + cte[cte.index("_clean AS (") :] + "SELECT * FROM claims"
+    compare(got, con, gated, "quality_gate")
+    assert sorted(r.claim_id for r in got.collect()) == ["C1", "C3", "C4"]
 
 
 def test_ambiguous_date_prefers_mm_dd(spark):
     # 03/04/2024 parses under both MM/dd and dd/MM → first format wins
-    out = transform.clean_claims(
-        _raw(spark, [("C1", "M1", "P", 1.0, "03/04/2024")])
-    ).collect()[0]
+    out = claims.clean(_raw(spark, [("C1", "M1", "P", 1.0, "03/04/2024")])).collect()[0]
     assert out["service_date"] == dt.date(2024, 3, 4)
 
 
@@ -102,7 +130,7 @@ def test_band_boundaries(spark):
         ("E", "M", "P", 10000.0, "2024-01-01"),
         ("F", "M", "P", 10000.01, "2024-01-01"),
     ]
-    out = transform.clean_claims(_raw(spark, rows))
+    out = claims.clean(_raw(spark, rows))
     cats = {r["claim_id"]: r["claim_amount_category"] for r in out.collect()}
     assert cats == {
         "A": "ZERO",
