@@ -39,8 +39,8 @@ Scale design (100 TB):
 
 Companions elsewhere in the engine: the WRITER side of these ops
 already exists (`io.write_zordered` physically rewrites a table
-z-clustered, `io.write_sorted` linearly, `io.compact` /
-`txlog.TxTable.compact` execute compaction); this module is the
+z-clustered, `io.write_sorted` linearly, `txlog.TxTable.compact`
+executes compaction); this module is the
 REGISTERED, ORACLE-CERTIFIED analysis surface — the zone-map audit,
 the skipping self-evaluation, and the compaction plan a maintenance
 job would compute before paying for the rewrite.

@@ -1530,16 +1530,6 @@ def ann_recall(
         lists = _nearest_lists(emb, cent, "v", 1).localCheckpoint(eager=False)
         return cent, lists
 
-    methods = [
-        ("ivf", lambda s, d, query_mod: knn_ivf(s, d, query_mod=query_mod, _coarse=coarse)),
-        ("ivfpq", lambda s, d, query_mod: knn_ivfpq(s, d, query_mod=query_mod, _coarse=coarse)),
-        # the deployment-resolution twin (ks=64/rerank=10/nprobe=6):
-        # with it in the battery, the deployment shape's recall is an
-        # oracle-certified number, not a SCALE.md probe measurement
-        ("ivfpq_hi", lambda s, d, query_mod: knn_ivfpq_hi(s, d, query_mod=query_mod, _coarse=coarse)),
-        ("lsh", knn_lsh),
-        ("sq8", knn_sq8),
-    ]
     # Build the five method pipelines CONCURRENTLY (r12, guide §2.6
     # "overlap independent jobs"): each eager index build (Lloyd
     # rounds, PQ codebooks, checkpoints) blocks the driver while the
@@ -1559,6 +1549,7 @@ def ann_recall(
     # shared-equals-recomputed; the union below consumes the futures
     # in the fixed ``methods`` order.
     from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     from pyspark.util import inheritable_thread_target
 
@@ -1569,10 +1560,27 @@ def ann_recall(
             F.lit(name).alias("method"), "q_id", "vec_id"
         )
 
-    with ThreadPoolExecutor(max_workers=len(methods) + 1) as pool:
-        coarse_f = pool.submit(inheritable_thread_target(spark)(_coarse_build))
-        coarse = coarse_f.result  # pending build; workers resolve it
-        parts = list(pool.map(_build, methods))
+    try:
+        # five method builds plus the coarse quantizer
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            # the IVF-family workers resolve this pending build
+            coarse = pool.submit(
+                inheritable_thread_target(spark)(_coarse_build)
+            ).result
+            methods = [
+                ("ivf", partial(knn_ivf, _coarse=coarse)),
+                ("ivfpq", partial(knn_ivfpq, _coarse=coarse)),
+                # the deployment-resolution twin (ks=64/rerank=10/nprobe=6):
+                # with it in the battery, the deployment shape's recall is an
+                # oracle-certified number, not a SCALE.md probe measurement
+                ("ivfpq_hi", partial(knn_ivfpq_hi, _coarse=coarse)),
+                ("lsh", knn_lsh),
+                ("sq8", knn_sq8),
+            ]
+            parts = list(pool.map(_build, methods))
+    except BaseException:
+        gt.unpersist()  # the returned plan would have owned it
+        raise
     tagged = None
     for part in parts:
         tagged = part if tagged is None else tagged.unionByName(part)

@@ -86,7 +86,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import struct
 import time
 import uuid
@@ -95,7 +94,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from lakeflow import avrolite
+from lakeflow import avrolite, datafiles
 
 METADATA_DIR = "metadata"
 DATA_DIR = "data"
@@ -236,63 +235,6 @@ def _unbound_value(ice_type: str, b: bytes) -> Any:
     except (struct.error, UnicodeDecodeError):
         return None
     return None
-
-
-_CONJUNCT_RE = re.compile(
-    r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*(=|!=|<=|>=|<|>)\s*('[^']*'|[-+0-9.eE]+)\s*"
-)
-
-
-def _parse_conjuncts(where: str) -> list[tuple[str, str, Any]] | None:
-    """Parse ``col op literal [AND ...]`` into pruning conjuncts; None
-    when any piece falls outside the fragment (pruning then degrades to
-    scanning every file — correctness never depends on it). Same
-    fragment and semantics as txlog's data skipping."""
-    out: list[tuple[str, str, Any]] = []
-    for part in re.split(r"(?i)\s+and\s+", where.strip()):
-        m = _CONJUNCT_RE.fullmatch(part)
-        if m is None:
-            return None
-        col, op, lit = m.groups()
-        val: Any
-        if len(lit) >= 2 and lit[0] == "'" and lit[-1] == "'":
-            val = lit[1:-1]
-        else:
-            try:
-                val = float(lit) if ("." in lit or "e" in lit.lower()) else int(lit)
-            except ValueError:
-                return None
-        out.append((col, op, val))
-    return out
-
-
-def _bounds_may_match(
-    lo: dict[str, Any], hi: dict[str, Any], conjuncts: list[tuple[str, str, Any]]
-) -> bool:
-    """Conservative range check of one data file's decoded bounds:
-    False only when a conjunct is provably unsatisfiable for every row."""
-    for col, op, val in conjuncts:
-        mn, mx = lo.get(col), hi.get(col)
-        if mn is None or mx is None:
-            continue
-        numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-        if numeric != (isinstance(mn, (int, float)) and not isinstance(mn, bool)):
-            continue  # type mismatch — don't prune
-        if op == "=":
-            ok = mn <= val <= mx
-        elif op == "<":
-            ok = mn < val
-        elif op == "<=":
-            ok = mn <= val
-        elif op == ">":
-            ok = mx > val
-        elif op == ">=":
-            ok = mx >= val
-        else:  # !=
-            ok = not (mn == mx == val)
-        if not ok:
-            return False
-    return True
 
 
 # ------------------------------------------------------------ avro schemas
@@ -847,10 +789,6 @@ class IcebergTable:
         defines the table. Returns spec data_file structs (typed
         partition tuple, record_count, column bounds from the parquet
         FOOTER — no data re-scan)."""
-        import pyarrow.parquet as pq
-
-        staging = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
-        part_cols = [pf["name"] for pf in part_fields]
         # hidden partitioning (r10): non-identity spec fields are
         # SYNTHESIZED write-side from their source column (the source
         # stays in the payload — a transformed directory value cannot
@@ -859,81 +797,49 @@ class IcebergTable:
         for pf in part_fields:
             if pf["transform"] != "identity":
                 df = df.withColumn(pf["name"], _transform_column(pf))
-        w = df.write.format("parquet").mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.save(staging)
         schema = next(
             s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
         type_of = {f["name"]: f["type"] for f in schema["fields"]}
+
+        def bound_bytes(values: dict[str, Any]) -> dict[str, bytes]:
+            # collapsed on VALUES, encoded after: little-endian bound
+            # bytes do not compare lexicographically
+            return {
+                c: b
+                for c, v in values.items()
+                if c in type_of and (b := _bound_bytes(type_of[c], v)) is not None
+            }
+
         out: list[dict] = []
-        for root, _dirs, names in os.walk(staging):
-            for name in sorted(names):
-                if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                rel = os.path.relpath(src, staging)
-                dst = os.path.join(self.data_dir, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-                raw_parts = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split(os.sep)[:-1]
-                    if "=" in seg
-                }
-                partition = {
-                    pf["name"]: _parse_partition_value(
-                        raw_parts[pf["name"]],
-                        pf.get("result_type", pf["source_type"]),
-                    )
-                    for pf in part_fields
-                }
-                pf_meta = pq.ParquetFile(dst).metadata
-                # collapse row groups on VALUES (min of mins / max of
-                # maxes), then encode — little-endian bound bytes do
-                # not compare lexicographically
-                mins: dict[str, Any] = {}
-                maxs: dict[str, Any] = {}
-                for rg in range(pf_meta.num_row_groups):
-                    g = pf_meta.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        st = col.statistics
-                        cname = col.path_in_schema
-                        if st is None or not st.has_min_max or cname not in type_of:
-                            continue
-                        if cname not in mins or st.min < mins[cname]:
-                            mins[cname] = st.min
-                        if cname not in maxs or st.max > maxs[cname]:
-                            maxs[cname] = st.max
-                # bounds are kept NAME-keyed here and mapped to field
-                # ids at manifest-write time — a CAS retry may rebase
-                # onto a winner that itself evolved the schema, moving
-                # the id assignment out from under files staged once
-                out.append(
-                    {
-                        "content": 0,
-                        # full URI per spec (ADVICE r9): external readers
-                        # resolve file_path directly, no table root needed
-                        "file_path": "file://" + dst,
-                        "file_format": "PARQUET",
-                        "partition": partition,
-                        "record_count": pf_meta.num_rows,
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        "_lb_by_name": {
-                            c: _bound_bytes(type_of[c], v)
-                            for c, v in mins.items()
-                            if _bound_bytes(type_of[c], v) is not None
-                        },
-                        "_ub_by_name": {
-                            c: _bound_bytes(type_of[c], v)
-                            for c, v in maxs.items()
-                            if _bound_bytes(type_of[c], v) is not None
-                        },
-                    }
+        part_cols = tuple(pf["name"] for pf in part_fields)
+        for f in datafiles.stage(df, part_cols, self.path, self.data_dir):
+            partition = {
+                pf["name"]: _parse_partition_value(
+                    f.partition[pf["name"]],
+                    pf.get("result_type", pf["source_type"]),
                 )
-        shutil.rmtree(staging)
+                for pf in part_fields
+            }
+            stats = datafiles.footer_stats(f.path)
+            # bounds are kept NAME-keyed here and mapped to field
+            # ids at manifest-write time — a CAS retry may rebase
+            # onto a winner that itself evolved the schema, moving
+            # the id assignment out from under files staged once
+            out.append(
+                {
+                    "content": 0,
+                    # full URI per spec (ADVICE r9): external readers
+                    # resolve file_path directly, no table root needed
+                    "file_path": "file://" + f.path,
+                    "file_format": "PARQUET",
+                    "partition": partition,
+                    "record_count": stats.num_rows,
+                    "file_size_in_bytes": os.path.getsize(f.path),
+                    "_lb_by_name": bound_bytes(stats.mins),
+                    "_ub_by_name": bound_bytes(stats.maxs),
+                }
+            )
         return out
 
     # ------------------------------------------------------------- commits
@@ -1499,9 +1405,9 @@ class IcebergTable:
         filter sees the TYPED partition dict and runs before Spark ever
         sees a file list) and ``where``-driven DATA SKIPPING: files
         whose Appendix-D column bounds prove no row can match are
-        dropped from the plan (the txlog data-skipping twin; the
-        predicate is re-applied row-level by read(), so pruning is a
-        pure optimization, never a correctness dependency).
+        dropped from the plan (:func:`datafiles.may_match`, shared with
+        txlog; the predicate is re-applied row-level by read(), so
+        pruning is a pure optimization, never a correctness dependency).
 
         ``meta`` pins the table-metadata dict for the whole scan (one
         parse, and no TOCTOU against a concurrent commit between
@@ -1511,8 +1417,8 @@ class IcebergTable:
         snap = self._resolve_snapshot(snapshot_id, asof_ms, meta)
         if snap is None:
             return []
-        conjuncts = _parse_conjuncts(where) if where is not None else None
-        name_type_of: dict[int, tuple[str, str]] = {}
+        conjuncts = datafiles.parse_conjuncts(where) if where is not None else None
+        field_of: dict[int, dict] = {}
         if conjuncts is not None:
             schema = next(
                 s
@@ -1520,19 +1426,21 @@ class IcebergTable:
                 if s["schema-id"] == meta["current-schema-id"]
             )
             # field ids are stable across add-column evolution, so the
-            # CURRENT schema's id map covers every manifest's bounds.
-            # float/double columns are EXCLUDED from pruning: parquet
-            # min/max stats ignore NaN (and this module writes no
-            # nan_value_counts), while Spark's row-level filter orders
-            # NaN above every number — pruning on those bounds could
-            # drop a file whose NaN rows the filter would keep, which
-            # would break the pure-optimization invariant.
-            name_type_of = {
-                f["id"]: (f["name"], f["type"])
-                for f in schema["fields"]
-                if isinstance(f["type"], str)
-                and f["type"] not in ("float", "double")
+            # CURRENT schema's id map covers every manifest's bounds
+            field_of = {
+                f["id"]: f for f in schema["fields"] if isinstance(f["type"], str)
             }
+        types = {f["name"]: f["type"] for f in field_of.values()}
+
+        def decoded(bounds: list[dict] | None) -> dict[str, Any]:
+            out = {}
+            for kv in bounds or []:
+                f = field_of.get(kv["key"])
+                v = _unbound_value(f["type"], kv["value"]) if f else None
+                if v is not None:
+                    out[f["name"]] = v
+            return out
+
         _, manifests, _ = avrolite.read_container(snap["manifest-list"])
         files: list[dict] = []
         for m in manifests:
@@ -1547,22 +1455,13 @@ class IcebergTable:
                     d["partition"]
                 ):
                     continue
-                if conjuncts is not None:
-                    lo: dict[str, Any] = {}
-                    hi: dict[str, Any] = {}
-                    for side, dst in (
-                        ("lower_bounds", lo),
-                        ("upper_bounds", hi),
-                    ):
-                        for kv in d.get(side) or []:
-                            nt = name_type_of.get(kv["key"])
-                            if nt is None:
-                                continue
-                            v = _unbound_value(nt[1], kv["value"])
-                            if v is not None:
-                                dst[nt[0]] = v
-                    if not _bounds_may_match(lo, hi, conjuncts):
-                        continue
+                if conjuncts is not None and not datafiles.may_match(
+                    decoded(d.get("lower_bounds")),
+                    decoded(d.get("upper_bounds")),
+                    conjuncts,
+                    types,
+                ):
+                    continue
                 files.append(d)
         return files
 

@@ -4,13 +4,13 @@ Source/sink surface mirrors the reference's connectors
 (S1-S6 in SURVEY.md §2.1):
 - CSV source w/ header+inferSchema+multiline+escape
   (/root/reference/jobs/bronze/ingest_csv_to_delta.py:44-49)
-- Delta/Iceberg sinks are gated behind import-try (the jars are not in
-  this container); parquet is the always-available format. The
-  transactional semantics the jars would provide (atomic multi-file
-  commit, time travel, MERGE/OPTIMIZE under optimistic concurrency)
-  are implemented jar-free in ``lakeflow.txlog`` — prefer
-  ``txlog.TxTable`` over the rename-swap functions below when
-  atomicity matters.
+- Plain-directory writers (partitioned, bucketed, sorted, z-ordered)
+  for parquet and, where the runtime has the jars, Delta/Iceberg. The
+  transactional semantics (atomic multi-file commit, time travel,
+  MERGE/OPTIMIZE under optimistic concurrency) live jar-free in
+  ``lakeflow.txlog`` (``TxTable.upsert_by_key`` / ``compact``) and
+  ``lakeflow.iceberg``; ``write_dual_managed`` is the silver dual sink
+  over both.
 """
 
 from __future__ import annotations
@@ -201,31 +201,6 @@ def write_partitioned(
     w.save(path)
 
 
-def write_dual_sink(
-    df: DataFrame,
-    primary_path: str,
-    mirror_path: str,
-    partition_by: tuple[str, ...] = (),
-    fmt: str = "parquet",
-) -> None:
-    """The reference writes the same silver frame to Iceberg AND Delta,
-    recomputing the whole plan twice
-    (/root/reference/jobs/silver/claims_to_iceberg.py:125-146). Here we
-    persist once and reuse — the fix SURVEY.md §4 calls out.
-    """
-    already_cached = df.is_cached
-    df = df.persist()
-    try:
-        write_partitioned(df, primary_path, partition_by, fmt=fmt)
-        write_partitioned(df, mirror_path, partition_by, fmt=fmt)
-    finally:
-        # Only evict a cache WE created — unpersisting a frame the
-        # caller had already persisted (e.g. the shared silver tier)
-        # would silently drop the session-wide materialization.
-        if not already_cached:
-            df.unpersist()
-
-
 def write_dual_managed(
     df: DataFrame,
     iceberg_path: str,
@@ -235,10 +210,11 @@ def write_dual_managed(
     """The reference's managed-format dual sink — Iceberg primary +
     Delta mirror (claims_to_iceberg.py:125-146) — on the clean-room
     dialects: ONE materialization feeds both IcebergTable.append and
-    TxTable.write (same double-compute fix as write_dual_sink), and
-    both sides are transactional commits rather than bare directories.
-    Creates the Iceberg table on first write. Returns
-    (iceberg snapshot id, delta version)."""
+    TxTable.write (the reference recomputes the whole plan per sink —
+    the fix SURVEY.md §4 calls out), and both sides are transactional
+    commits rather than bare directories. A frame the caller already
+    persisted stays cached. Creates the Iceberg table on first write.
+    Returns (iceberg snapshot id, delta version)."""
     from lakeflow.iceberg import IcebergTable
     from lakeflow.txlog import TxTable
 
@@ -252,6 +228,9 @@ def write_dual_managed(
         ver = TxTable(delta_path).write(df, partition_by=partition_by)
         return snap, ver
     finally:
+        # Only evict a cache WE created — unpersisting a frame the
+        # caller had already persisted (e.g. the shared silver tier)
+        # would silently drop the session-wide materialization.
         if not already_cached:
             df.unpersist()
 
@@ -280,214 +259,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def upsert_by_key(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: tuple[str, ...],
-    partition_by: tuple[str, ...] = (),
-    order_col: str | None = None,
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Keyed upsert (MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT) on
-    a plain parquet table — the incremental-refresh primitive the
-    reference's append-only pipeline lacks (its roadmap defers it,
-    /root/reference/README.md:189-195; Delta MERGE is the managed-format
-    equivalent).
-
-    Scale design: only partitions TOUCHED by ``updates`` are read and
-    rewritten. The touched-partition list is collected driver-side (by
-    design small — it's the update batch's partition fan-out, not the
-    table's), existing rows load with literal partition predicates
-    (static pruning reaches the file listing), matched keys are removed
-    with a left-anti join (shuffle bounded by the touched partitions,
-    not the table), and the rewrite goes through a staging dir swapped
-    in per-partition — untouched partitions are never read, never
-    rewritten. Constraint (same as any partition-scoped merge): a key's
-    partition values must be stable across versions.
-
-    ``order_col``: when the update batch can contain multiple versions
-    of one key, the row with the greatest order_col wins; with ``None``
-    a duplicate-keyed batch is rejected (ValueError) — silently writing
-    both versions would corrupt the table's key invariant.
-
-    Returns {"matched": keys replaced, "inserted": new keys}.
-    """
-    import shutil
-
-    keys = [F.col(k) for k in key_cols]
-    if order_col is not None:
-        from pyspark.sql import Window
-
-        rn = F.row_number().over(
-            Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        )
-        updates = updates.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
-
-    # The batch is consumed by several jobs below (partition discovery,
-    # matched count, the write, the insert count) — materialize it once
-    # instead of re-running its lineage (incl. the dedup window) per job.
-    updates = updates.persist()
-    try:
-        n_updates = updates.count()
-        if order_col is None:
-            n_keys = updates.select(*key_cols).distinct().count()
-            if n_keys != n_updates:
-                raise ValueError(
-                    f"update batch has {n_updates - n_keys} duplicate key(s); "
-                    "pass order_col to pick a winner"
-                )
-
-        exists = os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        )
-        if not exists:
-            write_partitioned(updates, path, partition_by, fmt=fmt, mode="overwrite")
-            return {"matched": 0, "inserted": n_updates}
-        if n_updates == 0:
-            return {"matched": 0, "inserted": 0}
-
-        if partition_by:
-            touched = [
-                tuple(r) for r in updates.select(*partition_by).distinct().collect()
-            ]
-            pred = None
-            for values in touched:
-                conj = None
-                for col, v in zip(partition_by, values):
-                    c = F.col(col).isNull() if v is None else F.col(col) == F.lit(v)
-                    conj = c if conj is None else conj & c
-                pred = conj if pred is None else pred | conj
-            existing = spark.read.format(fmt).load(path).filter(pred)
-        else:
-            existing = spark.read.format(fmt).load(path)
-
-        matched = existing.join(
-            updates.select(*key_cols), list(key_cols), "left_semi"
-        ).count()
-        kept = existing.join(updates.select(*key_cols), list(key_cols), "left_anti")
-        merged = kept.unionByName(updates.select(*existing.columns))
-
-        staging = path.rstrip("/") + "._upsert_tmp"
-        write_partitioned(merged, staging, partition_by, fmt=fmt, mode="overwrite")
-        if partition_by:
-            # Swap the partition directories Spark actually wrote into
-            # staging (never re-derive dir names from values — Spark
-            # Hive-escapes specials, renders NULL as
-            # __HIVE_DEFAULT_PARTITION__, booleans lowercase, etc.;
-            # staging holds exactly the touched partitions since merged
-            # carries every update row).
-            depth = len(partition_by)
-
-            def leaf_dirs(root: str, d: int) -> list[str]:
-                out = [""]
-                for _ in range(d):
-                    out = [
-                        os.path.join(rel, e)
-                        for rel in out
-                        for e in os.listdir(os.path.join(root, rel) if rel else root)
-                        if "=" in e
-                        and os.path.isdir(os.path.join(root, rel, e))
-                    ]
-                return out
-
-            # Per-partition swap: rename the old dir aside, rename the
-            # staged dir into place, then drop the old copy — a crash
-            # leaves at worst one partition as a `._old` remnant instead
-            # of a deleted partition. The loop as a whole is still not
-            # transactional (partitions swap one at a time); that is the
-            # managed-format gap (Delta/Iceberg commit protocols).
-            for rel in leaf_dirs(staging, depth):
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                old = dst.rstrip("/") + "._old"
-                had_old = os.path.isdir(dst)
-                if had_old:
-                    if os.path.isdir(old):
-                        shutil.rmtree(old)
-                    os.rename(dst, old)
-                os.rename(os.path.join(staging, rel), dst)
-                if had_old:
-                    shutil.rmtree(old)
-            shutil.rmtree(staging)
-        else:
-            _swap_dirs(staging, path)
-        return {"matched": matched, "inserted": n_updates - matched}
-    finally:
-        updates.unpersist()
-
-
-def _swap_dirs(staging: str, path: str) -> None:
-    """Replace ``path`` with ``staging``, narrowing the data-loss window
-    to a single rename: the old table is renamed aside first, so a crash
-    mid-swap leaves either the old or the new copy on disk (plus at
-    worst a recoverable ``._old`` directory), never neither. Local-fs
-    rename is not transactional — Delta/Iceberg commit protocols are the
-    managed answer; this is the best plain-directory equivalent.
-    """
-    import shutil
-
-    old = path.rstrip("/") + "._old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    fmt: str = "parquet",
-) -> tuple[int, int]:
-    """Small-files compaction — lakehouse maintenance the reference's
-    roadmap defers (/root/reference/README.md:189-195). Rewrites the
-    table at ``path`` into ceil(bytes/target) files via a round-robin
-    repartition (no skew: every output file ~target size).
-
-    Returns (files_before, files_after). Streaming/hourly ingestion
-    produces one small file per trigger; at 100 TB unpacked small files
-    dominate scan/task-scheduling overhead, so this runs as a periodic
-    pipeline stage. The rewrite staging dir makes the swap atomic-ish
-    for local fs (a real lakehouse would use Delta OPTIMIZE / Iceberg
-    rewrite_data_files — same plan shape).
-    """
-    import glob
-    import shutil
-
-    def data_files(p: str) -> list[str]:
-        return [
-            f
-            for f in glob.glob(os.path.join(p, "**", "*"), recursive=True)
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        ]
-
-    before = data_files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.format(fmt).load(path)
-    # Preserve Hive partition layout: col=val path components become
-    # inferred columns on read — rewrite them with partitionBy so the
-    # compacted table keeps partition pruning (a flat rewrite would
-    # silently drop the layout every partition-aware reader relies on).
-    part_cols = sorted(
-        {
-            seg.split("=", 1)[0]
-            for f in before
-            for seg in os.path.relpath(f, path).split(os.sep)[:-1]
-            if "=" in seg
-        }
-    )
-    staging = path.rstrip("/") + "._compact_tmp"
-    w = df.repartition(n_out).write.format(fmt).mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.save(staging)
-    _swap_dirs(staging, path)
-    return len(before), len(data_files(path))
-
-
 def write_sorted(
     df: DataFrame,
     path: str,
@@ -503,7 +274,7 @@ def write_sorted(
     This is the data-layout lever for read-side file skipping: parquet
     min/max footer stats on the sort key become selective, and a reader
     filtering on the key prunes whole files (the same effect Z-ordering
-    targets for one dimension). Pair with `compact` for maintenance.
+    targets for one dimension).
     """
     parts = [F.col(c) for c in sort_cols]
     out = (

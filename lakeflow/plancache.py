@@ -33,16 +33,25 @@ plan for a shared tier is built once per session, not once per query.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Hashable
 from typing import TYPE_CHECKING, Any
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
-#: session id -> (session, {key: DataFrame}). The session object is held
-#: so the per-access sweep can test liveness; this adds no pinning the
-#: memoized DataFrames (which reference their session) don't already do.
-_STORES: dict[int, tuple[Any, dict[Hashable, "DataFrame"]]] = {}
+#: session id -> (session, {key: DataFrame}, {key: build lock}). The
+#: session object is held so the per-access sweep can test liveness;
+#: this adds no pinning the memoized DataFrames (which reference their
+#: session) don't already do.
+_STORES: dict[
+    int, tuple[Any, dict[Hashable, "DataFrame"], dict[Hashable, threading.Lock]]
+] = {}
+
+#: Guards _STORES. Builds run outside it, under their key's own lock:
+#: concurrent first callers of one key (pool threads reaching
+#: io.read_table) wait for a single build, other keys proceed.
+_LOCK = threading.Lock()
 
 
 def _stopped(spark: Any) -> bool:
@@ -57,7 +66,7 @@ def _stopped(spark: Any) -> bool:
 def _sweep() -> None:
     """Drop stores owned by stopped sessions so their dead-context
     plans stop being servable and the store memory is reclaimed."""
-    for sid in [sid for sid, (s, _) in _STORES.items() if _stopped(s)]:
+    for sid in [sid for sid, (s, *_) in _STORES.items() if _stopped(s)]:
         _STORES.pop(sid, None)
 
 
@@ -65,16 +74,22 @@ def tier(
     spark: "SparkSession", key: Hashable, build: Callable[[], "DataFrame"]
 ) -> "DataFrame":
     """Return the session's memoized DataFrame for ``key``, building it
-    with ``build()`` on first use."""
-    _sweep()
-    sid = id(spark)
-    entry = _STORES.get(sid)
-    if entry is None:
-        entry = _STORES[sid] = (spark, {})
-    store = entry[1]
-    df = store.get(key)
-    if df is None:
-        df = store[key] = build()
+    with ``build()`` on first use. Concurrent first uses of one key run
+    ``build`` once; the others wait for its result."""
+    with _LOCK:
+        _sweep()
+        entry = _STORES.get(id(spark))
+        if entry is None:
+            entry = _STORES[id(spark)] = (spark, {}, {})
+        _, store, locks = entry
+        df = store.get(key)
+        if df is not None:
+            return df
+        key_lock = locks.setdefault(key, threading.Lock())
+    with key_lock:
+        df = store.get(key)
+        if df is None:
+            df = store[key] = build()
     return df
 
 
@@ -87,4 +102,5 @@ def clear(spark: "SparkSession") -> None:
     substitution — clearing both makes the next access re-run the
     builder (including its idempotent persist), exactly like a fresh
     session."""
-    _STORES.pop(id(spark), None)
+    with _LOCK:
+        _STORES.pop(id(spark), None)

@@ -503,7 +503,8 @@ def maintain_daily_rollup(
     """Continuous-aggregate maintenance: drain an events stream into a
     materialized daily rollup table via per-batch aggregating MERGE —
     the incremental-refresh loop a hypertable rollup runs, composed
-    from this engine's own primitives (partial agg + io.upsert_by_key).
+    from this engine's own primitives (partial agg +
+    ``TxTable.upsert_by_key``).
 
     Per micro-batch: aggregate the batch to per-(day, event_type)
     partials (exact decimal sums), read back ONLY the rollup rows for
@@ -518,7 +519,7 @@ def maintain_daily_rollup(
     the driver dies between the sink write and the checkpoint commit
     (at-least-once delivery into the sink). The MERGE is therefore
     keyed by batch_id through the transaction log's txn marker
-    (txlog.upsert_by_key txn=): the merged files and the (app_id,
+    (``TxTable.upsert_by_key(txn=)``): the merged files and the (app_id,
     batch_id) marker publish in one atomic commit, and a replayed
     batch_id is detected in the log and skipped — the aggregating MERGE
     (which is NOT naturally idempotent: it ADDS counts) becomes

@@ -52,7 +52,6 @@ scan over the surviving files.
 from __future__ import annotations
 
 import json
-import re
 import os
 import shutil
 import time
@@ -63,6 +62,8 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from lakeflow import datafiles
 
 LOG_DIR = "_delta_log"  # the spec's log directory name
 CDF_DIR = "_change_data"  # the spec's CDF directory name
@@ -193,114 +194,37 @@ def _stats_value(v: Any) -> Any:
 
 def _file_stats(path: str) -> str | None:
     """Delta-spec per-file stats JSON (numRecords / minValues /
-    maxValues / nullCount) from the parquet FOOTER — no data read, no
-    extra Spark job; row-group statistics are already there. Nested
-    columns are skipped (top-level skipping covers the pruning
-    predicates the reader supports)."""
-    import pyarrow.parquet as pq
-
+    maxValues / nullCount) from the parquet footer
+    (:func:`datafiles.footer_stats`)."""
     try:
-        md = pq.ParquetFile(path).metadata
+        fs = datafiles.footer_stats(path)
     except Exception:
         return None
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-    for ci in range(md.num_columns):
-        col = md.schema.column(ci)
-        name = col.path
-        if "." in name:
-            continue
-        mn = mx = None
-        nc = 0
-        have = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None:
-                have = False
-                break
-            nc += st.null_count or 0
-            if not st.has_min_max:
-                have = False
-                break
-            if mn is None or st.min < mn:
-                mn = st.min
-            if mx is None or st.max > mx:
-                mx = st.max
-        nulls[name] = nc
-        if have and mn is not None:
-            jmn, jmx = _stats_value(mn), _stats_value(mx)
-            if jmn is not None and jmx is not None:
-                mins[name] = jmn
-                maxs[name] = jmx
+    for name, mn in fs.mins.items():
+        jmn, jmx = _stats_value(mn), _stats_value(fs.maxs[name])
+        if jmn is not None and jmx is not None:
+            mins[name] = jmn
+            maxs[name] = jmx
     return json.dumps(
         {
-            "numRecords": md.num_rows,
+            "numRecords": fs.num_rows,
             "minValues": mins,
             "maxValues": maxs,
-            "nullCount": nulls,
+            "nullCount": fs.nulls,
         }
     )
 
 
-_CONJUNCT_RE = re.compile(r"\s*(\w+)\s*(<=|>=|!=|=|<|>)\s*(.+?)\s*$")
-
-
-def _parse_conjuncts(where: str) -> list[tuple[str, str, Any]] | None:
-    """Parse `col op literal [AND ...]` into pruning conjuncts; None if
-    any piece is out of the supported fragment (pruning then degrades
-    to scanning every file — correctness never depends on it)."""
-    out: list[tuple[str, str, Any]] = []
-    for part in re.split(r"(?i)\s+and\s+", where.strip()):
-        m = _CONJUNCT_RE.fullmatch(part)
-        if m is None:
-            return None
-        col, op, lit = m.groups()
-        val: Any
-        if len(lit) >= 2 and lit[0] == "'" and lit[-1] == "'":
-            val = lit[1:-1]
-        else:
-            try:
-                val = float(lit) if ("." in lit or "e" in lit.lower()) else int(lit)
-            except ValueError:
-                return None
-        out.append((col, op, val))
-    return out
-
-
-def _file_may_match(stats_json: str | None, conjuncts: list[tuple[str, str, Any]]) -> bool:
-    """Conservative range check of one file's stats against pruning
-    conjuncts: False only when a conjunct is provably unsatisfiable for
-    every row in the file."""
-    if not stats_json:
-        return True
+def _stats_bounds(stats_json: str | None) -> tuple[dict[str, Any], dict[str, Any]]:
+    """(minValues, maxValues) of an add action's stats JSON; empty when
+    the file carries no (readable) stats."""
     try:
-        s = json.loads(stats_json)
+        s = json.loads(stats_json) if stats_json else {}
     except (TypeError, ValueError):
-        return True
-    mins, maxs = s.get("minValues", {}), s.get("maxValues", {})
-    for col, op, val in conjuncts:
-        mn, mx = mins.get(col), maxs.get(col)
-        if mn is None or mx is None:
-            continue
-        numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-        if numeric != (isinstance(mn, (int, float)) and not isinstance(mn, bool)):
-            continue  # type mismatch — don't prune
-        if op == "=":
-            ok = mn <= val <= mx
-        elif op == "<":
-            ok = mn < val
-        elif op == "<=":
-            ok = mn <= val
-        elif op == ">":
-            ok = mx > val
-        elif op == ">=":
-            ok = mx >= val
-        else:  # !=
-            ok = not (mn == mx == val)
-        if not ok:
-            return False
-    return True
+        s = {}
+    return s.get("minValues", {}), s.get("maxValues", {})
 
 
 @dataclass
@@ -526,23 +450,10 @@ class TxTable:
         the log prefix. Written driver-side with pyarrow (the state is
         O(live files) metadata, never rows)."""
         snap = self.snapshot(version)
-        rows: list[dict[str, Any]] = [{"protocol": dict(PROTOCOL)}]
-        rows.append(
-            {
-                "metaData": {
-                    "id": snap.meta_id or uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema_json or "",
-                    "partitionColumns": list(snap.partition_by),
-                    "configuration": dict(snap.configuration),
-                    "createdTime": (
-                        snap.created_ms
-                        if snap.created_ms is not None
-                        else int(snap.timestamp * 1000)
-                    ),
-                }
-            }
-        )
+        rows: list[dict[str, Any]] = [
+            {"protocol": dict(PROTOCOL)},
+            _meta_action(snap, snap.schema, snap.partition_by),
+        ]
         rows += [{"txn": {"appId": a, "version": v}} for a, v in sorted(snap.txns.items())]
         rows += [{"add": dict(a)} for a in sorted(snap.files.values(), key=lambda a: a["path"])]
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.parquet")
@@ -561,42 +472,21 @@ class TxTable:
     ) -> list[dict[str, Any]]:
         """Write ``df``'s files into the table directory (Hive layout when
         partitioned) WITHOUT publishing them, returning their add
-        actions. Files are written to a staging dir then renamed in —
-        rename keeps Spark's unique part-file names, so concurrent
-        stagers never collide, and unpublished files are invisible
-        because readers only trust the log."""
-        staging = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
-        w = df.write.format("parquet").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(staging)
+        actions: unpublished files are invisible because readers only
+        trust the log."""
         adds: list[dict[str, Any]] = []
-        for root, _dirs, names in os.walk(staging):
-            for name in names:
-                if name.startswith(("_", ".")):
-                    continue
-                src = os.path.join(root, name)
-                rel = os.path.relpath(src, staging)
-                part_values = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split(os.sep)[:-1]
-                    if "=" in seg
-                }
-                dst = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-                add: dict[str, Any] = {
-                    "path": rel.replace(os.sep, "/"),
-                    "partitionValues": part_values,
-                    "size": os.path.getsize(dst),
-                    "modificationTime": int(os.path.getmtime(dst) * 1000),
-                    "dataChange": True,
-                }
-                stats = _file_stats(dst)
-                if stats is not None:
-                    add["stats"] = stats
-                adds.append({"add": add})
-        shutil.rmtree(staging)
+        for f in datafiles.stage(df, partition_by, self.path, self.path):
+            add: dict[str, Any] = {
+                "path": f.rel,
+                "partitionValues": f.partition,
+                "size": os.path.getsize(f.path),
+                "modificationTime": int(os.path.getmtime(f.path) * 1000),
+                "dataChange": True,
+            }
+            stats = _file_stats(f.path)
+            if stats is not None:
+                add["stats"] = stats
+            adds.append({"add": add})
         return adds
 
     def write(
@@ -620,7 +510,7 @@ class TxTable:
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         staged: list[dict[str, Any]] | None = None
-        cdf_files: list[tuple[str, int]] | None = None
+        cdf_actions: list[dict[str, Any]] | None = None
         cdf_staged_for: int | None = None
         while True:
             read_version = self.latest_version()
@@ -643,7 +533,7 @@ class TxTable:
                 if snap is not None:
                     _check_constraints(df, snap.constraints)
                 staged = self._stage_files(df, tuple(partition_by))
-            if cdf and (cdf_files is None or cdf_staged_for != read_version):
+            if cdf and (cdf_actions is None or cdf_staged_for != read_version):
                 # The delete preimage is a function of read_version, so
                 # it must be (re)staged whenever the rebased snapshot
                 # moves — a retry that recomputed the remove actions
@@ -657,7 +547,7 @@ class TxTable:
                     changes = old.withColumn(
                         "_change_type", F.lit("delete")
                     ).unionByName(changes, allowMissingColumns=True)
-                cdf_files = self._stage_changes(changes)
+                cdf_actions = self._stage_changes(changes)
                 cdf_staged_for = read_version
             actions: list[dict[str, Any]] = []
             if read_version is None:
@@ -671,18 +561,7 @@ class TxTable:
                 actions += [
                     {"txn": {"appId": a, "version": v}} for a, v in marks
                 ]
-            if cdf and cdf_files is not None:
-                actions += [
-                    {
-                        "cdc": {
-                            "path": p,
-                            "partitionValues": {},
-                            "size": sz,
-                            "dataChange": False,
-                        }
-                    }
-                    for p, sz in cdf_files
-                ]
+            actions += cdf_actions or []
             try:
                 return self._commit(read_version, actions, mode)
             except ConcurrentModification:
@@ -715,15 +594,20 @@ class TxTable:
         if asof_timestamp is not None:
             version = self.version_at(asof_timestamp)
         snap = self.snapshot(version)
+        schema = snap.schema
         adds = list(snap.files.values())
         if partition_filter is not None:
             adds = [a for a in adds if partition_filter(a.get("partitionValues", {}))]
-        if where is not None:
-            conjuncts = _parse_conjuncts(where)
-            if conjuncts is not None:
-                adds = [a for a in adds if _file_may_match(a.get("stats"), conjuncts)]
+        conjuncts = datafiles.parse_conjuncts(where) if where is not None else None
+        if conjuncts is not None:
+            fields = schema.fields if schema else []
+            types = {f.name: f.dataType.simpleString() for f in fields}
+            adds = [
+                a
+                for a in adds
+                if datafiles.may_match(*_stats_bounds(a.get("stats")), conjuncts, types)
+            ]
         if not adds:
-            schema = snap.schema
             df = spark.createDataFrame([], schema if schema else "dummy INT")
             return df.filter(where) if where is not None else df
         df = self._read_adds(spark, snap, adds)
@@ -798,14 +682,19 @@ class TxTable:
     ) -> dict[str, int]:
         """MERGE (WHEN MATCHED UPDATE / NOT MATCHED INSERT) with a truly
         atomic commit: rewritten files and their removals publish in ONE
-        log entry, so readers see either the whole merge or none of it —
-        the guarantee io.upsert_by_key's per-partition rename swap
-        cannot give (io.py:306-312 documents that gap; this closes it).
+        log entry, so readers see either the whole merge or none of it,
+        which no per-partition directory swap can give.
 
         Only files in partitions touched by ``updates`` are rewritten;
         untouched files carry over by reference (zero IO). Raises
         ConcurrentModification if another writer commits between our
-        snapshot and our commit.
+        snapshot and our commit. A key's partition values must be
+        stable across versions.
+
+        ``order_col``: when the batch holds several versions of one key,
+        the row with the greatest ``order_col`` wins; with ``None`` a
+        duplicate-keyed batch raises ValueError. Both hold for the batch
+        that creates the table, too.
 
         ``txn=(app_id, version)`` makes the merge IDEMPOTENT under
         at-least-once replay: if the log already records ``app_id`` at
@@ -816,13 +705,9 @@ class TxTable:
         ``cdf=True`` records the merge's change rows (update_preimage /
         update_postimage for matched keys, insert for new keys) in the
         same atomic commit, for :meth:`table_changes`."""
-        if not self.exists():
-            n = updates.count()
-            self.write(updates, mode="append", txn=txn, cdf=cdf)
-            return {"matched": 0, "inserted": n}
         read_version = self.latest_version()
-        snap = self.snapshot(read_version)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+        snap = self.snapshot(read_version) if read_version is not None else None
+        if snap and txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
             return {"matched": 0, "inserted": 0, "skipped_replay": 1}
 
         if order_col is not None:
@@ -842,6 +727,9 @@ class TxTable:
                         f"update batch has {n_updates - n_keys} duplicate key(s); "
                         "pass order_col to pick a winner"
                     )
+            if snap is None:
+                self.write(updates, mode="append", txn=txn, cdf=cdf)
+                return {"matched": 0, "inserted": n_updates}
             if n_updates == 0:
                 return {"matched": 0, "inserted": 0}
 
@@ -916,17 +804,7 @@ class TxTable:
                     )
                 else:
                     changes = updates.withColumn("_change_type", F.lit("insert"))
-                actions += [
-                    {
-                        "cdc": {
-                            "path": p,
-                            "partitionValues": {},
-                            "size": sz,
-                            "dataChange": False,
-                        }
-                    }
-                    for p, sz in self._stage_changes(changes)
-                ]
+                actions += self._stage_changes(changes)
             self._commit(read_version, actions, "upsert")
             if pre is not None:
                 pre.unpersist()
@@ -989,17 +867,7 @@ class TxTable:
             [_remove_action(a["path"]) for a in rewrite] + adds
         )
         if cdf_changes is not None:
-            actions += [
-                {
-                    "cdc": {
-                        "path": p,
-                        "partitionValues": {},
-                        "size": sz,
-                        "dataChange": False,
-                    }
-                }
-                for p, sz in self._stage_changes(cdf_changes(sub))
-            ]
+            actions += self._stage_changes(cdf_changes(sub))
         self._commit(read_version, actions, operation)
         return {"matched": matched, "rewritten_files": len(rewrite)}
 
@@ -1279,23 +1147,27 @@ class TxTable:
 
     # ---------------------------------------------------- change data feed
 
-    def _stage_changes(self, changes: DataFrame) -> list[tuple[str, int]]:
-        """Write a change batch (rows + ``_change_type``) under
+    def _stage_changes(self, changes: DataFrame) -> list[dict[str, Any]]:
+        """Stage a change batch (rows + ``_change_type``) under
         ``_change_data/<uuid>/`` — invisible to table reads (readers
         only trust the log's add actions) and published by the SAME
         commit that publishes the data files, so the feed is exactly as
-        atomic as the table. Returns one (rel path, size) per data file,
-        for the spec's per-file ``cdc`` actions."""
+        atomic as the table. Returns the spec's per-file ``cdc``
+        actions."""
         rel = f"{CDF_DIR}/{uuid.uuid4().hex}"
-        root = os.path.join(self.path, rel)
-        changes.write.format("parquet").mode("overwrite").save(root)
-        out = []
-        for name in sorted(os.listdir(root)):
-            if name.startswith(("_", ".")):
-                continue
-            full = os.path.join(root, name)
-            out.append((f"{rel}/{name}", os.path.getsize(full)))
-        return out
+        return [
+            {
+                "cdc": {
+                    "path": f"{rel}/{f.rel}",
+                    "partitionValues": {},
+                    "size": os.path.getsize(f.path),
+                    "dataChange": False,
+                }
+            }
+            for f in datafiles.stage(
+                changes, (), self.path, os.path.join(self.path, rel)
+            )
+        ]
 
     def table_changes(
         self,

@@ -1505,6 +1505,49 @@ def test_coarse_callable_matches_tuple(spark, sf_dir):
         assert via_call == via_tuple, fn.__name__
 
 
+def test_coarse_pending_future_matches_tuple(spark, sf_dir):
+    """ann_recall's production form: the IVF family gets the ``result``
+    of a coarse build still pending in the pool, and several workers
+    resolve it concurrently. Rows must equal the prebuilt tuple form."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    from lakeflow.ext import similarity as sim
+
+    emb = (
+        sim.io.read_table(spark, sf_dir, "embeddings")
+        .select("vec_id", sim._dvec("embedding").alias("v"))
+        .select("vec_id", "v", sim._norm("v").alias("nv"))
+    )
+    cent = sim.kmeans_centroids(emb, 8, 2)
+    coarse = (cent, sim._nearest_lists(emb, cent, "v", 1))
+    fns = (sim.knn_ivf, sim.knn_ivfpq)
+    want = [
+        sorted(map(tuple, fn(spark, sf_dir, _coarse=coarse).collect())) for fn in fns
+    ]
+
+    release = threading.Event()
+
+    def coarse_build():
+        assert release.wait(timeout=60)
+        c = sim.kmeans_centroids(emb, 8, 2)
+        return c, sim._nearest_lists(emb, c, "v", 1).localCheckpoint(eager=False)
+
+    @inheritable_thread_target(spark)
+    def run(fn, resolve):
+        return sorted(map(tuple, fn(spark, sf_dir, _coarse=resolve).collect()))
+
+    with ThreadPoolExecutor(max_workers=len(fns) + 1) as pool:
+        pending = pool.submit(inheritable_thread_target(spark)(coarse_build))
+        runs = [pool.submit(run, fn, pending.result) for fn in fns]
+        assert not pending.done()  # the workers start before the build
+        release.set()
+        got = [r.result(timeout=600) for r in runs]
+    assert got == want
+
+
 def test_source_kl_invariants(spark, sf_dir):
     """Gibbs' inequality: KL(source ‖ corpus) ≥ 0 for every source
     (up to the 1e-6 quantization floor), with equality only for a

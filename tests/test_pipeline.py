@@ -75,7 +75,9 @@ def test_medallion_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakeflow import catalog, claims, ingest
-    from lakeflow.io import write_dual_sink
+    from lakeflow.iceberg import IcebergTable
+    from lakeflow.io import write_dual_managed
+    from lakeflow.txlog import TxTable
 
     csv_dir = tmp_path / "incoming"
     csv_dir.mkdir()
@@ -105,7 +107,7 @@ def test_medallion_end_to_end(spark, tmp_path):
             df.withColumn("claim_amount", F.col("claim_amount").cast("double"))
             .withColumn("processing_timestamp", F.lit(now).cast("timestamp_ntz"))
         )
-        write_dual_sink(
+        write_dual_managed(
             cleaned, silver_path, mirror_path,
             partition_by=("service_year", "service_month"),
         )
@@ -113,7 +115,7 @@ def test_medallion_end_to_end(spark, tmp_path):
 
     @p.stage("gold", depends_on=("silver",))
     def gold(up):
-        silver = spark.read.parquet(up["silver"])
+        silver = IcebergTable(up["silver"]).read(spark)
         return catalog.gold_view(silver, "gold_claims_summary", claims.NOW_SPARK).collect()
 
     runs = p.run()
@@ -123,44 +125,55 @@ def test_medallion_end_to_end(spark, tmp_path):
     # CLM with null id dropped → 4 silver rows, all ≥ 2023 cutoff
     assert sum(r["total_claims"] for r in rows) == 4
     # mirror identical to primary
-    assert spark.read.parquet(mirror_path).count() == 4
-    # partition layout exists
-    import os
-
-    assert any("service_year=" in d for d in os.listdir(silver_path))
+    primary = IcebergTable(silver_path).read(spark)
+    mirror = TxTable(mirror_path).read(spark)
+    assert sorted(map(tuple, mirror.select(*primary.columns).collect())) == sorted(
+        map(tuple, primary.collect())
+    )
+    # partition layout exists on both sides
+    assert all(
+        f["partition"]["service_year"] is not None
+        for f in IcebergTable(silver_path).scan_files()
+    )
+    assert all(
+        a["path"].startswith("service_year=")
+        for a in TxTable(mirror_path).snapshot().files.values()
+    )
 
 
 def test_compact_small_files(spark, tmp_path):
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "landing")
+    t = TxTable(str(tmp_path / "landing"))
     # simulate 20 per-trigger micro-batches -> 20+ small files
     for i in range(20):
-        spark.range(i * 100, (i + 1) * 100).write.mode("append").parquet(path)
-    rows_before = spark.read.parquet(path).count()
-    before, after = lio.compact(spark, path)
+        t.write(spark.range(i * 100, (i + 1) * 100))
+    rows_before = t.read(spark).count()
+    before, after = t.compact(spark)
     assert before >= 20
     assert after < before
-    out = spark.read.parquet(path)
+    assert len(t.snapshot().files) == after
+    out = t.read(spark)
     assert out.count() == rows_before == 2000
     assert out.agg({"id": "min"}).collect()[0][0] == 0
 
 
 def test_compact_preserves_partition_layout(spark, tmp_path):
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "ptbl")
+    t = TxTable(str(tmp_path / "ptbl"))
     df = spark.range(1000).selectExpr("id", "id % 3 AS yr")
     for _ in range(3):
-        df.write.mode("append").partitionBy("yr").parquet(path)
-    before, after = lio.compact(spark, path)
+        t.write(df, partition_by=("yr",))
+    before, after = t.compact(spark)
     assert after < before
-    import os
-
-    assert any(d.startswith("yr=") for d in os.listdir(path))
-    out = spark.read.parquet(path)
+    live = t.snapshot().files.values()
+    assert all(a["path"].startswith("yr=") for a in live)
+    out = t.read(spark)
     assert out.count() == 3000
-    assert out.filter("yr = 1").count() == 999  # pruning path still works
+    pruned = t.read(spark, partition_filter=lambda pv: pv["yr"] == "1")
+    assert pruned.count() == 999  # pruning path still works
+    assert all("yr=1" in f for f in pruned.inputFiles())
 
 
 def test_dual_sink_keeps_caller_cache(spark, tmp_path):
@@ -168,103 +181,126 @@ def test_dual_sink_keeps_caller_cache(spark, tmp_path):
 
     df = spark.range(100).selectExpr("id", "id % 5 AS g").persist()
     df.count()
-    lio.write_dual_sink(df, str(tmp_path / "a"), str(tmp_path / "b"))
+    lio.write_dual_managed(df, str(tmp_path / "a"), str(tmp_path / "b"))
     assert df.is_cached  # caller's persist must survive the dual write
     df.unpersist()
 
 
 def test_upsert_by_key_partition_scoped(spark, tmp_path):
-    """Keyed MERGE on plain parquet: matched keys replaced, new keys
-    inserted, and UNTOUCHED partitions' files are never rewritten."""
+    """Keyed MERGE: matched keys replaced, new keys inserted, and
+    UNTOUCHED partitions' files are never rewritten."""
     import glob
     import os
 
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
     path = str(tmp_path / "t")
+    t = TxTable(path)
     base = spark.createDataFrame(
         [(1, "a", 2023), (2, "b", 2023), (3, "c", 2024), (4, "d", 2024)],
         "id long, val string, year int",
     )
-    r0 = lio.upsert_by_key(spark, base, path, ("id",), partition_by=("year",))
-    assert r0 == {"matched": 0, "inserted": 4}
+    t.write(base, partition_by=("year",))
 
     files_2023_before = sorted(glob.glob(os.path.join(path, "year=2023", "*")))
     mtimes = {f: os.path.getmtime(f) for f in files_2023_before}
+    live_2023_before = {p for p in t.snapshot().files if p.startswith("year=2023/")}
 
     updates = spark.createDataFrame(
         [(3, "c2", 2024), (5, "e", 2024), (6, "f", 2025)],
         "id long, val string, year int",
     )
-    r1 = lio.upsert_by_key(spark, updates, path, ("id",), partition_by=("year",))
+    r1 = t.upsert_by_key(spark, updates, ("id",))
     assert r1 == {"matched": 1, "inserted": 2}
 
-    out = {(r.id, r.val, r.year) for r in spark.read.parquet(path).collect()}
+    out = {(r.id, r.val, r.year) for r in t.read(spark).collect()}
     assert out == {
         (1, "a", 2023), (2, "b", 2023),
         (3, "c2", 2024), (4, "d", 2024), (5, "e", 2024),
         (6, "f", 2025),
     }
+    live_2023_after = {p for p in t.snapshot().files if p.startswith("year=2023/")}
+    assert live_2023_after == live_2023_before
     files_2023_after = sorted(glob.glob(os.path.join(path, "year=2023", "*")))
     assert files_2023_after == files_2023_before
     assert all(os.path.getmtime(f) == mtimes[f] for f in files_2023_after)
 
 
 def test_upsert_latest_wins_within_batch(spark, tmp_path):
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "t2")
+    t = TxTable(str(tmp_path / "t2"))
     base = spark.createDataFrame([(1, "old", 1)], "id long, val string, v int")
-    lio.upsert_by_key(spark, base, path, ("id",))
+    t.upsert_by_key(spark, base, ("id",))
     updates = spark.createDataFrame(
         [(1, "mid", 2), (1, "new", 3), (2, "x", 1)], "id long, val string, v int"
     )
-    r = lio.upsert_by_key(spark, updates, path, ("id",), order_col="v")
+    r = t.upsert_by_key(spark, updates, ("id",), order_col="v")
     assert r == {"matched": 1, "inserted": 1}
-    out = {(r.id, r.val) for r in spark.read.parquet(path).collect()}
+    out = {(r.id, r.val) for r in t.read(spark).collect()}
     assert out == {(1, "new"), (2, "x")}
+    # the batch that creates a table keeps only the winners, too
+    t3 = TxTable(str(tmp_path / "t2b"))
+    r = t3.upsert_by_key(spark, updates, ("id",), order_col="v")
+    assert r == {"matched": 0, "inserted": 2}
+    assert {(r.id, r.val) for r in t3.read(spark).collect()} == {(1, "new"), (2, "x")}
 
 
 def test_upsert_empty_batch_is_noop(spark, tmp_path):
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "t3")
+    t = TxTable(str(tmp_path / "t3"))
     base = spark.createDataFrame([(1, "a", 2024)], "id long, val string, year int")
-    lio.upsert_by_key(spark, base, path, ("id",), partition_by=("year",))
+    t.write(base, partition_by=("year",))
+    v = t.latest_version()
     empty = spark.createDataFrame([], "id long, val string, year int")
-    r = lio.upsert_by_key(spark, empty, path, ("id",), partition_by=("year",))
+    r = t.upsert_by_key(spark, empty, ("id",))
     assert r == {"matched": 0, "inserted": 0}
-    assert spark.read.parquet(path).count() == 1
+    assert t.latest_version() == v  # nothing committed
+    assert t.read(spark).count() == 1
 
 
 def test_upsert_rejects_duplicate_keys_without_order(spark, tmp_path):
     import pytest
 
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "t4")
+    t = TxTable(str(tmp_path / "t4"))
     dup = spark.createDataFrame([(1, "a"), (1, "b")], "id long, val string")
     with pytest.raises(ValueError, match="duplicate key"):
-        lio.upsert_by_key(spark, dup, path, ("id",))
+        t.upsert_by_key(spark, dup, ("id",))
+    assert not t.exists()  # the creating batch is checked, too
+    t.write(spark.createDataFrame([(1, "a")], "id long, val string"))
+    with pytest.raises(ValueError, match="duplicate key"):
+        t.upsert_by_key(spark, dup, ("id",))
+    assert t.latest_version() == 0
 
 
 def test_upsert_escaped_partition_values(spark, tmp_path):
-    """Partition values needing Hive escaping (spaces/colons) must swap
-    correctly — dir names come from what Spark wrote, not re-derived."""
-    from lakeflow import io as lio
+    """Partition values needing Hive escaping (spaces/colons) must match
+    the touched partitions — dir names come from what Spark wrote."""
+    from lakeflow.txlog import TxTable
 
-    path = str(tmp_path / "t5")
+    t = TxTable(str(tmp_path / "t5"))
     base = spark.createDataFrame(
-        [(1, "a", "North America"), (2, "b", "x:y")], "id long, val string, region string"
+        [(1, "a", "North America"), (2, "b", "x:y"), (4, "d", "South")],
+        "id long, val string, region string",
     )
-    lio.upsert_by_key(spark, base, path, ("id",), partition_by=("region",))
+    t.write(base, partition_by=("region",))
+    before = set(t.snapshot().files)
+    south = {p for p in before if p.startswith("region=South/")}
     updates = spark.createDataFrame(
         [(1, "a2", "North America"), (3, "c", "x:y")], "id long, val string, region string"
     )
-    r = lio.upsert_by_key(spark, updates, path, ("id",), partition_by=("region",))
+    r = t.upsert_by_key(spark, updates, ("id",))
     assert r == {"matched": 1, "inserted": 1}
-    out = {(x.id, x.val, x.region) for x in spark.read.parquet(path).collect()}
-    assert out == {(1, "a2", "North America"), (2, "b", "x:y"), (3, "c", "x:y")}
+    out = {(x.id, x.val, x.region) for x in t.read(spark).collect()}
+    assert out == {
+        (1, "a2", "North America"), (2, "b", "x:y"), (3, "c", "x:y"), (4, "d", "South")
+    }
+    after = set(t.snapshot().files)
+    # the escaped partitions were rewritten, the untouched one carried over
+    assert before & after == south
 
 
 def test_upsert_model_differential(spark, tmp_path):
@@ -273,10 +309,12 @@ def test_upsert_model_differential(spark, tmp_path):
     (deterministic seeded batches; latest version per key wins)."""
     import random
 
-    from lakeflow import io as lio
+    from lakeflow.txlog import TxTable
 
     rng = random.Random(7)
-    path = str(tmp_path / "model")
+    schema = "id long, val string, year int, v int"
+    t = TxTable(str(tmp_path / "model"))
+    t.write(spark.createDataFrame([], schema), partition_by=("year",))
     model: dict[int, tuple[str, int, int]] = {}
     version = 0
     for _ in range(5):
@@ -291,16 +329,10 @@ def test_upsert_model_differential(spark, tmp_path):
                 row = (k, row[1], model[k][1], row[3])
             batch.append(row)
             model[k] = (row[1], row[2], row[3])
-        df = spark.createDataFrame(
-            batch, "id long, val string, year int, v int"
-        )
-        r = lio.upsert_by_key(
-            spark, df, path, ("id",), partition_by=("year",), order_col="v"
-        )
+        df = spark.createDataFrame(batch, schema)
+        r = t.upsert_by_key(spark, df, ("id",), order_col="v")
         assert r["matched"] + r["inserted"] == len({b[0] for b in batch})
-    got = {
-        r.id: (r.val, r.year, r.v) for r in spark.read.parquet(path).collect()
-    }
+    got = {r.id: (r.val, r.year, r.v) for r in t.read(spark).collect()}
     assert got == model
 
 

@@ -78,3 +78,35 @@ def test_every_registered_query_has_an_audit_verdict():
     it lists is registered (regenerate with tools/audit_lazy_build.py
     after adding queries)."""
     assert registry.LAZY_BUILD <= set(registry.ALL_QUERIES)
+
+
+def test_tier_builds_once_under_concurrency(spark):
+    """Pool threads reaching one key at once (ann_recall's builds via
+    io.read_table) must share a single build, not race to build and
+    persist it twice."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    builds = []
+    start = threading.Barrier(8, timeout=30)
+
+    def slow_build():
+        builds.append(1)
+        time.sleep(0.3)
+        return object()
+
+    def call(_):
+        start.wait()
+        return tier(spark, ("concurrent-key",), slow_build)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = [f.result(timeout=30) for f in [pool.submit(call, i) for i in range(8)]]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)

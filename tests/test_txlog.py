@@ -646,7 +646,7 @@ def test_data_skipping_prunes_files_and_stays_correct(spark, tmp_path):
 
 
 def test_data_skipping_survives_checkpoint_and_unparseable_types(spark, tmp_path):
-    from lakeflow.txlog import _file_may_match, _parse_conjuncts
+    from lakeflow.datafiles import may_match, parse_conjuncts
 
     t = TxTable(str(tmp_path / "t"))
     for lo in range(0, CHECKPOINT_EVERY * 100 + 1, 100):
@@ -663,16 +663,16 @@ def test_data_skipping_survives_checkpoint_and_unparseable_types(spark, tmp_path
     assert df.count() == 10
     assert len(df.inputFiles()) == 1
     # evaluator unit behavior
-    assert _parse_conjuncts("a > 1 AND b = 'x'") == [("a", ">", 1), ("b", "=", "x")]
-    assert _parse_conjuncts("a in (1,2)") is None
-    c = _parse_conjuncts("id != 5")
-    assert _file_may_match(json.dumps(
-        {"minValues": {"id": 5}, "maxValues": {"id": 5}}), c) is False
+    assert parse_conjuncts("a > 1 AND b = 'x'") == [("a", ">", 1), ("b", "=", "x")]
+    assert parse_conjuncts("a in (1,2)") is None
+    types = {"id": "bigint"}
+    c = parse_conjuncts("id != 5")
+    assert may_match({"id": 5}, {"id": 5}, c, types) is False
     # type mismatch between literal and stats never prunes
-    c2 = _parse_conjuncts("id > 100")
-    assert _file_may_match(json.dumps(
-        {"minValues": {"id": "a"}, "maxValues": {"id": "z"}}), c2) is True
-    assert _file_may_match(None, c2) is True
+    c2 = parse_conjuncts("id > 100")
+    assert may_match({"id": "a"}, {"id": "z"}, c2, types) is True
+    # a file without stats never prunes
+    assert may_match({}, {}, c2, types) is True
 
 
 def test_compact_zorder_enables_multi_column_skipping(spark, tmp_path):
