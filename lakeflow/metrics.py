@@ -47,7 +47,8 @@ METRICS_SCHEMA = (
     "shuffle_bytes_written bigint, shuffle_records_written bigint, "
     "shuffle_bytes_read bigint, spill_bytes bigint, "
     "broadcast_bytes bigint, n_exchanges int, n_scans int, "
-    "cache_rows_read bigint, peak_node_memory bigint"
+    "cache_rows_read bigint, peak_node_memory bigint, "
+    "codegen_compiles bigint, codegen_compile_sec double"
 )
 
 
@@ -137,6 +138,29 @@ def plan_metrics(df: DataFrame) -> dict[str, int]:
     return agg
 
 
+def codegen_counters() -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling) by Spark's Janino code
+    generator since the JVM started: the count of
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` and
+    ``CodeGenerator.compileTime()``. A class served from the generated-
+    class cache is not compiled and not counted.
+
+    The counters are process-wide: they belong to the JVM, not to a
+    session or thread, so the difference around a run also counts what
+    other threads compiled meanwhile. (0, 0.0) without a live
+    SparkContext.
+    """
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return 0, 0.0
+    jvm = sc._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(compiles.getCount()), nanos / 1e9
+
+
 def run_instrumented(
     spark: SparkSession,
     name: str,
@@ -144,15 +168,20 @@ def run_instrumented(
     sf_dir: str,
 ) -> dict[str, Any]:
     """Run one registered-query builder end-to-end and return its
-    metrics row: wall time + the plan-walk aggregates."""
+    metrics row: wall time, the plan-walk aggregates, and the classes
+    Spark compiled meanwhile (process-wide, see :func:`codegen_counters`)."""
+    n0, sec0 = codegen_counters()
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     rows = df.collect()
     wall = time.perf_counter() - t0
+    n1, sec1 = codegen_counters()
     rec: dict[str, Any] = {
         "query": name,
         "wall_sec": round(wall, 3),
         "output_rows": len(rows),
+        "codegen_compiles": n1 - n0,
+        "codegen_compile_sec": round(sec1 - sec0, 3),
     }
     rec.update(plan_metrics(df))
     return rec
@@ -188,6 +217,8 @@ _METRIC_HELP = {
     "n_scans": "File-source scan nodes in the executed plan",
     "cache_rows_read": "Rows served from InMemoryTableScan (cached tier)",
     "peak_node_memory": "Max single-node peak memory across the plan",
+    "codegen_compiles": "Generated classes compiled during the run (process-wide)",
+    "codegen_compile_sec": "Seconds of code generation compile time (process-wide)",
 }
 
 

@@ -6,6 +6,10 @@ upstream completion (/root/reference/dags/silver_claims_transform.py:29-36);
 in-process that collapses to topological ordering. Retries with delay
 mirror the DAG default_args (bronze 1×5min, silver 2×10min — here
 configurable per stage, delay injectable for tests).
+
+Each ``StageRun`` records the stage's wall time and the classes Spark
+compiled while it ran (``metrics.codegen_counters``), so a run shows
+where its time went without a profiling session.
 """
 
 from __future__ import annotations
@@ -14,6 +18,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
+
+from lakeflow.metrics import codegen_counters
 
 
 @dataclass
@@ -32,6 +38,8 @@ class StageRun:
     attempts: int
     result: Any = None
     error: str | None = None
+    wall_s: float = 0.0  # all attempts, retry delays included
+    codegen_compiles: int = 0  # process-wide, see metrics.codegen_counters
 
 
 @dataclass
@@ -99,19 +107,22 @@ class Pipeline:
                 runs[s.name] = StageRun(s.name, "skipped", 0)
                 continue
             attempts = 0
+            compiles0 = codegen_counters()[0]
+            t0 = time.perf_counter()
             while True:
                 attempts += 1
                 try:
                     result = s.fn({d: results[d] for d in s.depends_on})
-                    runs[s.name] = StageRun(s.name, "ok", attempts, result=result)
+                    stage_run = StageRun(s.name, "ok", attempts, result=result)
                     results[s.name] = result
                     break
                 except Exception as e:  # noqa: BLE001 — stage isolation
                     if attempts > s.retries:
-                        runs[s.name] = StageRun(
-                            s.name, "failed", attempts, error=str(e)
-                        )
+                        stage_run = StageRun(s.name, "failed", attempts, error=str(e))
                         break
                     if s.retry_delay_s:
                         sleep(s.retry_delay_s)
+            stage_run.wall_s = time.perf_counter() - t0
+            stage_run.codegen_compiles = codegen_counters()[0] - compiles0
+            runs[s.name] = stage_run
         return runs

@@ -13,6 +13,23 @@ Scale notes (100 TB / 1000-executor design intent):
 - Session timezone is pinned UTC so timestamp semantics are stable
   across driver/executor machines (and match naive-UTC engines such as
   the DuckDB oracle used by the test harness).
+- Spark's cache of compiled generated classes holds
+  :data:`CODEGEN_CACHE_MAX_ENTRIES` classes instead of Spark's 100. A
+  long-lived session re-runs the same plans over fresh data (a
+  ``Pipeline`` run per batch), and its class working set is larger than
+  100: about 165 classes per silver -> quality -> upsert/compact -> gold
+  run, 101-106 of them for the six gold views alone, and 280-320 for the
+  18 headline queries' cold pass. Past 100 the LRU evicts every class
+  before its next use, so every run recompiles everything (1.1-1.4 s of
+  Janino time per ETL run) and then runs the new classes in the JVM's
+  bytecode interpreter until the JIT compiles them again. 1000 holds
+  both working sets with room to spare.
+
+  Spark reads this static conf once, when the JVM's ``CodeGenerator``
+  starts, so it cannot be raised on a live session. A session built
+  outside this factory (``__spark_entry__`` callers pass their own)
+  keeps Spark's 100: it only recompiles more often, and no result
+  depends on the cache.
 
 IMPORTANT: queries in :mod:`lakeflow.registry` must NOT depend on any
 of these configs being set — the verification driver passes its own
@@ -26,6 +43,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Entries of Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``). Measured class working sets: ~165 per ETL pipeline run,
+#: 280-320 for the headline queries' cold pass; at Spark's default of
+#: 100 both thrash the LRU and recompile on every run.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def get_session(
@@ -53,6 +76,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # events.parquet carries TIMESTAMP(NANOS); read as long, convert in io.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("LAKEFLOW_DRIVER_MEM", "8g"))

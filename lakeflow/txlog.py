@@ -717,32 +717,40 @@ class TxTable:
                 Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
             )
             updates = updates.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
+        part_by = snap.partition_by if snap is not None else ()
         updates = updates.persist()
         try:
-            n_updates = updates.count()
+            # One job for the batch's row count, its distinct key tuples
+            # and its touched partitions. The keys are counted as one
+            # struct, which is never null, so key tuples holding nulls
+            # count the way distinct() counts them.
+            aggs = [F.count(F.lit(1)).alias("rows")]
             if order_col is None:
-                n_keys = updates.select(*key_cols).distinct().count()
-                if n_keys != n_updates:
-                    raise ValueError(
-                        f"update batch has {n_updates - n_keys} duplicate key(s); "
-                        "pass order_col to pick a winner"
-                    )
+                aggs.append(F.count_distinct(F.struct(*key_cols)).alias("keys"))
+            if part_by:
+                aggs.append(F.collect_set(F.struct(*part_by)).alias("parts"))
+            batch = updates.agg(*aggs).first()
+            n_updates = batch["rows"]
+            if order_col is None and batch["keys"] != n_updates:
+                raise ValueError(
+                    f"update batch has {n_updates - batch['keys']} duplicate key(s); "
+                    "pass order_col to pick a winner"
+                )
             if snap is None:
                 self.write(updates, mode="append", txn=txn, cdf=cdf)
                 return {"matched": 0, "inserted": n_updates}
             if n_updates == 0:
                 return {"matched": 0, "inserted": 0}
 
-            part_by = snap.partition_by
             if part_by:
                 from urllib.parse import unquote
 
                 touched = {
                     tuple(
-                        str(r[c]) if r[c] is not None else "__HIVE_DEFAULT_PARTITION__"
-                        for c in part_by
+                        str(v) if v is not None else "__HIVE_DEFAULT_PARTITION__"
+                        for v in r
                     )
-                    for r in updates.select(*part_by).distinct().collect()
+                    for r in batch["parts"]
                 }
 
                 # partitionValues come from Hive dir names, which Spark

@@ -67,6 +67,36 @@ def test_cycle_detection():
         p.run()
 
 
+def test_stage_runs_record_wall_time_and_compiles(spark, sf_dir):
+    """Each StageRun carries its wall time (all attempts) and the
+    classes Spark compiled while it ran; a stage that re-runs the same
+    plan afresh is served from the generated-class cache."""
+    import time
+
+    def fresh(up):
+        return (
+            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            .groupBy("o_orderpriority")
+            .agg({"o_totalprice": "max"})
+            .collect()
+        )
+
+    p = Pipeline()
+    p.add(Stage("first", fresh))
+    p.add(Stage("again", fresh, depends_on=("first",)))
+    p.add(Stage("sleepy", lambda up: time.sleep(0.05)))
+    p.add(Stage("bad", lambda up: 1 / 0))
+    p.add(Stage("child", lambda up: 1, depends_on=("bad",)))
+    runs = p.run()
+    assert runs["first"].status == runs["again"].status == "ok"
+    assert runs["first"].result == runs["again"].result
+    assert runs["again"].codegen_compiles == 0
+    assert runs["sleepy"].wall_s >= 0.05
+    assert runs["sleepy"].codegen_compiles == 0
+    assert runs["bad"].status == "failed" and runs["bad"].wall_s > 0
+    assert (runs["child"].wall_s, runs["child"].codegen_compiles) == (0.0, 0)
+
+
 def test_medallion_end_to_end(spark, tmp_path):
     """CSV fixture → bronze ingest → silver transform → gold view —
     the reference's three DAGs as one in-process pipeline."""
@@ -274,6 +304,36 @@ def test_upsert_rejects_duplicate_keys_without_order(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate key"):
         t.upsert_by_key(spark, dup, ("id",))
     assert t.latest_version() == 0
+
+
+def test_upsert_duplicate_check_counts_null_key_tuples(spark, tmp_path):
+    """Key tuples holding nulls are distinct() tuples: (NULL, 1) and
+    (NULL, 2) are two keys, two (NULL, 1) rows are a duplicate. A
+    count(DISTINCT k1, k2) would skip every such tuple."""
+    from lakeflow.txlog import TxTable
+
+    schema = "k1 long, k2 long, val string, year int"
+    t = TxTable(str(tmp_path / "tn"))
+    t.write(spark.createDataFrame([(9, 9, "z", 2024)], schema), partition_by=("year",))
+    distinct_nulls = spark.createDataFrame(
+        [(None, 1, "a", 2024), (None, 2, "b", 2024), (1, None, "c", None),
+         (None, None, "d", 2025)],
+        schema,
+    )
+    r = t.upsert_by_key(spark, distinct_nulls, ("k1", "k2"))
+    assert r == {"matched": 0, "inserted": 4}
+    assert t.read(spark).count() == 5
+    dup_nulls = spark.createDataFrame(
+        [(None, 1, "a", 2024), (None, 1, "b", 2024)], schema
+    )
+    with pytest.raises(ValueError, match="1 duplicate key"):
+        t.upsert_by_key(spark, dup_nulls, ("k1", "k2"))
+    all_null = spark.createDataFrame(
+        [(None, None, "a", 2024), (None, None, "b", 2025)], schema
+    )
+    with pytest.raises(ValueError, match="1 duplicate key"):
+        t.upsert_by_key(spark, all_null, ("k1", "k2"))
+    assert t.latest_version() == 1
 
 
 def test_upsert_escaped_partition_values(spark, tmp_path):
