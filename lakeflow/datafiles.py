@@ -8,6 +8,9 @@ bound bytes. Everything below that encoding is defined once here:
 - :func:`stage` writes a DataFrame's parquet files into a table without
   publishing them (only the format's committed metadata defines the
   table, so staged files stay invisible until the commit).
+- :func:`scan` reads a table's live files back under the table's own
+  schema, including shallow-clone references outside the table root and
+  Iceberg's position tombstones.
 - :func:`footer_stats` collapses a file's row-group footer statistics
   into per-column min/max/null counts — no data read, no Spark job.
 - :func:`parse_conjuncts` and :func:`may_match` are footer-driven data
@@ -16,6 +19,24 @@ bound bytes. Everything below that encoding is defined once here:
   predicate is always re-applied row-level, so skipping must never drop
   a row the filter would keep; anything outside the fragment whose
   semantics it reproduces exactly simply does not prune.
+
+A table's cost should follow its bytes, not its file, task and job
+counts, so the layer applies three byte rules, each sized by a setting
+Spark or the caller already has:
+
+1. Clustered writes: :func:`stage` clusters a partitioned write by its
+   partition columns (Spark's ``REBALANCE`` hint), so each partition
+   value gets one file, and AQE splits a large partition at
+   ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — Delta's
+   "optimized writes". Unpartitioned writes keep the frame's own
+   partitioning.
+2. Bin-packing compaction: ``TxTable.compact`` rewrites only partitions
+   holding two or more files below its ``target_file_bytes``; every
+   other file carries over by reference (Delta's OPTIMIZE).
+3. One-partition small scans: a :func:`scan` whose files total at most
+   ``spark.sql.files.openCostInBytes`` (the smallest split Spark plans)
+   reads as one partition, so aggregates, joins and windows over it
+   need no exchange.
 """
 
 from __future__ import annotations
@@ -28,7 +49,9 @@ from dataclasses import dataclass
 from decimal import Decimal
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -41,30 +64,118 @@ class StagedFile:
 def stage(
     df: DataFrame, partition_by: tuple[str, ...], staging_parent: str, dest: str
 ) -> list[StagedFile]:
-    """Write ``df`` (Hive layout when partitioned) to a ``.stage-<uuid>``
-    directory under ``staging_parent``, then rename every data file to
-    the same relative path under ``dest``. Renaming keeps Spark's unique
-    part-file names, so concurrent stagers never collide."""
+    """Write ``df`` (Hive layout when partitioned, one file per partition
+    value unless AQE splits a large one) to a ``.stage-<uuid>`` directory
+    under ``staging_parent``, then rename every data file to the same
+    relative path under ``dest``. Renaming keeps Spark's unique part-file
+    names, so concurrent stagers never collide. The staging directory is
+    removed whether or not the write succeeds."""
     staging = os.path.join(staging_parent, f".stage-{uuid.uuid4().hex}")
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     w = df.write.format("parquet").mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.save(staging)
     out: list[StagedFile] = []
-    for root, _dirs, names in os.walk(staging):
-        for name in sorted(names):
-            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                continue
-            src = os.path.join(root, name)
-            rel = os.path.relpath(src, staging)
-            dst = os.path.join(dest, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-            partition = dict(
-                seg.split("=", 1) for seg in rel.split(os.sep)[:-1] if "=" in seg
+    try:
+        w.save(staging)
+        for root, _dirs, names in os.walk(staging):
+            for name in sorted(names):
+                if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                    continue
+                src = os.path.join(root, name)
+                rel = os.path.relpath(src, staging)
+                dst = os.path.join(dest, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+                partition = dict(
+                    seg.split("=", 1) for seg in rel.split(os.sep)[:-1] if "=" in seg
+                )
+                out.append(StagedFile(rel.replace(os.sep, "/"), dst, partition))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
+@dataclass(frozen=True)
+class LiveFile:
+    path: str  # absolute local path
+    size: int  # bytes on disk
+    # Partition values to restore for a file outside the scan's base
+    # directory (a shallow-clone reference); None reads them from the
+    # Hive layout under the base.
+    partition: dict[str, str] | None = None
+
+
+def scan(
+    spark: SparkSession,
+    schema: StructType | None,
+    base: str,
+    files: list[LiveFile],
+    tombstones: DataFrame | None = None,
+) -> DataFrame:
+    """One DataFrame over a table's live ``files`` (at least one).
+
+    The table's schema is passed explicitly: no footer-sampling inference
+    job, and files written before a column was added surface NULL for
+    it. Files under ``base`` read with ``basePath`` so their partition
+    columns come from the directory layout; the rest read in groups of
+    equal partition values, with the partition columns restored from
+    those values, which is how a Delta reader resolves them anyway.
+
+    ``tombstones`` is a (``_del_fp``, ``_del_pos``) frame of Iceberg v2
+    position deletes, anti-joined on each row's file path and row
+    position; it is broadcast, being sized by deleted rows.
+
+    When the files total at most ``spark.sql.files.openCostInBytes`` the
+    scan reads as one partition: Spark would otherwise plan a task per
+    file, and every aggregate or join over the table an exchange."""
+
+    def read(rd, rd_schema: StructType | None, paths: list[str]) -> DataFrame:
+        if rd_schema is not None:
+            rd = rd.schema(rd_schema)
+        d = rd.parquet(*paths)
+        if tombstones is None:
+            return d
+        return (
+            d.withColumn(
+                "_fp", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
             )
-            out.append(StagedFile(rel.replace(os.sep, "/"), dst, partition))
-    shutil.rmtree(staging)
+            .withColumn("_pos", F.col("_metadata.row_index"))
+            .join(
+                F.broadcast(tombstones),
+                (F.col("_fp") == F.col("_del_fp")) & (F.col("_pos") == F.col("_del_pos")),
+                "left_anti",
+            )
+            .drop("_fp", "_pos")
+        )
+
+    dfs: list[DataFrame] = []
+    laid_out = [f.path for f in files if f.partition is None]
+    if laid_out:
+        dfs.append(read(spark.read.option("basePath", base), schema, laid_out))
+    groups: dict[tuple, list[str]] = {}
+    for f in files:
+        if f.partition is not None:
+            groups.setdefault(tuple(sorted(f.partition.items())), []).append(f.path)
+    for key, paths in groups.items():
+        data_schema = schema
+        if schema is not None:
+            data_schema = StructType([f for f in schema.fields if f.name not in dict(key)])
+        d = read(spark.read, data_schema, paths)
+        for c, val in key:
+            typ = schema[c].dataType if schema is not None else "string"
+            d = d.withColumn(c, F.lit(val).cast(typ))
+        dfs.append(d)
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d, allowMissingColumns=True)
+    if schema is not None:
+        out = out.select(*schema.fieldNames())
+    # the session's parsed spark.sql.files.openCostInBytes (a byte string)
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    if sum(f.size for f in files) <= open_cost:
+        out = out.coalesce(1)
     return out
 
 

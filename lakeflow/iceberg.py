@@ -1920,32 +1920,18 @@ class IcebergTable:
         if not files:
             df = spark.createDataFrame([], schema)
             return df.filter(where) if where is not None else df
-        paths = [self.local_path(d["file_path"]) for d in files]
-        df = spark.read.option("basePath", self.data_dir).schema(schema).parquet(
-            *paths
-        )
         deletes = self.scan_delete_files(snapshot_id, asof_ms, meta=meta)
-        if deletes:
-            # v2 merge-on-read: anti-join the position tombstones on
-            # (canonical file path, row position). The delete set is
-            # broadcast — it is sized by deleted rows, not by the table.
-            from pyspark.sql import functions as F
-            from pyspark.sql.functions import broadcast
-
-            df = (
-                df.withColumn(
-                    "_fp",
-                    F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
-                )
-                .withColumn("_pos", F.col("_metadata.row_index"))
-                .join(
-                    broadcast(self._tombstone_frame(spark, deletes)),
-                    (F.col("_fp") == F.col("_del_fp"))
-                    & (F.col("_pos") == F.col("_del_pos")),
-                    "left_anti",
-                )
-            )
-        df = df.select(*[f.name for f in schema.fields])
+        df = datafiles.scan(
+            spark,
+            schema,
+            self.data_dir,
+            [
+                datafiles.LiveFile(self.local_path(d["file_path"]), d["file_size_in_bytes"])
+                for d in files
+            ],
+            # v2 merge-on-read: position tombstones are anti-joined away
+            tombstones=self._tombstone_frame(spark, deletes) if deletes else None,
+        )
         return df.filter(where) if where is not None else df
 
     def expire_snapshots(

@@ -25,7 +25,14 @@ Scale notes (100 TB / 1000-executor design intent):
   bytecode interpreter until the JIT compiles them again. 1000 holds
   both working sets with room to spare.
 
-  Spark reads this static conf once, when the JVM's ``CodeGenerator``
+  Generated classes are named without their whole-stage codegen stage
+  id (``spark.sql.codegen.useIdInClassName`` off). Under AQE a stage's
+  id follows the order in which earlier query stages finish, so with
+  the id in the class name the same code compiled again as a new class
+  whenever sibling stages finished in another order; without it the
+  cache keys on the code alone.
+
+  Spark reads the cache size once, when the JVM's ``CodeGenerator``
   starts, so it cannot be raised on a live session. A session built
   outside this factory (``__spark_entry__`` callers pass their own)
   keeps Spark's 100: it only recompiles more often, and no result
@@ -77,6 +84,7 @@ def get_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # events.parquet carries TIMESTAMP(NANOS); read as long, convert in io.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("LAKEFLOW_DRIVER_MEM", "8g"))

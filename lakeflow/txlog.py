@@ -426,12 +426,19 @@ class TxTable:
         rebase on the new latest, and retry."""
         attempt = (read_version if read_version is not None else -1) + 1
         op, params = _OPERATIONS.get(operation, (operation, {}))
+        adds = [a["add"] for a in actions if "add" in a]
         info = {
             "commitInfo": {
                 "operation": op,
                 "operationParameters": params,
                 "timestamp": int(time.time() * 1000),
                 "readVersion": read_version,
+                # Delta writes its metrics as strings
+                "operationMetrics": {
+                    "numAddedFiles": str(len(adds)),
+                    "numRemovedFiles": str(sum("remove" in a for a in actions)),
+                    "numOutputBytes": str(sum(a["size"] for a in adds)),
+                },
             }
         }
         if not self._try_commit(attempt, actions + [info]):
@@ -616,58 +623,23 @@ class TxTable:
     def _read_adds(
         self, spark: SparkSession, snap: Snapshot, adds: list[dict[str, Any]]
     ) -> DataFrame:
-        """Materialize a DataFrame over a list of add actions.
-
-        Table-relative paths read under ``basePath`` so Hive partition
-        columns re-infer from the directory layout; ABSOLUTE paths
-        (shallow-clone references into another table's root, where
-        basePath cannot be a prefix) read log-driven instead — grouped
-        by their ``partitionValues`` and the partition columns restored
-        from the LOG, which is how a spec Delta reader resolves
-        partition columns anyway. The log's schema is passed explicitly:
-        no footer-sampling inference job, and pre-evolution files
-        surface NULL for later-added columns (per-file column
-        resolution) — exactly Delta's read path, where the log owns the
-        schema."""
-        schema = snap.schema
-        internal = [a for a in adds if not os.path.isabs(a["path"])]
-        external = [a for a in adds if os.path.isabs(a["path"])]
-        dfs: list[DataFrame] = []
-        if internal:
-            reader = spark.read.option("basePath", self.path)
-            if schema is not None:
-                reader = reader.schema(schema)
-            dfs.append(
-                reader.parquet(
-                    *[os.path.join(self.path, a["path"]) for a in internal]
-                )
-            )
-        if external:
-            pcols = tuple(snap.partition_by)
-            data_schema = (
-                StructType([f for f in schema.fields if f.name not in pcols])
-                if schema is not None and pcols
-                else schema
-            )
-            groups: dict[tuple, list[str]] = {}
-            for a in external:
-                key = tuple(sorted((a.get("partitionValues") or {}).items()))
-                groups.setdefault(key, []).append(a["path"])
-            for key, paths in groups.items():
-                rd = spark.read
-                if data_schema is not None:
-                    rd = rd.schema(data_schema)
-                d = rd.parquet(*paths)
-                for c, val in key:
-                    typ = schema[c].dataType if schema is not None else "string"
-                    d = d.withColumn(c, F.lit(val).cast(typ))
-                if schema is not None:
-                    d = d.select(*[f.name for f in schema.fields])
-                dfs.append(d)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        """Materialize a DataFrame over a list of add actions
+        (:func:`datafiles.scan`). Table-relative paths take their
+        partition columns from the Hive layout under the table root;
+        ABSOLUTE paths (shallow-clone references into another table's
+        root, where the root cannot be a base path) take them from the
+        add's ``partitionValues``. The log owns the schema."""
+        return datafiles.scan(
+            spark,
+            snap.schema,
+            self.path,
+            [
+                datafiles.LiveFile(a["path"], a["size"], a.get("partitionValues") or {})
+                if os.path.isabs(a["path"])
+                else datafiles.LiveFile(os.path.join(self.path, a["path"]), a["size"])
+                for a in adds
+            ],
+        )
 
     # --------------------------------------------------- maintenance commits
 
@@ -938,18 +910,26 @@ class TxTable:
         target_file_bytes: int = 128 << 20,
         zorder_by: tuple[str, ...] = (),
     ) -> tuple[int, int]:
-        """OPTIMIZE [ZORDER BY]: rewrite the live set into ~target-sized
-        files and swap the file list in one atomic commit. Readers
-        mid-compaction keep the old snapshot; time travel to it keeps
-        working until vacuum. Raises ConcurrentModification on a racing
-        writer.
+        """OPTIMIZE [ZORDER BY]: bin-pack small files and swap them for
+        the rewrite in one atomic commit. Returns (files removed, files
+        added). Readers mid-compaction keep the old snapshot; time
+        travel to it keeps working until vacuum. Raises
+        ConcurrentModification on a racing writer.
 
-        ``zorder_by`` clusters the rewrite on the Morton interleaving of
-        the given columns (io.zorder_layout), so each output file covers
-        a tight hyper-rectangle in every listed dimension — composed
-        with the footer stats every staged file records, ``read(where=
-        ...)`` then prunes on ANY of those columns, which is the whole
-        point of Delta's OPTIMIZE ZORDER.
+        Bin-packing, as Delta's OPTIMIZE does it: only partitions holding
+        two or more files smaller than ``target_file_bytes`` are
+        rewritten, their small files into ~target-sized ones (one file
+        per partition value, split by AQE's advisory size, when the
+        table is partitioned). Every other file carries over by
+        reference. When no partition qualifies the call returns (0, 0)
+        and commits nothing.
+
+        ``zorder_by`` rewrites the WHOLE live set, clustered on the
+        Morton interleaving of the given columns (io.zorder_layout), so
+        each output file covers a tight hyper-rectangle in every listed
+        dimension — composed with the footer stats every staged file
+        records, ``read(where=...)`` then prunes on ANY of those
+        columns, which is the whole point of Delta's OPTIMIZE ZORDER.
 
         Concurrency follows Delta's OPTIMIZE conflict rules: losing the
         CAS race to commits that only ADD files (blind appends, txn
@@ -963,31 +943,42 @@ class TxTable:
         while True:
             read_version = self.latest_version()
             snap = self.snapshot(read_version)
-            before = list(snap.files.values())
-            before_paths = set(snap.files)
-            total = sum(a["size"] for a in before)
-            n_out = max(1, -(-total // target_file_bytes))
-            df = self.read(spark, version=read_version)
+            if zorder_by:
+                rewrite = list(snap.files.values())
+            else:
+                small: dict[tuple, list[dict[str, Any]]] = {}
+                for a in snap.files.values():
+                    if a["size"] < target_file_bytes:
+                        key = tuple(sorted(a["partitionValues"].items()))
+                        small.setdefault(key, []).append(a)
+                rewrite = [a for files in small.values() if len(files) > 1 for a in files]
+            if not rewrite:
+                return 0, 0
+            rewrite_paths = {a["path"] for a in rewrite}
+            n_out = max(1, -(-sum(a["size"] for a in rewrite) // target_file_bytes))
+            df = self._read_adds(spark, snap, rewrite)
             if zorder_by:
                 from lakeflow.io import zorder_layout
 
                 out = zorder_layout(df, tuple(zorder_by), partitions=n_out)
+            elif snap.partition_by:
+                out = df  # staging clusters it by partition
             else:
                 out = df.repartition(n_out)
             adds = self._stage_files(out, snap.partition_by)
-            actions = [_remove_action(a["path"]) for a in before] + adds
+            actions = [_remove_action(a["path"]) for a in rewrite] + adds
             base = read_version
             while True:
                 try:
                     self._commit(base, actions, "compact")
-                    return len(before), len(adds)
+                    return len(rewrite), len(adds)
                 except ConcurrentModification:
                     new_latest = self.latest_version()
                     conflict = False
                     for v in range(base + 1, new_latest + 1):
                         for a in self._read_actions(v):
                             rm = a.get("remove")
-                            if rm is not None and rm["path"] in before_paths:
+                            if rm is not None and rm["path"] in rewrite_paths:
                                 conflict = True
                             md = a.get("metaData")
                             if md is not None and (

@@ -8,10 +8,10 @@ rounds settle near zero.
 
 They settle rather than drop at once: a few plans generate one of a
 couple of class variants per run. Under AQE the codegen stage ids
-follow the order in which query stages finish, and even with AQE off
-about 20 classes differ between the first two rounds. The second round
-typically compiles those variants; from the third round on, nearly
-every variant is cached.
+follow the order in which query stages finish, which the session keeps
+out of class names, and even with AQE off about 20 classes differ
+between the first two rounds. The second round typically compiles those
+variants; from the third round on, nearly every variant is cached.
 """
 
 from __future__ import annotations
@@ -38,6 +38,11 @@ def _assert_engine_sized_cache(spark) -> None:
 
 def test_session_sizes_codegen_cache_to_the_engine_constant(spark):
     _assert_engine_sized_cache(spark)
+
+
+def test_session_keeps_stage_ids_out_of_class_names(spark):
+    # identical code in a stage numbered differently is one class
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
 
 
 def test_gold_rounds_over_fresh_reads_stop_compiling(spark, sf_dir, tmp_path):

@@ -1,10 +1,15 @@
-"""Data skipping is a pure optimization in both table formats:
-``read(where=w)`` must return exactly ``read().filter(w)``, whatever
-the predicate, and a supported conjunct must still prune files."""
+"""The data-file layer under both table formats.
+
+Data skipping is a pure optimization: ``read(where=w)`` must return
+exactly ``read().filter(w)``, whatever the predicate, and a supported
+conjunct must still prune files. A partitioned write makes one file per
+partition value, a small table reads as one partition, and a failed
+write leaves no staging directory behind."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -79,3 +84,45 @@ def test_supported_conjunct_prunes(spark, table):
     assert len(everything) == len(ROWS)
     assert len(pruned.inputFiles()) == 1
     assert [r.n for r in pruned.collect()] == [4]
+
+
+def test_small_table_reads_as_one_partition(spark, table):
+    assert table.read(spark).rdd.getNumPartitions() == 1
+    # below the table's bytes, Spark plans the scan's splits again
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        assert table.read(spark).rdd.getNumPartitions() > 1
+    finally:
+        spark.conf.set(key, old)
+
+
+def _write(fmt, spark, path, df, partition_by=()):
+    if fmt == "delta":
+        t = TxTable(path)
+        t.write(df, partition_by=partition_by)
+        return [a["partitionValues"] for a in t.snapshot().files.values()]
+    t = IcebergTable(path)
+    t.create(df.schema, partition_by=partition_by)
+    t.append(df)
+    return [d["partition"] for d in t.scan_files()]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_partitioned_write_makes_one_file_per_value(spark, tmp_path, fmt):
+    df = spark.range(300).selectExpr("id", "CAST(id % 3 AS INT) AS p").repartition(4)
+    assert df.rdd.getNumPartitions() >= 4
+    parts = _write(fmt, spark, str(tmp_path / "t"), df, ("p",))
+    assert sorted(str(pv["p"]) for pv in parts) == ["0", "1", "2"]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_failed_write_leaves_no_staging_dir(spark, tmp_path, fmt):
+    df = spark.range(4).selectExpr(
+        "id", "IF(id = 2, raise_error('boom'), CAST(id AS STRING)) AS v"
+    )
+    path = str(tmp_path / "t")
+    with pytest.raises(Exception, match="boom"):
+        _write(fmt, spark, path, df)
+    assert not [e for e in os.listdir(path) if e.startswith(".stage-")]

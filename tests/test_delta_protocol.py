@@ -181,6 +181,26 @@ def test_log_conforms_to_published_delta_spec(spark, tmp_path, monkeypatch):
     assert {r.id for r in t.read(spark, version=1).collect()} == {1, 2, 3}
 
 
+def test_commit_info_counts_each_versions_files(spark, tmp_path):
+    t = TxTable(str(tmp_path / "m"))
+    mk = lambda ids: spark.createDataFrame([Row(id=i, val=f"v{i}") for i in ids])
+    t.write(mk([1, 2]))
+    t.write(mk([3]))
+    t.upsert_by_key(spark, mk([3, 4]), key_cols=("id",))
+    t.compact(spark)
+    t.delete_where(spark, "id = 1")
+    for h in t.history():
+        with open(os.path.join(t.path, LOG_DIR, f"{h['version']:020d}.json")) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        adds = [a["add"] for a in actions if "add" in a]
+        assert h["operationMetrics"] == {
+            "numAddedFiles": str(len(adds)),
+            "numRemovedFiles": str(sum("remove" in a for a in actions)),
+            "numOutputBytes": str(sum(a["size"] for a in adds)),
+        }
+    validate_delta_log(t.path)
+
+
 def test_partitioned_log_conforms(spark, tmp_path):
     t = TxTable(str(tmp_path / "p"))
     df = spark.createDataFrame(

@@ -705,6 +705,33 @@ def test_compact_zorder_enables_multi_column_skipping(spark, tmp_path):
     assert len(post_y.inputFiles()) < na
 
 
+def test_compact_bin_packs_only_multi_file_partitions(spark, tmp_path):
+    t = TxTable(str(tmp_path / "t"))
+    mk = lambda lo, hi, p: spark.range(lo, hi).selectExpr("id", f"CAST({p} AS INT) AS p")
+    t.write(mk(0, 30, "id % 3"), partition_by=("p",))  # one file per p
+    t.write(mk(30, 40, "0"), partition_by=("p",))  # a second file in p=0
+    before = t.snapshot().files
+    rows = _rows(t.read(spark))
+    assert t.compact(spark) == (2, 1)
+    after = t.snapshot().files
+    single = {p for p, a in before.items() if a["partitionValues"]["p"] != "0"}
+    assert single < set(after)  # single-file partitions keep their paths
+    (packed,) = set(after) - single
+    assert packed not in before
+    assert _rows(t.read(spark)) == rows
+    # nothing left to pack, or no file below the target: no commit
+    v = t.latest_version()
+    assert t.compact(spark) == (0, 0)
+    t.write(mk(40, 50, "1"), partition_by=("p",))
+    assert t.compact(spark, target_file_bytes=1) == (0, 0)
+    assert t.latest_version() == v + 1
+    # ZORDER rewrites the whole live set
+    live, rows = set(t.snapshot().files), _rows(t.read(spark))
+    assert t.compact(spark, zorder_by=("id",))[0] == 4
+    assert not live & set(t.snapshot().files)
+    assert _rows(t.read(spark)) == rows
+
+
 def test_compact_rebases_over_concurrent_blind_append(spark, tmp_path, monkeypatch):
     t = TxTable(str(tmp_path / "t"))
     for lo in (0, 10):
