@@ -10,9 +10,11 @@ collapse into one Spark session: ``run_sql_file`` splits a statement
 file and feeds ``spark.sql``; ``register_gold_views`` publishes the six
 gold views from lakeflow/sql/gold_views.sql over a silver temp view.
 
-That file is the engine's only definition of the six views: the
-registered gold queries run the same SELECTs through :func:`gold_view`,
-and the DuckDB oracle SQL in lakeflow.registry is their independent twin.
+lakeflow/sql/gold_views.sql (the six gold views) and
+lakeflow/sql/checks.sql (the check queries) are the engine's only
+definition of every claims query derived from the reference: the
+registered queries run their SELECTs through :func:`gold_view`, and the
+DuckDB oracle SQL in lakeflow.registry is their independent twin.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 GOLD_SQL_PATH = os.path.join(os.path.dirname(__file__), "sql", "gold_views.sql")
+CHECKS_SQL_PATH = os.path.join(os.path.dirname(__file__), "sql", "checks.sql")
 
 GOLD_VIEWS = (
     "gold_claims_summary",
@@ -105,26 +108,30 @@ def run_sql_file(
 
 @functools.cache
 def _gold_selects() -> dict[str, str]:
-    """View name -> SELECT body of each view in gold_views.sql."""
-    with open(GOLD_SQL_PATH) as f:
-        stmts = split_statements(f.read())
+    """View name -> SELECT body of each view in gold_views.sql and checks.sql."""
     out = {}
-    for stmt in stmts:
-        m = re.fullmatch(r"CREATE OR REPLACE TEMPORARY VIEW (\w+) AS\s+(.*)", stmt, re.S)
-        out[m.group(1)] = m.group(2)
+    for path in (GOLD_SQL_PATH, CHECKS_SQL_PATH):
+        with open(path) as f:
+            stmts = split_statements(f.read())
+        for stmt in stmts:
+            m = re.fullmatch(r"CREATE OR REPLACE TEMPORARY VIEW (\w+) AS\s+(.*)", stmt, re.S)
+            out[m.group(1)] = m.group(2)
     return out
 
 
 def gold_view(silver: DataFrame, view: str, now_spark: str) -> DataFrame:
-    """One gold view of gold_views.sql evaluated over ``silver``, with
-    ``${now}`` bound to ``now_spark``.
+    """One view of gold_views.sql or checks.sql evaluated over
+    ``silver``, with ``${now}`` bound to ``now_spark``.
 
     ``silver`` is bound to the query through a uniquely named temp view
     that is dropped once spark.sql has analyzed the plan, so the
     session's own ``silver_claims`` view, if any, is left alone. The
-    drop goes to the session catalog directly: ``spark.catalog.dropTempView``
-    (and spark.sql's DataFrame kwargs, which use it) also uncaches the
-    view's plan, which would un-persist the silver tier.
+    drop goes to the session catalog directly, through py4j, because
+    Spark has no public form without a side effect:
+    ``spark.catalog.dropTempView`` also uncaches the view's plan, which
+    would un-persist the silver tier, and spark.sql's DataFrame kwargs
+    drop their views the same way (pyspark 4.1's
+    ``SQLStringFormatter.clear`` calls ``catalog.dropTempView``).
     """
     spark = silver.sparkSession
     name = f"_silver_{uuid.uuid4().hex}"

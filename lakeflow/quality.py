@@ -105,7 +105,7 @@ def evaluate_suite(df: DataFrame, suite: dict) -> list[ExpectationResult]:
         elif etype == "expect_table_row_count_to_be_between":
             pass  # uses _rows
         elif etype == "expect_column_proportion_of_unique_values_to_be_between":
-            aggs.append((F.countDistinct(col) / F.count(col)).alias(f"a{slot}"))
+            aggs.append(F.try_divide(F.countDistinct(col), F.count(col)).alias(f"a{slot}"))
         elif etype == "expect_column_mean_to_be_between":
             aggs.append(F.avg(col).alias(f"a{slot}"))
         elif etype == "expect_column_values_to_match_regex":

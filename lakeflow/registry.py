@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeflow import catalog, claims, quality, relational, views
+from lakeflow import catalog, claims, quality, relational
 from lakeflow import io as lio
 from lakeflow.claims import NOW_SPARK, oracle
 from lakeflow.ext import (
@@ -57,7 +57,7 @@ def _silver(fn: Callable[[DataFrame], DataFrame]) -> QueryFn:
 
 
 def _gold(view: str) -> QueryFn:
-    """A gold view of lakeflow/sql/gold_views.sql over silver claims."""
+    """A view of lakeflow/sql/gold_views.sql or checks.sql over silver claims."""
     return _silver(lambda s: catalog.gold_view(s, view, NOW_SPARK))
 
 
@@ -198,7 +198,7 @@ FROM claims WHERE processing_timestamp >= {claims.NOW_SQL} - INTERVAL 1 DAY
 """),
     ),
     "q_category_distribution": (
-        _silver(views.category_distribution),
+        _gold("check_category_distribution"),
         oracle("""
 SELECT claim_amount_category,
        COUNT(*) AS count,
@@ -210,7 +210,7 @@ ORDER BY count DESC
 """),
     ),
     "q_quality_distribution": (
-        _silver(views.quality_distribution),
+        _gold("check_quality_distribution"),
         oracle("""
 SELECT CASE WHEN data_quality_score >= 0.9 THEN 'Excellent (0.9-1.0)'
             WHEN data_quality_score >= 0.7 THEN 'Good (0.7-0.89)'
@@ -223,7 +223,7 @@ GROUP BY 1 ORDER BY count DESC
 """),
     ),
     "q_data_issues": (
-        _silver(views.data_issues),
+        _gold("check_data_issues"),
         oracle("""
 SELECT CAST(SUM(CASE WHEN claim_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_claim_ids,
        CAST(SUM(CASE WHEN member_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_member_ids,
@@ -235,7 +235,7 @@ FROM claims
 """),
     ),
     "q_table_stats": (
-        _silver(views.table_stats),
+        _gold("check_table_stats"),
         oracle("""
 SELECT COUNT(*) AS total_rows,
        COUNT(DISTINCT member_id) AS unique_members,
@@ -248,7 +248,7 @@ FROM claims
 """),
     ),
     "q_median_by_group": (
-        _silver(views.median_by_group),
+        _gold("check_median_by_group"),
         oracle("""
 SELECT provider_name,
        quantile_disc(claim_amount, 0.5) AS median_claim_amount,
@@ -260,7 +260,7 @@ ORDER BY provider_name
 """),
     ),
     "q_dq_aggregates": (
-        _silver(views.dq_aggregates),
+        _gold("check_dq_aggregates"),
         oracle("""
 SELECT COUNT(CASE WHEN claim_id IS NULL THEN 1 END) AS null_claim_ids,
        COUNT(CASE WHEN member_id IS NULL THEN 1 END) AS null_member_ids,
@@ -277,7 +277,7 @@ FROM claims
 """),
     ),
     "q_pivot_category": (
-        _silver(views.pivot_category_amounts),
+        _gold("check_pivot_category_amounts"),
         oracle("""
 SELECT service_year, service_month,
        coalesce(SUM(CASE WHEN claim_amount_category = 'ZERO' THEN claim_amount END), 0.0) AS zero_amount,
@@ -291,7 +291,7 @@ ORDER BY service_year, service_month
 """),
     ),
     "q_topk": (
-        _silver(views.topk_newest),
+        _gold("check_topk_newest"),
         oracle("""
 SELECT claim_id, member_id, provider_name, claim_amount, service_date,
        claim_amount_category, data_quality_score, processing_timestamp

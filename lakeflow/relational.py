@@ -2014,7 +2014,7 @@ def target_encoding(spark: SparkSession, sf_dir: str, m: int = 50) -> DataFrame:
     categories toward the global mean (m = pseudo-count).
 
     Exactness: prices are 2-decimal doubles, so sums run as ×100
-    integer cents (the views.py exact-sum pattern) and the smoothing
+    integer cents (the exact-sum pattern of sql/checks.sql) and the smoothing
     is evaluated as ONE ratio of exact DECIMAL products,
     (s·gn + m·gs) / ((n+m)·gn), so the output is a deterministic
     single division — no float accumulation anywhere before the final

@@ -3,13 +3,15 @@
 -- the silver_claims table. This file is the engine's only definition of
 -- the six views: catalog.register_gold_views and
 -- catalog.publish_gold_views_persistent run it as is, and the registered
--- gold queries run each SELECT through catalog.gold_view. The DuckDB
--- oracle SQL in lakeflow/registry.py is the independent twin. The
--- SURVEY §7.3 dialect traps are resolved:
+-- gold queries run each SELECT through catalog.gold_view, which also
+-- runs the check queries of checks.sql. The DuckDB oracle SQL in
+-- lakeflow/registry.py is the independent twin. The SURVEY §7.3 dialect
+-- traps are resolved:
 --   * PERCENTILE_DISC(0.5) WITHIN GROUP (exact discrete, not interpolated)
 --   * datediff(end, start) argument order (Trino DATE_DIFF('day', a, b))
---   * 100.0 multipliers force double division
---   * quality-score AVG via exact *10 integer sums, rounded to 3dp
+--   * 100.0D multipliers force double division
+--   * quality-score AVG via exact *10 integer sums, rounded to 3dp (see
+--     checks.sql for why the sum is exact)
 -- ${now} is the injectable recency anchor (C5 templating) — pass
 -- current_timestamp() in production, a pinned literal for replay/tests.
 

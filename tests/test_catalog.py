@@ -34,6 +34,16 @@ def test_sql_view_matches_builder(spark, gold, view):
     assert g == w
 
 
+def test_dq_aggregates_on_empty_silver(spark, sf_dir):
+    """An empty table gives one row with a NULL unique ratio, as the
+    DuckDB oracle does, where ANSI division by zero would raise."""
+    empty = claims.silver_claims(spark, sf_dir).limit(0)
+    rows = catalog.gold_view(empty, "check_dq_aggregates", NOW_SPARK).collect()
+    assert len(rows) == 1
+    assert rows[0]["total_rows"] == 0
+    assert rows[0]["claim_id_unique_ratio"] is None
+
+
 def test_split_statements_handles_quotes_and_comments():
     text = """
 -- leading comment with ; semicolon

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakeflow import claims, relational, views
+from lakeflow import catalog, claims, relational
 from lakeflow.ext import dedup
 
 
@@ -57,7 +57,7 @@ def test_aggregate_has_partial_phase(spark, sf_dir):
 
 def test_topk_uses_take_ordered(spark, sf_dir):
     silver = claims.silver_claims(spark, sf_dir)
-    p = plan(views.topk_newest(silver))
+    p = plan(catalog.gold_view(silver, "check_topk_newest", claims.NOW_SPARK))
     assert "TakeOrderedAndProject" in p
     # no global Sort node outside the top-k operator
     assert "Sort [" not in p

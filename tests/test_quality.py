@@ -29,6 +29,22 @@ def test_suite_passes_on_clean_silver(spark, sf_dir):
     assert len(results) == 22
 
 
+def test_suite_on_empty_silver_fails_without_raising(spark, sf_dir):
+    """An empty table fails the row-count, unique-proportion and mean
+    expectations; ANSI division by zero must not abort the suite."""
+    from lakeflow import claims
+
+    empty = claims.silver_claims(spark, sf_dir).limit(0)
+    results = quality.evaluate_suite_file(empty, SUITE)
+    assert len(results) == 22
+    failed = {r.expectation_type for r in results if not r.success}
+    assert failed == {
+        "expect_table_row_count_to_be_between",
+        "expect_column_proportion_of_unique_values_to_be_between",
+        "expect_column_mean_to_be_between",
+    }
+
+
 def test_suite_fails_on_violations(spark):
     rows = [
         # duplicate claim ids → uniqueness + proportion fail

@@ -1,6 +1,13 @@
 #!/usr/bin/env python3
-"""Capture .explain("formatted") output for bench queries into
-plans/<round>/<query>_<tag>.txt (judge-checkable plan evidence).
+"""Capture plan evidence for bench queries: .explain("formatted") output
+into plans/<round>/<query>_<tag>.txt and the optimized logical plan into
+plans/<round>/<query>_<tag>_optimized.txt.
+
+Run-specific names are normalised in every file written: expression ids
+(``#123``) become ``#N``, ``plan_id=123`` becomes ``plan_id=N``, and the
+uuid-named silver binding views of ``catalog.gold_view`` (``_silver_<hex>``)
+become ``_silver_view``. Two captures of one commit
+are then byte-identical, and captures of two commits diff line by line.
 
 Usage: [LAKEFLOW_PLAN_ROUND=r12] python tools/capture_plans.py <tag> [query ...]
 """
@@ -8,6 +15,7 @@ Usage: [LAKEFLOW_PLAN_ROUND=r12] python tools/capture_plans.py <tag> [query ...]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -15,6 +23,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import BENCH_QUERIES  # noqa: E402
 from lakeflow import registry  # noqa: E402
 from lakeflow.session import get_session  # noqa: E402
+
+_IDS = re.compile(r"(#|plan_id=)\d+")
+_BINDING = re.compile(r"_silver_[0-9a-f]{32}")
+
+
+def normalise(plan: str) -> str:
+    """``plan`` with run-specific ids and binding-view names replaced."""
+    return _IDS.sub(r"\1N", _BINDING.sub("_silver_view", plan))
 
 
 def main() -> None:
@@ -27,17 +43,17 @@ def main() -> None:
     spark = get_session("lakeflow-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = registry.queries()
+    formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
         fn = registry.PLAN_VARIANTS.get(name, qmap[name])
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)",
-              file=sys.stderr)
+        qe = fn(spark, sf_dir)._jdf.queryExecution()
+        plan = qe.explainString(formatted)
+        for suffix, text in (("", plan), ("_optimized", qe.optimizedPlan().toString())):
+            path = os.path.join(out_dir, f"{name}_{tag}{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(normalise(text))
+            print(f"wrote {path}", file=sys.stderr)
+        print(f"{name}: {plan.count('Exchange')} Exchange mentions", file=sys.stderr)
     spark.stop()
 
 
