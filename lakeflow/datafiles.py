@@ -19,6 +19,12 @@ bound bytes. Everything below that encoding is defined once here:
   predicate is always re-applied row-level, so skipping must never drop
   a row the filter would keep; anything outside the fragment whose
   semantics it reproduces exactly simply does not prune.
+- :func:`publish_once` is the commit point of both formats: one atomic
+  put-if-absent of the next version file (a Delta commit JSON, an
+  Iceberg ``v<N>.metadata.json``). The file is written whole and
+  fsynced under a temp name, then ``os.link``-ed to its version name,
+  which fails with EEXIST when a concurrent writer took the version;
+  that loss raises :class:`ConcurrentModification`.
 
 A table's cost should follow its bytes, not its file, task and job
 counts, so the layer applies three byte rules, each sized by a setting
@@ -52,6 +58,32 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+class ConcurrentModification(Exception):
+    """A commit lost the optimistic-concurrency race: another writer
+    published the version this one prepared. Blind appends rebase and
+    retry; read-modify-write commits re-run from a fresh snapshot."""
+
+
+def publish_once(path: str, text: str) -> None:
+    """Create ``path`` holding ``text``, atomically and only if absent.
+
+    The text is written, flushed and fsynced under a temp name in the
+    same directory, so a crash can never leave a committed version file
+    empty or torn; ``os.link`` then publishes it under ``path``. Raises
+    ConcurrentModification when ``path`` already exists."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        raise ConcurrentModification(f"{path} was committed concurrently") from None
+    finally:
+        os.unlink(tmp)
 
 
 @dataclass(frozen=True)

@@ -1306,13 +1306,9 @@ def embedding_near_dups(
     """
     from pyspark.sql.functions import broadcast
 
-    from lakeflow.ext.similarity import _cosine, _dot, _dvec, _norm
+    from lakeflow.ext.similarity import _cosine, _dot, _vector_frame
 
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     a, b = emb.alias("a"), broadcast(emb.alias("b"))
     cos = _cosine(_dot("a.v", "b.v"), F.col("a.nv"), F.col("b.nv"))
     return (
@@ -1492,13 +1488,9 @@ def embedding_near_dups_lsh(
     import numpy as np
     import pandas as pd
 
-    from lakeflow.ext.similarity import _cosine, _dot, _dvec, _norm
+    from lakeflow.ext.similarity import _cosine, _dot, _vector_frame
 
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     if bits is None or bands is None:
         # corpus-size-aware tuning from parquet FOOTER metadata — no
         # scan, no Spark job at plan-construction time (an eager
@@ -1626,17 +1618,12 @@ def embedding_near_dups_ivf(
     from lakeflow.ext.similarity import (
         _cosine,
         _dot,
-        _dvec,
         _nearest_lists,
-        _norm,
+        _vector_frame,
         kmeans_centroids,
     )
 
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     if n_lists is None:
         n_lists = max(4, int(emb.count() ** 0.5))
     cent = kmeans_centroids(emb, n_lists, lloyd_iters)

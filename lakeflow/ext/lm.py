@@ -419,7 +419,7 @@ def rrf_fusion(
     6 dp-rounded scores with doc_id tiebreaks, so the fused output is
     engine-exact and oracle-certifiable.
     """
-    from lakeflow.ext.similarity import _dot, _dvec, _norm
+    from lakeflow.ext.similarity import _dot, _vector_frame
     from lakeflow.ext.text import bm25_scores
 
     from lakeflow import io
@@ -431,9 +431,7 @@ def rrf_fusion(
         .alias("rank_bm25"),
     )
 
-    emb = io.read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("v")
-    ).select("vec_id", "v", _norm("v").alias("nv"))
+    emb = _vector_frame(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == RRF_QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nv").alias("qn")
     )
@@ -724,15 +722,11 @@ def hard_negatives(
     the mining tail is free. Both scores 6dp-rounded → engine-exact.
     """
     from lakeflow import io
-    from lakeflow.ext.similarity import _dot, _dvec, _norm
+    from lakeflow.ext.similarity import _dot, _vector_frame
     from lakeflow.ext.text import bm25_scores
 
     bm = bm25_scores(spark, sf_dir, top=top)
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == RRF_QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nv").alias("qn")
     )

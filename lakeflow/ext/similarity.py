@@ -86,6 +86,18 @@ def _norm(a: F.Column | str) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
+def _vector_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as (vec_id, v, nv): each vector widened to
+    array<double> and its L2 norm. Norms are per-VECTOR quantities, so
+    they are computed once in this projection, never per compared pair
+    (per-pair norms would triple the flops of a crossJoin at scale)."""
+    return (
+        io.read_table(spark, sf_dir, "embeddings")
+        .select("vec_id", _dvec("embedding").alias("v"))
+        .select("vec_id", "v", _norm("v").alias("nv"))
+    )
+
+
 def embed_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector L2 norms + dimension — embedding-column sanity profile."""
     emb = io.read_table(spark, sf_dir, "embeddings")
@@ -128,12 +140,7 @@ def knn_bruteforce(
     147 s full-corpus scan (SCALE.md). The registered default
     (corpus_mod=1) preserves the certified full-corpus output.
     """
-    # Norms are per-VECTOR quantities — compute them in the projection,
-    # not per pair (per-pair norms would triple the flops of the
-    # crossJoin at scale).
-    emb = io.read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("v")
-    ).select("vec_id", "v", _norm("v").alias("nv"))
+    emb = _vector_frame(spark, sf_dir)
     if corpus_mod > 1:
         emb = emb.filter(F.col("vec_id") % corpus_mod == 0)
     queries = emb.filter(F.col("vec_id") % query_mod == 0).select(
@@ -189,9 +196,7 @@ def knn_lsh(
     therefore fully deterministic — KNN_LSH_SQL replays the exact
     bucket assignment, candidate set, and ranking in DuckDB, so this
     APPROXIMATE query still carries an exact oracle."""
-    emb = io.read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("v")
-    ).select("vec_id", "v", _norm("v").alias("nv"))
+    emb = _vector_frame(spark, sf_dir)
     emb = emb.withColumn("bucket", _sign_bucket(F.col("v"), bits))
     queries = emb.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
@@ -427,11 +432,7 @@ def knn_ivf(
     whole index build is deterministic across engines — KNN_IVF_SQL
     replays seeds, both Lloyd rounds, probing, and ranking in DuckDB.
     """
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     if _coarse is None:
         cent = kmeans_centroids(emb, n_lists, lloyd_iters)
         lists = _nearest_lists(emb, cent, "v", 1)  # inverted index
@@ -601,11 +602,7 @@ def semdedup(
     extension); this composes the certified k-means with the certified
     cosine machinery.
     """
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     cent = kmeans_centroids(emb, n_lists, lloyd_iters)
     # The cluster assignment is referenced THREE times (both sides of
     # the within-cluster pair join + the final audit select); without
@@ -724,11 +721,7 @@ def knn_sq8(
     cosine, sorting last in both engines.
     """
     m = k * rerank
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     # scale as its own column: referencing array_max inside the
     # per-element lambda would re-run the O(d) max per element (O(d²))
     qemb = (
@@ -1084,11 +1077,7 @@ def knn_pq(
     """
     mcand = k * rerank
     dsub_default = 64 // m_sub
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     # train_mod > 1: codebooks train on a deterministic 1/train_mod
     # sample — the standard PQ deployment (codebooks need ~1e5 training
     # vectors REGARDLESS of corpus size; FAISS trains exactly this
@@ -1290,11 +1279,7 @@ def knn_ivfpq(
     """
     mcand = k * rerank
     dsub = 64 // m_sub
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     train = emb if train_mod == 1 else emb.filter(F.col("vec_id") % train_mod == 0)
     if _coarse is None:
         # The coarse quantizer and the PQ codebooks are independent
@@ -1520,11 +1505,7 @@ def ann_recall(
     # build is exactly replayable by construction, so sharing equals
     # recomputing). The methods' own registered entries still build
     # their index per call.
-    emb = (
-        io.read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .select("vec_id", "v", _norm("v").alias("nv"))
-    )
+    emb = _vector_frame(spark, sf_dir)
     def _coarse_build() -> tuple[DataFrame, DataFrame]:
         cent = kmeans_centroids(emb, 8, 2)
         lists = _nearest_lists(emb, cent, "v", 1).localCheckpoint(eager=False)

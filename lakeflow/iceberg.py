@@ -18,13 +18,17 @@ Iceberg table spec (iceberg.apache.org/spec, format-version 2) only:
   file-metadata key carries the spec's field-ids so the files are
   structurally readable by external Iceberg readers the day jars
   appear.
-- **Commit protocol** (HadoopTableOperations semantics): prepare the
-  next ``v<N+1>.metadata.json`` in a temp file, publish with
-  ``os.link`` — atomic, EEXIST when a concurrent writer took the
-  version (losers of a blind append rebase and retry; overwrite
-  raises), then refresh ``version-hint.text``. Readers never trust the
-  hint blindly: a missing/stale hint falls back to scanning for the
-  highest version file.
+- **Commit protocol** (HadoopTableOperations semantics): every
+  snapshot-producing operation builds its manifests and hands them to
+  one publisher, ``_publish_snapshot``, which writes the manifest list,
+  appends the snapshot and its log entries, and publishes the next
+  ``v<N+1>.metadata.json`` through :func:`datafiles.publish_once` — the
+  same fsynced put-if-absent the Delta log commits through, raising
+  ConcurrentModification when a concurrent writer took the version
+  (losers of a blind append rebase and retry; every other operation
+  raises). It then refreshes ``version-hint.text``. Readers never
+  trust the hint blindly: a missing/stale hint falls back to scanning
+  for the highest version file.
 - **Snapshots & time travel**: every commit appends a snapshot (id,
   sequence-number, summary, manifest-list) and a snapshot-log entry;
   ``read(snapshot_id=...)`` / ``read(asof_ms=...)`` replay any live
@@ -95,15 +99,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from lakeflow import avrolite, datafiles
+from lakeflow.datafiles import ConcurrentModification
 
 METADATA_DIR = "metadata"
 DATA_DIR = "data"
 FORMAT_VERSION = 2
 _VFILE_RE = re.compile(r"^v(\d+)\.metadata\.json$")
-
-
-class ConcurrentModification(Exception):
-    pass
 
 
 class NoSuchSnapshot(Exception):
@@ -403,6 +404,11 @@ MANIFEST_LIST_SCHEMA = {
 # -------------------------------------------------------------- the table
 
 
+def _current_schema(meta: dict) -> dict:
+    """The table's current Iceberg schema object."""
+    return next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
+
+
 def _snapshot_id() -> int:
     """Random positive 63-bit snapshot id (the spec's unique-per-table
     requirement; uuid4 entropy, no global state)."""
@@ -650,19 +656,12 @@ class IcebergTable:
 
     def _publish(self, version: int, metadata: dict) -> None:
         """Atomic CAS on the version file (HadoopTableOperations):
-        os.link fails with EEXIST when the version is taken."""
+        :func:`datafiles.publish_once` raises ConcurrentModification
+        when the version is taken."""
         os.makedirs(self.metadata_dir, exist_ok=True)
-        tmp = os.path.join(self.metadata_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(metadata, f, indent=1)
-        try:
-            os.link(tmp, self._metadata_path(version))
-        except FileExistsError:
-            raise ConcurrentModification(
-                f"version {version} was committed concurrently"
-            )
-        finally:
-            os.unlink(tmp)
+        datafiles.publish_once(
+            self._metadata_path(version), json.dumps(metadata, indent=1)
+        )
         hint_tmp = os.path.join(self.metadata_dir, f".hint-{uuid.uuid4().hex}")
         with open(hint_tmp, "w") as f:
             f.write(str(version))
@@ -670,10 +669,7 @@ class IcebergTable:
 
     def _part_fields(self, meta: dict) -> list[dict]:
         """Partition-spec fields joined with their source column types."""
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        by_id = {f["id"]: f for f in schema["fields"]}
+        by_id = {f["id"]: f for f in _current_schema(meta)["fields"]}
         spec = next(
             s
             for s in meta["partition-specs"]
@@ -797,10 +793,7 @@ class IcebergTable:
         for pf in part_fields:
             if pf["transform"] != "identity":
                 df = df.withColumn(pf["name"], _transform_column(pf))
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        type_of = {f["name"]: f["type"] for f in schema["fields"]}
+        type_of = {f["name"]: f["type"] for f in _current_schema(meta)["fields"]}
 
         def bound_bytes(values: dict[str, Any]) -> dict[str, bytes]:
             # collapsed on VALUES, encoded after: little-endian bound
@@ -867,9 +860,7 @@ class IcebergTable:
         statuses) to one Avro manifest and return its manifest_file
         record, counts derived from the statuses. ``content`` is 0 for
         data manifests, 1 for delete manifests (v2)."""
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
+        schema = _current_schema(meta)
         spec = next(
             s
             for s in meta["partition-specs"]
@@ -940,13 +931,12 @@ class IcebergTable:
         data_files: list[dict],
         part_fields: list[dict],
         meta: dict,
+        content: int = 0,
     ) -> dict:
-        """One Avro manifest for this commit's added files; returns its
+        """One Avro manifest of ADDED entries for this commit's data
+        files (``content`` 0) or position-delete files (1); returns its
         manifest_file entry for the manifest list."""
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        id_of = {f["name"]: f["id"] for f in schema["fields"]}
+        id_of = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
 
         def _finalize(dfile: dict) -> dict:
             d = {k: v for k, v in dfile.items() if not k.startswith("_")}
@@ -979,7 +969,7 @@ class IcebergTable:
             for dfile in data_files
         ]
         return self._write_manifest_raw(
-            snapshot_id, seq, entries, part_fields, meta, content=0
+            snapshot_id, seq, entries, part_fields, meta, content
         )
 
     def _commit_snapshot(
@@ -1047,11 +1037,7 @@ class IcebergTable:
                         return None
             if part_fields is None:
                 part_fields = self._part_fields(meta)
-            cur_schema = next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )
+            cur_schema = _current_schema(meta)
             table_schema = schema_to_spark(cur_schema)
             missing = set(f.name for f in table_schema.fields) - set(df.columns)
             extra = [c for c in df.columns if c not in set(f.name for f in table_schema.fields)]
@@ -1138,23 +1124,14 @@ class IcebergTable:
                     )
             seq = meta["last-sequence-number"] + 1
             snap_id = _snapshot_id()
-            new_manifest = self._write_manifest(
-                snap_id, seq, staged, part_fields, meta
-            )
-            manifests = [new_manifest]
-            rewritten: list[str] = []  # carried-manifest files to undo on CAS loss
-            parent_id = meta["current-snapshot-id"]
-            parent = None
-            if operation == "append" and parent_id not in (-1, None):
-                parent = next(
-                    s for s in meta["snapshots"] if s["snapshot-id"] == parent_id
-                )
+            manifests = [
+                self._write_manifest(snap_id, seq, staged, part_fields, meta)
+            ]
+            parent = self._resolve_snapshot(None, None, meta)
+            if operation == "append" and parent is not None:
                 _, prev, _ = avrolite.read_container(parent["manifest-list"])
                 manifests += prev
-            elif pred is not None and parent_id not in (-1, None):
-                parent = next(
-                    s for s in meta["snapshots"] if s["snapshot-id"] == parent_id
-                )
+            elif pred is not None and parent is not None:
                 _, prev, _ = avrolite.read_container(parent["manifest-list"])
                 for m in prev:
                     if m.get("content", 0) == 1:
@@ -1178,90 +1155,102 @@ class IcebergTable:
                         for e in live
                         if pred(e["data_file"]["partition"])
                     ]
-                    mf = self._write_manifest_raw(
-                        snap_id, seq, new_entries, part_fields, meta, content=0
+                    manifests.append(
+                        self._write_manifest_raw(
+                            snap_id, seq, new_entries, part_fields, meta
+                        )
                     )
-                    rewritten.append(mf["manifest_path"])
-                    manifests.append(mf)
-            elif parent_id not in (-1, None):
-                parent = next(
-                    s for s in meta["snapshots"] if s["snapshot-id"] == parent_id
-                )
-            now_ms = int(time.time() * 1000)
-            mlist_path = os.path.join(
-                self.metadata_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
-            )
-            avrolite.write_container(
-                mlist_path,
-                MANIFEST_LIST_SCHEMA,
-                manifests,
-                metadata={
-                    "format-version": str(FORMAT_VERSION),
-                    "snapshot-id": str(snap_id),
-                    "sequence-number": str(seq),
-                    "parent-snapshot-id": str(
-                        parent["snapshot-id"] if parent else "null"
-                    ),
-                },
-            )
-            total_rows = sum(
-                m["added_rows_count"] + m["existing_rows_count"]
-                for m in manifests
-                if m.get("content", 0) == 0
-            )
-            total_files = sum(
-                m["added_files_count"] + m["existing_files_count"]
-                for m in manifests
-                if m.get("content", 0) == 0
-            )
-            snapshot = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist_path,
-                "schema-id": meta["current-schema-id"],
-                "summary": {
-                    "operation": operation,
-                    "added-data-files": str(len(staged)),
-                    "added-records": str(
-                        sum(d["record_count"] for d in staged)
-                    ),
-                    "total-data-files": str(total_files),
-                    "total-records": str(total_rows),
-                    **(extra_summary or {}),
-                },
-            }
-            if parent is not None:
-                snapshot["parent-snapshot-id"] = parent["snapshot-id"]
-            new_meta = dict(meta)
-            new_meta["last-sequence-number"] = seq
-            new_meta["last-updated-ms"] = now_ms
-            new_meta["current-snapshot-id"] = snap_id
-            new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-            new_meta["snapshot-log"] = meta["snapshot-log"] + [
-                {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-            ]
-            new_meta["metadata-log"] = meta["metadata-log"] + [
-                {
-                    "timestamp-ms": meta["last-updated-ms"],
-                    "metadata-file": self._metadata_path(version),
-                }
-            ]
-            new_meta["refs"] = {
-                "main": {"snapshot-id": snap_id, "type": "branch"}
+            data = [m for m in manifests if m.get("content", 0) == 0]
+            summary = {
+                "added-data-files": str(len(staged)),
+                "added-records": str(sum(d["record_count"] for d in staged)),
+                "total-data-files": str(
+                    sum(m["added_files_count"] + m["existing_files_count"] for m in data)
+                ),
+                "total-records": str(
+                    sum(m["added_rows_count"] + m["existing_rows_count"] for m in data)
+                ),
+                **(extra_summary or {}),
             }
             try:
-                self._publish(version + 1, new_meta)
-                return snap_id
+                return self._publish_snapshot(
+                    version, meta, snap_id, seq, manifests, parent, operation, summary
+                )
             except ConcurrentModification:
-                os.unlink(mlist_path)
-                os.unlink(new_manifest["manifest_path"])
-                for p in rewritten:
-                    os.unlink(p)
                 if operation != "append":
                     self._cleanup_staged(staged)
                     raise
                 continue  # blind append: rebase on the winner and retry
+
+    def _publish_snapshot(
+        self,
+        version: int,
+        meta: dict,
+        snap_id: int,
+        seq: int,
+        manifests: list[dict],
+        parent: dict | None,
+        operation: str,
+        summary: dict[str, str],
+    ) -> int:
+        """Publish snapshot ``snap_id`` over ``manifests`` as table
+        version ``version + 1`` — the one commit path of every
+        snapshot-producing operation: write the manifest list, append
+        the snapshot, snapshot-log and metadata-log entries, point the
+        ``main`` ref at it, and CAS the metadata file. ``parent`` is the
+        snapshot this one follows (None for a table's first). On a lost
+        CAS the manifest list and the manifests this snapshot added are
+        unlinked and ConcurrentModification re-raised; callers unlink
+        their own data files."""
+        now_ms = int(time.time() * 1000)
+        mlist_path = os.path.join(
+            self.metadata_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
+        )
+        avrolite.write_container(
+            mlist_path,
+            MANIFEST_LIST_SCHEMA,
+            manifests,
+            metadata={
+                "format-version": str(FORMAT_VERSION),
+                "snapshot-id": str(snap_id),
+                "sequence-number": str(seq),
+                "parent-snapshot-id": str(parent["snapshot-id"] if parent else "null"),
+            },
+        )
+        snapshot = {
+            "snapshot-id": snap_id,
+            "sequence-number": seq,
+            "timestamp-ms": now_ms,
+            "manifest-list": mlist_path,
+            "schema-id": meta["current-schema-id"],
+            "summary": {"operation": operation, **summary},
+        }
+        if parent is not None:
+            snapshot["parent-snapshot-id"] = parent["snapshot-id"]
+        new_meta = dict(meta)
+        new_meta["last-sequence-number"] = seq
+        new_meta["last-updated-ms"] = now_ms
+        new_meta["current-snapshot-id"] = snap_id
+        new_meta["snapshots"] = meta["snapshots"] + [snapshot]
+        new_meta["snapshot-log"] = meta["snapshot-log"] + [
+            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
+        ]
+        new_meta["metadata-log"] = meta["metadata-log"] + [
+            {
+                "timestamp-ms": meta["last-updated-ms"],
+                "metadata-file": self._metadata_path(version),
+            }
+        ]
+        new_meta["refs"] = {"main": {"snapshot-id": snap_id, "type": "branch"}}
+        try:
+            self._publish(version + 1, new_meta)
+        except ConcurrentModification:
+            os.unlink(mlist_path)
+            for m in manifests:
+                if m["added_snapshot_id"] == snap_id:
+                    os.unlink(m["manifest_path"])
+            raise
+        return snap_id
 
     def append(self, df: DataFrame) -> int:
         """Atomic multi-file append — ``df.writeTo(t).append()`` in the
@@ -1420,15 +1409,12 @@ class IcebergTable:
         conjuncts = datafiles.parse_conjuncts(where) if where is not None else None
         field_of: dict[int, dict] = {}
         if conjuncts is not None:
-            schema = next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )
             # field ids are stable across add-column evolution, so the
             # CURRENT schema's id map covers every manifest's bounds
             field_of = {
-                f["id"]: f for f in schema["fields"] if isinstance(f["type"], str)
+                f["id"]: f
+                for f in _current_schema(meta)["fields"]
+                if isinstance(f["type"], str)
             }
         types = {f["name"]: f["type"] for f in field_of.values()}
 
@@ -1558,13 +1544,7 @@ class IcebergTable:
         meta = self.load_metadata(version)
         if meta["current-snapshot-id"] in (-1, None):
             return None
-        schema = schema_to_spark(
-            next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )
-        )
+        schema = schema_to_spark(_current_schema(meta))
         # bounds-pruned candidates: files whose column bounds prove no
         # row can match never even get scanned for positions
         files = self.scan_files(where=where, meta=meta)
@@ -1587,45 +1567,26 @@ class IcebergTable:
         )
         if not matched:
             return None
-        part_fields = self._part_fields(meta)
         seq = meta["last-sequence-number"] + 1
         snap_id = _snapshot_id()
         dfiles = self._write_partitioned_position_deletes(matched, files, by_norm)
-        n_pairs = sum(d["record_count"] for d in dfiles)
-        del_manifest = self._write_manifest_raw(
-            snap_id,
-            seq,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": dfile,
-                }
-                for dfile in dfiles
-            ],
-            part_fields,
-            meta,
-            content=1,
+        parent = self._resolve_snapshot(None, None, meta)
+        _, manifests, _ = avrolite.read_container(parent["manifest-list"])
+        manifests.append(
+            self._write_manifest(
+                snap_id, seq, dfiles, self._part_fields(meta), meta, content=1
+            )
         )
+        summary = {
+            "added-delete-files": str(len(dfiles)),
+            "added-position-deletes": str(sum(d["record_count"] for d in dfiles)),
+        }
         try:
-            return self._publish_row_delta(
-                version,
-                meta,
-                snap_id,
-                seq,
-                extra_manifests=[del_manifest],
-                operation="delete",
-                extra_summary={
-                    "added-delete-files": str(len(dfiles)),
-                    "added-position-deletes": str(n_pairs),
-                },
+            return self._publish_snapshot(
+                version, meta, snap_id, seq, manifests, parent, "delete", summary
             )
         except ConcurrentModification:
-            os.unlink(del_manifest["manifest_path"])
-            for dfile in dfiles:
-                os.unlink(self.local_path(dfile["file_path"]))
+            self._cleanup_staged(dfiles)
             raise
 
     def _write_partitioned_position_deletes(
@@ -1703,70 +1664,6 @@ class IcebergTable:
             "upper_bounds": None,
         }
 
-    def _publish_row_delta(
-        self,
-        version: int,
-        meta: dict,
-        snap_id: int,
-        seq: int,
-        extra_manifests: list[dict],
-        operation: str,
-        extra_summary: dict[str, str],
-    ) -> int:
-        """Publish a snapshot whose manifest list = the parent's
-        manifests + ``extra_manifests`` (the v2 row-delta shape shared
-        by delete_where and upsert_by_key). Raises
-        ConcurrentModification on a lost CAS after unlinking the
-        manifest list (callers unlink their own manifests/files)."""
-        parent = self._resolve_snapshot(None, None, meta)
-        _, prev, _ = avrolite.read_container(parent["manifest-list"])
-        manifests = prev + extra_manifests
-        now_ms = int(time.time() * 1000)
-        mlist_path = os.path.join(
-            self.metadata_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
-        )
-        avrolite.write_container(
-            mlist_path,
-            MANIFEST_LIST_SCHEMA,
-            manifests,
-            metadata={
-                "format-version": str(FORMAT_VERSION),
-                "snapshot-id": str(snap_id),
-                "sequence-number": str(seq),
-                "parent-snapshot-id": str(parent["snapshot-id"]),
-            },
-        )
-        snapshot = {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": parent["snapshot-id"],
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist_path,
-            "schema-id": meta["current-schema-id"],
-            "summary": {"operation": operation, **extra_summary},
-        }
-        new_meta = dict(meta)
-        new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now_ms
-        new_meta["current-snapshot-id"] = snap_id
-        new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-        new_meta["snapshot-log"] = meta["snapshot-log"] + [
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        ]
-        new_meta["metadata-log"] = meta["metadata-log"] + [
-            {
-                "timestamp-ms": meta["last-updated-ms"],
-                "metadata-file": self._metadata_path(version),
-            }
-        ]
-        new_meta["refs"] = {"main": {"snapshot-id": snap_id, "type": "branch"}}
-        try:
-            self._publish(version + 1, new_meta)
-        except ConcurrentModification:
-            os.unlink(mlist_path)
-            raise
-        return snap_id
-
     def upsert_by_key(
         self,
         spark: SparkSession,
@@ -1790,24 +1687,28 @@ class IcebergTable:
         read and the publish raises ConcurrentModification (CAS on the
         version loaded at entry). Returns {"matched": rows tombstoned,
         "inserted": rows appended}."""
-        from pyspark.sql.functions import broadcast
+        from pyspark.sql import functions as F
 
         version = self.latest_version()
         if version is None:
             raise FileNotFoundError(f"no Iceberg table at {self.path}")
         meta = self.load_metadata(version)
         part_fields = self._part_fields(meta)
-        inserted = updates.count()
+        # one job for the batch's rows and distinct key tuples; a struct
+        # is never null, so key tuples holding nulls are counted too
+        batch = updates.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count_distinct(F.struct(*key_cols)).alias("keys"),
+        ).first()
+        inserted = batch["rows"]
+        if batch["keys"] != inserted:
+            raise ValueError(
+                f"update batch has {inserted - batch['keys']} duplicate key(s)"
+            )
         if meta["current-snapshot-id"] in (-1, None):
             self.append(updates)
             return {"matched": 0, "inserted": inserted}
-        schema = schema_to_spark(
-            next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )
-        )
+        schema = schema_to_spark(_current_schema(meta))
         files = self.scan_files(meta=meta)
         if not files:
             # a snapshot can exist with zero live data files (e.g. after
@@ -1823,7 +1724,7 @@ class IcebergTable:
         keys = updates.select(*key_cols).distinct()
         matched = (
             self._live_positions(spark, files, meta, schema)
-            .join(broadcast(keys), list(key_cols), "left_semi")
+            .join(F.broadcast(keys), list(key_cols), "left_semi")
             .select("fp", "pos")
             .collect()
         )
@@ -1832,10 +1733,11 @@ class IcebergTable:
         )
         seq = meta["last-sequence-number"] + 1
         snap_id = _snapshot_id()
-        data_manifest = self._write_manifest(
-            snap_id, seq, staged, part_fields, meta
+        parent = self._resolve_snapshot(None, None, meta)
+        _, manifests, _ = avrolite.read_container(parent["manifest-list"])
+        manifests.append(
+            self._write_manifest(snap_id, seq, staged, part_fields, meta)
         )
-        extra_manifests = [data_manifest]
         summary = {
             "merge-matched": str(len(matched)),
             "merge-inserted": str(inserted),
@@ -1843,44 +1745,25 @@ class IcebergTable:
             "added-records": str(sum(d["record_count"] for d in staged)),
         }
         dfiles: list[dict] = []
-        del_manifest = None
         if matched:
             dfiles = self._write_partitioned_position_deletes(
                 matched, files, by_norm
             )
-            del_manifest = self._write_manifest_raw(
-                snap_id,
-                seq,
-                [
-                    {
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": dfile,
-                    }
-                    for dfile in dfiles
-                ],
-                part_fields,
-                meta,
-                content=1,
+            manifests.append(
+                self._write_manifest(
+                    snap_id, seq, dfiles, part_fields, meta, content=1
+                )
             )
-            extra_manifests.append(del_manifest)
             summary["added-delete-files"] = str(len(dfiles))
             summary["added-position-deletes"] = str(
                 sum(d["record_count"] for d in dfiles)
             )
         try:
-            self._publish_row_delta(
-                version, meta, snap_id, seq, extra_manifests, "overwrite", summary
+            self._publish_snapshot(
+                version, meta, snap_id, seq, manifests, parent, "overwrite", summary
             )
         except ConcurrentModification:
-            os.unlink(data_manifest["manifest_path"])
-            self._cleanup_staged(staged)
-            if del_manifest is not None:
-                os.unlink(del_manifest["manifest_path"])
-                for dfile in dfiles:
-                    os.unlink(self.local_path(dfile["file_path"]))
+            self._cleanup_staged(staged + dfiles)
             raise
         return {"matched": len(matched), "inserted": inserted}
 

@@ -6,7 +6,7 @@ whole suite in ONE Spark job: every expectation compiles to an
 aggregate expression; a single global aggregate row is collected and
 expanded into a per-expectation report.
 
-Scale note: one pass over the table regardless of suite size — 23
+Scale note: one pass over the table regardless of suite size — 22
 expectations cost the same scan as one.
 """
 

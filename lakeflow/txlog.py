@@ -25,10 +25,12 @@ so this module re-implements the protocol itself, Spark-first:
   readable by external Delta readers the day format jars appear.
 - **Atomicity**: data files are staged and moved into the table dir
   FIRST (invisible to readers — only the log defines the table), then
-  the commit file is published with ``os.link(tmp, commit)``, which is
-  atomic and fails with EEXIST if the version was taken. A crash at any
-  earlier point leaves orphan data files (cleaned by ``vacuum``) and a
-  table still readable at the prior version.
+  the commit file is published by :func:`datafiles.publish_once`, the
+  put-if-absent both formats commit through: written whole and fsynced
+  under a temp name, then ``os.link``-ed to the version name, which
+  fails with EEXIST if the version was taken. A crash at any earlier
+  point leaves orphan data files (cleaned by ``vacuum``) and a table
+  still readable at the prior version.
 - **Optimistic concurrency**: writers read the latest version, prepare,
   then CAS on the commit file. Losers of the race re-check: blind
   appends rebase and retry; read-modify-write commits (overwrite,
@@ -36,7 +38,7 @@ so this module re-implements the protocol itself, Spark-first:
   premise (the snapshot they read) is stale.
 - **Time travel**: ``read(version=N)`` replays the log to N;
   ``history()`` lists commits. Every 10 commits a
-  ``*.checkpoint.json`` snapshot of the full live set bounds replay
+  ``<v>.checkpoint.parquet`` snapshot of the full live set bounds replay
   cost — at 100 TB / millions of commits the log read is
   O(checkpoint + tail), exactly Delta's shape.
 
@@ -64,6 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from lakeflow import datafiles
+from lakeflow.datafiles import ConcurrentModification
 
 LOG_DIR = "_delta_log"  # the spec's log directory name
 CDF_DIR = "_change_data"  # the spec's CDF directory name
@@ -109,13 +112,6 @@ def _check_constraints(df: DataFrame, cons: dict[str, str]) -> None:
     if bad:
         detail = ", ".join(f"{n} ({cons[n]!r}): {c} rows" for n, c in bad.items())
         raise ConstraintViolation(f"CHECK constraint(s) violated — {detail}")
-
-
-class ConcurrentModification(Exception):
-    """A read-modify-write commit lost the optimistic-concurrency race:
-    another writer committed after our snapshot was taken, so replaying
-    our actions could drop their changes. Callers retry the whole
-    operation from a fresh snapshot."""
 
 
 class NoSuchVersion(Exception):
@@ -394,25 +390,16 @@ class TxTable:
     # ------------------------------------------------------------- committing
 
     def _try_commit(self, version: int, actions: list[dict[str, Any]]) -> bool:
-        """Atomically publish ``actions`` as ``version``. The os.link CAS
-        is the transaction point: it either creates the commit file
-        whole (the tmp file is fully written + fsynced first) or fails
-        EEXIST because another writer took the version."""
+        """Atomically publish ``actions`` as ``version``; False when
+        another writer took the version (:func:`datafiles.publish_once`
+        is the transaction point)."""
         os.makedirs(self.log_dir, exist_ok=True)
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
-        target = os.path.join(self.log_dir, _commit_name(version))
+        text = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
         try:
-            os.link(tmp, target)
+            datafiles.publish_once(os.path.join(self.log_dir, _commit_name(version)), text)
             return True
-        except FileExistsError:
+        except ConcurrentModification:
             return False
-        finally:
-            os.unlink(tmp)
 
     def _commit(
         self,

@@ -4,12 +4,14 @@ Data skipping is a pure optimization: ``read(where=w)`` must return
 exactly ``read().filter(w)``, whatever the predicate, and a supported
 conjunct must still prune files. A partitioned write makes one file per
 partition value, a small table reads as one partition, and a failed
-write leaves no staging directory behind."""
+write leaves no staging directory behind. Both formats commit through one
+put-if-absent whose version file is fsynced before it is published."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pytest
 
@@ -126,3 +128,36 @@ def test_failed_write_leaves_no_staging_dir(spark, tmp_path, fmt):
     with pytest.raises(Exception, match="boom"):
         _write(fmt, spark, path, df)
     assert not [e for e in os.listdir(path) if e.startswith(".stage-")]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_version_file_fsynced_before_publish(spark, tmp_path, fmt, monkeypatch):
+    """A version file is durable before it is visible: the temp file
+    that becomes the version was fsynced before being linked to its
+    version name, so a crash cannot leave a committed version empty or
+    torn."""
+    real_fsync, real_link = os.fsync, os.link
+    synced: set[tuple[int, int]] = set()
+    published: list[tuple[str, bool]] = []
+
+    def fsync(fd):
+        real_fsync(fd)
+        st = os.fstat(fd)
+        synced.add((st.st_dev, st.st_ino))
+
+    def link(src, dst, *args, **kwargs):
+        st = os.stat(src)
+        published.append((os.path.basename(dst), (st.st_dev, st.st_ino) in synced))
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    _write(fmt, spark, str(tmp_path / "t"), spark.range(3))
+    versions = [
+        (name, ok)
+        for name, ok in published
+        if re.fullmatch(r"\d{20}\.json|v\d+\.metadata\.json", name)
+    ]
+    # Delta: one commit; Iceberg: create and append
+    assert len(versions) == (1 if fmt == "delta" else 2), published
+    assert all(ok for _, ok in versions), published

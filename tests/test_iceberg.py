@@ -903,6 +903,33 @@ def test_upsert_on_snapshot_with_zero_live_files(spark, table):
     assert sorted(r.id for r in table.read(spark).collect()) == [7]
 
 
+def test_upsert_rejects_duplicate_keyed_batch(spark, tmp_path):
+    """A batch holding two rows for one key has no single MERGE result:
+    upsert_by_key raises ValueError (as TxTable.upsert_by_key does)
+    before anything is staged — no snapshot, no file under data/. Key
+    tuples holding nulls count as keys too."""
+    t = IcebergTable(str(tmp_path / "d"))
+    schema = "id bigint, v string"
+    t.create(spark.createDataFrame([], schema).schema)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+
+    def data_files():
+        return sorted(
+            os.path.join(root, n) for root, _d, names in os.walk(t.data_dir) for n in names
+        )
+
+    version, files = t.latest_version(), data_files()
+    for batch in (
+        [(2, "x"), (2, "y"), (3, "z"), (3, "w")],
+        [(None, "x"), (None, "y")],
+    ):
+        with pytest.raises(ValueError, match="duplicate key"):
+            t.upsert_by_key(spark, spark.createDataFrame(batch, schema), ("id",))
+    assert t.latest_version() == version and len(t.history()) == 1
+    assert data_files() == files
+    assert _rows(t.read(spark)) == [(1, "a"), (2, "b")]
+
+
 def test_create_rejects_derived_partition_name_collision(spark, tmp_path):
     """ADVICE r10 (medium): a derived hidden-partition field name that
     collides with a payload column would silently clobber that column
