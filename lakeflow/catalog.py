@@ -154,38 +154,6 @@ def register_gold_views(
     return GOLD_VIEWS
 
 
-def publish_gold_views_persistent(
-    spark: SparkSession,
-    silver_path: str,
-    now_spark: str,
-    db: str = "gold",
-) -> tuple[str, ...]:
-    """S7, persistent variant — publish the six gold views as
-    NON-temporary views in database ``db`` of a metastore-backed
-    catalog (build the session with
-    :func:`lakeflow.session.get_metastore_session`), over a permanent
-    external table pointing at the silver parquet. This is the
-    reference's metastore role (compose/base.yml:98-110): views outlive
-    the session, and any later session on the same metastore can query
-    them by name.
-
-    Permanent views cannot reference temp views, so silver is
-    registered as an external TABLE (location-only DDL — no data copy,
-    scans stay partition-pruned parquet reads).
-    """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    spark.sql(f"USE {db}")
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS silver_claims USING parquet LOCATION '{silver_path}'"
-    )
-    with open(GOLD_SQL_PATH) as f:
-        text = f.read().replace(
-            "CREATE OR REPLACE TEMPORARY VIEW", "CREATE OR REPLACE VIEW"
-        )
-    run_sql_text(spark, text, params={"now": now_spark})
-    return GOLD_VIEWS
-
-
 def provision_table(
     spark: SparkSession,
     name: str,

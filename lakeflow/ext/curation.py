@@ -6,17 +6,16 @@ pretraining-corpus build actually runs:
     quality filters (repetition + LM perplexity band + Gopher rule
     cascade) → model-based quality (hashed linear classifier) →
     exact-substring span dedup → semantic near-dup clustering (keep
-    canonical) → leakage-safe split → deterministic sharding →
-    transactional publish
+    canonical) → leakage-safe split → deterministic sharding
 
 Every stage is an operator certified on its own elsewhere in this repo
 (`q_dedup_exact`, `q_bloom_decontam`, `q_repetition`,
 `q_lm_perplexity`, `q_gopher_rules`, `q_quality_classifier`,
 `q_span_dedup`, `q_dedup_clusters`, `q_cluster_split`,
 `q_shard_manifest`); this
-module wires them into one lazily-composed DataFrame plan plus one
-atomic `TxTable` commit, and returns the per-stage funnel counts a
-curation run logs.
+module wires them into one lazily-composed DataFrame plan, one
+audit row per input document with every gate's verdict
+(:func:`curated_docs`, registered as `q_curation_audit`).
 
 Scale design (what survives the 1000× jump):
 - One normalized-text tier shared by every text stage (the medallion
@@ -27,23 +26,12 @@ Scale design (what survives the 1000× jump):
   and the canonical-keep semi join into one scan pipeline — there is
   no per-stage materialization barrier except where a stage is
   inherently iterative (connected components).
-- The funnel counts come from ONE aggregate over a stage-label
-  column (conditional counts), not one count() job per stage.
-- The publish is a single atomic multi-file commit with a txn marker,
-  so a re-run of the same batch id is detected and skipped — the
-  idempotence contract a production scheduler needs.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from lakeflow.txlog import TxTable
-
-APP_ID = "lakeflow-curation"
 
 # Default gate thresholds, calibrated to the synthetic corpus's measured
 # distributions (see curated_docs docstring). Module-level so the Spark
@@ -246,103 +234,6 @@ def curated_docs(
         & F.col("keep_spans")
         & F.col("keep_canonical"),
     )
-
-
-def curate(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    batch_id: int = 0,
-    **kwargs: Any,
-) -> dict[str, int]:
-    """Run the curation pipeline and PUBLISH the audit table
-    transactionally. Returns the stage funnel.
-
-    Idempotent per ``batch_id``: the commit carries a txn marker, so a
-    replayed batch (scheduler retry after a driver crash that already
-    committed) is detected and skipped without a duplicate commit —
-    the same contract as the streaming rollup's foreachBatch MERGE.
-    """
-    table = TxTable(out_path)
-    if table.exists() and (tv := table.txn_version(APP_ID)) is not None and tv >= batch_id:
-        flagged = table.read(spark)
-    else:
-        flagged = curated_docs(spark, sf_dir, **kwargs)
-        table.write(flagged, mode="overwrite", txn=(APP_ID, batch_id))
-        flagged = table.read(spark)
-
-    return _funnel(flagged)
-
-
-def diff_runs(
-    spark: SparkSession, out_path: str, v_old: int, v_new: int
-) -> DataFrame:
-    """Ablation diff between two published curation runs — the
-    question a data-ablation study actually asks: *which documents
-    moved, and through which gate?* Reads both versions from the SAME
-    transaction-logged audit table (time travel — no second copy of
-    anything is kept), full-outer-joins on doc_id, and classifies
-    every document's transition; dropped docs carry the FIRST failing
-    gate as the reason. Output is the transition matrix
-    (|transitions| × |reasons| rows — never corpus-sized), so two
-    100 TB curation runs diff in one join + one aggregate.
-    """
-    t = TxTable(out_path)
-
-    def load(v: int, tag: str) -> DataFrame:
-        return t.read(spark, version=v).select(
-            "doc_id",
-            F.col("kept").alias(f"kept_{tag}"),
-            F.when(~F.col("keep_exact"), "exact_dup")
-            .when(~F.col("keep_decontam"), "contaminated")
-            .when(~F.col("keep_quality"), "quality")
-            .when(~F.col("keep_model"), "model_quality")
-            .when(~F.col("keep_spans"), "span_dup")
-            .when(~F.col("keep_canonical"), "near_dup")
-            .otherwise("kept")
-            .alias(f"gate_{tag}"),
-        )
-
-    a, b = load(v_old, "old"), load(v_new, "new")
-    j = a.join(b, "doc_id", "full_outer")
-    transition = (
-        F.when(F.col("kept_old").isNull(), "added")
-        .when(F.col("kept_new").isNull(), "removed")
-        .when(F.col("kept_old") & F.col("kept_new"), "kept_both")
-        .when(F.col("kept_old") & ~F.col("kept_new"), "newly_dropped")
-        .when(~F.col("kept_old") & F.col("kept_new"), "newly_kept")
-        .otherwise("dropped_both")
-    )
-    return (
-        j.select(
-            transition.alias("transition"),
-            F.coalesce("gate_new", F.lit("absent")).alias("gate_new"),
-        )
-        .groupBy("transition", "gate_new")
-        .agg(F.count("*").alias("docs"))
-        .orderBy("transition", "gate_new")
-    )
-
-
-def _funnel(flagged: DataFrame) -> dict[str, int]:
-    # one aggregate for the whole funnel — never a count() per stage
-    _exact = F.col("keep_exact")
-    _decon = _exact & F.col("keep_decontam")
-    _qual = _decon & F.col("keep_quality")
-    _model = _qual & F.col("keep_model")
-    _spans = _model & F.col("keep_spans")
-    row = flagged.agg(
-        F.count("*").alias("input_docs"),
-        F.sum(_exact.cast("long")).alias("after_exact_dedup"),
-        F.sum(_decon.cast("long")).alias("after_decontam"),
-        F.sum(_qual.cast("long")).alias("after_quality"),
-        F.sum(_model.cast("long")).alias("after_model"),
-        F.sum(_spans.cast("long")).alias("after_span_dedup"),
-        F.sum(F.col("kept").cast("long")).alias("kept"),
-        F.countDistinct(F.when(F.col("kept"), F.col("shard_id"))).alias("shards"),
-        F.countDistinct(F.when(F.col("kept"), F.col("split"))).alias("splits"),
-    ).collect()[0]
-    return {k: int(row[k] or 0) for k in row.asDict()}
 
 
 def curation_audit_sql(

@@ -1587,75 +1587,6 @@ def embedding_near_dups_lsh(
     )
 
 
-def embedding_near_dups_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.4,
-    n_lists: int | None = None,
-    nprobe: int = 4,
-    lloyd_iters: int = 2,
-) -> DataFrame:
-    """IVF-blocked embedding near-dup pairs: k-means cells as the
-    blocker instead of sign-LSH bands, with ``nprobe`` multi-cell
-    assignment for boundary recall. n_lists ≈ √n grows with the
-    corpus; each Lloyd round is two bounded shuffles with only the
-    centroid relation crossing stages.
-
-    MEASURED VERDICT (SCALE.md §12, late r4): at the low-threshold
-    regime this was built to test (t=0.4), IVF blocking does NOT beat
-    banding — recall/cost tracks the same frontier (sf0.1: nprobe=4
-    → recall 0.82, nprobe=8 → 0.995 but ~as many candidates as the
-    banded path at its 0.80; sf1 wall time equal or worse, and
-    the nearest-cell ranking itself costs an n×n_lists distance
-    pass). Both schemes are bound by the same data property — the
-    count of pairs near the threshold — so the operator is kept as
-    the measured ALTERNATIVE (and for centroid-count regimes where
-    cells are genuinely discriminative, t ≥ 0.8 with tight clusters),
-    not as a default anywhere. Recall is empirical (no closed-form
-    S-curve): characterization tests pin it vs the exact twin at two
-    SFs.
-    """
-    from lakeflow.ext.similarity import (
-        _cosine,
-        _dot,
-        _nearest_lists,
-        _vector_frame,
-        kmeans_centroids,
-    )
-
-    emb = _vector_frame(spark, sf_dir)
-    if n_lists is None:
-        n_lists = max(4, int(emb.count() ** 0.5))
-    cent = kmeans_centroids(emb, n_lists, lloyd_iters)
-    assign = _nearest_lists(emb.select("vec_id", "v"), cent, "v", nprobe).select(
-        "vec_id", "list_id"
-    )
-    cand = (
-        assign.alias("a")
-        .join(
-            assign.alias("b"),
-            (F.col("a.list_id") == F.col("b.list_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    va = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a"), F.col("nv").alias("n_a")
-    )
-    vb = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("v_b"), F.col("nv").alias("n_b")
-    )
-    cos = _cosine(_dot("v_a", "v_b"), F.col("n_a"), F.col("n_b"))
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("vec_a", "vec_b")
-    )
-
-
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,

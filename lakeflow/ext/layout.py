@@ -37,13 +37,11 @@ Scale design (100 TB):
   per file — millions of rows at 100 TB, not billions), window-
   partitioned by table partition so every partition plans in parallel.
 
-Companions elsewhere in the engine: the WRITER side of these ops
-already exists (`io.write_zordered` physically rewrites a table
-z-clustered, `io.write_sorted` linearly, `txlog.TxTable.compact`
-executes compaction); this module is the
-REGISTERED, ORACLE-CERTIFIED analysis surface — the zone-map audit,
-the skipping self-evaluation, and the compaction plan a maintenance
-job would compute before paying for the rewrite.
+Companion elsewhere in the engine: `txlog.TxTable.compact` executes
+bin-packing compaction. The engine has no clustering writer; this
+module is the REGISTERED, ORACLE-CERTIFIED analysis surface — the
+zone-map audit, the skipping self-evaluation, and the compaction plan
+a maintenance job would compute before paying for the rewrite.
 """
 
 from __future__ import annotations

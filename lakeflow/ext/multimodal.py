@@ -23,24 +23,6 @@ from pyspark.sql import functions as F
 from lakeflow import io
 
 
-def synthesize_binary_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic fake 'image' payloads: 64 bytes derived from the
-    document text (md5 ×4), plus typed metadata — the schema a real
-    multimodal table would have (payload binary, mime string, meta)."""
-    # NULL text would synthesize a NULL payload and crash the decode
-    # stubs executor-side (len(None)/None[:8]); a real ingest would
-    # reject payload-less rows at the edge the same way.
-    docs = io.read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payload_hex = F.concat(*[F.md5(F.concat(F.col("text"), F.lit(str(i)))) for i in range(4)])
-    return docs.select(
-        "doc_id",
-        F.unhex(payload_hex).alias("payload"),
-        F.lit("image/fake").alias("mime"),
-        (64 + F.col("doc_id") % 512).cast("int").alias("width"),
-        (64 + (F.col("doc_id") * 7) % 512).cast("int").alias("height"),
-    )
-
-
 def decode_stub(payload: bytes, mime: str) -> dict:
     """Byte-stat 'decode' for the opaque fake mime (kept as the
     plumbing-only path; real codecs below handle image/png and
@@ -315,197 +297,6 @@ DECODERS = {
     "image/bmp": decode_image,
     "image/jpeg": decode_image,  # baseline JFIF (ext/jpeg.py)
 }
-
-
-def synthesize_image_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL encoded image payloads over the documents table: each doc
-    gets a constant-color image (size and color closed-form in doc_id,
-    so downstream decode results stay oracle-checkable) encoded as an
-    actual PNG (zlib/IDAT/filters) or 24-bit BMP — mime alternates so
-    both decoders are exercised. Encoding runs inside mapInPandas:
-    Arrow-batched, partition-local, zero payload shuffle."""
-    docs = (
-        io.read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id")
-    )
-    schema = "doc_id long, payload binary, mime string"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, mimes = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 4 + (d * 7) % 11
-                color = bytes((d % 256, (d * 3) % 256, (d * 5) % 256))
-                rgb = color * (w * h)
-                if d % 3 == 0:
-                    payloads.append(encode_bmp(w, h, rgb))
-                    mimes.append("image/bmp")
-                else:
-                    payloads.append(encode_png(w, h, rgb))
-                    mimes.append("image/png")
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads, "mime": mimes}
-            )
-
-    return docs.mapInPandas(batches, schema=schema)
-
-
-def synthesize_jpeg_docs(
-    spark: SparkSession, sf_dir: str, subsample: bool = False
-) -> DataFrame:
-    """JPEG twin of :func:`synthesize_image_docs`: real baseline JFIF
-    payloads (ext/jpeg.py) with the same closed-form size/color scheme,
-    so decode/resize tests can drive the registry's JPEG path through
-    the identical Arrow-batched plumbing. Kept separate from the
-    PNG/BMP generator because JPEG is LOSSY — pixel_sum is no longer
-    closed-form, so q_multimodal_meta's exact oracle stays pinned to
-    the lossless mimes."""
-    from lakeflow.ext.jpeg import encode_jpeg
-
-    docs = (
-        io.read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id")
-    )
-    schema = "doc_id long, payload binary, mime string"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 13, 4 + (d * 7) % 11
-                color = bytes((d % 256, (d * 3) % 256, (d * 5) % 256))
-                payloads.append(
-                    encode_jpeg(w, h, color * (w * h), subsample=subsample)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=schema)
-
-
-def decode_images(df: DataFrame) -> DataFrame:
-    """Real decode via mapInPandas over (doc_id, payload, mime): header
-    parse + inflate + unfilter + pixel stats, Arrow-batched and
-    partition-local. The Python-side codec is the honest local stand-in
-    for Pillow/libvips — the Spark plumbing (batch shape, schema, no
-    payload shuffle) is exactly what a production decoder plugs into."""
-    schema = (
-        "doc_id long, mime string, width int, height int, channels int, "
-        "byte_len int, pixel_sum long"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [
-                decode_image(bytes(p), m) for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            fdf = pd.DataFrame(feats)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "mime": pdf["mime"].values,
-                    "width": fdf["width"].values,
-                    "height": fdf["height"].values,
-                    "channels": fdf["channels"].values,
-                    "byte_len": fdf["byte_len"].values,
-                    "pixel_sum": fdf["pixel_sum"].values,
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
-
-
-def extract_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """Decode/feature-extract via mapInPandas — Arrow-batched, runs
-    per-partition with zero shuffle; the pattern a real image decode /
-    resize / frame-sample operator plugs into."""
-    schema = "doc_id long, mime string, width int, height int, byte_len int, first_byte int, byte_sum long"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_stub(p, m) for p, m in zip(pdf["payload"], pdf["mime"])]
-            fdf = pd.DataFrame(feats)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "mime": pdf["mime"].values,
-                    "width": pdf["width"].values,
-                    "height": pdf["height"].values,
-                    "byte_len": fdf["byte_len"].values,
-                    "first_byte": fdf["first_byte"].values,
-                    "byte_sum": fdf["byte_sum"].values,
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
-
-
-def resize_pixels(
-    px: bytes, w: int, h: int, channels: int, out_w: int, out_h: int
-) -> bytes:
-    """Nearest-neighbor resample of a row-major pixel grid (the exact
-    arithmetic Pillow's NEAREST uses: src = floor(dst * src_dim /
-    dst_dim)) — one numpy fancy-index gather, no per-pixel loop."""
-    import numpy as np
-
-    grid = np.frombuffer(px, np.uint8).reshape(h, w, channels)
-    sy = np.arange(out_h) * h // out_h
-    sx = np.arange(out_w) * w // out_w
-    return grid[np.ix_(sy, sx)].tobytes()
-
-
-def resize_images(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """REAL image resize via mapInPandas: decode (PNG/BMP codec) →
-    nearest-neighbor resample → re-encode as PNG. Same zero-shuffle,
-    Arrow-batched shape as decode_images; payload bytes never cross a
-    shuffle boundary and resized frames are yielded incrementally per
-    batch."""
-    schema = (
-        "doc_id long, width int, height int, out_w int, out_h int, "
-        "resized binary, out_pixel_sum long"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, blobs, sums = [], [], [], [], []
-            for doc_id, payload, mime in zip(pdf["doc_id"], pdf["payload"], pdf["mime"]):
-                raw = bytes(payload)
-                if mime == "image/png":
-                    w, h, ch, px = decode_png(raw)
-                elif mime == "image/jpeg":
-                    from lakeflow.ext.jpeg import decode_jpeg
-
-                    w, h, ch, px = decode_jpeg(raw)
-                else:
-                    w, h, ch, px = decode_bmp(raw)
-                rp = resize_pixels(px, w, h, ch, out_w, out_h)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                blobs.append(encode_png(out_w, out_h, rp, channels=ch))
-                sums.append(int(__import__("numpy").frombuffer(rp, "uint8").sum(dtype="int64")))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "out_w": out_w,
-                    "out_h": out_h,
-                    "resized": blobs,
-                    "out_pixel_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
 
 
 def synthesize_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -807,8 +598,8 @@ FROM s GROUP BY doc_id, n ORDER BY doc_id
 
 def dhash_pixels(px: bytes, w: int, h: int, channels: int) -> int:
     """64-bit difference hash of a row-major pixel grid: integer
-    grayscale (sum//channels), nearest-neighbor resample to 9x8 (the
-    same floor arithmetic as resize_pixels), then bit (y*8+x) = 1 iff
+    grayscale (sum//channels), nearest-neighbor resample to 9x8 (src =
+    floor(dst * src_dim / dst_dim), Pillow's NEAREST), then bit (y*8+x) = 1 iff
     gray[y,x] < gray[y,x+1]. Returned as SIGNED int64 (two's
     complement) so it stores in a Spark bigint column."""
     import numpy as np
@@ -910,8 +701,8 @@ def synthesize_gradient_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient slopes; the %3==1 sibling is brightness-shifted (+8 on
     every channel — every byte differs, dHash IDENTICAL: the case
     exact byte/pixel dedup cannot catch), the %3==2 sibling scrambles
-    the slopes (unrelated). Encoded as real PNG/BMP like
-    synthesize_image_docs."""
+    the slopes (unrelated). Encoded as real PNG or BMP (alternating by
+    doc_id parity)."""
     docs = (
         io.read_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())

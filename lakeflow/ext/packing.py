@@ -11,10 +11,9 @@ All three are pure Catalyst expressions with DuckDB oracle twins:
   packed in doc_id order WITHIN each source shard (window partitioned
   by ``source``), so the plan is one shuffle on the shard key and every
   shard packs in parallel. A single global ORDER BY would funnel the
-  corpus through one task — the same trap VERDICT r3's ADVICE flagged
-  in write_zordered — so global packing is deliberately not offered;
-  at 100 TB you pack per shard (or per (source, sub-shard)) exactly
-  like this.
+  corpus through one task — the single-task global-sort trap — so
+  global packing is deliberately not offered; at 100 TB you pack per
+  shard (or per (source, sub-shard)) exactly like this.
 - ``mix_plan``: per-language token inventory vs target mixture weights
   → sampling rate / epoch multiplier per language. One tiny aggregate
   (output scales with |langs|, not rows); the plan it emits is what a

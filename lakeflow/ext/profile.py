@@ -516,7 +516,7 @@ def drift_ks(spark: SparkSession, sf_dir: str, grid: int = KS_GRID) -> DataFrame
 
     Scale honesty: the EXACT KS sup runs over every distinct value,
     which needs a full ordered pass — the single-task global-sort trap
-    (ADVICE r3 / write_zordered). Evaluating the sup on a fixed
+    (ADVICE r3). Evaluating the sup on a fixed
     quantile grid bounds the underestimate by 1/(grid+1) while keeping
     the plan one bounds-aggregate + one map-side binning + one
     grid-sized cumulative window (≤ grid+1 rows — a driver-scale

@@ -429,89 +429,25 @@ WHERE text IS NOT NULL  -- the normalized tier's filter (no content, no fingerpr
 """
 
 
-def winnow_frame(
-    docs: DataFrame, k: int = 8, window: int = 4, portable: bool = False
+def winnow_fingerprints_portable(
+    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
 ) -> DataFrame:
     """Winnowing document fingerprints (rolling-hash family): hash every
     character k-gram of the normalized text, then keep the minimum hash
     of each sliding window of ``window`` consecutive k-grams — the
     classic local-algorithm guarantee that any shared substring of
-    length >= k+window-1 yields at least one shared fingerprint.
+    length >= k+window-1 yields at least one shared fingerprint. The
+    gram hash is the portable md5-derived 32-bit hash
+    (``dedup._md5h32``), so DuckDB reproduces the exact fingerprints
+    (WINNOW_SQL); they come out as scalar (doc_id, n_grams,
+    fingerprint) rows so the oracle's value-hash compare sees only
+    scalar columns.
 
-    Pure Catalyst: substring/hash inside array lambdas over STAGED
-    columns (see dedup._shingles perf note — lambdas re-evaluate
-    captured expressions per element, so norm/gh are materialized
-    projections, kept multi-referenced so CollapseProject can't inline
-    them back). Hash values are murmur3 (engine-specific) → rows-only;
-    the containment property is unit-tested. ``portable=True`` swaps in
-    the md5-derived 32-bit hash (dedup._md5h32) so DuckDB can reproduce
-    the exact fingerprints (WINNOW_SQL oracle) — ~10× the hash cost, so
-    it's the verification hash, not the 100 TB default.
-
-    CALLER TRAP: don't FILTER directly on the derived columns
-    (e.g. ``.filter("n_fingerprints <= 0")``). PushDownPredicates
-    substitutes alias chains into the pushed condition with no
-    cost check, and the doubly-referenced ``gh`` inlines the whole
-    k-gram hash chain into every window term — O(len²) per row inside
-    the filter. Aggregate or materialize first, then filter.
-    """
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""), r"\s+", " "
-        )
-    )
-    staged = docs.select("doc_id", norm.alias("norm")).filter(
-        F.length("norm") >= k + window - 1
-    )
-    # k-gram rolling hashes (Column.substr takes Column positions;
-    # "norm" is a cheap attribute ref inside the lambda)
-    n_grams = F.length("norm") - k + 1
-    if portable:
-        from lakeflow.ext.dedup import _md5h32
-
-        gram_hash = lambda i: _md5h32(F.col("norm").substr(i, F.lit(k)))  # noqa: E731
-    else:
-        gram_hash = lambda i: F.hash(F.col("norm").substr(i, F.lit(k)))  # noqa: E731
-    grams = F.transform(F.sequence(F.lit(1), n_grams), gram_hash)
-    hashed = staged.select("doc_id", "norm", grams.alias("gh"))
-    # windowed minima over the STAGED gh column (array_min over slices)
-    mins = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size("gh") - window + 1),
-            lambda j: F.array_min(F.slice("gh", j, window)),
-        )
-    )
-    return hashed.select(
-        "doc_id",
-        "gh",  # kept: 2 refs stop CollapseProject inlining the k-gram hashing
-        mins.alias("fingerprints"),
-    ).select(
-        "doc_id",
-        F.size("gh").alias("n_grams"),
-        "fingerprints",
-        F.size("fingerprints").alias("n_fingerprints"),
-    )
-
-
-def winnow_fingerprints(
-    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
-) -> DataFrame:
-    """Query-registry wrapper of :func:`winnow_frame` over documents."""
-    return winnow_frame(io.read_table(spark, sf_dir, "documents"), k, window)
-
-
-def winnow_fingerprints_portable(
-    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
-) -> DataFrame:
-    """Oracle-checkable winnowing: portable md5 gram hash, fingerprints
-    as scalar (doc_id, n_grams, fingerprint) rows so the driver's
-    value-hash compare sees only scalar columns.
-
-    Row-wise plan, NOT an explode over :func:`winnow_frame`'s arrays:
-    collapsing a Generate into the array pipeline re-inlines the gh
-    construction into every window term (the O(len²) trap in
-    winnow_frame's docstring — measured: explode(fingerprints) hangs at
-    sf0.001 where this runs in seconds). The explode happens BEFORE the
+    Row-wise plan, NOT an explode over per-document hash arrays:
+    collapsing a Generate into an array pipeline re-inlines the k-gram
+    hash array into every window term (O(len²) per row — measured: an
+    explode of array fingerprints hangs at sf0.001 where this runs in
+    seconds). The explode happens BEFORE the
     hashing — gram POSITIONS fan out, then md5 runs as a plain
     post-explode projection inside whole-stage codegen (md5 inside an
     array lambda is interpreted per element: measured ~10× slower).

@@ -60,49 +60,3 @@ def ingest_csv(
         return n
     finally:
         df.unpersist()
-
-
-def ingest_csv_permissive(
-    spark: SparkSession,
-    input_glob: str,
-    schema,
-    quarantine_path: str | None = None,
-) -> tuple:
-    """Robust bronze ingestion: PERMISSIVE CSV parsing against an
-    expected schema, with malformed rows captured in a
-    ``_corrupt_record`` column and split into a quarantine frame
-    instead of failing the batch (FAILFAST) or silently dropping
-    (DROPMALFORMED) — the error-tolerant upgrade of the reference's
-    inferSchema read (/root/reference/jobs/bronze/ingest_csv_to_delta.py:44-49).
-
-    Returns (clean_df, quarantine_df). The split filters on the RAW
-    _corrupt_record column (pushdown-safe), and callers land the
-    quarantine frame next to the bronze table so reprocessing is a
-    re-read, not a re-crawl.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructType
-
-    schema_with_err: StructType = StructType(schema.fields[:]).add(
-        "_corrupt_record", StringType()
-    )
-    raw = (
-        spark.read.schema(schema_with_err)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("multiLine", "true")
-        .option("escape", '"')
-        .csv(input_glob)
-        # the corrupt-record column is only filled when the parsed row
-        # is also cached/materialized per Spark's semantics — a cache
-        # here makes the clean/quarantine split read one materialization
-        .cache()
-    )
-    clean = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    quarantine = raw.filter(F.col("_corrupt_record").isNotNull()).select(
-        "_corrupt_record"
-    )
-    if quarantine_path is not None and not quarantine.isEmpty():
-        quarantine.write.mode("append").parquet(quarantine_path)
-    return clean, quarantine

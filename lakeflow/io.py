@@ -4,13 +4,13 @@ Source/sink surface mirrors the reference's connectors
 (S1-S6 in SURVEY.md §2.1):
 - CSV source w/ header+inferSchema+multiline+escape
   (/root/reference/jobs/bronze/ingest_csv_to_delta.py:44-49)
-- Plain-directory writers (partitioned, bucketed, sorted, z-ordered)
-  for parquet and, where the runtime has the jars, Delta/Iceberg. The
-  transactional semantics (atomic multi-file commit, time travel,
-  MERGE/OPTIMIZE under optimistic concurrency) live jar-free in
-  ``lakeflow.txlog`` (``TxTable.upsert_by_key`` / ``compact``) and
-  ``lakeflow.iceberg``; ``write_dual_managed`` is the silver dual sink
-  over both.
+- The bronze plain-directory sink (``write_partitioned``: parquet, or
+  Delta/Iceberg where the runtime has the jars) and the mergeSchema
+  read over it (``read_evolved``). The transactional semantics (atomic
+  multi-file commit, time travel, MERGE/OPTIMIZE under optimistic
+  concurrency) live jar-free in ``lakeflow.txlog`` (``TxTable
+  .upsert_by_key`` / ``compact``) and ``lakeflow.iceberg``;
+  ``write_dual_managed`` is the silver dual sink over both.
 """
 
 from __future__ import annotations
@@ -233,214 +233,3 @@ def write_dual_managed(
         # would silently drop the session-wide materialization.
         if not already_cached:
             df.unpersist()
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: tuple[str, ...],
-    buckets: int = 16,
-    sort_cols: tuple[str, ...] = (),
-    fmt: str = "parquet",
-) -> None:
-    """Bucketed table sink — the co-located-join scale lever.
-
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle (each bucket pair streams through sort-merge
-    locally); at 100 TB that removes the dominant exchange of every
-    fact⋈fact join on the bucket key. tests/test_plans.py asserts the
-    exchange-free plan.
-    """
-    w = df.write.format(fmt).mode("overwrite").option("path", path)
-    w = w.bucketBy(buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: tuple[str, ...],
-    partitions: int | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Range-partitioned, sorted table layout: rows are range-split on
-    ``sort_cols`` (Exchange rangepartitioning — sampled split points,
-    balanced files) and sorted within each partition, so every output
-    file covers a tight, non-overlapping key range.
-
-    This is the data-layout lever for read-side file skipping: parquet
-    min/max footer stats on the sort key become selective, and a reader
-    filtering on the key prunes whole files (the same effect Z-ordering
-    targets for one dimension).
-    """
-    parts = [F.col(c) for c in sort_cols]
-    out = (
-        df.repartitionByRange(partitions, *parts)
-        if partitions
-        else df.repartitionByRange(*parts)
-    )
-    out.sortWithinPartitions(*parts).write.format(fmt).mode("overwrite").save(path)
-
-
-def _zorder_key(cols: tuple[str, ...], bits: int = 16) -> F.Column:
-    """Morton (Z-order) interleaved key over numeric columns.
-
-    Each column is rank-normalized UPSTREAM (caller passes columns
-    already scaled to [0, 2^bits)); here their bits are interleaved
-    with pure integer expressions — shiftleft/mask loops unrolled at
-    plan-build time, so the whole key stays inside codegen.
-
-    ``bits * len(cols)`` must stay ≤ 63: position 63 is the bigint sign
-    bit, and setting it would sort rows with the top bit BEFORE all
-    others, inverting the curve's most significant plane (ADVICE r3).
-    """
-    n = len(cols)
-    if bits * n > 63:
-        raise ValueError(
-            f"zorder key needs {bits * n} bits but a signed bigint offers 63; "
-            f"reduce bits to {63 // n} for {n} columns"
-        )
-    key = F.lit(0).cast("bigint")
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftright(F.col(c).cast("bigint"), b).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(F.shiftleft(bit, b * n + i))
-    return key
-
-
-def zorder_layout(
-    df: DataFrame,
-    zorder_cols: tuple[str, ...],
-    partitions: int | None = None,
-    bits: int = 10,
-    aligned: bool = False,
-) -> DataFrame:
-    """Cluster ``df`` on the Morton (Z-order) interleaving of the given
-    numeric columns: range-partition + sort-within-partitions on the
-    key, helper columns dropped. The reusable core of
-    :func:`write_zordered`, also consumed by ``TxTable.compact(
-    zorder_by=...)`` so OPTIMIZE ZORDER composes with the log's
-    footer-stats data skipping.
-
-    Columns are rank-normalized to [0, 2^bits) by bucketing against
-    approxQuantile boundaries — Morton codes need uniform per-dimension
-    scales, and rank-normalizing makes the curve robust to arbitrary
-    value distributions (the same trick Delta uses: range-partition
-    ids, not raw values). The boundaries come from one
-    Greenwald-Khanna sketch pass (driver holds only the cut points,
-    never data) and are applied as a broadcast binary-search lookup
-    (pyspark.ml Bucketizer) — an earlier version used
-    ``ntile() OVER (ORDER BY col)``, an UNPARTITIONED window that
-    serializes the entire dataset through one task per column and can
-    never run at the scale this module targets (ADVICE r3, medium).
-
-    ``bits`` is auto-capped so ``bits*len(cols) ≤ 63`` (bigint sign
-    bit — see :func:`_zorder_key`); 2^10 buckets per dimension already
-    out-resolves any realistic file count.
-    """
-    from pyspark.ml.feature import Bucketizer
-
-    n = len(zorder_cols)
-    eff_bits = min(bits, 63 // n)
-    nb = 1 << eff_bits
-    probes = [i / nb for i in range(1, nb)]
-    all_cuts = df.stat.approxQuantile(list(zorder_cols), probes, 1.0 / (4 * nb))
-    norm_cols = [f"_z_{c}" for c in zorder_cols]
-    splits_arr = []
-    for cuts in all_cuts:
-        # constant/heavily-skewed columns collapse to fewer distinct
-        # cuts; Bucketizer requires strictly increasing splits
-        uniq = sorted(set(cuts))
-        splits_arr.append([float("-inf"), *uniq, float("inf")])
-    out = Bucketizer(
-        splitsArray=splits_arr,
-        inputCols=list(zorder_cols),
-        outputCols=norm_cols,
-        handleInvalid="keep",  # NULL/NaN → extra top bucket, clamped below
-    ).transform(df)
-    for nc, splits in zip(norm_cols, splits_arr):
-        # Low-cardinality columns dedupe to few buckets; rescale ids to
-        # span the full [0, 2^bits) domain so the dimension still
-        # occupies its HIGH Morton bits (otherwise the curve degenerates
-        # to a 1-D sort on the other columns).
-        n_buckets = max(len(splits) - 1, 1)
-        out = out.withColumn(
-            nc,
-            F.least(
-                (F.col(nc).cast("bigint") * nb) / F.lit(n_buckets), F.lit(nb - 1)
-            ).cast("bigint"),
-        )
-    out = out.withColumn("_zkey", _zorder_key(tuple(norm_cols), eff_bits))
-    if aligned:
-        # TILE-ALIGNED file cuts (late r8, SCALE.md §21.5c): range-
-        # partitioning on the full-resolution _zkey uses SAMPLED split
-        # points, so file boundaries land mid-tile and per-file zone
-        # maps bleed across tiles. Cutting on the z PREFIX with
-        # EXACTLY one tile per target partition makes every file ONE
-        # whole hyper-rectangle (a range partitioner keeps equal key
-        # values together, and with #tiles == #partitions no file ever
-        # unions z-consecutive tiles — unions straddle rectangle
-        # boundaries at the curve's recursive seams, which is where
-        # the sampled layout loses its pruning; measured in §21.5c).
-        # The trade (why this isn't the default, and why Delta
-        # samples): file sizes follow tile OCCUPANCY, so skewed data
-        # gives uneven files; sampled splits give even files with
-        # looser zone maps.
-        import math
-
-        nparts = partitions or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        total_bits = eff_bits * n
-        # floor, not ceil (ADVICE r8): ceil makes #tiles exceed
-        # #partitions for non-power-of-two partition counts, forcing
-        # the range partitioner to union z-consecutive tiles in one
-        # file — exactly the seam-straddling alignment exists to
-        # prevent. floor guarantees #tiles <= #partitions (some
-        # partitions idle; every file stays one whole tile). tile_bits
-        # may legitimately be 0 (nparts == 1 → one tile: shiftright by
-        # total_bits ≤ 63 collapses the non-negative zkey to 0).
-        tile_bits = min(total_bits, max(0, math.floor(math.log2(max(nparts, 1)))))
-        out = out.withColumn(
-            "_ztile", F.shiftright("_zkey", total_bits - tile_bits)
-        )
-        out = (
-            out.repartitionByRange(partitions, "_ztile")
-            if partitions
-            else out.repartitionByRange("_ztile")
-        )
-        return out.sortWithinPartitions("_zkey").drop("_ztile", "_zkey", *norm_cols)
-    out = (
-        out.repartitionByRange(partitions, "_zkey")
-        if partitions
-        else out.repartitionByRange("_zkey")
-    )
-    return out.sortWithinPartitions("_zkey").drop("_zkey", *norm_cols)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: tuple[str, ...],
-    partitions: int | None = None,
-    bits: int = 10,
-    fmt: str = "parquet",
-    aligned: bool = False,
-) -> None:
-    """Write ``df`` Z-order-clustered (see :func:`zorder_layout`) —
-    every output file covers a tight hyper-rectangle in ALL listed
-    dimensions at once, so min/max footer stats prune files for
-    predicates on ANY of them, where a 1-D sort (:func:`write_sorted`)
-    serves only its leading column. ``aligned=True`` cuts files at
-    z-prefix tile boundaries (tighter zone maps, measured 4x better
-    single-dim pruning at sf1 — SCALE.md §21.5c) at the cost of less
-    even file sizes on skewed data."""
-    (
-        zorder_layout(df, zorder_cols, partitions, bits, aligned=aligned)
-        .write.format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )

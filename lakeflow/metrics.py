@@ -307,22 +307,3 @@ class MetricsEndpoint:
         self._server.shutdown()
         self._server.server_close()
         self._thread.join(timeout=5)
-
-
-def query_metrics(
-    spark: SparkSession, names: list[str], sf_dir: str
-) -> DataFrame:
-    """The metrics TABLE: one row per registered query run — the
-    surface a deployment writes to a TxTable per pipeline run and
-    alerts on (shuffle-bytes/spill regressions, scan amplification).
-    """
-    from lakeflow import registry
-
-    recs = []
-    for n in names:
-        fn, _ = registry.ALL_QUERIES[n]
-        recs.append(run_instrumented(spark, n, fn, sf_dir))
-    cols = [c.split()[0] for c in METRICS_SCHEMA.split(", ")]
-    return spark.createDataFrame(
-        [tuple(r[c] for c in cols) for r in recs], METRICS_SCHEMA
-    )

@@ -92,35 +92,3 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_metastore_session(
-    warehouse_dir: str,
-    metastore_dir: str,
-    app_name: str = "lakeflow-metastore",
-    master: str | None = None,
-) -> SparkSession:
-    """SparkSession backed by a PERSISTENT catalog — the Hive-metastore
-    role the reference deploys as a standalone service
-    (/root/reference/compose/base.yml:98-110). Databases, tables, and
-    non-temporary views created through this session are recorded in a
-    Derby metastore at ``metastore_dir`` and survive the session: a
-    later process pointing at the same two directories sees them.
-
-    Derby is single-process (the local stand-in, exactly like the
-    reference's single metastore container); a production deployment
-    swaps the JDBC URL for Postgres/MySQL — same catalog surface.
-    """
-    return get_session(
-        app_name=app_name,
-        master=master,
-        extra_conf={
-            "spark.sql.warehouse.dir": warehouse_dir,
-            "spark.sql.catalogImplementation": "hive",
-            "javax.jdo.option.ConnectionURL": (
-                f"jdbc:derby:;databaseName={metastore_dir};create=true"
-            ),
-            "spark.hadoop.datanucleus.schema.autoCreateAll": "true",
-            "spark.hadoop.hive.metastore.schema.verification": "false",
-        },
-    )

@@ -1,9 +1,8 @@
 -- Gold-tier views, Spark SQL surface (S7).
 -- Mirrors the reference's sql/gold/create_views.sql:8-159 re-targeted at
 -- the silver_claims table. This file is the engine's only definition of
--- the six views: catalog.register_gold_views and
--- catalog.publish_gold_views_persistent run it as is, and the registered
--- gold queries run each SELECT through catalog.gold_view, which also
+-- the six views: catalog.register_gold_views runs it as is, and the
+-- registered gold queries run each SELECT through catalog.gold_view, which also
 -- runs the check queries of checks.sql. The DuckDB oracle SQL in
 -- lakeflow/registry.py is the independent twin. The SURVEY §7.3 dialect
 -- traps are resolved:

@@ -451,30 +451,6 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
-def drain_collect(
-    stream_df: DataFrame,
-    checkpoint_loc: str,
-    output_mode: str = "update",
-) -> list:
-    """Drain with trigger(availableNow=True) through foreachBatch and
-    return the emitted rows. Unlike the memory sink, foreachBatch IS
-    checkpoint-recoverable — re-draining with the same checkpoint_loc
-    resumes state and source offsets (a true restart), which is what
-    the stateful-operator recovery tests need."""
-    rows: list = []
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, batch_id: rows.extend(df.collect())
-        )
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return rows
-
-
 def run_to_parquet(
     stream_df: DataFrame,
     dst_dir: str,

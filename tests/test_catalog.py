@@ -77,49 +77,3 @@ def test_split_statements_escapes_and_block_comments():
     assert stmts == ["SELECT 'it\\'s; fine' AS x", "SELECT 1", "SELECT 2"]
 
 
-def test_persistent_gold_views_survive_sessions(tmp_path, sf_dir):
-    """The metastore role: publish gold views in one PROCESS, read them
-    from a second fresh process pointing at the same warehouse +
-    metastore dirs (in-process session juggling would share the JVM
-    catalog and prove nothing)."""
-    import subprocess
-    import sys
-
-    warehouse = str(tmp_path / "warehouse")
-    metastore = str(tmp_path / "metastore_db")
-    silver = str(tmp_path / "silver")
-
-    publish = f"""
-import sys; sys.path.insert(0, "/root/repo")
-from lakeflow import catalog, claims, session
-spark = session.get_metastore_session({warehouse!r}, {metastore!r}, master="local[4]")
-claims.silver_claims(spark, {sf_dir!r}).write.mode("overwrite").parquet({silver!r})
-catalog.publish_gold_views_persistent(spark, {silver!r}, claims.NOW_SPARK)
-print("ROWS1=" + str(spark.table("gold.gold_claims_summary").count()))
-spark.stop()
-"""
-    read = f"""
-import sys; sys.path.insert(0, "/root/repo")
-from lakeflow import session
-spark = session.get_metastore_session({warehouse!r}, {metastore!r}, master="local[4]")
-views = [t.name for t in spark.catalog.listTables("gold")]
-print("VIEWS=" + ",".join(sorted(views)))
-print("ROWS2=" + str(spark.table("gold.gold_claims_summary").count()))
-spark.stop()
-"""
-    r1 = subprocess.run(
-        [sys.executable, "-c", publish], capture_output=True, text=True, cwd=str(tmp_path)
-    )
-    assert r1.returncode == 0, r1.stderr[-3000:]
-    rows1 = int(next(l for l in r1.stdout.splitlines() if l.startswith("ROWS1=")).split("=")[1])
-    assert rows1 > 0
-
-    r2 = subprocess.run(
-        [sys.executable, "-c", read], capture_output=True, text=True, cwd=str(tmp_path)
-    )
-    assert r2.returncode == 0, r2.stderr[-3000:]
-    views = next(l for l in r2.stdout.splitlines() if l.startswith("VIEWS=")).split("=")[1]
-    for v in catalog.GOLD_VIEWS:
-        assert v in views, views
-    rows2 = int(next(l for l in r2.stdout.splitlines() if l.startswith("ROWS2=")).split("=")[1])
-    assert rows2 == rows1

