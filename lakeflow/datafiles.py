@@ -54,6 +54,7 @@ import uuid
 from dataclasses import dataclass
 from decimal import Decimal
 from typing import Any
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,11 +87,22 @@ def publish_once(path: str, text: str) -> None:
         os.unlink(tmp)
 
 
+#: The directory value Spark writes for a NULL partition value.
+HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_value(raw: str) -> str | None:
+    """The value a Hive partition directory ``<column>=<raw>`` encodes:
+    Spark percent-escapes special characters in the directory name and
+    writes NULL as :data:`HIVE_NULL_PARTITION`."""
+    return None if raw == HIVE_NULL_PARTITION else unquote(raw)
+
+
 @dataclass(frozen=True)
 class StagedFile:
-    rel: str  # "/"-separated path under the destination root
+    rel: str  # "/"-separated path under the destination root (Hive-escaped)
     path: str  # absolute path of the moved-in file
-    partition: dict[str, str]  # raw Hive directory values (still escaped)
+    partition: dict[str, str | None]  # decoded values (partition_value)
 
 
 def stage(
@@ -120,9 +132,12 @@ def stage(
                 dst = os.path.join(dest, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.rename(src, dst)
-                partition = dict(
-                    seg.split("=", 1) for seg in rel.split(os.sep)[:-1] if "=" in seg
-                )
+                partition = {
+                    col: partition_value(raw)
+                    for col, raw in (
+                        seg.split("=", 1) for seg in rel.split(os.sep)[:-1] if "=" in seg
+                    )
+                }
                 out.append(StagedFile(rel.replace(os.sep, "/"), dst, partition))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -136,7 +151,7 @@ class LiveFile:
     # Partition values to restore for a file outside the scan's base
     # directory (a shallow-clone reference); None reads them from the
     # Hive layout under the base.
-    partition: dict[str, str] | None = None
+    partition: dict[str, str | None] | None = None
 
 
 def scan(

@@ -1,11 +1,11 @@
 """Multimodal-column plumbing (training-data pipeline surface).
 
 Images/audio/video are opaque `binary` columns with typed metadata.
-The real decoders (Pillow/ffmpeg/torchaudio) are NOT in this container,
-so the decode step is stubbed behind ``DECODERS`` — but everything
-Spark-side is real and tested: the binary column schema, the Arrow
-batch shape through ``mapInPandas``, partition-preserving UDF plumbing,
-and deterministic metadata extraction.
+Pillow/ffmpeg/torchaudio are not dependencies, so ``DECODERS`` maps
+each supported mime to a stdlib codec (PNG, BMP, baseline JPEG), and
+everything Spark-side is real and tested: the binary column schema,
+the Arrow batch shape through ``mapInPandas``, partition-preserving
+UDF plumbing, and deterministic metadata extraction.
 
 At 100 TB the binary payloads dominate I/O: the operators keep payloads
 in their partitions (no shuffle of binary columns), project metadata
@@ -21,21 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeflow import io
-
-
-def decode_stub(payload: bytes, mime: str) -> dict:
-    """Byte-stat 'decode' for the opaque fake mime (kept as the
-    plumbing-only path; real codecs below handle image/png and
-    image/bmp)."""
-    if mime != "image/fake":
-        raise NotImplementedError(
-            f"no decoder for {mime!r}: register one in DECODERS"
-        )
-    return {
-        "byte_len": len(payload),
-        "first_byte": payload[0] if payload else None,
-        "byte_sum": sum(payload) % 100_000,
-    }
 
 
 # --------------------------------------------------------------------------
@@ -292,7 +277,6 @@ def decode_image(payload: bytes, mime: str) -> dict:
 
 
 DECODERS = {
-    "image/fake": decode_stub,
     "image/png": decode_image,
     "image/bmp": decode_image,
     "image/jpeg": decode_image,  # baseline JFIF (ext/jpeg.py)

@@ -574,20 +574,18 @@ def _norm_uri(p: str) -> str:
     return p
 
 
-def _parse_partition_value(raw: str, ice_type: str) -> Any:
-    from urllib.parse import unquote
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
+def _typed_partition_value(value: str | None, ice_type: str) -> Any:
+    """A staged file's decoded partition value as its Iceberg type."""
+    if value is None:
         return None
-    raw = unquote(raw)
     if ice_type in ("int", "long"):
-        return int(raw)
+        return int(value)
     if ice_type == "date":
         import datetime
 
-        d = datetime.date.fromisoformat(raw)
+        d = datetime.date.fromisoformat(value)
         return (d - datetime.date(1970, 1, 1)).days
-    return raw
+    return value
 
 
 class IcebergTable:
@@ -808,7 +806,7 @@ class IcebergTable:
         part_cols = tuple(pf["name"] for pf in part_fields)
         for f in datafiles.stage(df, part_cols, self.path, self.data_dir):
             partition = {
-                pf["name"]: _parse_partition_value(
+                pf["name"]: _typed_partition_value(
                     f.partition[pf["name"]],
                     pf.get("result_type", pf["source_type"]),
                 )

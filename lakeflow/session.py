@@ -18,7 +18,7 @@ Scale notes (100 TB / 1000-executor design intent):
   long-lived session re-runs the same plans over fresh data (a
   ``Pipeline`` run per batch), and its class working set is larger than
   100: about 165 classes per silver -> quality -> upsert/compact -> gold
-  run, 101-106 of them for the six gold views alone, and 280-320 for the
+  run, about 95 of them for the six gold views alone, and 280-320 for the
   18 headline queries' cold pass. Past 100 the LRU evicts every class
   before its next use, so every run recompiles everything (1.1-1.4 s of
   Janino time per ETL run) and then runs the new classes in the JVM's
@@ -30,7 +30,10 @@ Scale notes (100 TB / 1000-executor design intent):
   id follows the order in which earlier query stages finish, so with
   the id in the class name the same code compiled again as a new class
   whenever sibling stages finished in another order; without it the
-  cache keys on the code alone.
+  cache keys on the code alone. With that, and with no gold view
+  planning an ``Expand`` (whose column order followed the fresh read's
+  expression ids), a second gold round over a fresh read compiles no
+  class (``tests/test_codegen_cache.py``).
 
   Spark reads the cache size once, when the JVM's ``CodeGenerator``
   starts, so it cannot be raised on a live session. A session built

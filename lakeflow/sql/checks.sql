@@ -11,6 +11,11 @@
 -- division is bit-identical across engines and partitionings (rounded
 -- to 3dp on both sides). claim_amount sums need no rounding: the amounts
 -- are integer-valued doubles, so their sums are exact.
+--
+-- An aggregate keeps at most one COUNT(DISTINCT ...), as in
+-- gold_views.sql (whose header gives the reason): a distinct count
+-- over a bounded domain, such as the providers, is
+-- CAST(size(collect_set(x)) AS BIGINT).
 
 CREATE OR REPLACE TEMPORARY VIEW check_category_distribution AS
 SELECT claim_amount_category, count,
@@ -45,7 +50,7 @@ FROM silver_claims;
 CREATE OR REPLACE TEMPORARY VIEW check_table_stats AS
 SELECT COUNT(*) AS total_rows,
        COUNT(DISTINCT member_id) AS unique_members,
-       COUNT(DISTINCT provider_name) AS unique_providers,
+       CAST(size(collect_set(provider_name)) AS BIGINT) AS unique_providers,
        MIN(service_date) AS earliest_service,
        MAX(service_date) AS latest_service,
        MIN(processing_timestamp) AS first_processed,

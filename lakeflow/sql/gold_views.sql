@@ -13,6 +13,19 @@
 --     checks.sql for why the sum is exact)
 -- ${now} is the injectable recency anchor (C5 templating) — pass
 -- current_timestamp() in production, a pinned literal for replay/tests.
+--
+-- One distinct group per aggregate. Spark plans an aggregate with two
+-- or more COUNT(DISTINCT ...) groups through an Expand, whose output
+-- partitioning is unknown: over the one-partition silver read it adds
+-- hash and range exchanges and four to six jobs to a view that
+-- otherwise runs as one job with none. So each aggregate keeps at most
+-- one COUNT(DISTINCT ...), the one over the open domain (member_id, or
+-- provider_name per member), and every other distinct count is over a
+-- bounded domain (the months in the data, the providers) and is written
+-- CAST(size(collect_set(x)) AS BIGINT): collect_set skips NULLs and is
+-- [] on empty input, so it reads 0 exactly where COUNT(DISTINCT x)
+-- does, and the CAST keeps the BIGINT type. On multi-partition input
+-- the remaining distinct gets Spark's ordinary distinct exchanges.
 
 CREATE OR REPLACE TEMPORARY VIEW gold_claims_summary AS
 SELECT service_year, service_month, provider_name, claim_amount_category,
@@ -56,7 +69,7 @@ SELECT provider_name,
        round(SUM(data_quality_score * 10) / (COUNT(data_quality_score) * 10), 3) AS avg_quality_score,
        MIN(service_date) AS first_service_date,
        MAX(service_date) AS last_service_date,
-       COUNT(DISTINCT make_date(service_year, service_month, 1)) AS active_months
+       CAST(size(collect_set(make_date(service_year, service_month, 1))) AS BIGINT) AS active_months
 FROM silver_claims
 WHERE provider_name != 'UNKNOWN'
 GROUP BY provider_name
@@ -92,7 +105,7 @@ SELECT member_id,
        MAX(service_date) AS last_service_date,
        round(SUM(data_quality_score * 10) / (COUNT(data_quality_score) * 10), 3) AS avg_quality_score,
        datediff(MAX(service_date), MIN(service_date)) AS activity_span_days,
-       COUNT(DISTINCT make_date(service_year, service_month, 1)) AS active_months
+       CAST(size(collect_set(make_date(service_year, service_month, 1))) AS BIGINT) AS active_months
 FROM silver_claims
 WHERE member_id IS NOT NULL
 GROUP BY member_id
@@ -103,7 +116,7 @@ CREATE OR REPLACE TEMPORARY VIEW gold_recent_activity AS
 SELECT 'Last 30 Days' AS period,
        COUNT(*) AS claims_processed,
        COUNT(DISTINCT member_id) AS unique_members,
-       COUNT(DISTINCT provider_name) AS unique_providers,
+       CAST(size(collect_set(provider_name)) AS BIGINT) AS unique_providers,
        SUM(claim_amount) AS total_amount,
        SUM(claim_amount) / COUNT(claim_amount) AS avg_amount,
        round(SUM(data_quality_score * 10) / (COUNT(data_quality_score) * 10), 3) AS avg_quality,
@@ -112,7 +125,7 @@ FROM silver_claims
 WHERE processing_timestamp >= ${now} - make_interval(0, 0, 0, 30, 0, 0, 0)
 UNION ALL
 SELECT 'Last 7 Days',
-       COUNT(*), COUNT(DISTINCT member_id), COUNT(DISTINCT provider_name),
+       COUNT(*), COUNT(DISTINCT member_id), CAST(size(collect_set(provider_name)) AS BIGINT),
        SUM(claim_amount), SUM(claim_amount) / COUNT(claim_amount),
        round(SUM(data_quality_score * 10) / (COUNT(data_quality_score) * 10), 3),
        MAX(processing_timestamp)
@@ -120,7 +133,7 @@ FROM silver_claims
 WHERE processing_timestamp >= ${now} - make_interval(0, 0, 0, 7, 0, 0, 0)
 UNION ALL
 SELECT 'Last 24 Hours',
-       COUNT(*), COUNT(DISTINCT member_id), COUNT(DISTINCT provider_name),
+       COUNT(*), COUNT(DISTINCT member_id), CAST(size(collect_set(provider_name)) AS BIGINT),
        SUM(claim_amount), SUM(claim_amount) / COUNT(claim_amount),
        round(SUM(data_quality_score * 10) / (COUNT(data_quality_score) * 10), 3),
        MAX(processing_timestamp)

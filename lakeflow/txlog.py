@@ -60,6 +60,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,6 +124,13 @@ class ConstraintViolation(Exception):
 
 def _commit_name(v: int) -> str:
     return f"{v:0{_VLEN}d}.json"
+
+
+def _log_path(path: str) -> str:
+    """A data file's ``add``/``remove`` path: the spec's path is a URI,
+    so the file's local path (table-relative, or absolute for a
+    shallow-clone reference) is percent-encoded."""
+    return quote(path, safe="/=")
 
 
 def _remove_action(path: str) -> dict[str, Any]:
@@ -226,7 +234,7 @@ class Snapshot:
     version: int
     schema_json: str | None
     partition_by: tuple[str, ...]
-    # rel path -> add action dict (path, size, partitionValues)
+    # log path (_log_path) -> add action dict (path, size, partitionValues)
     files: dict[str, dict[str, Any]]
     timestamp: float
     # appId -> highest committed transaction version (Delta txn action):
@@ -465,11 +473,12 @@ class TxTable:
         """Write ``df``'s files into the table directory (Hive layout when
         partitioned) WITHOUT publishing them, returning their add
         actions: unpublished files are invisible because readers only
-        trust the log."""
+        trust the log. ``partitionValues`` hold the decoded values, JSON
+        null for NULL, as the spec has them."""
         adds: list[dict[str, Any]] = []
         for f in datafiles.stage(df, partition_by, self.path, self.path):
             add: dict[str, Any] = {
-                "path": f.rel,
+                "path": _log_path(f.rel),
                 "partitionValues": f.partition,
                 "size": os.path.getsize(f.path),
                 "modificationTime": int(os.path.getmtime(f.path) * 1000),
@@ -599,12 +608,18 @@ class TxTable:
             snap.schema,
             self.path,
             [
-                datafiles.LiveFile(a["path"], a["size"], a.get("partitionValues") or {})
-                if os.path.isabs(a["path"])
-                else datafiles.LiveFile(os.path.join(self.path, a["path"]), a["size"])
+                datafiles.LiveFile(
+                    self._local_path(a["path"]),
+                    a["size"],
+                    (a.get("partitionValues") or {}) if os.path.isabs(a["path"]) else None,
+                )
                 for a in adds
             ],
         )
+
+    def _local_path(self, log_path: str) -> str:
+        """The absolute local path of the data file an action names."""
+        return os.path.abspath(os.path.join(self.path, unquote(log_path)))
 
     # --------------------------------------------------- maintenance commits
 
@@ -660,7 +675,10 @@ class TxTable:
             if order_col is None:
                 aggs.append(F.count_distinct(F.struct(*key_cols)).alias("keys"))
             if part_by:
-                aggs.append(F.collect_set(F.struct(*part_by)).alias("parts"))
+                # cast to string the way Spark names partition directories
+                # (true, 2024-01-31, ...), so they compare to partitionValues
+                parts = F.struct(*[F.col(c).cast("string") for c in part_by])
+                aggs.append(F.collect_set(parts).alias("parts"))
             batch = updates.agg(*aggs).first()
             n_updates = batch["rows"]
             if order_col is None and batch["keys"] != n_updates:
@@ -675,21 +693,10 @@ class TxTable:
                 return {"matched": 0, "inserted": 0}
 
             if part_by:
-                from urllib.parse import unquote
+                touched = {tuple(r) for r in batch["parts"]}
 
-                touched = {
-                    tuple(
-                        str(v) if v is not None else "__HIVE_DEFAULT_PARTITION__"
-                        for v in r
-                    )
-                    for r in batch["parts"]
-                }
-
-                # partitionValues come from Hive dir names, which Spark
-                # percent-escapes; unquote before comparing so e.g. a
-                # space in a partition value still matches.
-                def in_touched(pv: dict[str, str]) -> bool:
-                    return tuple(unquote(pv.get(c, "")) for c in part_by) in touched
+                def in_touched(pv: dict[str, str | None]) -> bool:
+                    return tuple(pv.get(c) for c in part_by) in touched
 
             else:
 
@@ -751,17 +758,17 @@ class TxTable:
             .distinct()
             .collect()
         ]
-        # file_path is a file: URI over the absolute path; compare in
-        # absolute space so shallow-clone references (absolute add
-        # paths outside the table root) match too
+        # file_path is a percent-encoded file: URI over the absolute
+        # path; compare decoded absolute paths so shallow-clone
+        # references (absolute add paths outside the table root) match too
         touched = {
-            os.path.abspath(p.removeprefix("file://").removeprefix("file:"))
+            os.path.abspath(unquote(p.removeprefix("file://").removeprefix("file:")))
             for p in touched_abs
         }
         rewrite = [
             a
             for a in snap.files.values()
-            if os.path.abspath(os.path.join(self.path, a["path"])) in touched
+            if self._local_path(a["path"]) in touched
         ]
         if not rewrite:
             return {"matched": 0, "rewritten_files": 0}
@@ -807,7 +814,7 @@ class TxTable:
             small: dict[tuple, list[dict[str, Any]]] = {}
             for a in snap.files.values():
                 if a["size"] < target_file_bytes:
-                    key = tuple(sorted(a["partitionValues"].items()))
+                    key = tuple(a["partitionValues"].get(c) for c in snap.partition_by)
                     small.setdefault(key, []).append(a)
             rewrite = [a for files in small.values() if len(files) > 1 for a in files]
             if not rewrite:
@@ -865,7 +872,7 @@ class TxTable:
         retained = [
             self.snapshot(v) for v in range(max(0, latest - retain_versions), latest + 1)
         ]
-        live = set().union(*(snap.files for snap in retained))
+        live = {self._local_path(p) for snap in retained for p in snap.files}
         part_dirs = tuple(f"{c}=" for c in retained[-1].partition_by)
 
         def hidden(name: str) -> bool:
@@ -879,7 +886,7 @@ class TxTable:
             for name in names:
                 full = os.path.join(root, name)
                 rel = os.path.relpath(full, self.path).replace(os.sep, "/")
-                if rel not in live and not hidden(name):
+                if os.path.abspath(full) not in live and not hidden(name):
                     os.unlink(full)
                     deleted.append(rel)
             if root != self.path and not os.listdir(root):
@@ -983,13 +990,18 @@ class TxTable:
         if clone.exists():
             raise ValueError(f"{target_path}: already a transaction-logged table")
         os.makedirs(clone.log_dir, exist_ok=True)
-        src_root = os.path.abspath(self.path)
         actions: list[dict[str, Any]] = [{"protocol": dict(PROTOCOL)}]
         # fresh id/createdTime (snap=None) — a clone is a NEW table over
         # shared data files, not a copy of the source's identity
         actions.append(_meta_action(None, snap.schema, snap.partition_by))
         actions += [
-            {"add": {**a, "path": os.path.join(src_root, a["path"]), "dataChange": True}}
+            {
+                "add": {
+                    **a,
+                    "path": _log_path(self._local_path(a["path"])),
+                    "dataChange": True,
+                }
+            }
             for a in snap.files.values()
         ]
         clone._commit(None, actions, "clone")

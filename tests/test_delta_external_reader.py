@@ -112,3 +112,66 @@ def test_external_reader_uses_checkpoint(spark, tmp_path):
     assert os.path.exists(os.path.join(t.path, LOG_DIR, "_last_checkpoint"))
     _assert_match(spark, t)
     _assert_match(spark, t, version=3)
+
+
+def test_external_reader_partition_values_follow_the_spec(spark, tmp_path):
+    """``partitionValues`` hold each partition's decoded value, JSON null
+    for NULL, and ``add`` paths are URI-encoded, so a value holding a
+    space and a ``%`` (which Spark escapes in the directory name) reads
+    the same through the spec reader as through TxTable.read, after
+    every kind of commit that groups files by partition."""
+    import json
+    import os
+
+    from lakeflow.txlog import LOG_DIR
+
+    def mk(ids, val="v"):
+        parts = ("a b%c", None, "x")
+        rows = [(i, f"{val}{i}", parts[i % 3]) for i in ids]
+        return spark.createDataFrame(rows, "id long, val string, part string")
+
+    t = TxTable(str(tmp_path / "t"))
+    t.write(mk(range(6)), partition_by=("part",))
+    with open(os.path.join(t.path, LOG_DIR, f"{0:020d}.json")) as fh:
+        adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+    assert {a["partitionValues"]["part"] for a in adds} == {"a b%c", None, "x"}
+    _assert_match(spark, t)
+    t.write(mk(range(6, 9)), partition_by=("part",))
+    assert t.compact(spark) == (6, 3)  # two files in each partition
+    _assert_match(spark, t)
+    t.upsert_by_key(spark, mk([0, 1], val="NEW"), key_cols=("id",))
+    _assert_match(spark, t)
+    assert {r.val for r in t.read(spark).where("id IN (0, 1)").collect()} == {"NEW0", "NEW1"}
+    assert t.delete_where(spark, "id = 3")["matched"] == 1
+    _assert_match(spark, t)
+    t.vacuum(retain_versions=0)
+    _assert_match(spark, t)
+    assert t.read(spark).count() == 8
+
+
+def test_external_reader_tolerates_a_stale_last_checkpoint(spark, tmp_path):
+    """The table test_txlog's checkpoint-replay test leaves: checkpoint
+    files deleted while ``_last_checkpoint`` still names one. The reader
+    falls back as TxTable.snapshot does, to the newest checkpoint at or
+    below the version, else to full JSON replay."""
+    import os
+
+    from lakeflow.txlog import CHECKPOINT_EVERY
+
+    t = TxTable(str(tmp_path / "t"))
+    for i in range(CHECKPOINT_EVERY + 3):
+        t.write(_mk(spark, [i]))
+    (newest,) = [e for e in os.listdir(t.log_dir) if e.endswith(".checkpoint.parquet")]
+    pointer = os.path.join(t.log_dir, "_last_checkpoint")
+    with open(pointer) as fh:
+        stale = fh.read()
+    t._write_checkpoint(3)  # an older checkpoint that stays
+    with open(pointer, "w") as fh:
+        fh.write(stale)
+    os.unlink(os.path.join(t.log_dir, newest))
+    _assert_match(spark, t)
+    assert delta_reader._checkpoint_version(t.log_dir, None) == 3
+    _assert_match(spark, t, version=2)  # below every checkpoint: full replay
+    os.unlink(os.path.join(t.log_dir, delta_reader._checkpoint_name(3)))
+    assert delta_reader._checkpoint_version(t.log_dir, None) is None
+    _assert_match(spark, t)

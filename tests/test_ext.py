@@ -119,8 +119,8 @@ def test_frame_sample_fanout(spark, sf_dir):
 def test_decoders_reject_unknown_mime():
     import pytest
 
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_stub(b"xx", "image/png")
+    assert "video/mp4" not in multimodal.DECODERS
+    assert set(multimodal.DECODERS.values()) == {multimodal.decode_image}
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"xx", "video/mp4")
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from lakeflow.iceberg import ConcurrentModification, IcebergTable, NoSuchSnapshot
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+import delta_reader  # noqa: E402
 import iceberg_reader  # noqa: E402
 
 
@@ -290,6 +291,15 @@ def test_silver_claims_dual_managed_sink(spark, sf_dir, tmp_path):
     # the independent reader agrees with Spark's read
     pa_table = iceberg_reader.read_table(ice_path)
     assert len(pa_table) == len(expect)
+    # so does the independent Delta reader on the mirror, whose
+    # partitionValues restore NULL partitions as NULL (no Hive sentinel)
+    parts = ("service_year", "service_month")
+    mirror = delta_reader.read_table(delta_path)
+    got = zip(*(mirror.column(c).to_pylist() for c in parts))
+    want = [
+        tuple(None if v is None else str(v) for v in r) for r in silver.select(*parts).collect()
+    ]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 def test_schema_evolution_add_column(spark, table):

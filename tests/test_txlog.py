@@ -186,6 +186,26 @@ def test_concurrent_appends_serialize(spark, tmp_path):
     assert _rows(t.read(spark)) == _rows(_mk(spark, [1, 2, 50]))
 
 
+def test_upsert_matches_boolean_and_date_partitions(spark, tmp_path):
+    """The batch's touched partitions compare the way Spark spells
+    partition directories (``true``, ``2024-01-31``), so a key in a
+    boolean- or date-partitioned table is replaced, not duplicated."""
+    import datetime
+
+    schema = "id long, val string, flag boolean, day date"
+    d1, d2 = datetime.date(2024, 1, 31), datetime.date(2024, 2, 1)
+    t = TxTable(str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame([(1, "a", True, d1), (2, "b", False, d2)], schema),
+        partition_by=("flag", "day"),
+    )
+    got = t.upsert_by_key(
+        spark, spark.createDataFrame([(1, "NEW", True, d1)], schema), key_cols=("id",)
+    )
+    assert got["matched"] == 1
+    assert _rows(t.read(spark)) == [(1, "NEW", True, d1), (2, "b", False, d2)]
+
+
 def test_upsert_losing_commit_leaves_no_cached_plan(spark, tmp_path, monkeypatch):
     """An upsert whose commit loses the race raises and leaves nothing
     it persisted in Spark's cache."""

@@ -19,8 +19,10 @@ still fail here.
 Read path per the spec:
 1. `_last_checkpoint` (if present and <= the requested version) names a
    parquet checkpoint holding one action per row; later commits replay
-   on top of it. Readers MAY ignore it — we use it when usable, else
-   full JSON replay (both paths exercised in tests).
+   on top of it. Readers MAY ignore it, and it may be stale: when the
+   checkpoint it names is absent or past the requested version, the
+   newest checkpoint file at or below that version is used, else full
+   JSON replay (every path exercised in tests).
 2. Each `<v>.json` commit holds newline-delimited single-action
    objects: `add` registers a data file (latest add per path wins),
    `remove` tombstones one, `metaData` carries schema/partitionColumns,
@@ -50,9 +52,15 @@ def _norm_map(v: Any) -> dict:
     return v or {}
 
 
-def _actions_upto(table_path: str, version: int | None) -> list[tuple[str, dict]]:
-    log = os.path.join(table_path, LOG)
-    ckpt_v: int | None = None
+def _checkpoint_name(v: int) -> str:
+    return f"{v:0{VLEN}d}.checkpoint.parquet"
+
+
+def _checkpoint_version(log: str, version: int | None) -> int | None:
+    """The checkpoint to replay from: the one `_last_checkpoint` names
+    when it exists at or below ``version``, else the newest checkpoint
+    file at or below ``version`` (the spec lets the pointer be stale,
+    e.g. after its checkpoint was deleted), else None: full replay."""
     lc = os.path.join(log, "_last_checkpoint")
     if os.path.exists(lc):
         with open(lc) as f:
@@ -63,14 +71,27 @@ def _actions_upto(table_path: str, version: int | None) -> list[tuple[str, dict]
             # wrong partial snapshot on foreign tables (ADVICE r8)
             raise NotImplementedError("multi-part checkpoints unsupported")
         v = ptr["version"]
-        if version is None or v <= version:
-            ckpt_v = v
+        if (version is None or v <= version) and os.path.exists(
+            os.path.join(log, _checkpoint_name(v))
+        ):
+            return v
+    found = [
+        int(e[:VLEN])
+        for e in os.listdir(log)
+        if e[:VLEN].isdigit() and e[VLEN:] == ".checkpoint.parquet"
+    ]
+    return max((v for v in found if version is None or v <= version), default=None)
+
+
+def _actions_upto(table_path: str, version: int | None) -> list[tuple[str, dict]]:
+    log = os.path.join(table_path, LOG)
+    ckpt_v = _checkpoint_version(log, version)
     actions: list[tuple[str, dict]] = []
     start = 0
     if ckpt_v is not None:
         import pyarrow.parquet as pq
 
-        ckpt = os.path.join(log, f"{ckpt_v:0{VLEN}d}.checkpoint.parquet")
+        ckpt = os.path.join(log, _checkpoint_name(ckpt_v))
         for row in pq.read_table(ckpt).to_pylist():
             for kind, body in row.items():
                 if body is not None:
