@@ -144,6 +144,28 @@ def stage(
     return out
 
 
+def live_rows(
+    d: DataFrame, tombstones: DataFrame | None, fp: str, pos: str
+) -> DataFrame:
+    """``d`` (a parquet read) with each row's file path, in one canonical
+    absolute spelling, as column ``fp`` and its row position in that file
+    as ``pos``, less the rows ``tombstones`` names.
+
+    ``tombstones`` is a (``_del_fp``, ``_del_pos``) frame of Iceberg v2
+    position deletes, anti-joined on (``fp``, ``pos``); it is broadcast,
+    being sized by deleted rows."""
+    d = d.withColumn(
+        fp, F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+    ).withColumn(pos, F.col("_metadata.row_index"))
+    if tombstones is None:
+        return d
+    return d.join(
+        F.broadcast(tombstones),
+        (F.col(fp) == F.col("_del_fp")) & (F.col(pos) == F.col("_del_pos")),
+        "left_anti",
+    )
+
+
 @dataclass(frozen=True)
 class LiveFile:
     path: str  # absolute local path
@@ -171,8 +193,7 @@ def scan(
     those values, which is how a Delta reader resolves them anyway.
 
     ``tombstones`` is a (``_del_fp``, ``_del_pos``) frame of Iceberg v2
-    position deletes, anti-joined on each row's file path and row
-    position; it is broadcast, being sized by deleted rows.
+    position deletes, applied by :func:`live_rows`.
 
     When the files total at most ``spark.sql.files.openCostInBytes`` the
     scan reads as one partition: Spark would otherwise plan a task per
@@ -184,18 +205,7 @@ def scan(
         d = rd.parquet(*paths)
         if tombstones is None:
             return d
-        return (
-            d.withColumn(
-                "_fp", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-            )
-            .withColumn("_pos", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(tombstones),
-                (F.col("_fp") == F.col("_del_fp")) & (F.col("_pos") == F.col("_del_pos")),
-                "left_anti",
-            )
-            .drop("_fp", "_pos")
-        )
+        return live_rows(d, tombstones, "_fp", "_pos").drop("_fp", "_pos")
 
     dfs: list[DataFrame] = []
     laid_out = [f.path for f in files if f.partition is None]

@@ -10,8 +10,11 @@ Scale design:
   (band_id, band_hash) buckets → verify candidate pairs with exact
   Jaccard. The cross-product only happens WITHIN buckets, which is the
   100 TB-safe shape (no global O(n²)). All built-in expressions
-  (array/higher-order functions + murmur hash) — no Python in the path.
-- SimHash: 64-bit sign-aggregated token hashes via bitwise built-ins.
+  (array/higher-order functions + md5) — no Python in the path.
+- SimHash: 32-bit sign-aggregated token hashes via bitwise built-ins.
+- One hash family: every shingle and token hash is :func:`_md5h32` and
+  every band key is the raw value string, so the DuckDB twins replay
+  each pipeline — candidate generation included — exactly.
 """
 
 from __future__ import annotations
@@ -117,6 +120,21 @@ def tokenized(docs: DataFrame, *keep: str) -> DataFrame:
     return docs.select("doc_id", *keep, F.split(src, r"\s+").alias("tokens"))
 
 
+def _md5h32(col: F.Column | str) -> F.Column:
+    """The shingle/token hash: first 8 hex digits of md5, as bigint.
+
+    Bit-for-bit reproducible in any engine with md5 (DuckDB:
+    ``CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)``), so the oracle
+    replays every signature built on it. Its cost over xxhash64,
+    measured on ``q_ngram_jaccard`` (64 hashes over bigrams, the heaviest
+    signature pass) at sf0.1 on 4 vCPUs, local[4], 12 runs per hash with
+    plan memo and cache cleared: median 4.81 s → 5.29 s (+10%, inside
+    the runs' 4.1–7.0 s spread).
+    """
+    col = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+
+
 _MH_PRIME = 2038074743  # 31-bit prime — same modulus Spark ML's MinHashLSH uses
 
 
@@ -137,12 +155,11 @@ def minhash_signatures(
     num_hashes: int = 16,
     shingle_n: int = 3,
     keep: tuple[str, ...] = (),
-    portable: bool = False,
 ) -> DataFrame:
     """doc_id (+ ``keep`` passthrough cols) + shingle set + K minhashes.
 
-    Each shingle is string-hashed exactly ONCE (xxhash64, reduced mod a
-    31-bit prime p); the K families are universal hashes
+    Each shingle is string-hashed exactly ONCE (:func:`_md5h32`, reduced
+    mod a 31-bit prime p); the K families are universal hashes
     ``(a_i*h + b_i) mod p`` with seeded 31-bit coefficients — products
     stay < 2^62 so the arithmetic is ANSI-safe in int64. K independent
     salted string hashes would cost K full passes over every shingle's
@@ -156,6 +173,9 @@ def minhash_signatures(
     candidate at sf0.1, 700k candidates for 79 true pairs). With the
     wrap, per-family agreement probability is the pair's true jaccard,
     so banding recall/precision follow the standard S-curve.
+
+    Every value — families, minima, band keys — is exact integer
+    arithmetic over md5, which the DuckDB twins replay.
     """
     coeffs = _mh_coeffs(num_hashes)
     # NULL text is the only way to an empty/NULL shingle array (sequence
@@ -168,18 +188,7 @@ def minhash_signatures(
         "doc_id", *keep, _shingles(F.col("tokens"), shingle_n).alias("shingles")
     )
 
-    # portable=True swaps xxhash64 for the md5-derived hash (_md5h32) so
-    # every downstream value — families, minima, band keys — is exact
-    # integer arithmetic any md5-bearing engine reproduces; production
-    # keeps xxhash64 (one cheap pass per shingle's bytes).
-    if portable:
-        hashed = F.transform(
-            "shingles", lambda s: F.pmod(_md5h32(s), F.lit(_MH_PRIME))
-        )
-    else:
-        hashed = F.transform(
-            "shingles", lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))
-        )
+    hashed = F.transform("shingles", lambda s: F.pmod(_md5h32(s), F.lit(_MH_PRIME)))
     hp = sh.select("doc_id", *keep, "shingles", hashed.alias("hp"))
     # One array_min per hash family, all referencing the SAME hp column
     # (16 references → CollapseProject keeps hp materialized instead of
@@ -194,26 +203,22 @@ def minhash_signatures(
     return hp.select("doc_id", *keep, "shingles", minhashes.alias("minhash"))
 
 
-def _band_keys(
-    sig: DataFrame, num_hashes: int, bands: int, portable: bool = False
-) -> DataFrame:
+def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc_id, band, band_sig) key rows — the LSH bucket membership
     every banding consumer shuffles on. Only this compact triple ever
     crosses the bucket shuffle; shingle arrays and passthrough columns
-    never ship through the B× explode."""
+    never ship through the B× explode. ``band_sig`` is the band's
+    minhash values joined as a string, the key the oracle rebuilds."""
     rows_per_band = num_hashes // bands
 
     def band_sig(b: F.Column) -> F.Column:
-        joined = F.concat_ws(
+        return F.concat_ws(
             ",",
             F.transform(
                 F.slice("minhash", b * rows_per_band + 1, rows_per_band),
                 lambda x: x.cast("string"),
             ),
         )
-        # portable: join on the raw value string (engine-neutral);
-        # default: murmur-compact it so the shuffle key is 4 bytes
-        return joined if portable else F.hash(joined)
 
     return sig.select(
         "doc_id",
@@ -226,15 +231,13 @@ def _band_keys(
     ).select("doc_id", "bs.band", "bs.band_sig")
 
 
-def _band_candidates(
-    sig: DataFrame, num_hashes: int, bands: int, portable: bool = False
-) -> DataFrame:
+def _band_candidates(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """LSH banding candidate generation shared by every MinHash consumer:
     explode the K-vector into B band signatures, self-join on the compact
     (band, band_sig) key, emit distinct ordered (doc_a, doc_b) pairs.
 
     Candidates ∝ Σ_bucket |bucket|², never O(n²)."""
-    keys = _band_keys(sig, num_hashes, bands, portable=portable)
+    keys = _band_keys(sig, num_hashes, bands)
     return (
         keys.alias("a")
         .join(
@@ -248,39 +251,45 @@ def _band_candidates(
     )
 
 
-def near_dup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
-    portable: bool = False,
+def minhash_tier(
+    spark: SparkSession, sf_dir: str, num_hashes: int, shingle_n: int = 3
 ) -> DataFrame:
-    """X2 — MinHash+LSH near-duplicate pairs with exact-Jaccard verify.
-
-    Pipeline: shingle → minhash(K) → band(B) → explode bands →
-    self-join on (band, band_signature) → dedupe candidate pairs →
-    verify with exact Jaccard on shingle sets → threshold.
-    """
+    """The persisted :func:`minhash_signatures` of ``sf_dir``'s
+    normalized documents — the one signature tier every banding consumer
+    reads. The signature stage (shingle + K hashes per shingle) is the
+    expensive map work; materializing it once serves the band keys and
+    both sides of the verify join, and a session running several
+    consumers builds it once per (sf_dir, num_hashes, shingle_n). Same
+    medallion rationale as the silver persist: at 100 TB this stage
+    would be written out as its own table. Plan-memoized
+    (lakeflow.plancache): constructing the K hash-family expression tree
+    costs ~0.5 s of py4j traffic per call (measured r11)."""
     from lakeflow.plancache import tier
 
-    docs = normalized_docs(spark, sf_dir)
-    # The signature stage (shingle + K hashes per shingle) is the
-    # expensive map work — materialize it once so the three consumers
-    # below (band keys, and both sides of the verify join) don't each
-    # recompute it. Same medallion rationale as the silver persist:
-    # at 100 TB this stage would be written out as its own table.
-    # Plan-memoized per (session, sf_dir, params): constructing the K
-    # hash-family expression tree costs ~0.5 s of py4j traffic per call
-    # (measured r11, lakeflow.plancache).
-    sig = tier(
+    return tier(
         spark,
-        ("minhash_sig", sf_dir, num_hashes, portable),
-        lambda: minhash_signatures(docs, num_hashes, portable=portable).persist(),
+        ("minhash_sig", sf_dir, num_hashes, shingle_n),
+        lambda: minhash_signatures(
+            normalized_docs(spark, sf_dir), num_hashes, shingle_n
+        ).persist(),
     )
 
-    cand = _band_candidates(sig, num_hashes, bands, portable=portable)
 
+def _verified_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    num_hashes: int,
+    bands: int,
+    name: str,
+    metric: F.Column,
+    threshold: float,
+) -> DataFrame:
+    """Block-then-verify over the 3-shingle signature tier: the banding
+    candidates fetch both shingle sets (``sh_a``, ``sh_b``), ``metric``
+    over them is rounded to 6dp as column ``name``, and pairs under
+    ``threshold`` drop."""
+    sig = minhash_tier(spark, sf_dir, num_hashes)
+    cand = _band_candidates(sig, num_hashes, bands)
     # Verify: fetch shingle sets for the (few) surviving candidates.
     sh = sig.select("doc_id", "shingles")
     pairs = (
@@ -288,29 +297,39 @@ def near_dup_pairs(
         .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
         .select("doc_a", "doc_b", F.col("sa.shingles").alias("sh_a"), F.col("sb.shingles").alias("sh_b"))
     )
-    jacc = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
     return (
-        pairs.select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        pairs.select("doc_a", "doc_b", F.round(metric, 6).alias(name))
+        .filter(F.col(name) >= threshold)
         .orderBy("doc_a", "doc_b")
     )
 
 
-def near_dup_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry: :func:`near_dup_pairs` on the md5 portable
-    shingle hash — the whole MinHash→banding→verify pipeline becomes
-    deterministic integer arithmetic DuckDB replays exactly
-    (NEAR_DUP_SQL), so even the LSH *candidate generation* is
-    oracle-checked, not just the verified survivors."""
-    return near_dup_pairs(spark, sf_dir, portable=True)
+def near_dup_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    num_hashes: int = 16,
+    bands: int = 8,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """X2 — MinHash+LSH near-duplicate pairs with exact-Jaccard verify.
+
+    Pipeline: shingle → minhash(K) → band(B) → explode bands →
+    self-join on (band, band_signature) → dedupe candidate pairs →
+    verify with exact Jaccard on shingle sets → threshold. The whole
+    pipeline, LSH candidate generation included, is integer arithmetic
+    DuckDB replays exactly (NEAR_DUP_SQL), so the oracle checks the
+    candidates, not just the verified survivors.
+    """
+    jacc = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return _verified_pairs(spark, sf_dir, num_hashes, bands, "jaccard", jacc, threshold)
 
 
 def _near_dup_oracle_sql(
     num_hashes: int = 16, bands: int = 8, threshold: float = 0.5, shingle_n: int = 3
 ) -> str:
-    """DuckDB twin of the portable near-dup pipeline, with the seeded
+    """DuckDB twin of the near-dup pipeline, with the seeded
     universal-hash coefficients baked in as literals."""
     coeffs = _mh_coeffs(num_hashes)
     r = num_hashes // bands
@@ -373,8 +392,8 @@ def dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     web crawl is already inside a curated subset of it) that decides
     dedup topology before anyone pays for it.
 
-    Composition of the certified portable near-dup pipeline
-    (:func:`near_dup_pairs_portable` — md5 MinHash banding + exact
+    Composition of the certified near-dup pipeline
+    (:func:`near_dup_pairs` — md5 MinHash banding + exact
     Jaccard verify, never all-pairs): the pair list joins the
     (doc_id, source) projection twice (pair-count-bounded shuffles; at
     100 TB the pair list is itself the small side and broadcastable),
@@ -384,7 +403,7 @@ def dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(j·1e6 + 0.5)) so the mean is order-free across engines —
     the same recipe as the ADC/KL sums.
     """
-    pairs = near_dup_pairs(spark, sf_dir, portable=True)
+    pairs = near_dup_pairs(spark, sf_dir)
     src = io.read_table(spark, sf_dir, "documents").select(
         "doc_id", F.coalesce("source", F.lit("(none)")).alias("source")
     )
@@ -581,7 +600,6 @@ def lsh_occupancy(
     sf_dir: str,
     num_hashes: int = 16,
     bands: int = 8,
-    portable: bool = True,
 ) -> DataFrame:
     """LSH band-bucket occupancy histogram — the SKEW diagnostic for
     every banding consumer (near-dup, clusters, dup-matrix, the
@@ -603,8 +621,8 @@ def lsh_occupancy(
     strictly cheaper than the join it prices.
     """
     docs = normalized_docs(spark, sf_dir)
-    sig = minhash_signatures(docs, num_hashes, portable=portable)
-    keys = _band_keys(sig, num_hashes, bands, portable=portable)
+    sig = minhash_signatures(docs, num_hashes)
+    keys = _band_keys(sig, num_hashes, bands)
     occ = keys.groupBy("band", "band_sig").agg(F.count("*").alias("occ"))
     return (
         occ.withColumn("size_class", F.expr(_occ_class_sql("occ")))
@@ -623,7 +641,7 @@ def lsh_occupancy(
 def _lsh_occupancy_sql(
     num_hashes: int = 16, bands: int = 8, shingle_n: int = 3
 ) -> str:
-    """DuckDB twin: replays the portable signature + banding keys with
+    """DuckDB twin: replays the signature + banding keys with
     the seeded coefficients baked in (same construction as
     :func:`_near_dup_oracle_sql`), then the occupancy rollup."""
     coeffs = _mh_coeffs(num_hashes)
@@ -681,7 +699,6 @@ def incremental_near_dups(
     bands: int = 8,
     threshold: float = 0.5,
     batch_mod: int = 5,
-    portable: bool = False,
 ) -> DataFrame:
     """Incremental (batch-vs-corpus) near-dup detection — the shape a
     daily ingest actually runs: the historical corpus is already
@@ -708,13 +725,8 @@ def incremental_near_dups(
     the corpus) — deterministic and SF-proportional, standing in for
     the ingest-date partition predicate a production run would use.
     """
-    docs = normalized_docs(spark, sf_dir)
-    # Same persisted signature tier as near_dup_pairs — CacheManager
-    # dedupes the identical plan, so a session running both queries
-    # builds signatures once.
-    sig = minhash_signatures(docs, num_hashes, portable=portable).persist()
-    is_new = F.col("doc_id") % batch_mod == 0
-    cand_all = _band_candidates(sig, num_hashes, bands, portable=portable)
+    sig = minhash_tier(spark, sf_dir, num_hashes)
+    cand_all = _band_candidates(sig, num_hashes, bands)
     # _band_candidates orders doc_a < doc_b; the batch doc may be either
     # side — normalize to (batch doc, historical doc). Exactly one end
     # being in the batch is the incremental predicate.
@@ -766,7 +778,7 @@ def _incremental_oracle_sql(
     batch_mod: int = 5,
     shingle_n: int = 3,
 ) -> str:
-    """DuckDB twin of the portable incremental pipeline: same signature
+    """DuckDB twin of the incremental pipeline: same signature
     CTEs as NEAR_DUP_SQL, candidate join restricted to exactly-one-end-
     in-batch, best-match pick via a deterministic window (jaccard DESC,
     dup_of ASC — the same total order the struct-max aggregation
@@ -833,7 +845,6 @@ def containment_pairs(
     threshold: float = 0.6,
     num_hashes: int = 16,
     bands: int = 8,
-    portable: bool = False,
 ) -> DataFrame:
     """Asymmetric shingle-CONTAINMENT near-duplicate pairs:
     |A∩B| / min(|A|, |B|) ≥ threshold — the boilerplate/quotation
@@ -842,50 +853,28 @@ def containment_pairs(
     uses to catch licenses, navigation chrome, and copied passages.
 
     Same block-then-verify plan as :func:`near_dup_pairs` (shared
-    signature + banding stages); only the verify expression differs.
-    Caveat, stated not hidden: MinHash banding's hit probability tracks
-    JACCARD, so a high-containment/low-jaccard pair (tiny A inside huge
-    B) can evade the blocker — at scale the asymmetric-recall path is
-    chunk-level fingerprinting (ext/text.py winnowing: shared windows
+    signature tier, banding and verify join); only the verify expression
+    differs. Caveat, stated not hidden: MinHash banding's hit probability
+    tracks JACCARD, so a high-containment/low-jaccard pair (tiny A inside
+    huge B) can evade the blocker — at scale the asymmetric-recall path
+    is chunk-level fingerprinting (ext/text.py winnowing: shared windows
     surface regardless of length ratio), with this operator as the
-    verifier on fingerprint-collision candidates. The registered
-    portable variant replays the ENTIRE pipeline (banding included) in
-    DuckDB, so the oracle checks exactly what the plan computes.
+    verifier on fingerprint-collision candidates. DuckDB replays the
+    ENTIRE pipeline (banding included, CONTAINMENT_PAIRS_SQL), so the
+    oracle checks exactly what the plan computes.
     """
-    docs = normalized_docs(spark, sf_dir)
-    sig = minhash_signatures(docs, num_hashes, portable=portable).persist()
-    cand = _band_candidates(sig, num_hashes, bands, portable=portable)
-    sh = sig.select("doc_id", "shingles")
-    pairs = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("sa.shingles").alias("sh_a"),
-            F.col("sb.shingles").alias("sh_b"),
-        )
-    )
     contain = F.size(F.array_intersect("sh_a", "sh_b")) / F.least(
         F.size("sh_a"), F.size("sh_b")
     )
-    return (
-        pairs.select("doc_a", "doc_b", F.round(contain, 6).alias("containment"))
-        .filter(F.col("containment") >= threshold)
-        .orderBy("doc_a", "doc_b")
+    return _verified_pairs(
+        spark, sf_dir, num_hashes, bands, "containment", contain, threshold
     )
-
-
-def containment_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry: md5 portable hash → the banding candidate
-    generation AND the containment verify replay exactly in DuckDB."""
-    return containment_pairs(spark, sf_dir, portable=True)
 
 
 def _containment_oracle_sql(
     num_hashes: int = 16, bands: int = 8, threshold: float = 0.6, shingle_n: int = 3
 ) -> str:
-    """DuckDB twin of the portable containment pipeline — the near-dup
+    """DuckDB twin of the containment pipeline — the near-dup
     oracle with the verify metric swapped to |A∩B|/min(|A|,|B|)."""
     coeffs = _mh_coeffs(num_hashes)
     r = num_hashes // bands
@@ -1138,16 +1127,16 @@ def ngram_jaccard_pairs(
     #   for |A| ≤ |B|, so pairs whose shingle-set sizes differ by more
     #   than the threshold ratio are discarded BEFORE the array fetch,
     #   from 8-byte counts already in the key frame.
-    # sig is persisted because candidate generation references it on
-    # BOTH sides of the band self-join. The verify side is NOT taken
-    # from sig: an unmaterialized cache reports unknown (max) size and
+    # sig is the persisted signature tier because candidate generation
+    # references it on BOTH sides of the band self-join. The verify side
+    # is NOT taken from sig: an unmaterialized cache reports unknown (max) size and
     # would force the verify joins to plan as sort-merge until AQE
     # re-plans — measured +1.5 s of stage barriers at sf0.1. Built from
     # the scan directly, the verify side carries real (small) stats, so
     # Catalyst statically broadcasts it at test SF and falls back to a
     # shuffled equi-join on doc_id — bounded by the candidate count —
     # when stats say corpus.
-    sig = minhash_signatures(docs, num_hashes, shingle_n=2).persist()
+    sig = minhash_tier(spark, sf_dir, num_hashes, shingle_n=2)
     side = tokenized(docs.filter(F.col("text").isNotNull()), "lang").select(
         "doc_id",
         "lang",
@@ -1218,37 +1207,19 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _md5h32(col: F.Column | str) -> F.Column:
-    """Portable 32-bit token hash: first 8 hex digits of md5, as bigint.
-
-    Bit-for-bit reproducible in any engine with md5 (DuckDB:
-    ``CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)``) — the
-    cross-engine-verifiable alternative to engine-native murmur3/xxhash.
-    ~10× the cost of F.hash, so it's the ORACLE hash, not the 100 TB
-    default.
-    """
-    col = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
-def simhash(
-    spark: SparkSession, sf_dir: str, bits: int = 32, portable: bool = False
-) -> DataFrame:
+def simhash(spark: SparkSession, sf_dir: str, bits: int = 32) -> DataFrame:
     """SimHash document signatures: sign-aggregate token hashes per bit.
 
     Pure expression pipeline: explode tokens → hash → per-bit ±1
     vote via bitwise ops → aggregate votes → reassemble bit vector.
-    ``portable=True`` swaps murmur3 for the md5-derived 32-bit hash
-    (:func:`_md5h32`) so the signature is engine-independent and the
-    query can carry a DuckDB oracle; production keeps the cheap
-    engine-native hash (signatures only ever compare within one run).
+    The token hash is :func:`_md5h32`, so DuckDB reproduces the exact
+    32-bit signature (SIMHASH_SQL).
     """
     docs = normalized_docs(spark, sf_dir)
     tok = tokenized(docs).select(
         "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
     )
-    h = _md5h32("tok") if portable else F.hash("tok").cast("bigint")
-    tok = tok.withColumn("h", h)
+    tok = tok.withColumn("h", _md5h32("tok"))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -1261,12 +1232,6 @@ def simhash(
         term = F.when(F.col(f"bit{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return agg.select("doc_id", sim.cast("bigint").alias("simhash")).orderBy("doc_id")
-
-
-def simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry: :func:`simhash` on the md5 portable hash, which
-    lets DuckDB reproduce the exact 32-bit signature (SIMHASH_SQL)."""
-    return simhash(spark, sf_dir, portable=True)
 
 
 SIMHASH_SQL = """

@@ -1320,9 +1320,7 @@ class IcebergTable:
         rebasing."""
         return self._commit_snapshot(df, "overwrite", dynamic=True)
 
-    def compact(
-        self, spark: SparkSession, partitions: int | None = None
-    ) -> int | None:
+    def compact(self, spark: SparkSession) -> int | None:
         """Small-file compaction — Iceberg's rewrite_data_files / the
         txlog.compact twin: rewrite the current snapshot's rows into
         fewer, larger files and commit them as a ``replace`` snapshot
@@ -1337,18 +1335,13 @@ class IcebergTable:
         the read and the publish raises ConcurrentModification instead
         of being silently dropped by the 'replace' listing — the
         version-file CAS alone cannot see a commit that beat the loop's
-        own load_metadata. ``partitions`` bounds the rewrite's output
-        file count per table partition (None = one coalesced pass per
-        partition directory via the normal staged write)."""
+        own load_metadata. The rewrite is one coalesced pass through the
+        normal staged write, so each table partition gets one file."""
         meta = self.load_metadata()
         base_snap = meta["current-snapshot-id"]
         if base_snap in (-1, None):
             return None  # no snapshot yet: nothing to rewrite, no commit
-        df = self.read(spark, snapshot_id=base_snap)
-        if partitions is not None:
-            df = df.repartition(partitions)
-        else:
-            df = df.coalesce(1)
+        df = self.read(spark, snapshot_id=base_snap).coalesce(1)
         return self._commit_snapshot(
             df, "replace", expected_snapshot_id=base_snap
         )
@@ -1497,28 +1490,14 @@ class IcebergTable:
         position tombstones already applied — the probe surface for
         delete_where / upsert_by_key (matching a dead row twice would
         commit redundant tombstones and overstate matched counts)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import broadcast
-
         src = (
             spark.read.option("basePath", self.data_dir)
             .schema(schema)
             .parquet(*[self.local_path(d["file_path"]) for d in files])
-            .withColumn(
-                "fp",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
-            )
-            .withColumn("pos", F.col("_metadata.row_index"))
         )
         deletes = self.scan_delete_files(meta=meta)
-        if deletes:
-            src = src.join(
-                broadcast(self._tombstone_frame(spark, deletes)),
-                (F.col("fp") == F.col("_del_fp"))
-                & (F.col("pos") == F.col("_del_pos")),
-                "left_anti",
-            )
-        return src
+        tombstones = self._tombstone_frame(spark, deletes) if deletes else None
+        return datafiles.live_rows(src, tombstones, "fp", "pos")
 
     def delete_where(self, spark: SparkSession, where: str) -> int | None:
         """Row-level delete via v2 POSITION-DELETE files (merge-on-read,

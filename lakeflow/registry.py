@@ -425,13 +425,13 @@ EXT_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     # portable md5 gram hash + exploded scalar rows → DuckDB-reproducible
     "q_winnow_fingerprints": (text.winnow_fingerprints_portable, text.WINNOW_SQL),
     "q_dedup_exact": (dedup.exact_dedup, dedup.EXACT_DEDUP_SQL),
-    # portable md5 shingle hash: the full MinHash->banding->verify
-    # pipeline (including LSH candidate generation) replays in DuckDB
-    "q_dedup_near": (dedup.near_dup_pairs_portable, dedup.NEAR_DUP_SQL),
+    # md5 shingle hash: the full MinHash->banding->verify pipeline
+    # (including LSH candidate generation) replays in DuckDB
+    "q_dedup_near": (dedup.near_dup_pairs, dedup.NEAR_DUP_SQL),
     # cross-source duplication-flow matrix (r8): which source pairs
     # share actual near-dup documents (and how strongly) — the
     # corpus-planning diagnostic that decides dedup topology; composes
-    # the certified portable near-dup pairs with a two-sided source
+    # the certified near-dup pairs with a two-sided source
     # join into a |sources|²-bounded triangle
     "q_dup_matrix": (dedup.dup_matrix, dedup.DUP_MATRIX_SQL),
     # ensemble quality blend (r8): three certified signals
@@ -446,19 +446,16 @@ EXT_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     # the historical signature buckets — new-keys × old-keys join, cost
     # ∝ |batch| × occupancy, never a history self-join; output is the
     # drop decision table (best historical dup + match count per batch
-    # doc). Same portable md5 pipeline → full replay in DuckDB.
+    # doc). Same md5 pipeline → full replay in DuckDB.
     "q_dedup_incremental": (
-        lambda spark, sf: dedup.incremental_near_dups(spark, sf, portable=True),
+        dedup.incremental_near_dups,
         dedup.INCREMENTAL_NEAR_DUP_SQL,
     ),
-    # portable md5 token hash → exact 32-bit signature reproducible in DuckDB
-    "q_dedup_simhash": (dedup.simhash_portable, dedup.SIMHASH_SQL),
+    # md5 token hash → exact 32-bit signature reproducible in DuckDB
+    "q_dedup_simhash": (dedup.simhash, dedup.SIMHASH_SQL),
     # asymmetric containment (|A∩B|/min) over the SAME banding pipeline —
-    # the boilerplate/quotation detector; portable hash → full oracle
-    "q_containment_pairs": (
-        dedup.containment_pairs_portable,
-        dedup.CONTAINMENT_PAIRS_SQL,
-    ),
+    # the boilerplate/quotation detector; md5 hash → full oracle
+    "q_containment_pairs": (dedup.containment_pairs, dedup.CONTAINMENT_PAIRS_SQL),
     # leakage-safe split: whole near-dup cluster → one split via
     # md5(cluster_id) bucket; composes dedup_clusters + pure map stage.
     # LSH edges at pinned (5, 38); the oracle's closure runs over the

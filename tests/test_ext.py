@@ -952,7 +952,7 @@ def test_incremental_dedup_consistent_with_full_pairs(spark, sf_dir):
     banding, same verify threshold — so for every batch doc its
     n_matches equals the count of cross pairs touching it, and the
     reported best match is the max-jaccard (tie -> lowest id) one.
-    Production hash path (xxhash64) on both sides."""
+    Both sides read the one md5 signature tier."""
     inc = {
         r.doc_id: (r.dup_of, r.jaccard, r.n_matches)
         for r in dedup.incremental_near_dups(spark, sf_dir).collect()
@@ -1660,9 +1660,9 @@ def test_lsh_occupancy_prices_the_candidate_join(spark, sf_dir):
     ubs = [r.class_ub for r in rows]
     assert ubs == sorted(ubs)
     # exact join-cost attribution: recompute Σ occ·(occ-1)/2 directly
-    sig = dd.minhash_signatures(dd.normalized_docs(spark, sf_dir), 16, portable=True)
+    sig = dd.minhash_signatures(dd.normalized_docs(spark, sf_dir), 16)
     occ = (
-        dd._band_keys(sig, 16, 8, portable=True)
+        dd._band_keys(sig, 16, 8)
         .groupBy("band", "band_sig")
         .count()
         .collect()

@@ -46,7 +46,7 @@ _OPS = st.one_of(
     st.tuples(st.just("upsert"), st.integers(1, 3)),     # update n + insert 1
     st.tuples(st.just("evolve"), st.integers(1, 2)),     # n rows + new col
     st.tuples(st.just("expire"), st.integers(1, 3)),     # retain_last
-    st.tuples(st.just("compact"), st.integers(1, 2)),    # target partitions
+    st.tuples(st.just("compact"), st.none()),             # no argument
 )
 
 _spark = None
@@ -161,7 +161,7 @@ def test_iceberg_matches_model_time_travel_and_spec(tmp_path_factory, ops):
             model.update({r[0]: r for r in rows})
         elif kind == "compact":
             # data-identical layout rewrite: the model is unchanged
-            sid = t.compact(spark, partitions=arg)
+            sid = t.compact(spark)
             if sid is None:
                 continue  # empty table: no snapshot, no commit to record
         elif kind == "expire":
