@@ -87,6 +87,7 @@ def curated_docs(
         LSH_THRESHOLD,
         cluster_split,
         exact_dedup,
+        md5_prefix,
         normalized_docs,
     )
     from lakeflow.ext.text import (
@@ -178,8 +179,7 @@ def curated_docs(
     from lakeflow.ext.packing import N_SHARDS
     from lakeflow.ext.sampling import _bucket
 
-    hx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
-    shard = F.pmod(F.conv(hx, 16, 10).cast("bigint"), F.lit(N_SHARDS))
+    shard = F.pmod(md5_prefix(F.col("doc_id").cast("string"), 4), F.lit(N_SHARDS))
 
     # docs with no embedding row can't inherit a cluster split; they fall
     # back to the SAME md5-bucket thresholds keyed on doc_id, so every

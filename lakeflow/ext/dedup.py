@@ -12,7 +12,7 @@ Scale design:
   100 TB-safe shape (no global O(n²)). All built-in expressions
   (array/higher-order functions + md5) — no Python in the path.
 - SimHash: 32-bit sign-aggregated token hashes via bitwise built-ins.
-- One hash family: every shingle and token hash is :func:`_md5h32` and
+- One hash family: every shingle and token hash is :func:`md5_prefix` and
   every band key is the raw value string, so the DuckDB twins replay
   each pipeline — candidate generation included — exactly.
 """
@@ -120,8 +120,11 @@ def tokenized(docs: DataFrame, *keep: str) -> DataFrame:
     return docs.select("doc_id", *keep, F.split(src, r"\s+").alias("tokens"))
 
 
-def _md5h32(col: F.Column | str) -> F.Column:
-    """The shingle/token hash: first 8 hex digits of md5, as bigint.
+def md5_prefix(col: F.Column | str, digits: int = 8) -> F.Column:
+    """The first ``digits`` hex digits of ``col``'s md5, as a bigint:
+    every md5-derived integer hash, bucket and shard key in the engine.
+    The 8-digit default is the shingle/token hash; ``digits`` at most 15
+    keeps the value inside BIGINT.
 
     Bit-for-bit reproducible in any engine with md5 (DuckDB:
     ``CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)``), so the oracle
@@ -132,7 +135,7 @@ def _md5h32(col: F.Column | str) -> F.Column:
     the runs' 4.1–7.0 s spread).
     """
     col = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+    return F.conv(F.substring(F.md5(col), 1, digits), 16, 10).cast("bigint")
 
 
 _MH_PRIME = 2038074743  # 31-bit prime — same modulus Spark ML's MinHashLSH uses
@@ -158,7 +161,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """doc_id (+ ``keep`` passthrough cols) + shingle set + K minhashes.
 
-    Each shingle is string-hashed exactly ONCE (:func:`_md5h32`, reduced
+    Each shingle is string-hashed exactly ONCE (:func:`md5_prefix`, reduced
     mod a 31-bit prime p); the K families are universal hashes
     ``(a_i*h + b_i) mod p`` with seeded 31-bit coefficients — products
     stay < 2^62 so the arithmetic is ANSI-safe in int64. K independent
@@ -188,7 +191,7 @@ def minhash_signatures(
         "doc_id", *keep, _shingles(F.col("tokens"), shingle_n).alias("shingles")
     )
 
-    hashed = F.transform("shingles", lambda s: F.pmod(_md5h32(s), F.lit(_MH_PRIME)))
+    hashed = F.transform("shingles", lambda s: F.pmod(md5_prefix(s), F.lit(_MH_PRIME)))
     hp = sh.select("doc_id", *keep, "shingles", hashed.alias("hp"))
     # One array_min per hash family, all referencing the SAME hp column
     # (16 references → CollapseProject keeps hp materialized instead of
@@ -326,11 +329,14 @@ def near_dup_pairs(
     return _verified_pairs(spark, sf_dir, num_hashes, bands, "jaccard", jacc, threshold)
 
 
-def _near_dup_oracle_sql(
-    num_hashes: int = 16, bands: int = 8, threshold: float = 0.5, shingle_n: int = 3
+def _minhash_keys_sql(
+    num_hashes: int, bands: int, shingle_n: int, carry_shingles: bool = True
 ) -> str:
-    """DuckDB twin of the near-dup pipeline, with the seeded
-    universal-hash coefficients baked in as literals."""
+    """DuckDB twin of the signature tier and its band keys: the CTE
+    chain norm → sh → hp → sig → keys, with the seeded universal-hash
+    coefficients baked in as literals. ``carry_shingles`` keeps each
+    doc's shingle list through ``sig`` for a verify join. The caller
+    appends its own CTEs and final SELECT."""
     coeffs = _mh_coeffs(num_hashes)
     r = num_hashes // bands
     fams = ", ".join(
@@ -340,12 +346,13 @@ def _near_dup_oracle_sql(
     bsig = " || ',' || ".join(
         f"CAST(mh[band * {r} + {i + 1}] AS VARCHAR)" for i in range(r)
     )
-    return f"""
+    carry = " shingles," if carry_shingles else ""
+    return rf"""
 WITH norm AS (
     SELECT doc_id,
            string_split_regex(
-               trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g')),
-               '\\s+') AS tokens
+               trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g')),
+               '\s+') AS tokens
     FROM documents WHERE text IS NOT NULL
 ), sh AS (
     SELECT doc_id,
@@ -354,15 +361,25 @@ WITH norm AS (
                               i -> array_to_string(tokens[i:i+{shingle_n - 1}], ' '))) AS shingles
     FROM norm
 ), hp AS (
-    SELECT doc_id, shingles,
+    SELECT doc_id,{carry}
            list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) % {_MH_PRIME}) AS hp
     FROM sh
 ), sig AS (
-    SELECT doc_id, shingles, [{fams}] AS mh FROM hp
+    SELECT doc_id,{carry} [{fams}] AS mh FROM hp
 ), keys AS (
     SELECT doc_id, band, {bsig} AS bsig
     FROM sig, range(0, {bands}) t(band)
-), cand AS (
+)"""
+
+
+def _pairs_oracle_sql(
+    *, num_hashes: int, bands: int, threshold: float, shingle_n: int, metric: str, denom: str
+) -> str:
+    """DuckDB twin of :func:`_verified_pairs`: band candidates over
+    :func:`_minhash_keys_sql`, kept where |A∩B| / ``denom`` (an
+    expression over ``x.shingles`` and ``y.shingles``), rounded to 6dp,
+    reaches ``threshold``; the score column is named ``metric``."""
+    return f"""{_minhash_keys_sql(num_hashes, bands, shingle_n)}, cand AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM keys a JOIN keys b
       ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
@@ -370,15 +387,19 @@ WITH norm AS (
 )
 SELECT doc_a, doc_b,
        round(CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-             / len(list_distinct(list_concat(x.shingles, y.shingles))), 6) AS jaccard
+             / {denom}, 6) AS {metric}
 FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
 WHERE round(CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-            / len(list_distinct(list_concat(x.shingles, y.shingles))), 6) >= {threshold}
+            / {denom}, 6) >= {threshold}
 ORDER BY doc_a, doc_b
 """
 
 
-NEAR_DUP_SQL = _near_dup_oracle_sql()
+# DuckDB twin of near_dup_pairs at its defaults
+NEAR_DUP_SQL = _pairs_oracle_sql(
+    num_hashes=16, bands=8, threshold=0.5, shingle_n=3, metric="jaccard",
+    denom="len(list_distinct(list_concat(x.shingles, y.shingles)))",
+)
 
 
 def dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,7 +507,7 @@ def ngram_novelty(
     sh = toks.select(
         "doc_id", "src", _shingles(F.col("tokens"), shingle_n).alias("shingles")
     )
-    fp = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("bigint")
+    fp = md5_prefix("s", 15)
     ex = sh.select("doc_id", "src", F.explode("shingles").alias("s")).select(
         "doc_id", "src", fp.alias("fp")
     )
@@ -641,41 +662,9 @@ def lsh_occupancy(
 def _lsh_occupancy_sql(
     num_hashes: int = 16, bands: int = 8, shingle_n: int = 3
 ) -> str:
-    """DuckDB twin: replays the signature + banding keys with
-    the seeded coefficients baked in (same construction as
-    :func:`_near_dup_oracle_sql`), then the occupancy rollup."""
-    coeffs = _mh_coeffs(num_hashes)
-    r = num_hashes // bands
-    fams = ", ".join(
-        f"list_min(list_transform(hp, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in coeffs
-    )
-    bsig = " || ',' || ".join(
-        f"CAST(mh[band * {r} + {i + 1}] AS VARCHAR)" for i in range(r)
-    )
-    return rf"""
-WITH norm AS (
-    SELECT doc_id,
-           string_split_regex(
-               trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g')),
-               '\s+') AS tokens
-    FROM documents WHERE text IS NOT NULL
-), sh AS (
-    SELECT doc_id,
-           list_distinct(
-               list_transform(range(1, greatest(len(tokens) - {shingle_n}, 0) + 2),
-                              i -> array_to_string(tokens[i:i+{shingle_n - 1}], ' '))) AS shingles
-    FROM norm
-), hp AS (
-    SELECT doc_id,
-           list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) % {_MH_PRIME}) AS hp
-    FROM sh
-), sig AS (
-    SELECT doc_id, [{fams}] AS mh FROM hp
-), keys AS (
-    SELECT doc_id, band, {bsig} AS bsig
-    FROM sig, range(0, {bands}) t(band)
-), occ AS (
+    """DuckDB twin: replays the signature + banding keys
+    (:func:`_minhash_keys_sql`), then the occupancy rollup."""
+    return f"""{_minhash_keys_sql(num_hashes, bands, shingle_n, carry_shingles=False)}, occ AS (
     SELECT band, bsig, count(*) AS occ FROM keys GROUP BY 1, 2
 )
 SELECT {_occ_class_sql('occ')} AS size_class,
@@ -783,38 +772,7 @@ def _incremental_oracle_sql(
     in-batch, best-match pick via a deterministic window (jaccard DESC,
     dup_of ASC — the same total order the struct-max aggregation
     realizes on the Spark side)."""
-    coeffs = _mh_coeffs(num_hashes)
-    r = num_hashes // bands
-    fams = ", ".join(
-        f"list_min(list_transform(hp, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in coeffs
-    )
-    bsig = " || ',' || ".join(
-        f"CAST(mh[band * {r} + {i + 1}] AS VARCHAR)" for i in range(r)
-    )
-    return f"""
-WITH norm AS (
-    SELECT doc_id,
-           string_split_regex(
-               trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g')),
-               '\\s+') AS tokens
-    FROM documents WHERE text IS NOT NULL
-), sh AS (
-    SELECT doc_id,
-           list_distinct(
-               list_transform(range(1, greatest(len(tokens) - {shingle_n}, 0) + 2),
-                              i -> array_to_string(tokens[i:i+{shingle_n - 1}], ' '))) AS shingles
-    FROM norm
-), hp AS (
-    SELECT doc_id, shingles,
-           list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) % {_MH_PRIME}) AS hp
-    FROM sh
-), sig AS (
-    SELECT doc_id, shingles, [{fams}] AS mh FROM hp
-), keys AS (
-    SELECT doc_id, band, {bsig} AS bsig
-    FROM sig, range(0, {bands}) t(band)
-), cand AS (
+    return f"""{_minhash_keys_sql(num_hashes, bands, shingle_n)}, cand AS (
     SELECT a.doc_id AS doc_id, b.doc_id AS dup_of
     FROM keys a JOIN keys b
       ON a.band = b.band AND a.bsig = b.bsig
@@ -871,59 +829,12 @@ def containment_pairs(
     )
 
 
-def _containment_oracle_sql(
-    num_hashes: int = 16, bands: int = 8, threshold: float = 0.6, shingle_n: int = 3
-) -> str:
-    """DuckDB twin of the containment pipeline — the near-dup
-    oracle with the verify metric swapped to |A∩B|/min(|A|,|B|)."""
-    coeffs = _mh_coeffs(num_hashes)
-    r = num_hashes // bands
-    fams = ", ".join(
-        f"list_min(list_transform(hp, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in coeffs
-    )
-    bsig = " || ',' || ".join(
-        f"CAST(mh[band * {r} + {i + 1}] AS VARCHAR)" for i in range(r)
-    )
-    return f"""
-WITH norm AS (
-    SELECT doc_id,
-           string_split_regex(
-               trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g')),
-               '\\s+') AS tokens
-    FROM documents WHERE text IS NOT NULL
-), sh AS (
-    SELECT doc_id,
-           list_distinct(
-               list_transform(range(1, greatest(len(tokens) - {shingle_n}, 0) + 2),
-                              i -> array_to_string(tokens[i:i+{shingle_n - 1}], ' '))) AS shingles
-    FROM norm
-), hp AS (
-    SELECT doc_id, shingles,
-           list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) % {_MH_PRIME}) AS hp
-    FROM sh
-), sig AS (
-    SELECT doc_id, shingles, [{fams}] AS mh FROM hp
-), keys AS (
-    SELECT doc_id, band, {bsig} AS bsig
-    FROM sig, range(0, {bands}) t(band)
-), cand AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM keys a JOIN keys b
-      ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
+# DuckDB twin of containment_pairs at its defaults: the near-dup oracle
+# with the verify metric swapped to |A∩B|/min(|A|,|B|)
+CONTAINMENT_PAIRS_SQL = _pairs_oracle_sql(
+    num_hashes=16, bands=8, threshold=0.6, shingle_n=3, metric="containment",
+    denom="least(len(x.shingles), len(y.shingles))",
 )
-SELECT doc_a, doc_b,
-       round(CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-             / least(len(x.shingles), len(y.shingles)), 6) AS containment
-FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-WHERE round(CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-            / least(len(x.shingles), len(y.shingles)), 6) >= {threshold}
-ORDER BY doc_a, doc_b
-"""
-
-
-CONTAINMENT_PAIRS_SQL = _containment_oracle_sql()
 
 
 def cluster_split(
@@ -1212,14 +1123,14 @@ def simhash(spark: SparkSession, sf_dir: str, bits: int = 32) -> DataFrame:
 
     Pure expression pipeline: explode tokens → hash → per-bit ±1
     vote via bitwise ops → aggregate votes → reassemble bit vector.
-    The token hash is :func:`_md5h32`, so DuckDB reproduces the exact
+    The token hash is :func:`md5_prefix`, so DuckDB reproduces the exact
     32-bit signature (SIMHASH_SQL).
     """
     docs = normalized_docs(spark, sf_dir)
     tok = tokenized(docs).select(
         "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
     )
-    tok = tok.withColumn("h", _md5h32("tok"))
+    tok = tok.withColumn("h", md5_prefix("tok"))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

@@ -189,13 +189,13 @@ def dsir_weights(
     order (same certified argument as BM25/the bigram LM), so 6 dp
     rounding makes the output engine-exact.
     """
-    from lakeflow.ext.dedup import _md5h32, normalized_docs, tokenized
+    from lakeflow.ext.dedup import md5_prefix, normalized_docs, tokenized
 
     docs = normalized_docs(spark, sf_dir)
     tok = (
         tokenized(docs, "lang")
         .select("doc_id", "lang", F.explode("tokens").alias("tok"))
-        .withColumn("b", F.pmod(_md5h32("tok"), F.lit(buckets)))
+        .withColumn("b", F.pmod(md5_prefix("tok"), F.lit(buckets)))
     )
     is_t = (F.col("lang") == target_lang).cast("int")
     gen = tok.groupBy("b").agg(

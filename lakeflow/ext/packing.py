@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeflow import io
+from lakeflow.ext.dedup import md5_prefix
 from lakeflow.ext.text import TOKEN_SPLIT
 
 CHUNK_SIZE = 64
@@ -234,8 +235,7 @@ def shard_manifest(
     docs = io.read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    hx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
-    shard = F.pmod(F.conv(hx, 16, 10).cast("bigint"), F.lit(n_shards))
+    shard = F.pmod(md5_prefix(F.col("doc_id").cast("string"), 4), F.lit(n_shards))
     toks = F.size(F.split(F.col("text"), TOKEN_SPLIT))
     per = (
         docs.select(shard.alias("shard_id"), toks.alias("n_tok"), F.length("text").alias("n_chr"))
@@ -304,8 +304,7 @@ def epoch_shuffle(
     docs = io.read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    hx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
-    shard = F.pmod(F.conv(hx, 16, 10).cast("bigint"), F.lit(n_shards))
+    shard = F.pmod(md5_prefix(F.col("doc_id").cast("string"), 4), F.lit(n_shards))
     prio = F.md5(
         F.concat_ws(":", F.lit(epoch).cast("string"), F.col("doc_id").cast("string"))
     )

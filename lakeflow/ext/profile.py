@@ -621,11 +621,11 @@ CM_WIDTH = 16  # buckets per row
 
 def _cm_bucket(key: F.Column, row: int, width: int) -> F.Column:
     """Row-``row``'s bucket for a key: the portable md5-derived 32-bit
-    hash (dedup._md5h32 arithmetic) salted by the row index, mod
+    hash (dedup.md5_prefix arithmetic) salted by the row index, mod
     width — bit-identical in any md5-bearing engine."""
-    from lakeflow.ext.dedup import _md5h32
+    from lakeflow.ext.dedup import md5_prefix
 
-    return F.pmod(_md5h32(F.concat(F.lit(f"cm{row}#"), key)), F.lit(width))
+    return F.pmod(md5_prefix(F.concat(F.lit(f"cm{row}#"), key)), F.lit(width))
 
 
 def cm_sketch_tokens(
@@ -763,14 +763,14 @@ def hll_sketch(
     sketch exists to avoid; it stays in the query because the output
     IS the accuracy audit.
     """
-    from lakeflow.ext.dedup import _md5h32
+    from lakeflow.ext.dedup import md5_prefix
 
     m = 1 << p
     wbits = 32 - p
     li = io.read_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("key")
     )
-    h = _md5h32(F.col("key").cast("string"))
+    h = md5_prefix(F.col("key").cast("string"))
     bucket = F.pmod(h, F.lit(m))
     w = F.shiftright(h, p)
     # rho = (32-p)-bit leading-zero count + 1 = (32-p) + 1 - bitlen(w);
@@ -1167,7 +1167,7 @@ def embed_rp(
     E‖y‖² = ‖x‖² is asserted in tests; the replay oracle rebuilds R
     from the same md5 in SQL.
     """
-    from lakeflow.ext.dedup import _md5h32
+    from lakeflow.ext.dedup import md5_prefix
     from lakeflow.ext.similarity import _dvec
 
     scale = (3.0 / k) ** 0.5
@@ -1178,7 +1178,7 @@ def embed_rp(
         .select(
             "i",
             "j",
-            F.pmod(_md5h32(F.concat_ws("_", "i", "j")), F.lit(6)).alias("h"),
+            F.pmod(md5_prefix(F.concat_ws("_", "i", "j")), F.lit(6)).alias("h"),
         )
         .select(
             "i",

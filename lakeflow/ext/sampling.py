@@ -24,16 +24,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeflow import io
+from lakeflow.ext.dedup import md5_prefix
 
 
-def _bucket(key: F.Column, buckets: int = 256) -> F.Column:
-    """Stable [0, buckets) bucket from the md5 hex prefix of a key —
-    identical in any engine with md5 (two lowercase hex chars = 256
-    buckets; conv() exists in Spark but not DuckDB, string compare and
-    unhex-free arithmetic keep the expression portable)."""
-    hx = F.substring(F.md5(key.cast("string")), 1, 2)
-    digit = lambda c: F.instr(F.lit("0123456789abcdef"), c) - 1  # noqa: E731
-    return digit(F.substring(hx, 1, 1)) * 16 + digit(F.substring(hx, 2, 1))
+def _bucket(key: F.Column) -> F.Column:
+    """Stable [0, 256) bucket of a key: its md5's first two hex digits
+    (:func:`~lakeflow.ext.dedup.md5_prefix`), identical in any engine
+    with md5."""
+    return md5_prefix(key.cast("string"), 2)
 
 
 def hash_sample(
@@ -116,8 +114,9 @@ def stratified_sample(
     distinct-langs discovery job of the old sampleBy form is gone.
     """
     docs = io.read_table(spark, sf_dir, "documents")
-    hx = F.md5(F.concat(F.col("lang"), F.lit(":"), F.col("doc_id").cast("string")))
-    h16 = F.conv(F.substring(hx, 1, 4), 16, 10).cast("bigint")
+    h16 = md5_prefix(
+        F.concat(F.col("lang"), F.lit(":"), F.col("doc_id").cast("string")), 4
+    )
     if fractions:
         ladder = F.lit(0)
         for lang, frac in sorted(fractions.items()):
@@ -159,8 +158,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     boundary. TakeOrderedAndProject keeps it one pass, no global sort.
     """
     docs = io.read_table(spark, sf_dir, "documents")
-    hx = F.md5(F.col("doc_id").cast("string"))
-    h16 = F.conv(F.substring(hx, 1, 4), 16, 10).cast("bigint")
+    h16 = md5_prefix(F.col("doc_id").cast("string"), 4)
     # bigint `div` (not `/` + cast: a float quotient within half an ulp
     # below an integer would round up and truncate to the wrong floor)
     priority = F.expr("(h16 * 1000000L) div n_chars")

@@ -438,7 +438,7 @@ def winnow_fingerprints_portable(
     classic local-algorithm guarantee that any shared substring of
     length >= k+window-1 yields at least one shared fingerprint. The
     gram hash is the portable md5-derived 32-bit hash
-    (``dedup._md5h32``), so DuckDB reproduces the exact fingerprints
+    (``dedup.md5_prefix``), so DuckDB reproduces the exact fingerprints
     (WINNOW_SQL); they come out as scalar (doc_id, n_grams,
     fingerprint) rows so the oracle's value-hash compare sees only
     scalar columns.
@@ -457,7 +457,7 @@ def winnow_fingerprints_portable(
     100 TB corpora with long documents.
     """
     from pyspark.sql import Window
-    from lakeflow.ext.dedup import _md5h32
+    from lakeflow.ext.dedup import md5_prefix
 
     docs = io.read_table(spark, sf_dir, "documents")
     norm = F.trim(
@@ -480,7 +480,7 @@ def winnow_fingerprints_portable(
         "doc_id",
         "n_grams",
         F.col("col").alias("gpos"),
-        _md5h32(F.expr(f"substring(norm, col, {k})")).alias("h"),
+        md5_prefix(F.expr(f"substring(norm, col, {k})")).alias("h"),
     )
     w = Window.partitionBy("doc_id").orderBy("gpos").rowsBetween(0, window - 1)
     return (
@@ -930,13 +930,13 @@ BLOOM_EVAL_MOD = 20
 
 def _bloom_positions(fp: F.Column, k: int, m: int) -> F.Column:
     """The k bit positions of a fingerprint: portable md5-derived
-    hashes (dedup._md5h32 arithmetic) salted per hash index, mod m —
+    hashes (dedup.md5_prefix arithmetic) salted per hash index, mod m —
     bit-identical in any md5-bearing engine."""
-    from lakeflow.ext.dedup import _md5h32
+    from lakeflow.ext.dedup import md5_prefix
 
     return F.array(
         *[
-            F.pmod(_md5h32(F.concat(fp, F.lit(f"#{i}"))), F.lit(m))
+            F.pmod(md5_prefix(F.concat(fp, F.lit(f"#{i}"))), F.lit(m))
             for i in range(k)
         ]
     )
@@ -968,7 +968,7 @@ def bloom_decontam(
     the flagged set is tiny, so the exact pass is cheap).
 
     Certification: md5-derived positions and the bitset replay
-    bit-identically in DuckDB (same _md5h32 arithmetic as the MinHash
+    bit-identically in DuckDB (same md5_prefix arithmetic as the MinHash
     family), so bloom_hit — false positives included — is
     engine-exact.
     """
@@ -1074,7 +1074,7 @@ def quality_classifier(
     order cannot drift; the single double division + sigmoid rounds
     to 6 dp (same argument as the certified bigram-LM perplexity).
     """
-    from lakeflow.ext.dedup import _md5h32, normalized_docs, tokenized
+    from lakeflow.ext.dedup import md5_prefix, normalized_docs, tokenized
 
     warr = F.array(*[F.lit(w) for w in _qc_weights(buckets)])
     toks = tokenized(normalized_docs(spark, sf_dir)).select(
@@ -1095,7 +1095,7 @@ def quality_classifier(
     feats = toks.select("doc_id", F.concat(F.col("toks"), bigrams).alias("feats"))
 
     def weight_of(f: F.Column) -> F.Column:
-        idx = (F.pmod(_md5h32(f), F.lit(buckets)) + 1).cast("int")
+        idx = (F.pmod(md5_prefix(f), F.lit(buckets)) + 1).cast("int")
         return F.element_at(warr, idx).cast("bigint")
 
     wsum = F.aggregate(

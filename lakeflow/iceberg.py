@@ -563,17 +563,6 @@ def _transform_column(pf: dict):
     raise ValueError(f"unsupported transform {t!r}")
 
 
-def _norm_uri(p: str) -> str:
-    """Collapse file-URI spellings to a bare absolute path: manifests
-    store ``file:///abs`` (spec full URI) while Spark's
-    ``_metadata.file_path`` reports ``file:/abs``."""
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-    while p.startswith("//"):
-        p = p[1:]
-    return p
-
-
 def _typed_partition_value(value: str | None, ice_type: str) -> Any:
     """A staged file's decoded partition value as its Iceberg type."""
     if value is None:
@@ -608,17 +597,13 @@ class IcebergTable:
         return self.latest_version() is not None
 
     def local_path(self, file_path: str) -> str:
-        """Resolve a manifest ``file_path`` to a local filesystem path.
-        The spec requires data_file.file_path be a FULL URI (ADVICE r9:
-        an external reader must resolve it without knowing the table
-        root), so this module writes ``file://<abs>``; relative paths
-        are accepted as a read-side fallback for tables written by
-        earlier revisions."""
-        if file_path.startswith("file://"):
-            return file_path[len("file://"):]
-        if os.path.isabs(file_path):
-            return file_path
-        return os.path.join(self.path, file_path)
+        """The local path of a manifest or position-delete ``file_path``,
+        by the path rule's one home, ``datafiles.local_path``. The spec
+        requires a FULL URI (an external reader must resolve it without
+        knowing the table root), so this module writes ``file://<abs>``,
+        not percent-encoded, as Java Iceberg does; table-relative paths
+        from earlier revisions resolve under the table root."""
+        return datafiles.local_path(file_path, self.path, encoded=False)
 
     def latest_version(self) -> int | None:
         """version-hint.text fast path, directory-scan fallback (the
@@ -1469,19 +1454,15 @@ class IcebergTable:
         return out
 
     def _tombstone_frame(self, spark: SparkSession, deletes: list[dict]):
-        """(_del_fp, _del_pos) frame over position-delete files, file
-        paths folded to one canonical absolute spelling (tombstones
-        carry the manifest's exact spelling — URI, absolute, or legacy
-        table-relative)."""
+        """(_del_fp, _del_pos) frame over position-delete files, each
+        row's ``file_path`` (the manifest's exact spelling) as its local
+        path."""
         from pyspark.sql import functions as F
 
-        canon = F.regexp_replace("file_path", "^file:/+", "/")
-        canon = F.when(canon.startswith("/"), canon).otherwise(
-            F.concat(F.lit(self.path + "/"), canon)
-        )
+        fp = datafiles.local_path_col(F.col("file_path"), self.path, encoded=False)
         return spark.read.parquet(
             *[self.local_path(d["file_path"]) for d in deletes]
-        ).select(canon.alias("_del_fp"), F.col("pos").alias("_del_pos"))
+        ).select(fp.alias("_del_fp"), F.col("pos").alias("_del_pos"))
 
     def _live_positions(
         self, spark: SparkSession, files: list[dict], meta: dict, schema
@@ -1489,15 +1470,18 @@ class IcebergTable:
         """Rows of ``files`` with (fp, pos) metadata columns, EXISTING
         position tombstones already applied — the probe surface for
         delete_where / upsert_by_key (matching a dead row twice would
-        commit redundant tombstones and overstate matched counts)."""
+        commit redundant tombstones and overstate matched counts) — and
+        each file's manifest entry keyed by its local path, the ``fp``
+        a matched row carries."""
+        targets = {self.local_path(d["file_path"]): d for d in files}
         src = (
             spark.read.option("basePath", self.data_dir)
             .schema(schema)
-            .parquet(*[self.local_path(d["file_path"]) for d in files])
+            .parquet(*targets)
         )
         deletes = self.scan_delete_files(meta=meta)
         tombstones = self._tombstone_frame(spark, deletes) if deletes else None
-        return datafiles.live_rows(src, tombstones, "fp", "pos")
+        return datafiles.live_rows(src, tombstones, "fp", "pos"), targets
 
     def delete_where(self, spark: SparkSession, where: str) -> int | None:
         """Row-level delete via v2 POSITION-DELETE files (merge-on-read,
@@ -1527,26 +1511,13 @@ class IcebergTable:
         files = self.scan_files(where=where, meta=meta)
         if not files:
             return None
-        # key by the RESOLVED absolute path (legacy tables store
-        # table-relative file_paths — _metadata.file_path is always
-        # absolute, so an unresolved key would silently never match),
-        # but tombstone VALUES keep the manifest's exact spelling (the
-        # spec requires delete rows to match data_file.file_path)
-        by_norm = {
-            _norm_uri(self.local_path(d["file_path"])): d["file_path"]
-            for d in files
-        }
-        matched = (
-            self._live_positions(spark, files, meta, schema)
-            .filter(where)
-            .select("fp", "pos")
-            .collect()
-        )
+        live, targets = self._live_positions(spark, files, meta, schema)
+        matched = live.filter(where).select("fp", "pos").collect()
         if not matched:
             return None
         seq = meta["last-sequence-number"] + 1
         snap_id = _snapshot_id()
-        dfiles = self._write_partitioned_position_deletes(matched, files, by_norm)
+        dfiles = self._write_partitioned_position_deletes(matched, targets)
         parent = self._resolve_snapshot(None, None, meta)
         _, manifests, _ = avrolite.read_container(parent["manifest-list"])
         manifests.append(
@@ -1567,7 +1538,7 @@ class IcebergTable:
             raise
 
     def _write_partitioned_position_deletes(
-        self, matched: list, files: list[dict], by_norm: dict[str, str]
+        self, matched: list, targets: dict[str, dict]
     ) -> list[dict]:
         """Group matched (fp, pos) rows by the TARGET DATA FILE'S
         partition tuple and write one position-delete file per
@@ -1576,15 +1547,16 @@ class IcebergTable:
         EQUAL partition tuple, so the previous all-null stamping was
         invisible to spec-compliant external readers on partitioned
         tables — deleted rows would silently resurrect). Unpartitioned
-        tables degenerate to the old single-file shape ({} == {})."""
-        part_of = {
-            _norm_uri(self.local_path(d["file_path"])): d["partition"]
-            for d in files
-        }
+        tables degenerate to the old single-file shape ({} == {}).
+
+        ``targets`` maps a row's ``fp`` to its data file's manifest
+        entry (:meth:`_live_positions`); a tombstone records that
+        entry's exact ``file_path``, as the spec requires."""
         by_part: dict[tuple, list[tuple[str, int]]] = {}
         for r in matched:
-            key = tuple(sorted(part_of[r.fp].items()))
-            by_part.setdefault(key, []).append((by_norm[r.fp], r.pos))
+            d = targets[r.fp]
+            key = tuple(sorted(d["partition"].items()))
+            by_part.setdefault(key, []).append((d["file_path"], r.pos))
         dfiles = []
         # key=repr: partition values can mix None/int/str across tuples,
         # which plain tuple ordering cannot compare
@@ -1694,14 +1666,10 @@ class IcebergTable:
             # pure-insert path, mirroring delete_where's guard
             self.append(updates)
             return {"matched": 0, "inserted": inserted}
-        by_norm = {
-            _norm_uri(self.local_path(d["file_path"])): d["file_path"]
-            for d in files
-        }
         keys = updates.select(*key_cols).distinct()
+        live, targets = self._live_positions(spark, files, meta, schema)
         matched = (
-            self._live_positions(spark, files, meta, schema)
-            .join(F.broadcast(keys), list(key_cols), "left_semi")
+            live.join(F.broadcast(keys), list(key_cols), "left_semi")
             .select("fp", "pos")
             .collect()
         )
@@ -1723,9 +1691,7 @@ class IcebergTable:
         }
         dfiles: list[dict] = []
         if matched:
-            dfiles = self._write_partitioned_position_deletes(
-                matched, files, by_norm
-            )
+            dfiles = self._write_partitioned_position_deletes(matched, targets)
             manifests.append(
                 self._write_manifest(
                     snap_id, seq, dfiles, part_fields, meta, content=1

@@ -60,7 +60,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
-from urllib.parse import quote, unquote
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -129,7 +129,8 @@ def _commit_name(v: int) -> str:
 def _log_path(path: str) -> str:
     """A data file's ``add``/``remove`` path: the spec's path is a URI,
     so the file's local path (table-relative, or absolute for a
-    shallow-clone reference) is percent-encoded."""
+    shallow-clone reference) is percent-encoded; ``datafiles.local_path``
+    reads it back."""
     return quote(path, safe="/=")
 
 
@@ -598,28 +599,20 @@ class TxTable:
         self, spark: SparkSession, snap: Snapshot, adds: list[dict[str, Any]]
     ) -> DataFrame:
         """Materialize a DataFrame over a list of add actions
-        (:func:`datafiles.scan`). Table-relative paths take their
-        partition columns from the Hive layout under the table root;
-        ABSOLUTE paths (shallow-clone references into another table's
-        root, where the root cannot be a base path) take them from the
-        add's ``partitionValues``. The log owns the schema."""
-        return datafiles.scan(
-            spark,
-            snap.schema,
-            self.path,
-            [
-                datafiles.LiveFile(
-                    self._local_path(a["path"]),
-                    a["size"],
-                    (a.get("partitionValues") or {}) if os.path.isabs(a["path"]) else None,
-                )
-                for a in adds
-            ],
-        )
-
-    def _local_path(self, log_path: str) -> str:
-        """The absolute local path of the data file an action names."""
-        return os.path.abspath(os.path.join(self.path, unquote(log_path)))
+        (:func:`datafiles.scan`). Files under the table root take their
+        partition columns from the Hive layout; files elsewhere
+        (shallow-clone references into another table's root, where the
+        root cannot be a base path), however the absolute path is
+        spelled, take them from the add's ``partitionValues``. The log
+        owns the schema."""
+        root = os.path.abspath(self.path)
+        files = []
+        for a in adds:
+            path = datafiles.local_path(a["path"], root, encoded=True)
+            outside = os.path.commonpath([root, path]) != root
+            pv = (a.get("partitionValues") or {}) if outside else None
+            files.append(datafiles.LiveFile(path, a["size"], pv))
+        return datafiles.scan(spark, snap.schema, self.path, files)
 
     # --------------------------------------------------- maintenance commits
 
@@ -751,24 +744,19 @@ class TxTable:
             return {"matched": 0, "rewritten_files": 0}
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         df = self.read(spark, version=read_version)
-        touched_abs = [
-            r[0]
+        # compare local paths, so shallow-clone references (absolute add
+        # paths outside the table root) match too
+        touched = {
+            datafiles.local_path(r[0], self.path, encoded=True)
             for r in df.filter(pred)
             .select(F.col("_metadata.file_path"))
             .distinct()
             .collect()
-        ]
-        # file_path is a percent-encoded file: URI over the absolute
-        # path; compare decoded absolute paths so shallow-clone
-        # references (absolute add paths outside the table root) match too
-        touched = {
-            os.path.abspath(unquote(p.removeprefix("file://").removeprefix("file:")))
-            for p in touched_abs
         }
         rewrite = [
             a
             for a in snap.files.values()
-            if self._local_path(a["path"]) in touched
+            if datafiles.local_path(a["path"], self.path, encoded=True) in touched
         ]
         if not rewrite:
             return {"matched": 0, "rewritten_files": 0}
@@ -872,7 +860,11 @@ class TxTable:
         retained = [
             self.snapshot(v) for v in range(max(0, latest - retain_versions), latest + 1)
         ]
-        live = {self._local_path(p) for snap in retained for p in snap.files}
+        live = {
+            datafiles.local_path(p, self.path, encoded=True)
+            for snap in retained
+            for p in snap.files
+        }
         part_dirs = tuple(f"{c}=" for c in retained[-1].partition_by)
 
         def hidden(name: str) -> bool:
@@ -998,7 +990,9 @@ class TxTable:
             {
                 "add": {
                     **a,
-                    "path": _log_path(self._local_path(a["path"])),
+                    "path": _log_path(
+                        datafiles.local_path(a["path"], self.path, encoded=True)
+                    ),
                     "dataChange": True,
                 }
             }

@@ -434,6 +434,27 @@ def test_shallow_clone_partitioned_source(spark, tmp_path):
     )
 
 
+def test_shallow_clone_reads_file_uri_references(spark, tmp_path):
+    """Delta records an absolute add path as a URI; a clone whose
+    references are spelled ``file:///abs`` (as Spark's Delta writes
+    them) reads them as files outside its root, not under it."""
+    src = TxTable(str(tmp_path / "src"))
+    df = spark.createDataFrame(
+        [Row(id=i, val=f"v{i}", part=("a" if i % 2 else "b")) for i in range(1, 7)]
+    )
+    src.write(df, partition_by=("part",))
+    clone = src.shallow_clone(str(tmp_path / "clone"))
+    commit = os.path.join(clone.log_dir, f"{0:020d}.json")
+    with open(commit) as f:
+        actions = [json.loads(line) for line in f]
+    for a in actions:
+        if "add" in a:
+            a["add"]["path"] = "file://" + a["add"]["path"]
+    with open(commit, "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in actions))
+    assert _rows(TxTable(clone.path).read(spark)) == _rows(df)
+
+
 def test_shallow_clone_time_travel_version(spark, tmp_path):
     src = TxTable(str(tmp_path / "src"))
     src.write(_mk(spark, [1]))
