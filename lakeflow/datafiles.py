@@ -9,13 +9,9 @@ bound bytes. Everything below that encoding is defined once here:
   publishing them (only the format's committed metadata defines the
   table, so staged files stay invisible until the commit).
 - :func:`scan` reads a table's live files back under the table's own
-  schema, including shallow-clone references outside the table root and
-  Iceberg's position tombstones.
+  schema, including shallow-clone references outside the table root.
 - :func:`local_path` maps a data file's recorded spelling (a Delta
-  action path, an Iceberg manifest or position-delete ``file_path``) to
-  the file on disk, and :func:`local_path_col` is the same rule as a
-  Spark column, so Spark's ``_metadata.file_path`` meets the recorded
-  spellings on one absolute path.
+  action path, an Iceberg manifest ``file_path``) to the file on disk.
 - :func:`footer_stats` collapses a file's row-group footer statistics
   into per-column min/max/null counts — no data read, no Spark job.
 - :func:`parse_conjuncts` and :func:`may_match` are footer-driven data
@@ -61,7 +57,7 @@ from decimal import Decimal
 from typing import Any
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -149,60 +145,19 @@ def stage(
     return out
 
 
-_FILE_SCHEME = "^file:/+"
-
-
 def local_path(recorded: str, root: str, *, encoded: bool) -> str:
     """The absolute local path of the data file a table records as
     ``recorded``: the one path rule of both formats.
 
     A ``file:`` scheme is dropped, then an ``encoded`` spelling is
     percent-decoded, then a relative path is taken under ``root``.
-    Delta ``add``/``remove`` paths and Spark's ``_metadata.file_path``
-    are percent-encoded URIs; an Iceberg manifest's ``file_path`` is not
-    (Java Iceberg's spelling, kept by position-delete rows too), and may
-    be table-relative in tables from earlier revisions.
-    :func:`local_path_col` is the same rule as a Spark column."""
-    p = re.sub(_FILE_SCHEME, "/", recorded)
+    Delta ``add``/``remove`` paths are percent-encoded URIs; an Iceberg
+    manifest's ``file_path`` is not (Java Iceberg's spelling), and may
+    be table-relative in tables from earlier revisions."""
+    p = re.sub("^file:/+", "/", recorded)
     if encoded:
         p = unquote(p)
     return os.path.abspath(os.path.join(root, p))
-
-
-def local_path_col(recorded: Column, root: str | None, *, encoded: bool) -> Column:
-    """:func:`local_path` over a string column; ``root`` is None for a
-    column of absolute URIs such as ``_metadata.file_path``. Spark's
-    ``url_decode`` reads ``+`` as a space, so a literal ``+`` is escaped
-    first."""
-    p = F.regexp_replace(recorded, _FILE_SCHEME, "/")
-    if encoded:
-        p = F.url_decode(F.regexp_replace(p, r"\+", "%2B"))
-    if root is None:
-        return p
-    return F.when(p.startswith("/"), p).otherwise(F.concat(F.lit(root + "/"), p))
-
-
-def live_rows(
-    d: DataFrame, tombstones: DataFrame | None, fp: str, pos: str
-) -> DataFrame:
-    """``d`` (a parquet read) with each row's file as its absolute local
-    path (:func:`local_path_col` over ``_metadata.file_path``, the path
-    rule's one home) as column ``fp`` and its row position in that file
-    as ``pos``, less the rows ``tombstones`` names.
-
-    ``tombstones`` is a (``_del_fp``, ``_del_pos``) frame of Iceberg v2
-    position deletes, anti-joined on (``fp``, ``pos``); it is broadcast,
-    being sized by deleted rows."""
-    d = d.withColumn(
-        fp, local_path_col(F.col("_metadata.file_path"), None, encoded=True)
-    ).withColumn(pos, F.col("_metadata.row_index"))
-    if tombstones is None:
-        return d
-    return d.join(
-        F.broadcast(tombstones),
-        (F.col(fp) == F.col("_del_fp")) & (F.col(pos) == F.col("_del_pos")),
-        "left_anti",
-    )
 
 
 @dataclass(frozen=True)
@@ -220,7 +175,6 @@ def scan(
     schema: StructType | None,
     base: str,
     files: list[LiveFile],
-    tombstones: DataFrame | None = None,
 ) -> DataFrame:
     """One DataFrame over a table's live ``files`` (at least one).
 
@@ -231,9 +185,6 @@ def scan(
     equal partition values, with the partition columns restored from
     those values, which is how a Delta reader resolves them anyway.
 
-    ``tombstones`` is a (``_del_fp``, ``_del_pos``) frame of Iceberg v2
-    position deletes, applied by :func:`live_rows`.
-
     When the files total at most ``spark.sql.files.openCostInBytes`` the
     scan reads as one partition: Spark would otherwise plan a task per
     file, and every aggregate or join over the table an exchange."""
@@ -241,10 +192,7 @@ def scan(
     def read(rd, rd_schema: StructType | None, paths: list[str]) -> DataFrame:
         if rd_schema is not None:
             rd = rd.schema(rd_schema)
-        d = rd.parquet(*paths)
-        if tombstones is None:
-            return d
-        return live_rows(d, tombstones, "_fp", "_pos").drop("_fp", "_pos")
+        return rd.parquet(*paths)
 
     dfs: list[DataFrame] = []
     laid_out = [f.path for f in files if f.partition is None]

@@ -49,20 +49,10 @@ expireSnapshots + deleteOrphanFiles pair, the txlog.vacuum twin: the
 metadata edit is itself a CAS commit; only files reachable solely from
 expired snapshots are deleted).
 
-Row-level and partition-level mutation (round 10, VERDICT r9 #5):
-``overwrite(df, partition_filter=)`` / ``overwrite_partitions(df)``
-replay the parent manifests — replaced partitions' files become DELETED
-entries, survivors carry forward as EXISTING entries with their
-original sequence numbers — and ``delete_where`` writes v2 POSITION
-DELETE files (sorted (file_path, pos) parquet, spec field ids
-2147483546/2147483545) in a content=1 delete manifest, applied on read
-as a broadcast anti-join (merge-on-read; compaction folds them away);
-``upsert_by_key`` composes both into MERGE — matched keys tombstoned
-and updates appended in ONE atomic snapshot, closing the mutation
-idiom that was previously Delta-dialect-only (txlog.upsert_by_key's
-copy-on-write twin). Candidate probes for deletes/merges run over LIVE
-rows only (existing tombstones anti-joined first), so re-deleting a
-dead row is impossible by construction.
+Partition-level overwrite (round 10, VERDICT r9 #5):
+``overwrite_partitions(df)`` replays the parent manifests — replaced
+partitions' files become DELETED entries, survivors carry forward as
+EXISTING entries with their original sequence numbers.
 
 Hidden partitioning (late r10 — the last residual VERDICT r9 named):
 ``create(partition_by=)`` accepts the spec's non-identity transforms —
@@ -75,9 +65,12 @@ SOURCE columns stay in the payload for non-identity fields (a bucket
 value cannot reconstruct its source; identity sources keep
 reconstituting from the layout as before).
 
-Deliberate scope cuts, documented rather than faked: no equality-delete
-files (position deletes + partition overwrite + MERGE cover the
-reference's mutation idioms); single partition spec per table lifetime;
+Deliberate scope cuts, documented rather than faked: no row-level
+deletes and no MERGE (the reference only appends to its Iceberg table;
+the Delta twin, :mod:`lakeflow.txlog`, carries those idioms), so every
+manifest is a data manifest (content 0) and a reader that meets a
+delete manifest raises rather than return rows it cannot filter;
+single partition spec per table lifetime;
 evolution is add-column only (no renames/drops/type promotion); no
 ``hour`` transform (no timestamp-partitioned table in scope) and no
 automatic where→transform predicate rewriting (Appendix-D column
@@ -597,8 +590,8 @@ class IcebergTable:
         return self.latest_version() is not None
 
     def local_path(self, file_path: str) -> str:
-        """The local path of a manifest or position-delete ``file_path``,
-        by the path rule's one home, ``datafiles.local_path``. The spec
+        """The local path of a manifest ``file_path``, by the path
+        rule's one home, ``datafiles.local_path``. The spec
         requires a FULL URI (an external reader must resolve it without
         knowing the table root), so this module writes ``file://<abs>``,
         not percent-encoded, as Java Iceberg does; table-relative paths
@@ -837,12 +830,10 @@ class IcebergTable:
         entries: list[dict],
         part_fields: list[dict],
         meta: dict,
-        content: int = 0,
     ) -> dict:
         """Write pre-built manifest entries (added / existing / deleted
-        statuses) to one Avro manifest and return its manifest_file
-        record, counts derived from the statuses. ``content`` is 0 for
-        data manifests, 1 for delete manifests (v2)."""
+        statuses) to one Avro data manifest and return its manifest_file
+        record, counts derived from the statuses."""
         schema = _current_schema(meta)
         spec = next(
             s
@@ -860,7 +851,7 @@ class IcebergTable:
                 "partition-spec": json.dumps(spec["fields"]),
                 "partition-spec-id": str(spec["spec-id"]),
                 "format-version": str(FORMAT_VERSION),
-                "content": "deletes" if content == 1 else "data",
+                "content": "data",
             },
         )
         live = [e for e in entries if e["status"] != 2]
@@ -888,7 +879,7 @@ class IcebergTable:
             "manifest_path": path,
             "manifest_length": os.path.getsize(path),
             "partition_spec_id": meta["default-spec-id"],
-            "content": content,
+            "content": 0,
             "sequence_number": seq,
             "min_sequence_number": min(seqs) if seqs else seq,
             "added_snapshot_id": snapshot_id,
@@ -914,11 +905,9 @@ class IcebergTable:
         data_files: list[dict],
         part_fields: list[dict],
         meta: dict,
-        content: int = 0,
     ) -> dict:
         """One Avro manifest of ADDED entries for this commit's data
-        files (``content`` 0) or position-delete files (1); returns its
-        manifest_file entry for the manifest list."""
+        files; returns its manifest_file entry for the manifest list."""
         id_of = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
 
         def _finalize(dfile: dict) -> dict:
@@ -951,41 +940,25 @@ class IcebergTable:
             }
             for dfile in data_files
         ]
-        return self._write_manifest_raw(
-            snapshot_id, seq, entries, part_fields, meta, content
-        )
+        return self._write_manifest_raw(snapshot_id, seq, entries, part_fields, meta)
 
     def _commit_snapshot(
         self,
         df: DataFrame,
         operation: str,
         extra_summary: dict[str, str] | None = None,
-        expected_snapshot_id: int | None = None,
-        replace_pred: Callable[[dict[str, Any]], bool] | None = None,
-        dynamic: bool = False,
     ) -> int | None:
         """Shared append/overwrite commit loop: stage once, CAS on the
         version file, blind appends rebase and retry. Returns None only
         on the idempotent path (txn marker already committed).
 
-        ``replace_pred`` / ``dynamic`` select PARTITION-level overwrite
-        (VERDICT r9 #5): instead of dropping every parent manifest (full
-        overwrite) the parents are replayed — files in replaced
-        partitions become DELETED entries, survivors are carried as
-        EXISTING entries with their original sequence numbers, untouched
-        manifests are referenced unchanged. ``dynamic`` derives the
-        replaced set from the staged files' own partitions (Spark's
-        dynamic partition-overwrite idiom — what a silver re-run needs);
-        an explicit ``replace_pred`` additionally validates that every
-        staged file lands INSIDE the replaced region.
-
-        ``expected_snapshot_id`` pins a read-modify-write premise
-        (ADVICE r9, compact): when set, the commit fails with
-        ConcurrentModification if the table's current snapshot is no
-        longer that id — the version-file CAS alone cannot see a commit
-        that landed BETWEEN the caller's read and this loop's
-        load_metadata, which a 'replace' snapshot would otherwise
-        silently drop."""
+        An ``overwrite`` is a PARTITION-level overwrite (VERDICT r9 #5)
+        of the partitions the staged files land in (Spark's dynamic
+        partition-overwrite idiom — what a silver re-run needs): the
+        parent manifests are replayed — files in replaced partitions
+        become DELETED entries, survivors are carried as EXISTING
+        entries with their original sequence numbers, untouched
+        manifests are referenced unchanged."""
         staged: list[dict] | None = None
         part_fields: list[dict] | None = None
         while True:
@@ -995,15 +968,6 @@ class IcebergTable:
                     f"create() the table at {self.path} before writing"
                 )
             meta = self.load_metadata(version)
-            if (
-                expected_snapshot_id is not None
-                and meta["current-snapshot-id"] != expected_snapshot_id
-            ):
-                self._cleanup_staged(staged)
-                raise ConcurrentModification(
-                    f"table advanced past snapshot {expected_snapshot_id} "
-                    "since the rewrite premise was read"
-                )
             if extra_summary and "txn-app-id" in extra_summary:
                 # idempotence must hold across the CAS race too: a
                 # rebase re-checks the marker against the winner's
@@ -1088,23 +1052,6 @@ class IcebergTable:
                     part_fields,
                     meta,
                 )
-            pred = replace_pred
-            if dynamic:
-                staged_parts = {
-                    tuple(sorted(d["partition"].items())) for d in staged
-                }
-                pred = lambda p: tuple(sorted(p.items())) in staged_parts  # noqa: E731
-            elif pred is not None:
-                outside = [
-                    d for d in staged if not pred(d["partition"])
-                ]
-                if outside:
-                    self._cleanup_staged(staged)
-                    raise ValueError(
-                        "overwrite(partition_filter=) would write "
-                        f"{len(outside)} file(s) outside the replaced "
-                        f"region, e.g. {outside[0]['partition']}"
-                    )
             seq = meta["last-sequence-number"] + 1
             snap_id = _snapshot_id()
             manifests = [
@@ -1114,15 +1061,14 @@ class IcebergTable:
             if operation == "append" and parent is not None:
                 _, prev, _ = avrolite.read_container(parent["manifest-list"])
                 manifests += prev
-            elif pred is not None and parent is not None:
+            elif parent is not None:
+                replaced = {tuple(sorted(d["partition"].items())) for d in staged}
+
+                def pred(p: dict[str, Any]) -> bool:
+                    return tuple(sorted(p.items())) in replaced
+
                 _, prev, _ = avrolite.read_container(parent["manifest-list"])
                 for m in prev:
-                    if m.get("content", 0) == 1:
-                        # delete manifests carry forward: stale targets
-                        # (files this commit drops) are harmless no-ops
-                        # in the read-side anti-join
-                        manifests.append(m)
-                        continue
                     _, prev_entries, _ = avrolite.read_container(
                         m["manifest_path"]
                     )
@@ -1143,15 +1089,14 @@ class IcebergTable:
                             snap_id, seq, new_entries, part_fields, meta
                         )
                     )
-            data = [m for m in manifests if m.get("content", 0) == 0]
             summary = {
                 "added-data-files": str(len(staged)),
                 "added-records": str(sum(d["record_count"] for d in staged)),
                 "total-data-files": str(
-                    sum(m["added_files_count"] + m["existing_files_count"] for m in data)
+                    sum(m["added_files_count"] + m["existing_files_count"] for m in manifests)
                 ),
                 "total-records": str(
-                    sum(m["added_rows_count"] + m["existing_rows_count"] for m in data)
+                    sum(m["added_rows_count"] + m["existing_rows_count"] for m in manifests)
                 ),
                 **(extra_summary or {}),
             }
@@ -1279,23 +1224,6 @@ class IcebergTable:
             extra_summary={"txn-app-id": app_id, "txn-version": str(batch_id)},
         )
 
-    def overwrite(
-        self,
-        df: DataFrame,
-        partition_filter: Callable[[dict[str, Any]], bool] | None = None,
-    ) -> int:
-        """Overwrite. With no filter: full-table — the new snapshot's
-        manifest list references ONLY this commit's manifest (a snapshot
-        is a complete listing; unreferenced manifests are simply not
-        live). With ``partition_filter``: static PARTITION overwrite —
-        files whose typed partition dict matches the filter are dropped
-        (DELETED entries), everything else survives, and every staged
-        file must land inside the replaced region (ValueError
-        otherwise). The reference's silver re-run idiom."""
-        return self._commit_snapshot(
-            df, "overwrite", replace_pred=partition_filter
-        )
-
     def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition overwrite (VERDICT r9 #5): replace exactly
         the partitions PRESENT IN ``df`` — Spark's
@@ -1303,33 +1231,7 @@ class IcebergTable:
         atomic Iceberg snapshot. Like every non-append commit, a lost
         version CAS raises ConcurrentModification rather than silently
         rebasing."""
-        return self._commit_snapshot(df, "overwrite", dynamic=True)
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Small-file compaction — Iceberg's rewrite_data_files / the
-        txlog.compact twin: rewrite the current snapshot's rows into
-        fewer, larger files and commit them as a ``replace`` snapshot
-        (data identical, layout new; time travel to pre-compaction
-        snapshots keeps working until expire_snapshots ages them out,
-        which is also what physically reclaims the small files).
-
-        Read-modify-write semantics: the rewrite premise is pinned to
-        the snapshot CURRENT AT READ TIME (ADVICE r9): the file list is
-        read at that snapshot and the commit carries
-        ``expected_snapshot_id``, so an append landing anywhere between
-        the read and the publish raises ConcurrentModification instead
-        of being silently dropped by the 'replace' listing — the
-        version-file CAS alone cannot see a commit that beat the loop's
-        own load_metadata. The rewrite is one coalesced pass through the
-        normal staged write, so each table partition gets one file."""
-        meta = self.load_metadata()
-        base_snap = meta["current-snapshot-id"]
-        if base_snap in (-1, None):
-            return None  # no snapshot yet: nothing to rewrite, no commit
-        df = self.read(spark, snapshot_id=base_snap).coalesce(1)
-        return self._commit_snapshot(
-            df, "replace", expected_snapshot_id=base_snap
-        )
+        return self._commit_snapshot(df, "overwrite")
 
     # --------------------------------------------------------------- reads
 
@@ -1373,6 +1275,10 @@ class IcebergTable:
         dropped from the plan (:func:`datafiles.may_match`, shared with
         txlog; the predicate is re-applied row-level by read(), so
         pruning is a pure optimization, never a correctness dependency).
+        A delete manifest (content 1, which only another writer could
+        have added) raises NotImplementedError: this module applies no
+        deletes, so returning its snapshot's files would resurrect the
+        rows it deletes.
 
         ``meta`` pins the table-metadata dict for the whole scan (one
         parse, and no TOCTOU against a concurrent commit between
@@ -1406,8 +1312,10 @@ class IcebergTable:
         _, manifests, _ = avrolite.read_container(snap["manifest-list"])
         files: list[dict] = []
         for m in manifests:
-            if m.get("content", 0) == 1:
-                continue  # delete manifests: see scan_delete_files
+            if m.get("content", 0) != 0:
+                raise NotImplementedError(
+                    f"{m['manifest_path']}: delete manifests are not supported"
+                )
             _, entries, _ = avrolite.read_container(m["manifest_path"])
             for e in entries:
                 if e["status"] == 2:  # DELETED
@@ -1426,289 +1334,6 @@ class IcebergTable:
                     continue
                 files.append(d)
         return files
-
-    def scan_delete_files(
-        self,
-        snapshot_id: int | None = None,
-        asof_ms: int | None = None,
-        meta: dict | None = None,
-    ) -> list[dict]:
-        """Live POSITION-DELETE files (v2 merge-on-read) of a snapshot —
-        the content=1 manifests' live entries. Matching is by exact
-        data-file path + row position on the read side, so scoping by
-        sequence number is unnecessary here: a data file path is never
-        re-added, hence a delete row can only ever hit the file it was
-        computed against."""
-        if meta is None:
-            meta = self.load_metadata()
-        snap = self._resolve_snapshot(snapshot_id, asof_ms, meta)
-        if snap is None:
-            return []
-        _, manifests, _ = avrolite.read_container(snap["manifest-list"])
-        out: list[dict] = []
-        for m in manifests:
-            if m.get("content", 0) != 1:
-                continue
-            _, entries, _ = avrolite.read_container(m["manifest_path"])
-            out += [e["data_file"] for e in entries if e["status"] != 2]
-        return out
-
-    def _tombstone_frame(self, spark: SparkSession, deletes: list[dict]):
-        """(_del_fp, _del_pos) frame over position-delete files, each
-        row's ``file_path`` (the manifest's exact spelling) as its local
-        path."""
-        from pyspark.sql import functions as F
-
-        fp = datafiles.local_path_col(F.col("file_path"), self.path, encoded=False)
-        return spark.read.parquet(
-            *[self.local_path(d["file_path"]) for d in deletes]
-        ).select(fp.alias("_del_fp"), F.col("pos").alias("_del_pos"))
-
-    def _live_positions(
-        self, spark: SparkSession, files: list[dict], meta: dict, schema
-    ):
-        """Rows of ``files`` with (fp, pos) metadata columns, EXISTING
-        position tombstones already applied — the probe surface for
-        delete_where / upsert_by_key (matching a dead row twice would
-        commit redundant tombstones and overstate matched counts) — and
-        each file's manifest entry keyed by its local path, the ``fp``
-        a matched row carries."""
-        targets = {self.local_path(d["file_path"]): d for d in files}
-        src = (
-            spark.read.option("basePath", self.data_dir)
-            .schema(schema)
-            .parquet(*targets)
-        )
-        deletes = self.scan_delete_files(meta=meta)
-        tombstones = self._tombstone_frame(spark, deletes) if deletes else None
-        return datafiles.live_rows(src, tombstones, "fp", "pos"), targets
-
-    def delete_where(self, spark: SparkSession, where: str) -> int | None:
-        """Row-level delete via v2 POSITION-DELETE files (merge-on-read,
-        VERDICT r9 #5): rows matching ``where`` are tombstoned as
-        (file_path, pos) pairs in a sorted delete parquet (spec field
-        ids 2147483546/2147483545), committed as a ``delete`` snapshot
-        whose manifest list carries the parent's manifests plus one
-        content=1 delete manifest — NO data file is rewritten (the
-        GDPR-delete idiom: touch O(matched rows), not O(table)).
-
-        Read-modify-write: positions are computed against the snapshot
-        current at entry, and the commit CAS-publishes directly on that
-        version — a concurrent commit raises ConcurrentModification and
-        nothing is left behind. Matched positions pass through the
-        driver (bounded by the delete's selectivity; a broad predicate
-        should use overwrite(partition_filter=) instead). Returns the
-        snapshot id, or None when nothing matched."""
-        version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        meta = self.load_metadata(version)
-        if meta["current-snapshot-id"] in (-1, None):
-            return None
-        schema = schema_to_spark(_current_schema(meta))
-        # bounds-pruned candidates: files whose column bounds prove no
-        # row can match never even get scanned for positions
-        files = self.scan_files(where=where, meta=meta)
-        if not files:
-            return None
-        live, targets = self._live_positions(spark, files, meta, schema)
-        matched = live.filter(where).select("fp", "pos").collect()
-        if not matched:
-            return None
-        seq = meta["last-sequence-number"] + 1
-        snap_id = _snapshot_id()
-        dfiles = self._write_partitioned_position_deletes(matched, targets)
-        parent = self._resolve_snapshot(None, None, meta)
-        _, manifests, _ = avrolite.read_container(parent["manifest-list"])
-        manifests.append(
-            self._write_manifest(
-                snap_id, seq, dfiles, self._part_fields(meta), meta, content=1
-            )
-        )
-        summary = {
-            "added-delete-files": str(len(dfiles)),
-            "added-position-deletes": str(sum(d["record_count"] for d in dfiles)),
-        }
-        try:
-            return self._publish_snapshot(
-                version, meta, snap_id, seq, manifests, parent, "delete", summary
-            )
-        except ConcurrentModification:
-            self._cleanup_staged(dfiles)
-            raise
-
-    def _write_partitioned_position_deletes(
-        self, matched: list, targets: dict[str, dict]
-    ) -> list[dict]:
-        """Group matched (fp, pos) rows by the TARGET DATA FILE'S
-        partition tuple and write one position-delete file per
-        partition, stamped with that tuple (ADVICE r10: the v2 spec
-        applies a partitioned delete file only to data files with an
-        EQUAL partition tuple, so the previous all-null stamping was
-        invisible to spec-compliant external readers on partitioned
-        tables — deleted rows would silently resurrect). Unpartitioned
-        tables degenerate to the old single-file shape ({} == {}).
-
-        ``targets`` maps a row's ``fp`` to its data file's manifest
-        entry (:meth:`_live_positions`); a tombstone records that
-        entry's exact ``file_path``, as the spec requires."""
-        by_part: dict[tuple, list[tuple[str, int]]] = {}
-        for r in matched:
-            d = targets[r.fp]
-            key = tuple(sorted(d["partition"].items()))
-            by_part.setdefault(key, []).append((d["file_path"], r.pos))
-        dfiles = []
-        # key=repr: partition values can mix None/int/str across tuples,
-        # which plain tuple ordering cannot compare
-        for key in sorted(by_part, key=repr):
-            dfile = self._write_position_delete_file(sorted(by_part[key]))
-            dfile["partition"] = dict(key)
-            dfiles.append(dfile)
-        return dfiles
-
-    def _write_position_delete_file(
-        self, pairs: list[tuple[str, int]]
-    ) -> dict:
-        """Write sorted (file_path, pos) tombstones as one parquet under
-        data/ (spec field ids 2147483546/2147483545); returns the spec
-        data_file struct (content=1) minus the partition tuple, which
-        the caller stamps."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        dpath = os.path.join(self.data_dir, f"delete-{uuid.uuid4().hex}.parquet")
-        os.makedirs(self.data_dir, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": [p for p, _ in pairs],
-                    "pos": [p for _, p in pairs],
-                },
-                schema=pa.schema(
-                    [
-                        pa.field(
-                            "file_path",
-                            pa.string(),
-                            nullable=False,
-                            metadata={b"PARQUET:field_id": b"2147483546"},
-                        ),
-                        pa.field(
-                            "pos",
-                            pa.int64(),
-                            nullable=False,
-                            metadata={b"PARQUET:field_id": b"2147483545"},
-                        ),
-                    ]
-                ),
-            ),
-            dpath,
-        )
-        return {
-            "content": 1,  # position deletes
-            "file_path": "file://" + dpath,
-            "file_format": "PARQUET",
-            "record_count": len(pairs),
-            "file_size_in_bytes": os.path.getsize(dpath),
-            "lower_bounds": None,
-            "upper_bounds": None,
-        }
-
-    def upsert_by_key(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        key_cols: tuple[str, ...],
-    ) -> dict[str, int]:
-        """MERGE (WHEN MATCHED UPDATE / NOT MATCHED INSERT) on the
-        Iceberg dialect — closes the one mutation idiom VERDICT r9
-        listed as Delta-only (txlog.upsert_by_key). Unlike the txlog's
-        copy-on-write merge this one is MERGE-ON-READ: rows whose key
-        matches an update are position-tombstoned and the update rows
-        are appended, both manifests publishing in ONE atomic snapshot —
-        readers see the whole merge or none of it, and the write cost is
-        O(update keys' positions + update rows), never a partition
-        rewrite. Compaction later folds the tombstones away.
-
-        The matched positions pass through the driver (bounded by the
-        merge's selectivity, same contract as delete_where); the key
-        probe itself is a broadcast semi-join, one distributed pass over
-        bounds-surviving files. A commit racing between the position
-        read and the publish raises ConcurrentModification (CAS on the
-        version loaded at entry). Returns {"matched": rows tombstoned,
-        "inserted": rows appended}."""
-        from pyspark.sql import functions as F
-
-        version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no Iceberg table at {self.path}")
-        meta = self.load_metadata(version)
-        part_fields = self._part_fields(meta)
-        # one job for the batch's rows and distinct key tuples; a struct
-        # is never null, so key tuples holding nulls are counted too
-        batch = updates.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.count_distinct(F.struct(*key_cols)).alias("keys"),
-        ).first()
-        inserted = batch["rows"]
-        if batch["keys"] != inserted:
-            raise ValueError(
-                f"update batch has {inserted - batch['keys']} duplicate key(s)"
-            )
-        if meta["current-snapshot-id"] in (-1, None):
-            self.append(updates)
-            return {"matched": 0, "inserted": inserted}
-        schema = schema_to_spark(_current_schema(meta))
-        files = self.scan_files(meta=meta)
-        if not files:
-            # a snapshot can exist with zero live data files (e.g. after
-            # overwrite with an empty DataFrame); _live_positions would
-            # call spark.read.parquet with no paths — fall back to the
-            # pure-insert path, mirroring delete_where's guard
-            self.append(updates)
-            return {"matched": 0, "inserted": inserted}
-        keys = updates.select(*key_cols).distinct()
-        live, targets = self._live_positions(spark, files, meta, schema)
-        matched = (
-            live.join(F.broadcast(keys), list(key_cols), "left_semi")
-            .select("fp", "pos")
-            .collect()
-        )
-        staged = self._stage_data_files(
-            updates.select(*[f.name for f in schema.fields]), part_fields, meta
-        )
-        seq = meta["last-sequence-number"] + 1
-        snap_id = _snapshot_id()
-        parent = self._resolve_snapshot(None, None, meta)
-        _, manifests, _ = avrolite.read_container(parent["manifest-list"])
-        manifests.append(
-            self._write_manifest(snap_id, seq, staged, part_fields, meta)
-        )
-        summary = {
-            "merge-matched": str(len(matched)),
-            "merge-inserted": str(inserted),
-            "added-data-files": str(len(staged)),
-            "added-records": str(sum(d["record_count"] for d in staged)),
-        }
-        dfiles: list[dict] = []
-        if matched:
-            dfiles = self._write_partitioned_position_deletes(matched, targets)
-            manifests.append(
-                self._write_manifest(
-                    snap_id, seq, dfiles, part_fields, meta, content=1
-                )
-            )
-            summary["added-delete-files"] = str(len(dfiles))
-            summary["added-position-deletes"] = str(
-                sum(d["record_count"] for d in dfiles)
-            )
-        try:
-            self._publish_snapshot(
-                version, meta, snap_id, seq, manifests, parent, "overwrite", summary
-            )
-        except ConcurrentModification:
-            self._cleanup_staged(staged + dfiles)
-            raise
-        return {"matched": len(matched), "inserted": inserted}
 
     def read(
         self,
@@ -1746,7 +1371,6 @@ class IcebergTable:
         if not files:
             df = spark.createDataFrame([], schema)
             return df.filter(where) if where is not None else df
-        deletes = self.scan_delete_files(snapshot_id, asof_ms, meta=meta)
         df = datafiles.scan(
             spark,
             schema,
@@ -1755,8 +1379,6 @@ class IcebergTable:
                 datafiles.LiveFile(self.local_path(d["file_path"]), d["file_size_in_bytes"])
                 for d in files
             ],
-            # v2 merge-on-read: position tombstones are anti-joined away
-            tombstones=self._tombstone_frame(spark, deletes) if deletes else None,
         )
         return df.filter(where) if where is not None else df
 
@@ -1794,7 +1416,14 @@ class IcebergTable:
                 "current snapshot must be within the retained window"
             )
 
-        def _reachable(snapshots: list[dict]) -> set[str]:
+        kept_ids = {s["snapshot-id"] for s in kept}
+
+        def _reachable(snapshots: list[dict], pinning: set[int] | None) -> set[str]:
+            """Paths the snapshots reference. A DELETED entry's file
+            counts only while the snapshot that deleted it is in
+            ``pinning`` (None: always): the spec lets the file go once
+            that snapshot is expired, though later snapshots still
+            carry its manifest."""
             paths: set[str] = set()
             for s in snapshots:
                 paths.add(s["manifest-list"])
@@ -1803,15 +1432,17 @@ class IcebergTable:
                     paths.add(m["manifest_path"])
                     _, entries, _ = avrolite.read_container(m["manifest_path"])
                     for e in entries:
-                        paths.add(self.local_path(e["data_file"]["file_path"]))
+                        if e["status"] != 2 or pinning is None or e["snapshot_id"] in pinning:
+                            paths.add(self.local_path(e["data_file"]["file_path"]))
             return paths
 
-        live = _reachable(kept)
-        doomed = sorted(_reachable(expired) - live)
+        live = _reachable(kept, kept_ids)
+        expired_refd = _reachable(expired, None)
+        doomed = sorted(expired_refd - live)
         # deleteOrphanFiles half: data files no snapshot (kept OR
         # expired) references — invisible to every reader, so only the
         # grace age gates their removal
-        all_refd = live | set(_reachable(expired))
+        all_refd = live | expired_refd
         cutoff = time.time() - orphan_grace_s
         orphans: list[str] = []
         if os.path.isdir(self.data_dir):
@@ -1825,7 +1456,6 @@ class IcebergTable:
                     ):
                         orphans.append(p)
         if expired:
-            kept_ids = {s["snapshot-id"] for s in kept}
             new_meta = dict(meta)
             # exactly-once markers must survive expiry (ADVICE r9):
             # expiring the snapshot that carries an app's newest

@@ -83,7 +83,6 @@ _OPERATIONS = {
     "upsert": ("MERGE", {}),
     "compact": ("OPTIMIZE", {}),
     "delete": ("DELETE", {}),
-    "restore": ("RESTORE", {}),
     "clone": ("CLONE", {"isShallow": "true"}),
     "addConstraint": ("ADD CONSTRAINT", {}),
     "dropConstraint": ("DROP CONSTRAINT", {}),
@@ -922,47 +921,6 @@ class TxTable:
             ]
             try:
                 return self._commit(latest, actions, "dropConstraint")
-            except ConcurrentModification:
-                continue
-
-    def restore(
-        self, version: int | None = None, asof_timestamp: float | None = None
-    ) -> int:
-        """Delta's RESTORE TABLE ... [VERSION|TIMESTAMP] AS OF: commit a
-        NEW version whose live file set and schema equal the target
-        snapshot's. Nothing is deleted and history is preserved — the
-        restore is itself a commit, so time travel across it (including
-        back to the pre-restore state) keeps working, and a concurrent
-        writer either lands before the restore (and is rolled back by
-        it) or after (and wins); the CAS loop guarantees one total
-        order. Data files the target still references carry over by
-        reference — zero IO. Returns the committed version."""
-        if asof_timestamp is not None:
-            version = self.version_at(asof_timestamp)
-        if version is None:
-            raise ValueError("restore needs version or asof_timestamp")
-        target = self.snapshot(version)
-        while True:
-            latest = self.latest_version()
-            cur = self.snapshot(latest)
-            actions: list[dict[str, Any]] = []
-            if (
-                target.schema_json != cur.schema_json
-                or target.partition_by != cur.partition_by
-            ):
-                actions.append(
-                    _meta_action(cur, target.schema, target.partition_by)
-                )
-            actions += [
-                {"add": {**a, "dataChange": True}}
-                for p, a in target.files.items()
-                if p not in cur.files
-            ]
-            actions += [
-                _remove_action(p) for p in cur.files if p not in target.files
-            ]
-            try:
-                return self._commit(latest, actions, "restore")
             except ConcurrentModification:
                 continue
 

@@ -68,9 +68,13 @@ def test_appends_accumulate_and_time_travel(spark, table):
     assert s2 == hist[1]["snapshot_id"]
 
 
-def test_overwrite_replaces_table_state(spark, table):
+def test_overwrite_replaces_table_state(spark, tmp_path):
+    """An unpartitioned table is one partition, so overwrite_partitions
+    replaces the whole table state."""
+    table = IcebergTable(str(tmp_path / "u"))
+    table.create(_mk(spark, [0]).schema)
     table.append(_mk(spark, [1, 2, 3]))
-    s2 = table.overwrite(_mk(spark, [7]))
+    s2 = table.overwrite_partitions(_mk(spark, [7]))
     assert _rows(table.read(spark)) == _rows(_mk(spark, [7]))
     # the pre-overwrite snapshot stays readable (time travel)
     first = table.history()[0]["snapshot_id"]
@@ -138,7 +142,18 @@ def test_concurrent_append_rebases(spark, table, monkeypatch):
     assert table.read(spark).count() == 2
 
 
+def _files_on_disk(table):
+    return {
+        os.path.join(root, n)
+        for root, _d, names in os.walk(table.data_dir)
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
 def test_concurrent_overwrite_raises(spark, table, monkeypatch):
+    """A partition overwrite that loses the version CAS raises instead
+    of rebasing, and unlinks the data files it staged."""
     table.append(_mk(spark, [1]))
     real_publish = IcebergTable._publish
 
@@ -149,7 +164,9 @@ def test_concurrent_overwrite_raises(spark, table, monkeypatch):
 
     monkeypatch.setattr(IcebergTable, "_publish", racing_publish)
     with pytest.raises(ConcurrentModification):
-        table.overwrite(_mk(spark, [9]))
+        table.overwrite_partitions(_mk(spark, [9]))
+    live = {table.local_path(d["file_path"]) for d in table.scan_files()}
+    assert _files_on_disk(table) == live, "the lost overwrite left orphans"
 
 
 def test_version_hint_fallback(spark, table):
@@ -357,16 +374,21 @@ def test_expire_snapshots(spark, table):
 
 
 def test_expire_after_overwrite_deletes_replaced_data(spark, table):
-    """After an overwrite, the pre-overwrite data files are reachable
-    ONLY from expired snapshots — expiration must physically remove
-    them."""
+    """The files a partition overwrite replaced stay while the
+    overwrite's own snapshot is kept (its manifest lists them as
+    DELETED, and the spec frees a deleted file only once the snapshot
+    that deleted it is expired). Expiring that snapshot must physically
+    remove them, though the next append still carries the manifest."""
     table.append(_mk(spark, [1, 2, 3]))
     old_files = [table.local_path(d["file_path"]) for d in table.scan_files()]
-    table.overwrite(_mk(spark, [9]))
+    redo = _mk(spark, [1, 2, 3]).withColumn("name", F.lit("redo"))
+    table.overwrite_partitions(redo)  # the same three partitions
+    assert not set(old_files) & set(table.expire_snapshots(retain_last=1))
+    table.append(_mk(spark, [4]))
     doomed = table.expire_snapshots(retain_last=1)
     for p in old_files:
         assert p in doomed and not os.path.exists(p)
-    assert _rows(table.read(spark)) == _rows(_mk(spark, [9]))
+    assert _rows(table.read(spark)) == _rows(redo.union(_mk(spark, [4])))
 
 
 def test_append_idempotent_exactly_once(spark, table):
@@ -447,39 +469,6 @@ def test_where_data_skipping_via_manifest_bounds(spark, table):
     assert len(table.scan_files(where="amt != 99.0")) == len(all_files)
 
 
-def test_compact_rewrites_files_preserving_data(spark, table):
-    """compact() is the rewrite_data_files twin: fewer files, identical
-    rows, a 'replace' snapshot in history, pre-compaction snapshots
-    still readable, and expire_snapshots afterwards physically reclaims
-    the small files."""
-    for i in range(3):
-        table.append(_mk(spark, [3 * i, 3 * i + 1, 3 * i + 2]))
-    before_files = table.scan_files()
-    before_rows = _rows(table.read(spark))
-    pre_snap = table.history()[-1]["snapshot_id"]
-    small_paths = [table.local_path(d["file_path"]) for d in before_files]
-    table.compact(spark)
-    after_files = table.scan_files()
-    assert len(after_files) < len(before_files)
-    assert _rows(table.read(spark)) == before_rows
-    assert table.history()[-1]["operation"] == "replace"
-    # time travel to the pre-compaction snapshot still works
-    assert _rows(table.read(spark, snapshot_id=pre_snap)) == before_rows
-    # the independent reader agrees post-compaction
-    assert sorted(
-        tuple(r.values())
-        for r in iceberg_reader.read_table(table.path).to_pylist()
-    ) == before_rows
-    # expiration reclaims the replaced small files
-    doomed = table.expire_snapshots(retain_last=1)
-    for p in small_paths:
-        assert p in doomed and not os.path.exists(p)
-    assert _rows(table.read(spark)) == before_rows
-    from test_iceberg_protocol import validate_iceberg_table
-
-    validate_iceberg_table(table.path)
-
-
 def test_pruning_reaches_sparks_file_plan(spark, table):
     """Metadata pruning must shrink what SPARK actually plans, not just
     scan_files' return value: inputFiles() of a partition-pruned and a
@@ -517,7 +506,7 @@ def test_expire_reclaims_orphaned_staged_files(spark, table):
     assert table.read(spark).count() == 2
 
 
-# ------------------------- round 10: partition overwrite + position deletes
+# ------------------------------------------ round 10: partition overwrite
 
 
 def test_overwrite_partitions_dynamic(spark, table):
@@ -545,91 +534,6 @@ def test_overwrite_partitions_dynamic(spark, table):
     ]
     assert sorted(r.name for r in kept) == ["redo", "redo"]
     assert table.history()[-1]["operation"] == "overwrite"
-
-
-def test_overwrite_partition_filter_validates_region(spark, table):
-    """A static partition overwrite must refuse data landing OUTSIDE
-    the replaced region (otherwise 'replace yr=2024' would silently
-    append into 2025), and the refused commit leaves no staged files."""
-    table.append(_mk(spark, range(4)))
-    before = _rows(table.read(spark))
-    with pytest.raises(ValueError, match="outside the replaced region"):
-        table.overwrite(
-            _mk(spark, [1]),  # id 1 -> yr=2025
-            partition_filter=lambda p: p["yr"] == 2024,
-        )
-    assert _rows(table.read(spark)) == before
-    # the in-region form works and drops exactly yr=2024
-    table.overwrite(
-        _mk(spark, [0]), partition_filter=lambda p: p["yr"] == 2024
-    )
-    got = table.read(spark).collect()
-    assert {r.yr for r in got} == {2024, 2025}
-    assert [r.id for r in got if r.yr == 2024] == [0]
-
-
-def test_delete_where_position_deletes(spark, table):
-    """delete_where tombstones rows without rewriting data files
-    (merge-on-read): the data file set is unchanged, a content=1 delete
-    manifest appears, reads (module AND independent reader) drop the
-    rows, time travel to the pre-delete snapshot still sees them, and
-    compaction folds the tombstones away."""
-    table.append(_mk(spark, range(8)))
-    pre = table.history()[-1]["snapshot_id"]
-    files_before = {d["file_path"] for d in table.scan_files()}
-    sid = table.delete_where(spark, "id % 2 = 0 AND id >= 2")
-    assert sid is not None
-    assert {d["file_path"] for d in table.scan_files()} == files_before
-    # one delete file PER TOUCHED PARTITION, stamped with that partition
-    # tuple (ADVICE r10: spec-compliant readers only apply a delete file
-    # to data files with an EQUAL partition tuple) — deleted ids 2/4/6
-    # live in (yr, mo) partitions (2024,3)/(2024,2)/(2024,1)
-    dels = table.scan_delete_files()
-    assert {(d["partition"]["yr"], d["partition"]["mo"]) for d in dels} == {
-        (2024, 1),
-        (2024, 2),
-        (2024, 3),
-    }
-    assert sum(d["record_count"] for d in dels) == 3
-    expect = sorted([0, 1, 3, 5, 7])
-    assert sorted(r.id for r in table.read(spark).collect()) == expect
-    ext = iceberg_reader.read_table(table.path)
-    assert sorted(r["id"] for r in ext.to_pylist()) == expect
-    # pre-delete snapshot unaffected (and via the independent reader)
-    assert table.read(spark, snapshot_id=pre).count() == 8
-    assert iceberg_reader.read_table(table.path, snapshot_id=pre).num_rows == 8
-    # where/pruned reads compose with the tombstones
-    assert sorted(
-        r.id for r in table.read(spark, where="id >= 3").collect()
-    ) == [3, 5, 7]
-    # no-match delete commits nothing
-    assert table.delete_where(spark, "id = 12345") is None
-    # compaction applies deletes and drops the delete manifest
-    table.compact(spark)
-    assert table.scan_delete_files() == []
-    assert sorted(r.id for r in table.read(spark).collect()) == expect
-
-
-def test_compact_premise_pinned_against_concurrent_append(spark, table):
-    """ADVICE r9 (medium): a commit landing between compact's read and
-    its publish must raise ConcurrentModification, never be silently
-    dropped by the replace listing."""
-    table.append(_mk(spark, [1, 2]))
-    orig_publish = table._publish
-    fired = {}
-
-    def racy_publish(version, metadata):
-        if not fired:
-            fired["x"] = True
-            IcebergTable(table.path).append(_mk(spark, [9]))
-        return orig_publish(version, metadata)
-
-    table._publish = racy_publish
-    with pytest.raises(ConcurrentModification):
-        table.compact(spark)
-    table._publish = orig_publish
-    # the concurrent append survives intact
-    assert sorted(r.id for r in table.read(spark).collect()) == [1, 2, 9]
 
 
 def test_rebase_onto_evolved_winner_fills_optional_columns(spark, table):
@@ -670,10 +574,8 @@ def test_expire_preserves_exactly_once_markers(spark, table):
 
 def test_position_deletes_on_legacy_relative_paths(spark, table):
     """Back-compat: tables written before r10 store table-RELATIVE
-    file_paths. delete_where must key positions by the resolved
-    absolute path and read() must canonicalize tombstone spellings, or
-    deletes on such tables silently never match (found in the r10
-    self-review)."""
+    file_paths. The engine and the independent reader both resolve
+    them under the table root."""
     from lakeflow import avrolite
 
     table.append(_mk(spark, range(4)))
@@ -694,57 +596,31 @@ def test_position_deletes_on_legacy_relative_paths(spark, table):
     assert all(
         not d["file_path"].startswith("file:") for d in table.scan_files()
     )
-    sid = table.delete_where(spark, "id >= 2")
-    assert sid is not None
-    assert sorted(r.id for r in table.read(spark).collect()) == [0, 1]
+    assert _rows(table.read(spark)) == _rows(_mk(spark, range(4)))
     ext = iceberg_reader.read_table(table.path)
-    assert sorted(r["id"] for r in ext.to_pylist()) == [0, 1]
-
-
-def test_upsert_by_key_merge_on_read(spark, table):
-    """MERGE on the Iceberg dialect (merge-on-read): matched keys are
-    position-tombstoned and updates appended in ONE atomic snapshot —
-    no data-file rewrite; compaction folds the tombstones away; time
-    travel sees the pre-merge state."""
-    table.append(_mk(spark, range(6)))
-    pre = table.history()[-1]["snapshot_id"]
-    files_before = {d["file_path"] for d in table.scan_files()}
-    upd = _mk(spark, [2, 3, 100]).withColumn("name", F.lit("merged"))
-    res = table.upsert_by_key(spark, upd, ("id",))
-    assert res == {"matched": 2, "inserted": 3}
-    # original data files untouched; updates arrive as NEW files
-    assert files_before < {d["file_path"] for d in table.scan_files()}
-    # matched ids 2/(2024,3) and 3/(2025,1): one partition-stamped
-    # delete file each (ADVICE r10 — spec partition-tuple equality)
-    dels = table.scan_delete_files()
-    assert {(d["partition"]["yr"], d["partition"]["mo"]) for d in dels} == {
-        (2024, 3),
-        (2025, 1),
-    }
-    assert sum(d["record_count"] for d in dels) == 2
-    got = {r.id: r.name for r in table.read(spark).collect()}
-    assert got == {
-        0: "n0", 1: "n1", 2: "merged", 3: "merged",
-        4: "n4", 5: "n5", 100: "merged",
-    }
-    # independent reader agrees; pre-merge snapshot unaffected
-    ext = {r["id"]: r["name"] for r in iceberg_reader.read_table(table.path).to_pylist()}
-    assert ext == got
-    assert table.read(spark, snapshot_id=pre).count() == 6
-    # merge with no matches = pure insert, no delete manifest added
-    res2 = table.upsert_by_key(spark, _mk(spark, [200]), ("id",))
-    assert res2 == {"matched": 0, "inserted": 1}
-    assert len(table.scan_delete_files()) == 2
-    # upserting the same key twice in sequence: second merge tombstones
-    # the FIRST merge's row (new files are probe targets too)
-    table.upsert_by_key(
-        spark, _mk(spark, [100]).withColumn("name", F.lit("again")), ("id",)
+    assert sorted(tuple(r.values()) for r in ext.to_pylist()) == _rows(
+        _mk(spark, range(4))
     )
-    got3 = {r.id: r.name for r in table.read(spark).collect()}
-    assert got3[100] == "again" and len([k for k in got3 if k == 100]) == 1
-    table.compact(spark)
-    assert table.scan_delete_files() == []
-    assert {r.id: r.name for r in table.read(spark).collect()} == got3
+
+
+def test_delete_manifest_is_refused(spark, table):
+    """Neither reader applies deletes, so a snapshot listing a delete
+    manifest (content=1, as another writer could add) must raise, not
+    return the rows it deletes."""
+    from lakeflow import avrolite
+
+    table.append(_mk(spark, range(4)))
+    snap = table._resolve_snapshot(None, None, table.load_metadata())
+    schema, manifests, md = avrolite.read_container(snap["manifest-list"])
+    forged = manifests + [dict(manifests[0], content=1)]
+    os.unlink(snap["manifest-list"])
+    avrolite.write_container(
+        snap["manifest-list"], schema, forged, {k: v.decode() for k, v in md.items()}
+    )
+    with pytest.raises(NotImplementedError, match="delete manifest"):
+        table.read(spark)
+    with pytest.raises(NotImplementedError, match="delete manifest"):
+        iceberg_reader.read_table(table.path)
 
 
 # ----------------------------- round 10: hidden partitioning (transforms)
@@ -780,8 +656,8 @@ def _mk_tr(spark, ids):
 def test_hidden_partitioning_transforms(spark, tmp_path):
     """bucket/month/truncate partitioning: spec-murmur routing, source
     columns kept in the payload, metadata-side pruning on transformed
-    values shrinking Spark's actual file plan, mutation ops composing,
-    and the independent reader + spec validator agreeing."""
+    values shrinking Spark's actual file plan, and the independent
+    reader + spec validator agreeing."""
     from lakeflow.iceberg import IcebergTable, _mm3_32
     from test_iceberg_protocol import validate_iceberg_table
 
@@ -817,15 +693,7 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
         == 0
         for r in pruned.collect()
     )
-    # row-level + partition-level mutations compose with transforms
-    t.delete_where(spark, "id >= 15")
-    assert t.read(spark).count() == 15
-    res = t.upsert_by_key(
-        spark, _mk_tr(spark, [1]).withColumn("name", F.lit("nameX")), ("id",)
-    )
-    assert res == {"matched": 1, "inserted": 1}
-    assert {r.name for r in t.read(spark).filter("id = 1").collect()} == {"nameX"}
-    # independent reader end-state agreement + structural spec pass
+    # independent reader agreement + structural spec pass
     ext = sorted(
         tuple(r.values()) for r in iceberg_reader.read_table(t.path).to_pylist()
     )
@@ -853,91 +721,6 @@ def test_truncate_negative_and_year_transforms(spark, tmp_path):
     }
     assert parts == {(-10, -1), (5, 54)}
     assert _rows(t.read(spark)) == _rows(df)
-
-
-def test_row_delta_cas_loss_cleans_up(spark, table):
-    """upsert_by_key and delete_where are read-modify-write: losing the
-    version CAS to a racing commit must raise ConcurrentModification,
-    leave the winner's state intact, and unlink every file the loser
-    staged (data files, tombstone parquet, manifests) — no orphans for
-    the grace sweep."""
-    table.append(_mk(spark, [1, 2]))
-
-    def race(fn):
-        orig = table._publish
-        fired = {}
-
-        def racy(version, metadata):
-            if not fired:
-                fired["x"] = True
-                IcebergTable(table.path).append(_mk(spark, [50]))
-            return orig(version, metadata)
-
-        table._publish = racy
-        try:
-            with pytest.raises(ConcurrentModification):
-                fn()
-        finally:
-            table._publish = orig
-
-    def files_on_disk():
-        out = set()
-        for root, _d, names in os.walk(table.data_dir):
-            out |= {os.path.join(root, n) for n in names if n.endswith(".parquet")}
-        return out
-
-    race(lambda: table.upsert_by_key(spark, _mk(spark, [1, 60]), ("id",)))
-    live = {table.local_path(d["file_path"]) for d in table.scan_files()} | {
-        table.local_path(d["file_path"]) for d in table.scan_delete_files()
-    }
-    assert files_on_disk() == live, "upsert CAS loss left orphans"
-    assert sorted(r.id for r in table.read(spark).collect()) == [1, 2, 50]
-
-    race(lambda: table.delete_where(spark, "id = 2"))
-    live = {table.local_path(d["file_path"]) for d in table.scan_files()} | {
-        table.local_path(d["file_path"]) for d in table.scan_delete_files()
-    }
-    assert files_on_disk() == live, "delete CAS loss left orphans"
-    assert sorted(r.id for r in table.read(spark).collect()) == [1, 2, 50, 50]
-
-
-def test_upsert_on_snapshot_with_zero_live_files(spark, table):
-    """ADVICE r10 (low): a snapshot can exist with zero live data files
-    (overwrite with an empty DataFrame); upsert_by_key must fall back
-    to the pure-insert path instead of crashing in _live_positions."""
-    table.append(_mk(spark, [1, 2]))
-    table.overwrite(_mk(spark, [1]).limit(0))  # live file set is now empty
-    assert table.scan_files() == []
-    res = table.upsert_by_key(spark, _mk(spark, [7]), ("id",))
-    assert res == {"matched": 0, "inserted": 1}
-    assert sorted(r.id for r in table.read(spark).collect()) == [7]
-
-
-def test_upsert_rejects_duplicate_keyed_batch(spark, tmp_path):
-    """A batch holding two rows for one key has no single MERGE result:
-    upsert_by_key raises ValueError (as TxTable.upsert_by_key does)
-    before anything is staged — no snapshot, no file under data/. Key
-    tuples holding nulls count as keys too."""
-    t = IcebergTable(str(tmp_path / "d"))
-    schema = "id bigint, v string"
-    t.create(spark.createDataFrame([], schema).schema)
-    t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema))
-
-    def data_files():
-        return sorted(
-            os.path.join(root, n) for root, _d, names in os.walk(t.data_dir) for n in names
-        )
-
-    version, files = t.latest_version(), data_files()
-    for batch in (
-        [(2, "x"), (2, "y"), (3, "z"), (3, "w")],
-        [(None, "x"), (None, "y")],
-    ):
-        with pytest.raises(ValueError, match="duplicate key"):
-            t.upsert_by_key(spark, spark.createDataFrame(batch, schema), ("id",))
-    assert t.latest_version() == version and len(t.history()) == 1
-    assert data_files() == files
-    assert _rows(t.read(spark)) == [(1, "a"), (2, "b")]
 
 
 def test_create_rejects_derived_partition_name_collision(spark, tmp_path):

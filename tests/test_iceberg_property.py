@@ -1,26 +1,24 @@
 """Model-based property test of the Iceberg metadata layer: hypothesis
-drives random operation sequences (append / overwrite / DYNAMIC
-PARTITION overwrite / position delete / evolving append /
-expire_snapshots / compact) against BOTH an IcebergTable and an
-in-memory dict model; after every op the table must equal the model,
-every LIVE snapshot must time-travel back to the model's state at that
-snapshot (under the SNAPSHOT's schema), and the clean-room spec reader
-(tools/iceberg_reader.py — independent Avro decoder, zero lakeflow
-imports) must agree at head and at every live snapshot. The mirror of
-tests/test_txlog_property.py for the Iceberg dialect, plus a structural
-pass: the spec validator from test_iceberg_protocol runs on the final
-table of every sequence.
+drives random operation sequences (append / DYNAMIC PARTITION
+overwrite / evolving append / expire_snapshots) against BOTH an
+IcebergTable and an in-memory dict model; after every op the table
+must equal the model, every LIVE snapshot must time-travel back to the
+model's state at that snapshot (under the SNAPSHOT's schema), and the
+clean-room spec reader (tools/iceberg_reader.py — independent Avro
+decoder, zero lakeflow imports) must agree at head and at every live
+snapshot. The mirror of tests/test_txlog_property.py for the Iceberg
+dialect, plus a structural pass: the spec validator from
+test_iceberg_protocol runs on the final table of every sequence.
 
-The table is PARTITIONED (identity on ``pt = id % 2``) so the round-10
-mutation ops exercise real partition routing: overwrite_partitions must
-replace exactly the partitions present in the new rows, and
-delete_where's position tombstones must survive appends, evolution, and
-carry-forward through partition overwrites of OTHER partitions.
+The table is PARTITIONED (identity on ``pt = id % 2``) so partition
+overwrites exercise real partition routing: overwrite_partitions must
+replace exactly the partitions present in the new rows, and carry the
+OTHER partitions' files forward through appends, evolution and expiry.
 
 Runtime discipline as in the txlog twin: each example costs one Spark
 write+read per op, so examples and sequence lengths stay small — the
-value is op-interleaving SHAPE coverage (evolve→overwrite→expire,
-pdelete→compact, pow→pdelete), not volume.
+value is op-interleaving SHAPE coverage (evolve→pow→expire,
+pow→evolve→pow), not volume.
 """
 
 from __future__ import annotations
@@ -40,13 +38,9 @@ from test_iceberg_protocol import validate_iceberg_table  # noqa: E402
 # an op is (kind, arg)
 _OPS = st.one_of(
     st.tuples(st.just("append"), st.integers(1, 3)),     # n new rows
-    st.tuples(st.just("overwrite"), st.integers(1, 3)),  # n fresh rows
     st.tuples(st.just("pow"), st.integers(1, 3)),        # dyn part overwrite
-    st.tuples(st.just("pdelete"), st.integers(2, 4)),    # delete id % arg == 0
-    st.tuples(st.just("upsert"), st.integers(1, 3)),     # update n + insert 1
     st.tuples(st.just("evolve"), st.integers(1, 2)),     # n rows + new col
     st.tuples(st.just("expire"), st.integers(1, 3)),     # retain_last
-    st.tuples(st.just("compact"), st.none()),             # no argument
 )
 
 _spark = None
@@ -118,38 +112,12 @@ def test_iceberg_matches_model_time_travel_and_spec(tmp_path_factory, ops):
             rows = fresh_rows(arg)
             sid = t.append(_df(spark, rows, extra_cols))
             model.update({r[0]: r for r in rows})
-        elif kind == "overwrite":
-            rows = fresh_rows(arg)
-            sid = t.overwrite(_df(spark, rows, extra_cols))
-            model = {r[0]: r for r in rows}
         elif kind == "pow":
             rows = fresh_rows(arg)
             sid = t.overwrite_partitions(_df(spark, rows, extra_cols))
             replaced = {r[1] for r in rows}
             model = {k: v for k, v in model.items() if v[1] not in replaced}
             model.update({r[0]: r for r in rows})
-        elif kind == "upsert":
-            # update the arg smallest existing ids (value bumped by 1 so
-            # the update is observable) + insert one fresh row — the
-            # merge-on-read MERGE: matched rows position-tombstoned,
-            # updates appended, one snapshot
-            upd_ids = sorted(model)[:arg]
-            rows = [
-                tuple([i, i % 2, i * 7 + 1] + [None] * len(extra_cols))
-                for i in upd_ids
-            ] + fresh_rows(1)
-            res = t.upsert_by_key(spark, _df(spark, rows, extra_cols), ("id",))
-            assert res["matched"] == len(upd_ids)
-            model.update({r[0]: r for r in rows})
-            sid = t.history()[-1]["snapshot_id"]
-        elif kind == "pdelete":
-            sid = t.delete_where(spark, f"id % {arg} = 0")
-            doomed_ids = {k for k in model if k % arg == 0}
-            if sid is None:
-                assert not doomed_ids, "delete_where missed matching rows"
-                continue
-            assert doomed_ids, "delete_where committed with nothing to do"
-            model = {k: v for k, v in model.items() if k % arg != 0}
         elif kind == "evolve":
             new_col = f"e{len(extra_cols)}"
             rows = [
@@ -159,11 +127,6 @@ def test_iceberg_matches_model_time_travel_and_spec(tmp_path_factory, ops):
             extra_cols.append(new_col)
             pad_all(3 + len(extra_cols))
             model.update({r[0]: r for r in rows})
-        elif kind == "compact":
-            # data-identical layout rewrite: the model is unchanged
-            sid = t.compact(spark)
-            if sid is None:
-                continue  # empty table: no snapshot, no commit to record
         elif kind == "expire":
             doomed = t.expire_snapshots(retain_last=arg)
             live = {h["snapshot_id"] for h in t.history()}

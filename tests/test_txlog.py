@@ -19,6 +19,7 @@ from lakeflow.txlog import (
     NoSuchVersion,
     TxTable,
 )
+from tools import delta_reader
 
 
 def _rows(df):
@@ -353,35 +354,6 @@ def test_delete_where_partitioned_table(spark, tmp_path):
     assert {r.part for r in t.read(spark).filter(F.col("id") == 5).collect()} == {"a"}
 
 
-def test_restore_rolls_back_and_preserves_history(spark, tmp_path):
-    t = TxTable(str(tmp_path / "t"))
-    t.write(_mk(spark, [1, 2]))                       # v0
-    t.write(_mk(spark, [3]))                          # v1
-    t.write(_mk(spark, [9, 9]), mode="overwrite")     # v2
-    v = t.restore(1)                                  # back to {1,2,3}
-    assert v == 3
-    assert _rows(t.read(spark)) == _rows(_mk(spark, [1, 2, 3]))
-    # history preserved: the overwritten state is still time-travelable
-    assert _rows(t.read(spark, version=2)) == _rows(_mk(spark, [9, 9]))
-    assert _rows(t.read(spark, version=1)) == _rows(_mk(spark, [1, 2, 3]))
-    # restore is a first-class operation in history
-    ops = [h["operation"] for h in t.history()]
-    assert "RESTORE" in ops
-    # a restore to the current state commits cleanly (no-op diff)
-    t.restore(3)
-    assert _rows(t.read(spark)) == _rows(_mk(spark, [1, 2, 3]))
-
-
-def test_restore_schema_evolution_rollback(spark, tmp_path):
-    t = TxTable(str(tmp_path / "t"))
-    t.write(_mk(spark, [1]))                          # v0: (id, val)
-    t.write(_mk(spark, [2], extra="x"))               # v1: + extra
-    assert "extra" in t.read(spark).columns
-    t.restore(0)
-    assert t.read(spark).columns == ["id", "val"]
-    assert _rows(t.read(spark)) == _rows(_mk(spark, [1]))
-
-
 def test_shallow_clone_reads_source_files_without_copy(spark, tmp_path):
     src = TxTable(str(tmp_path / "src"))
     src.write(_mk(spark, [1, 2, 3]))
@@ -437,7 +409,8 @@ def test_shallow_clone_partitioned_source(spark, tmp_path):
 def test_shallow_clone_reads_file_uri_references(spark, tmp_path):
     """Delta records an absolute add path as a URI; a clone whose
     references are spelled ``file:///abs`` (as Spark's Delta writes
-    them) reads them as files outside its root, not under it."""
+    them) reads them as files outside its root, not under it, in the
+    engine and in the independent reader."""
     src = TxTable(str(tmp_path / "src"))
     df = spark.createDataFrame(
         [Row(id=i, val=f"v{i}", part=("a" if i % 2 else "b")) for i in range(1, 7)]
@@ -453,6 +426,8 @@ def test_shallow_clone_reads_file_uri_references(spark, tmp_path):
     with open(commit, "w") as f:
         f.write("".join(json.dumps(a) + "\n" for a in actions))
     assert _rows(TxTable(clone.path).read(spark)) == _rows(df)
+    ext = delta_reader.read_table(clone.path).select(["id", "val", "part"])
+    assert sorted(tuple(r.values()) for r in ext.to_pylist()) == _rows(df)
 
 
 def test_shallow_clone_time_travel_version(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Model-based property test of the transaction log: hypothesis drives
-random operation sequences (append / overwrite / delete / upsert /
-restore) against BOTH a TxTable and a trivial in-memory dict
+random operation sequences (append / overwrite / delete / upsert)
+against BOTH a TxTable and a trivial in-memory dict
 model; after every operation the table must equal the model, and at
 the end EVERY historical version must time-travel back to the model's
 state at that version — the whole-log invariant no hand-written
@@ -9,8 +9,7 @@ scenario test covers.
 Runtime discipline: each hypothesis example costs one Spark
 write+read per op, so examples and sequence lengths are small; the
 value is the SHAPE coverage (op interleavings like
-overwrite→restore→delete or upsert touching a restored state), not
-volume.
+overwrite→delete→upsert), not volume.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ _OPS = st.one_of(
     st.tuples(st.just("overwrite"), st.integers(1, 3)),   # n fresh rows
     st.tuples(st.just("delete"), st.integers(0, 2)),      # residue class
     st.tuples(st.just("upsert"), st.integers(1, 3)),      # n rows, half hits
-    st.tuples(st.just("restore"), st.integers(0, 100)),   # % over history
 )
 
 _spark = None
@@ -98,11 +96,6 @@ def test_txlog_matches_model_and_time_travel(tmp_path_factory, ops):
             rows = [(i, 555) for i in hit] + fresh_rows(1)
             t.upsert_by_key(spark, _df(spark, rows), ("id",))
             model.update(dict(rows))
-        elif kind == "restore":
-            versions = sorted(vmap)
-            target = versions[arg % len(versions)]
-            t.restore(version=target)
-            model = dict(vmap[target])
         vmap[t.latest_version()] = dict(model)
         assert _table_state(spark, t) == sorted(model.items()), (
             f"state diverged after {kind}({arg})"

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Any
 
 VLEN = 20
@@ -164,8 +165,9 @@ def read_table(table_path: str, version: int | None = None):
     tables = []
     for raw_path in sorted(files):
         add = files[raw_path]
-        # spec: add.path is URL-encoded (ADVICE r8)
-        path = unquote(raw_path)
+        # spec: add.path is a URL-encoded URI (ADVICE r8), relative to
+        # the table root or absolute, as a path or a file: URI
+        path = unquote(re.sub("^file:/+", "/", raw_path))
         p = path if os.path.isabs(path) else os.path.join(table_path, path)
         import pyarrow.parquet as pq
 

@@ -22,6 +22,8 @@ validated by this independent implementation of the spec's read path:
    of live files; identity partition values come back from each
    entry's typed partition tuple (the spec requires readers to source
    identity-transform values from metadata when absent from the file).
+   A delete manifest (content 1) raises NotImplementedError: this
+   reader applies no deletes.
 """
 
 from __future__ import annotations
@@ -208,15 +210,15 @@ def snapshot_files(
     meta["_resolved-snapshot"] = snap
     _, manifests, _ = read_avro(snap["manifest-list"])
     files: list[dict] = []
-    deletes: list[dict] = []
     for m in manifests:
+        if m.get("content", 0) != 0:
+            # a delete manifest: this reader applies no deletes, and
+            # skipping it would return the rows it deletes
+            raise NotImplementedError(
+                f"{m['manifest_path']}: delete manifests are not supported"
+            )
         _, entries, _ = read_avro(m["manifest_path"])
-        live = [e["data_file"] for e in entries if e["status"] != 2]
-        if m.get("content", 0) == 1:
-            deletes += live  # v2 position-delete files
-        else:
-            files += live
-    meta["_delete-files"] = deletes
+        files += [e["data_file"] for e in entries if e["status"] != 2]
     return files, meta
 
 
@@ -253,23 +255,9 @@ def read_table(
         "boolean": pa.bool_(),
         "date": pa.date32(),
     }
-    # v2 position deletes: (file_path URI, pos) tombstones, applied by
-    # filtering each data file's row ordinals before concatenation
-    tombstones: dict[str, set[int]] = {}
-    for d in meta.get("_delete-files", []):
-        dt = pq.read_table(_resolve_path(table_path, d["file_path"]))
-        for fp, pos in zip(
-            dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()
-        ):
-            tombstones.setdefault(fp, set()).add(pos)
-
     pieces = []
     for d in files:
         t = pq.read_table(_resolve_path(table_path, d["file_path"]))
-        dead = tombstones.get(d["file_path"])
-        if dead:
-            keep = [i for i in range(len(t)) if i not in dead]
-            t = t.take(pa.array(keep, type=pa.int64()))
         for pf in spec["fields"]:
             src = by_id[pf["source-id"]]
             if pf["transform"] != "identity":
