@@ -169,6 +169,33 @@ def test_concurrent_overwrite_raises(spark, table, monkeypatch):
     assert _files_on_disk(table) == live, "the lost overwrite left orphans"
 
 
+def test_row_delta_cas_loss_cleans_up(spark, table):
+    """A partition overwrite is read-modify-write: losing the version
+    CAS to a racing append from another handle must raise
+    ConcurrentModification, leave the winner's rows intact, and unlink
+    every data file the loser staged — no orphans for the grace sweep."""
+    table.append(_mk(spark, [1, 2]))
+    orig = table._publish
+    fired = {}
+
+    def racy(version, metadata):
+        if not fired:
+            fired["x"] = True
+            IcebergTable(table.path).append(_mk(spark, [50]))
+        return orig(version, metadata)
+
+    table._publish = racy
+    try:
+        with pytest.raises(ConcurrentModification):
+            table.overwrite_partitions(_mk(spark, [1, 60]))
+    finally:
+        table._publish = orig
+    assert fired, "the racing append never ran"
+    live = {table.local_path(d["file_path"]) for d in table.scan_files()}
+    assert _files_on_disk(table) == live, "overwrite CAS loss left orphans"
+    assert sorted(r.id for r in table.read(spark).collect()) == [1, 2, 50]
+
+
 def test_version_hint_fallback(spark, table):
     table.append(_mk(spark, [1, 2]))
     os.unlink(os.path.join(table.metadata_dir, "version-hint.text"))
