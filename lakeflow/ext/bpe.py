@@ -12,33 +12,33 @@ corpus algorithm.
 
 Scale design:
 - The loop state is the WORD-FREQUENCY table (vocabulary-sized, not
-  corpus-sized): one `explode → groupBy word` reduces 100 TB of text to
-  a few million rows once, and every merge round then runs on that
-  small relation — one pair-count shuffle per round, a 1-row argmax to
-  the driver (the merge rule IS driver state in every BPE trainer), and
-  a map-only `replace` to apply it. Rounds are sequential by nature;
-  per-round cost is O(vocab), not O(corpus).
-- Each round's state is persisted and the previous round unpersisted —
-  without this the lineage replays all prior merges per action
-  (O(R²) work; the same lineage-truncation discipline as the
-  connected-components loop in dedup.py).
+  corpus-sized): one `explode → groupBy word` reduces the corpus to its
+  distinct words once, and that one aggregate is the only Spark work.
+  The driver collects the (word, freq) vocabulary and runs every merge
+  round on it in plain Python — the merge rule IS driver state in every
+  BPE trainer, and so is the state it rewrites. What bounds the driver
+  is the number of distinct words (31 at sf0.01 and at sf0.1), not a
+  parameter; per-round cost is O(vocab), and a round launches no job.
 - Merge application is a single non-overlapping left-to-right string
-  `replace` on a PAREN-WRAPPED symbol string: '(a)(b)(a)(b)'. With a
+  replace on a PAREN-WRAPPED symbol string: '(a)(b)(a)(b)'. With a
   space-separated representation, adjacent pattern occurrences SHARE
   the boundary space, so one replace pass merges only alternate
   occurrences (' a b a b ' → ' ab a b ' — not textbook BPE and needs
   an unbounded number of passes). Paren-wrapping gives each occurrence
   disjoint characters: '(a)(b)(a)(b)' → '(ab)(ab)' in one pass, while
   true self-overlap still resolves greedily ('(a)(a)(a)' → '(aa)(a)').
-  Spark and DuckDB implement identical scan semantics (verified on both
-  cases), so the unrolled-CTE DuckDB oracle reproduces the learned
-  merge table bit-for-bit. Symbols are [a-z0-9]+ (normalized tier), so
+  Python's `str.replace` and DuckDB's `replace` implement the same
+  scan, so the unrolled-CTE DuckDB oracle reproduces the learned merge
+  table bit-for-bit. Symbols are [a-z0-9]+ (normalized tier), so
   parens can never appear inside a symbol.
-- Ties on pair frequency break by lexicographically smallest pair —
-  deterministic across engines (ASCII collation both sides).
+- Ties on pair frequency break by lexicographically smallest
+  'left right' pair string — deterministic across engines (ASCII
+  collation both sides).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,57 +62,27 @@ def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _learn(
     words: DataFrame, rounds: int
-) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """The training loop. Returns (merge rules, FINAL vocabulary state
-    (word, r=segmented repr, freq) — persisted; caller unpersists)."""
-    state = words.select(
-        "word", F.regexp_replace("word", "(.)", "($1)").alias("r"), "freq"
-    ).persist()
-    prev = None
+) -> tuple[list[tuple[int, str, str, str, int]], list[tuple[str, str, int]]]:
+    """The training loop, on the driver over the collected vocabulary.
+    Returns (merge rules, FINAL vocabulary state as (word, r=segmented
+    repr, freq) tuples)."""
+    state = [(w, "".join(f"({c})" for c in w), f) for w, f in words.collect()]
     merges: list[tuple[int, str, str, str, int]] = []
     for rnd in range(1, rounds + 1):
-        syms = state.select(
-            F.split(
-                F.regexp_replace("r", r"^\(|\)$", ""), r"\)\("
-            ).alias("sy"),
-            "freq",
-        ).filter(F.size("sy") > 1)
-        pairs = syms.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(sy) - 1),"
-                    " i -> concat(element_at(sy, i), ' ', element_at(sy, i + 1)))"
-                )
-            ).alias("pair"),
-            "freq",
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").alias("f"))
-            .orderBy(F.desc("f"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        counts: Counter[str] = Counter()
+        for _, r, f in state:
+            sy = r[1:-1].split(")(")
+            for a, b in zip(sy, sy[1:]):
+                counts[f"{a} {b}"] += f
+        if not counts:
             break
-        pair, f = top[0]["pair"], int(top[0]["f"])
+        pair, f = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         left, right = pair.split(" ")
         merges.append((rnd, left, right, left + right, f))
-        nxt = state.select(
-            "word",
-            F.replace(
-                F.col("r"),
-                F.lit(f"({left})({right})"),
-                F.lit(f"({left}{right})"),
-            ).alias("r"),
-            "freq",
-        ).persist()
-        nxt.count()  # materialize before dropping the parent
-        if prev is not None:
-            prev.unpersist()
-        prev, state = state, nxt
-    if prev is not None and prev is not state:
-        prev.unpersist()
+        state = [
+            (w, r.replace(f"({left})({right})", f"({left}{right})"), n)
+            for w, r, n in state
+        ]
     return merges, state
 
 
@@ -122,8 +92,7 @@ def bpe_merges(
     """Learn the first ``rounds`` BPE merge rules; returns one row per
     round: (round, left_sym, right_sym, merged, freq).
     """
-    merges, state = _learn(_word_freqs(spark, sf_dir), rounds)
-    state.unpersist()
+    merges, _ = _learn(_word_freqs(spark, sf_dir), rounds)
     return spark.createDataFrame(
         merges, "round int, left_sym string, right_sym string, merged string, freq bigint"
     ).orderBy("round")
@@ -156,16 +125,9 @@ def bpe_apply(
         .filter(F.col("word") != "")
     )
     _, state = _learn(inst.groupBy("word").agg(F.count("*").alias("freq")), rounds)
-    # materialize the tiny vocab eagerly (truncates the R-round replace
-    # lineage) so the training state can be unpersisted before the
-    # caller ever evaluates the returned frame
-    vocab = state.select(
-        "word",
-        F.size(
-            F.split(F.regexp_replace("r", r"^\(|\)$", ""), r"\)\(")
-        ).alias("n_sym"),
-    ).localCheckpoint()
-    state.unpersist()
+    vocab = spark.createDataFrame(
+        [(w, r.count(")(") + 1) for w, r, _ in state], "word string, n_sym int"
+    )
     return (
         inst.join(broadcast(vocab), "word")
         .groupBy("lang")

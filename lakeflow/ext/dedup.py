@@ -1653,8 +1653,10 @@ def dedup_clusters(
     # Propagate only over the ACTIVE subgraph (nodes that matched some
     # pair). After thresholding, active nodes ≪ corpus — the loop never
     # touches the full table; singletons rejoin map-side at the end.
-    labels = connected_components(edges, max_iter)
-    edges.unpersist()
+    try:
+        labels = connected_components(edges, max_iter)
+    finally:
+        edges.unpersist()
     # embedding_near_dups persists its pair frame so CacheManager can
     # share the cosine self-join with q_dedup_embedding; labels are
     # materialized (collect or localCheckpoint) by now, so release it —

@@ -227,7 +227,7 @@ def pagerank(
     Scale shape: state per round is one (node, rank) frame —
     node-count-sized, shuffled once per round on the edge key, the
     canonical distributed PageRank plan. ``localCheckpoint`` truncates
-    each round's lineage exactly as the k-means/BPE loops do;
+    each round's lineage exactly as the k-means loops do;
     iterations are a fixed small constant (ranking stabilizes long
     before convergence matters for hub TRIAGE, and certification needs
     a pinned loop count).
@@ -237,61 +237,63 @@ def pagerank(
         e.select(F.col("d").alias("s"), F.col("s").alias("d"))
     ).persist()
     deg = und.groupBy("s").agg(F.count("*").alias("deg")).persist()
-    nn = deg.agg(F.count("*").alias("n"))
-    base = F.lit(1.0 - damping)
-    ranks = deg.join(F.broadcast(nn)).select(
-        "s", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    for _ in range(iters):
-        contrib = (
-            und.join(ranks, "s")
-            .join(deg, "s")
-            .select(
-                F.col("d"),
-                F.floor(F.col("r") / F.col("deg") * F.lit(1e9) + F.lit(0.5))
-                .cast("bigint")
-                .alias("ci"),
+    try:
+        nn = deg.agg(F.count("*").alias("n"))
+        base = F.lit(1.0 - damping)
+        ranks = deg.join(F.broadcast(nn)).select(
+            "s", (F.lit(1.0) / F.col("n")).alias("r")
+        )
+        for _ in range(iters):
+            contrib = (
+                und.join(ranks, "s")
+                .join(deg, "s")
+                .select(
+                    F.col("d"),
+                    F.floor(F.col("r") / F.col("deg") * F.lit(1e9) + F.lit(0.5))
+                    .cast("bigint")
+                    .alias("ci"),
+                )
             )
-        )
-        ranks = (
-            contrib.groupBy("d")
-            .agg(F.sum("ci").alias("si"))
-            .join(F.broadcast(nn))
-            .select(
-                F.col("d").alias("s"),
-                F.round(
-                    base / F.col("n")
-                    + F.lit(damping) * (F.col("si") / F.lit(1e9)),
-                    9,
-                ).alias("r"),
+            ranks = (
+                contrib.groupBy("d")
+                .agg(F.sum("ci").alias("si"))
+                .join(F.broadcast(nn))
+                .select(
+                    F.col("d").alias("s"),
+                    F.round(
+                        base / F.col("n")
+                        + F.lit(damping) * (F.col("si") / F.lit(1e9)),
+                        9,
+                    ).alias("r"),
+                )
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
+        out = (
+            ranks.join(deg, "s")
+            .select(
+                F.col("s").alias("vec_id"),
+                F.col("deg").cast("bigint").alias("degree"),
+                F.col("r").alias("pagerank"),
+            )
+            .orderBy(F.desc("pagerank"), F.asc("vec_id"))
+            .limit(top)
         )
-    out = (
-        ranks.join(deg, "s")
-        .select(
-            F.col("s").alias("vec_id"),
-            F.col("deg").cast("bigint").alias("degree"),
-            F.col("r").alias("pagerank"),
-        )
-        .orderBy(F.desc("pagerank"), F.asc("vec_id"))
-        .limit(top)
-    )
-    if not materialize:
-        # plan-inspection path (ADVICE r7 #1): the eager checkpoint
-        # below truncates the physical plan to a checkpoint scan — 0
-        # visible Exchanges — so the shuffle-budget gate could never
-        # see an added shuffle, and merely CONSTRUCTING the query
-        # executed the whole job. The lazy twin keeps the full
-        # composed plan (persists stay in place; they are idempotent)
-        # for gen_plan_budget/test_plan_budget, which consult
-        # registry.PLAN_VARIANTS.
-        return out
-    # materialize while the edge/degree caches are alive, then release
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    deg.unpersist()
-    return out
+        if not materialize:
+            # plan-inspection path (ADVICE r7 #1): the eager checkpoint
+            # below truncates the physical plan to a checkpoint scan — 0
+            # visible Exchanges — so the shuffle-budget gate could never
+            # see an added shuffle, and merely CONSTRUCTING the query
+            # executed the whole job. The lazy twin keeps the full
+            # composed plan (persists stay in place; they are idempotent)
+            # for gen_plan_budget/test_plan_budget, which consult
+            # registry.PLAN_VARIANTS.
+            return out
+        # materialize while the edge/degree caches are alive
+        return out.localCheckpoint(eager=True)
+    finally:
+        if materialize:
+            und.unpersist()
+            deg.unpersist()
 
 
 def _pagerank_sql(
@@ -385,40 +387,41 @@ def kcore(
         e.select(F.col("d").alias("s"), F.col("s").alias("d"))
     ).persist()
     cached.append(cur)
-    stats = []
-    for t in range(1, rounds + 1):
-        deg = cur.groupBy("s").agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("s").persist()
-        cached.append(keep)
-        cur = (
-            cur.join(keep, "s", "left_semi")
-            .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        stats.append(
-            keep.agg(F.count("*").alias("nodes_kept"))
-            .crossJoin(cur.agg(F.expr("count(*) DIV 2").alias("edges_kept")))
-            .select(
-                F.lit(t).cast("int").alias("round"),
-                "nodes_kept",
-                "edges_kept",
+    try:
+        stats = []
+        for t in range(1, rounds + 1):
+            deg = cur.groupBy("s").agg(F.count("*").alias("deg"))
+            keep = deg.filter(F.col("deg") >= k).select("s").persist()
+            cached.append(keep)
+            cur = (
+                cur.join(keep, "s", "left_semi")
+                .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
+                .localCheckpoint(eager=False)
             )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionAll(s)
-    out = out.orderBy("round")
-    if not materialize:
-        # plan-inspection path (see pagerank): keep the full composed
-        # plan visible to the shuffle-budget gate (PLAN_VARIANTS)
-        return out
-    # materialize the (rounds)-row stats union while the caches are
-    # alive, then release them — previously each call leaked 1 + rounds
-    # persisted frames for the session lifetime (ADVICE r8)
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+            stats.append(
+                keep.agg(F.count("*").alias("nodes_kept"))
+                .crossJoin(cur.agg(F.expr("count(*) DIV 2").alias("edges_kept")))
+                .select(
+                    F.lit(t).cast("int").alias("round"),
+                    "nodes_kept",
+                    "edges_kept",
+                )
+            )
+        out = stats[0]
+        for s in stats[1:]:
+            out = out.unionAll(s)
+        out = out.orderBy("round")
+        if not materialize:
+            # plan-inspection path (see pagerank): keep the full composed
+            # plan visible to the shuffle-budget gate (PLAN_VARIANTS)
+            return out
+        # materialize the (rounds)-row stats union while the caches are
+        # alive; they are released on every exit
+        return out.localCheckpoint(eager=True)
+    finally:
+        if materialize:
+            for df in cached:
+                df.unpersist()
 
 
 def _kcore_sql(

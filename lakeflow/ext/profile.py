@@ -27,6 +27,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 import pandas as pd  # module scope: pandas_udf type-hint strings must resolve here
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -869,25 +872,56 @@ HLL_SKETCH_SQL = _hll_sql()
 PCA_ITERS = 4
 
 
+# 1e308 rounded to 9 places needs 318 digits; the default context has 28
+_WIDE = Context(prec=400, rounding=ROUND_HALF_UP)
+
+
+def _spark_round(x: float | None, scale: int) -> float | None:
+    """Spark's ``round(double, scale)`` on the driver: HALF_UP on the
+    double's shortest decimal repr (``BigDecimal(Double.toString(x))``),
+    never a signed zero. Python's ``round()`` is HALF_EVEN on the binary
+    value, which differs on half-way cases."""
+    if x is None or not math.isfinite(x):
+        return x
+    return float(_WIDE.quantize(Decimal(repr(x)), Decimal(1).scaleb(-scale))) + 0.0
+
+
+def _mul(a: float | None, b: float | None) -> float | None:
+    return None if a is None or b is None else a * b
+
+
+def _try_divide(a: float | None, b: float | None) -> float | None:
+    return None if a is None or not b else a / b
+
+
+def _sql_sum(xs) -> float | None:
+    """SQL SUM: NULLs skipped, NULL when none are left."""
+    xs = [x for x in xs if x is not None]
+    return sum(xs) if xs else None
+
+
 def embed_pca(
     spark: SparkSession, sf_dir: str, iters: int = PCA_ITERS
 ) -> DataFrame:
     """Top principal component of the embedding cloud by POWER
-    ITERATION as pure DataFrame ops — the "all-but-the-top" embedding
-    postprocess (Mu & Viswanath 2018, public: removing the dominant
-    direction improves similarity quality) and the precursor to
-    OPQ-style rotations for ANN. Output: one row per dimension with
-    the mean vector and PC1 coordinates, plus the Rayleigh-quotient
-    eigenvalue and its explained-variance share.
+    ITERATION — the "all-but-the-top" embedding postprocess (Mu &
+    Viswanath 2018, public: removing the dominant direction improves
+    similarity quality) and the precursor to OPQ-style rotations for
+    ANN. Output: one row per dimension with the mean vector and PC1
+    coordinates, plus the Rayleigh-quotient eigenvalue and its
+    explained-variance share.
 
-    Distribution shape: the covariance is ONE outer-product aggregate
-    (explode dims → self-join per row → groupBy (i, j) over d² = 4096
-    bounded cells — map-side partials make the shuffle d²-sized, not
-    corpus-sized); each power-iteration step is a d²-row × d-row join
-    + a d-row aggregate. After the one corpus pass, everything is
-    driver-scale relations — the same bounded-iterative pattern as
-    the certified BPE and IVF builds, and how a 100 TB corpus computes
-    PCA: one pass for moments, then iterate on d² numbers.
+    Distribution shape: the mean and covariance are the only Spark
+    work — ONE outer-product aggregate (explode dims → self-join per
+    row → groupBy (i, j) over d² = 4096 bounded cells; map-side
+    partials make the shuffle d²-sized, not corpus-sized). The driver
+    collects the d² cells (each carrying μ_i) once and runs the
+    iterates, the Rayleigh quotient, the trace and the sign in plain
+    Python, so an iteration launches no job: how a 100 TB corpus
+    computes PCA — one pass for moments, then iterate on d² numbers.
+    The replay keeps Spark's semantics: NULL products and sums as SQL
+    has them, a divide by zero is NULL, a join drops a missing j, and
+    every quantization is Spark's HALF_UP ``round`` (:func:`_spark_round`).
 
     Certification: covariance cells and iterates both carry the 6dp
     certified quantum (the fuzz gate proved 9dp sits close enough to
@@ -913,7 +947,7 @@ def embed_pca(
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
         .agg(F.avg(F.col("a.x") * F.col("b.x")).alias("exy"))
     )
-    cov = (
+    cells = (
         prod.join(mu.select(F.col("i"), F.col("mu").alias("mi")), "i")
         .join(mu.select(F.col("i").alias("j"), F.col("mu").alias("mj")), "j")
         .select(
@@ -921,59 +955,51 @@ def embed_pca(
             # products, the same drift class the fuzz gate caught for
             # the power iterate — the certified quantum puts the
             # ~1e-15 drift 10^8× below the rounding boundary
-            "i", "j", F.round(F.col("exy") - F.col("mi") * F.col("mj"), 6).alias("c")
+            "i", "j", "mi", F.round(F.col("exy") - F.col("mi") * F.col("mj"), 6).alias("c")
         )
-        .localCheckpoint(eager=False)
+        .collect()
     )
+    mus = {r.i: r.mi for r in cells}
+    cov = [(r.i, r.j, r.c) for r in cells]
     # v0 = uniform unit vector (deterministic, engine-exact literal)
     d = 64
-    v = spark.range(d).select(
-        F.col("id").cast("int").alias("j"), F.lit(1.0 / (d ** 0.5)).alias("vj")
-    )
+    v = dict.fromkeys(range(d), 1.0 / (d ** 0.5))
     for _ in range(iters):
-        y = (
-            cov.join(v, "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("c") * F.col("vj")).alias("y"))
-        )
-        nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("n"))
-        v = (
-            y.crossJoin(F.broadcast(nrm))
-            .select(
-                F.col("i").alias("j"),
-                # 6dp, not 9: the iterate divide carries ~1e-16 sum-order
-                # drift, and a flip probability scales with drift/quantum —
-                # the fuzz gate caught a 9dp half-way case (…7115) landing
-                # on different sides per engine; at 6dp the same drift is
-                # 10^3× below the boundary (the repo-wide certified quantum)
-                F.round(F.try_divide(F.col("y"), F.col("n")), 6).alias("vj"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        terms: dict[int, list] = {}
+        for i, j, c in cov:
+            if j in v:
+                terms.setdefault(i, []).append(_mul(c, v[j]))
+        y = {i: _sql_sum(t) for i, t in terms.items()}
+        n = _sql_sum(_mul(x, x) for x in y.values())
+        n = None if n is None else math.sqrt(n)
+        # 6dp, not 9: the iterate divide carries ~1e-16 sum-order
+        # drift, and a flip probability scales with drift/quantum —
+        # the fuzz gate caught a 9dp half-way case (…7115) landing
+        # on different sides per engine; at 6dp the same drift is
+        # 10^3× below the boundary (the repo-wide certified quantum)
+        v = {i: _spark_round(_try_divide(x, n), 6) for i, x in y.items()}
     # Rayleigh quotient λ = vᵀCv; total variance = trace(C)
-    lam = (
-        cov.join(v.select(F.col("j"), F.col("vj")), "j")
-        .join(v.select(F.col("j").alias("i"), F.col("vj").alias("vi")), "i")
-        .agg(F.sum(F.col("vi") * F.col("c") * F.col("vj")).alias("lam"))
+    lam = _sql_sum(
+        _mul(_mul(v[i], c), v[j]) for i, j, c in cov if i in v and j in v
     )
-    tr = cov.filter(F.col("i") == F.col("j")).agg(F.sum("c").alias("tr"))
-    sgn = v.filter(F.col("j") == 0).select(
-        F.when(F.col("vj") < 0, -1.0).otherwise(1.0).alias("sgn")
-    )
-    return (
-        v.crossJoin(F.broadcast(lam))
-        .crossJoin(F.broadcast(tr))
-        .crossJoin(F.broadcast(sgn))
-        .select(
-            F.col("j").alias("pos"),
-            F.round(F.col("vj") * F.col("sgn"), 6).alias("pc1"),
-            F.round("lam", 6).alias("eigenvalue"),
-            F.round(F.try_divide(F.col("lam"), F.col("tr")), 6).alias("var_share"),
-        )
-        .join(mu.select(F.col("i").alias("pos"), "mu"), "pos")
-        .select("pos", F.round("mu", 9).alias("mu"), "pc1", "eigenvalue", "var_share")
-        .orderBy("pos")
-    )
+    tr = _sql_sum(c for i, j, c in cov if i == j)
+    rows = []
+    if 0 in v:  # no leading coordinate, no sign, no rows
+        sgn = -1.0 if v[0] is not None and v[0] < 0 else 1.0
+        rows = [
+            (
+                j,
+                mus[j],
+                _spark_round(_mul(vj, sgn), 6),
+                _spark_round(lam, 6),
+                _spark_round(_try_divide(lam, tr), 6),
+            )
+            for j, vj in v.items()
+            if j in mus
+        ]
+    return spark.createDataFrame(
+        rows, "pos int, mu double, pc1 double, eigenvalue double, var_share double"
+    ).orderBy("pos")
 
 
 def _pca_cte_sql(iters: int = PCA_ITERS, d: int = 64) -> str:

@@ -704,9 +704,10 @@ EXT_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     # approxQuantile; error ≤ one cell width, audited in tests
     "q_quantile_hist": (profile.quantile_hist, profile.QUANTILE_HIST_SQL),
     # embedding PCA by power iteration (r6, late): one corpus pass for
-    # the d² covariance, then bounded d²-row iterates — the certified
-    # iterative-algorithm pattern (BPE/IVF) applied to linear algebra;
-    # oracle replays covariance, every iterate, and the Rayleigh audit
+    # the d² covariance, collected once; the iterates run on the driver
+    # — the certified iterative-algorithm pattern (BPE/IVF) applied to
+    # linear algebra; oracle replays covariance, every iterate, and the
+    # Rayleigh audit
     "q_embed_pca": (profile.embed_pca, profile.EMBED_PCA_SQL),
     # all-but-the-top cleanup (r6, late): consumes the certified PCA;
     # corrected norm via the unit-vector identity ‖c−⟨c,v⟩v‖² =
@@ -727,8 +728,9 @@ EXT_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "q_sample_weighted": (sampling.weighted_sample, sampling.WEIGHTED_SAMPLE_SQL),
     "q_sample_capped": (sampling.capped_sample, sampling.CAPPED_SAMPLE_SQL),
     "q_char_pairs": (text.char_pair_freqs, text.CHAR_PAIR_SQL),
-    # iterative corpus algorithm: R rounds of argmax-pair + corpus-wide
-    # merge; oracle is the loop UNROLLED into chained DuckDB CTEs
+    # iterative corpus algorithm: one word-count aggregate, then R
+    # rounds of argmax-pair + merge on the driver over the collected
+    # vocabulary; oracle is the loop UNROLLED into chained DuckDB CTEs
     "q_bpe_merges": (bpe.bpe_merges, bpe.BPE_MERGES_SQL),
     # train-then-apply: segment the corpus with the learned vocab (the
     # per-word symbol counts broadcast-join the exploded instances)
@@ -1037,8 +1039,8 @@ PLAN_VARIANTS: dict[str, QueryFn] = {
 #: get the prepared-plan memo: for them, memoizing the built handle
 #: skips pure py4j plan-construction overhead and nothing else. Builders
 #: that run Spark jobs at construction time (iterative localCheckpoint
-#: loops, bounded driver-side collects) rebuild per call so every
-#: invocation honestly re-does that work.
+#: loops, driver-side loops after one collected aggregate — BPE, PCA)
+#: rebuild per call so every invocation honestly re-does that work.
 with open(os.path.join(os.path.dirname(__file__), "lazy_build.json")) as _f:
     LAZY_BUILD: frozenset[str] = frozenset(json.load(_f))
 

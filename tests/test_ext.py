@@ -673,6 +673,90 @@ def test_bpe_matches_pure_python_reference_on_random_corpora(spark, tmp_path):
         assert got == expected, f"corpus={corpus!r}"
 
 
+def _jobs_of(spark, build) -> int:
+    """Spark jobs launched by building and collecting ``build()``, after
+    one warm-up call has filled the session's memoized input tiers."""
+    import uuid
+
+    build().collect()
+    sc = spark.sparkContext
+    group = f"rounds-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build().collect()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_loops_launch_no_job_per_round(spark, sf_dir):
+    """BPE merge rounds and PCA power iterations run on the driver after
+    one aggregate, so the job count does not grow with the round count."""
+    from lakeflow.ext import bpe
+    from lakeflow.ext import profile as profile_ops
+
+    def merges(n):
+        return _jobs_of(spark, lambda: bpe.bpe_merges(spark, sf_dir, rounds=n))
+
+    def pca(n):
+        return _jobs_of(spark, lambda: profile_ops.embed_pca(spark, sf_dir, iters=n))
+
+    assert merges(2) == merges(8)
+    assert pca(1) == pca(4)
+
+
+def test_spark_round_twin_matches_spark_on_half_way_doubles(spark):
+    """The driver replay of Spark's ``round`` agrees with Spark on exact
+    half-way decimals, where HALF_UP on the decimal repr and Python's
+    HALF_EVEN on the binary value part ways; 1e300 needs more digits than
+    the default decimal context holds."""
+    import random
+    from decimal import Decimal
+
+    from lakeflow.ext.profile import _spark_round
+
+    rng = random.Random(18)
+    xs = [0.0000125, 0.1234565, -0.1234565, 1.0000005, 1e22, 1e300]
+    xs += [float(Decimal(k) * Decimal("5e-7")) for k in rng.sample(range(-10**7, 10**7), 300)]
+    xs += [float(Decimal(k) * Decimal("5e-10")) for k in rng.sample(range(-10**10, 10**10), 300)]
+    rows = (
+        spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+        .select("i", F.round("x", 6).alias("r6"), F.round("x", 9).alias("r9"))
+        .orderBy("i")
+        .collect()
+    )
+    got = [(_spark_round(x, 6), _spark_round(x, 9)) for x in xs]
+    assert got == [(r.r6, r.r9) for r in rows]
+    assert any(round(x, 6) != r6 for x, (r6, _) in zip(xs, got))
+
+
+@pytest.mark.parametrize("loop", ["pagerank", "kcore", "dedup_clusters"])
+def test_loops_release_their_caches_when_a_round_raises(spark, sf_dir, monkeypatch, loop):
+    """A failing round leaves the session's cache entries as they were:
+    the per-call persists are released on the error path too."""
+    from lakeflow.ext import graph as graph_ops
+
+    run = {
+        "pagerank": lambda: graph_ops.pagerank(spark, sf_dir, bits=4, bands=29),
+        "kcore": lambda: graph_ops.kcore(spark, sf_dir, bits=4, bands=29),
+        "dedup_clusters": lambda: dedup.dedup_clusters(spark, sf_dir),
+    }[loop]
+    run()  # the shared LSH pairs cache is meant to outlive the call
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("round failed")
+
+    if loop == "dedup_clusters":
+        monkeypatch.setattr(dedup, "connected_components", fail)
+    else:
+        monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", fail)
+    with pytest.raises(RuntimeError, match="round failed"):
+        run()
+    assert cache.numCachedEntries() == before
+
+
 def test_lm_perplexity_properties(spark, sf_dir):
     """Cross-entropy is bounded by log2 of the smoothed event space and
     n_bigrams is exactly n_tokens-1 — checked per doc against the token
